@@ -1,0 +1,45 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+/** How the engine runs locally, decided once: the core count, the session
+  * config, and the scale-adaptive spread rule. Every main and the test
+  * session build through here.
+  */
+object Exec {
+
+  /** Local cores: `SPARK_GRAFT_CPUS`, else the host's core count. */
+  lazy val cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one local session config. `nanosAsLong` tolerates either
+    * events.ts footer era (Tables.events branches on the loaded type);
+    * the warehouse sits under target/ so saveAsTable stays out of the
+    * working tree.
+    */
+  def session(cores: Int = cpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Hash-partition `df` on `key` to default parallelism only when its plan
+    * runs on fewer partitions. Row-bound work on a small scan otherwise
+    * inherits the few splits a byte-sized layout yields; where the scan
+    * already fans wider than the cores this is a no-op, so no exchange is
+    * paid where it would not help. `key` should be the key the next join
+    * or aggregate clusters on.
+    */
+  def spread(df: DataFrame, key: Column): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+  }
+}

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Optimization-round tooling: dump each named query's formatted physical
   * plan to `<outDir>/<name>_<tag>.txt` so plan-shape claims (Exchange
@@ -14,31 +13,16 @@ object Plans {
       case Array(s, o, t)    => (s, o, t, None)
       case Array(s, o, t, f) => (s, o, t, Some(f.split(',').map(_.trim).toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Exec.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          // queryExecution.explainString is the programmatic form of
-          // df.explain("formatted") — same renderer, string-returning
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-      }
+    SparkEntry.runEach(spark, n => only.forall(_.contains(n))) { (name, fn) =>
+      // explainString is the programmatic form of df.explain("formatted")
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+    }.foreach { case (name, r) =>
+      r.left.foreach(e => System.err.println(s"[plans] $name failed: ${e.getMessage}"))
+    }
     println("[plans] done")
     spark.stop()
   }

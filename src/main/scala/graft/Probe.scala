@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 /** Optimization-round instrumentation: run ONE registry query with a
   * stage-metrics listener and print a per-stage cost table (wall span,
@@ -12,55 +11,37 @@ import scala.collection.mutable
 object Probe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    case class St(name: String, var submitted: Long = 0L, var completed: Long = 0L,
-      var runMs: Long = 0L, var cpuMs: Long = 0L, var srBytes: Long = 0L,
-      var swBytes: Long = 0L, var tasks: Int = 0, var rows: Long = 0L)
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // cold pass: codegen/JIT, mirrors Bench's discarded warm-up
-      fn(spark, sfDir).count()
-      spark.catalog.clearCache()
-      val stages = mutable.LinkedHashMap.empty[Int, St]
+    val selected = names.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = selected -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown registry entries: ${unknown.mkString(", ")}")
+    val spark = Exec.session()
+    // cold pass: codegen/JIT, mirrors Bench's discarded warm-up
+    SparkEntry.runEach(spark, selected)((_, fn) => fn(spark, sfDir).count())
+    SparkEntry.runEach(spark, selected) { (name, fn) =>
+      val stages = mutable.Map.empty[Int, StageInfo]
       val listener = new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val st = stages.getOrElseUpdate(i.stageId, St(i.name))
-          st.submitted = i.submissionTime.getOrElse(0L)
-          st.completed = i.completionTime.getOrElse(0L)
-          st.tasks = i.numTasks
-          val m = i.taskMetrics
-          if (m != null) {
-            st.runMs = m.executorRunTime
-            st.cpuMs = m.executorCpuTime / 1000000L
-            st.srBytes = m.shuffleReadMetrics.totalBytesRead
-            st.swBytes = m.shuffleWriteMetrics.bytesWritten
-            st.rows = m.outputMetrics.recordsWritten
-          }
-        }
+        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+          stages(sc.stageInfo.stageId) = sc.stageInfo
       }
       spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      spark.catalog.clearCache()
-      Thread.sleep(500) // let the listener bus drain
+      val dt = try {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        Thread.sleep(500) // let the listener bus drain before detaching
+        spark.sparkContext.removeSparkListener(listener)
+      }
       println(f"%nPROBE $name warm pass: $dt%.3f s, ${stages.size} stages")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"run_ms"}%8s ${"cpu_ms"}%8s ${"sh_r_kb"}%8s ${"sh_w_kb"}%8s ${"tasks"}%6s  name")
-      stages.toSeq.sortBy(_._1).foreach { case (id, s) =>
-        val wall = if (s.completed > 0 && s.submitted > 0) s.completed - s.submitted else -1L
-        println(f"$id%6d $wall%8d ${s.runMs}%8d ${s.cpuMs}%8d ${s.srBytes / 1024}%8d ${s.swBytes / 1024}%8d ${s.tasks}%6d  ${s.name.take(90)}")
+      stages.toSeq.sortBy(_._1).foreach { case (id, i) =>
+        val wall = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s).getOrElse(-1L)
+        def m(f: org.apache.spark.executor.TaskMetrics => Long) = Option(i.taskMetrics).map(f).getOrElse(0L)
+        println(f"$id%6d $wall%8d ${m(_.executorRunTime)}%8d ${m(_.executorCpuTime) / 1000000L}%8d " +
+          f"${m(_.shuffleReadMetrics.totalBytesRead) / 1024}%8d ${m(_.shuffleWriteMetrics.bytesWritten) / 1024}%8d " +
+          f"${i.numTasks}%6d  ${i.name.take(90)}")
       }
-    }
+    }.foreach { case (name, r) => r.left.foreach(e => println(s"PROBE $name failed: $e")) }
     spark.stop()
   }
 }

@@ -52,17 +52,27 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.etl.StarSchema.bandSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { case (k, (fn, _)) => k -> fn }
+
+  /** Runs `body` over the `select`ed entries in registry order and returns
+    * each entry's result, or the exception it threw; one failing entry
+    * does not stop the rest.
     *
     * Persist contract: several entries (minhash signatures, LSH corpus,
     * IVF/k-means centroids, curation shingles) `persist()` an intermediate
-    * that the lazy fn-returning contract cannot unpersist. Iterators over
-    * this registry should call `spark.catalog.clearCache()` between
-    * entries (as [[graft.Verify]] and [[graft.Bench]] do) so caches don't
-    * accumulate for the session lifetime.
+    * that the lazy fn-returning contract cannot unpersist. The runner
+    * clears the cache after every entry, outside whatever `body` times, so
+    * no entry inherits another's cache.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (k, (fn, _)) => k -> fn }
+  def runEach[A](spark: SparkSession, select: String => Boolean)(
+      body: (String, (SparkSession, String) => DataFrame) => A): Seq[(String, Either[Throwable, A])] =
+    all.toSeq.filter { case (name, _) => select(name) }.map { case (name, (fn, _)) =>
+      val res = try Right(body(name, fn)) catch { case e: Throwable => Left(e) }
+      spark.catalog.clearCache()
+      name -> res
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

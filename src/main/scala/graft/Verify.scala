@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,31 +10,13 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate either events.ts footer era; Tables.events branches on loaded type
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Exec.session()
     new java.io.File(outDir).mkdirs()
-    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failures += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // several registry queries persist() an intermediate (minhash
-      // signatures, LSH corpus, IVF centroids) and cannot unpersist it
-      // inside the lazy contract; release between queries so repeated
-      // suites don't accumulate caches for the session lifetime
-      spark.catalog.clearCache()
+    val failures = SparkEntry.runEach(spark, n => only.forall(_.contains(n))) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.collect { case (name, Left(e)) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      name
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -52,8 +33,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Loud STDOUT failure summary (r6 post-mortem: per-query stderr lines
-    // went unread while 57 entries silently vanished from CORRECTNESS).
+    // loud STDOUT failure summary: per-query stderr lines go unread
     if (failures.nonEmpty)
       println(s"[verify] ${failures.size} QUERIES FAILED: ${failures.sorted.mkString(", ")}")
     else

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *   - `trip_id` ny:279 is `uuid()` — nondeterministic per run (SURVEY §1.4
   *     B5). We substitute a deterministic content hash of the natural key
   *     (sha2-256 over pickup/dropoff strings + int FKs) so runs are
-  *     reproducible and oracle-checkable; a [[nondeterministicTripId]]
-  *     variant keeps the reference's literal behavior for parity demos.
+  *     reproducible and oracle-checkable.
   *   - date/time surrogate FKs ny:281-288: `date_format` 'yyyyMMdd'/'HHmmss'
   *     over the *string* timestamp columns (implicit string→timestamp cast).
   *   - duration ny:290-301: `floor((unix_timestamp(dropoff) -
@@ -38,12 +37,6 @@ object Derive {
         col("tpep_pickup_datetime"), col("tpep_dropoff_datetime"),
         col("vendor_id"), col("pickup_location_id"),
         col("drop_off_location_id"), col("payment_type")), 256))
-
-  /** Reference-literal trip id (ny:279) — nondeterministic, excluded from
-    * oracle checks; exists to demonstrate X15 parity.
-    */
-  def nondeterministicTripId(df: DataFrame): DataFrame =
-    df.withColumn("trip_id", expr("uuid()"))
 
   /** P4 — ny:281-288 */
   def dateTimeKeys(df: DataFrame): DataFrame =

@@ -123,8 +123,13 @@ object Dims {
       .orElse(sys.props.get("graft.zone.csv"))
       .getOrElse(new java.io.File("data/taxi_zone_lookup.csv").getAbsolutePath)
 
-  def dimTaxiZoneLookup(spark: SparkSession): DataFrame =
-    spark.read.option("header", "true").csv(zoneCsvPath)
+  def dimTaxiZoneLookup(spark: SparkSession, path: String = zoneCsvPath): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      throw new java.io.FileNotFoundException(s"taxi zone lookup CSV not found at $path; " +
+        "point GRAFT_ZONE_CSV or -Dgraft.zone.csv at data/taxi_zone_lookup.csv")
+    spark.read.option("header", "true").csv(path)
+  }
 
   // ------------------------------------------------------------------
   // Query surface

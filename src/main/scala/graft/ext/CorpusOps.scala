@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exec
 import graft.model.Tables
 import TextOps.{h31, h31Sql, portableHash, portableHashSql, HashP}
 
@@ -2770,9 +2771,8 @@ object CorpusOps {
       .unionAll(inj(3, expr("concat_ws(' ', transform(split(text, ' '), " +
         "t -> concat(t, 'z', CAST(doc_id AS STRING))))")))
       .unionAll(inj(4, expr("concat_ws(' ', slice(split(text, ' '), 1, 10))")))
-    // scale-adaptive spread (r15): the model's unigram/bigram explodes
-    // ran on the one-split scan as a single 0.7 s task; no-op at scale
-    val model = frozenQualityModel(graft.ext.Dedup.spreadByDoc(base)).persistAll()
+    // spread the model's per-row unigram/bigram explodes
+    val model = frozenQualityModel(Exec.spread(base, col("doc_id"))).persistAll()
     qualityGateFrozenWith(spark, arrivals, model)._1.orderBy(col("doc_id"))
   }
 

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exec
 import graft.model.Tables
 import TextOps.{h31, h31Sql, portableHash, portableHashSql, HashP}
 
@@ -128,19 +129,6 @@ object Dedup {
     "list_transform(generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1))," +
       " i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))"
 
-  /** Scale-adaptive doc_id spread (r15, guide §2.5): hash-partition on
-    * doc_id to default parallelism ONLY when the current plan runs on
-    * fewer partitions. The md5-dense shingle/gram projections cost per
-    * ROW while scan parallelism follows BYTES — a tiny scan yields 2-3
-    * splits and serializes the hashing onto as many cores; at production
-    * scale the scan already fans wider and this is a no-op. doc_id is
-    * the key every downstream per-doc aggregate/window clusters on.
-    */
-  private[ext] def spreadByDoc(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par, col("doc_id")) else df
-  }
-
   /** Near-dup corpus: every 25th doc re-appears (id+100000) with a token
     * appended — Jaccard ≈ 0.95 against its source.
     */
@@ -206,7 +194,7 @@ object Dedup {
     * [[maxBandBucket]] cap applied before the self-join. Returns distinct
     * (doc_a, doc_b) with doc_a < doc_b. Persists the capped band table
     * internally (see below) under the registry's persist contract
-    * ([[graft.SparkEntry.queries]]): iterators clearCache between entries.
+    * ([[graft.SparkEntry.runEach]] clears the cache between entries).
     */
   private[ext] def bandedCandidates(shingled: DataFrame): DataFrame = {
     val bands = sigBandsOf(shingled, minhashCoefs, nBands, rowsPerBand)
@@ -1123,7 +1111,8 @@ object Dedup {
     val fpExpr =
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
         s" j -> array_min(slice(gs, j, $winnowW))))"
-    val fps = spreadByDoc(nearCorpus(docs))
+    // the md5-dense shingle projection costs per row: spread on doc_id
+    val fps = Exec.spread(nearCorpus(docs), col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
       .withColumn("gs", expr(s"transform($shinglesExpr, s -> $hLambda)"))
       .select(col("doc_id"), explode(expr(fpExpr)).as("fp"))
@@ -1225,14 +1214,9 @@ object Dedup {
     val truthF = Future(evalTruthPairs(shingled))
     val mhF = Future(evalSampledMh(shingled))
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    // doc_id-keyed spread (r15): both the winnow fingerprint projection
-    // and the simhash token explode + 60-bit partial aggregate are
-    // CPU-dense per-doc work that otherwise runs on raw scan splits
-    // (2 tasks at sf0.1); doc_id is also the simhash groupBy key, so the
-    // partial aggregate's exchange is established here once.
-    // guarded spread (r16, verdict #4): unconditional repartition would
-    // coalesce a wide production scan to exactly-#cores partitions
-    val sampled = spreadByDoc(nearCorpus(docs).filter(evalKeep(col("doc_id"))))
+    // spread on doc_id: both arms are CPU-dense per-doc work, and doc_id is
+    // the simhash groupBy key, so its exchange is established here once
+    val sampled = Exec.spread(nearCorpus(docs).filter(evalKeep(col("doc_id"))), col("doc_id"))
     val hLambda = TextOps.h31ExprSql("s")
     // winnow arm (the qDocWinnow pipeline, sample-restricted)
     val fpExpr =
@@ -2789,8 +2773,8 @@ object Dedup {
     */
   def qDocDupSpans(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val corpus = spreadByDoc(nearCorpus(
-        Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))))
+    val corpus = Exec.spread(nearCorpus(
+        Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))), col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
     val gramsExpr =
       s"transform(sequence(1, size(toks) - ${dupSpanK - 1}), i -> struct(i AS pos, " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exec.spread
 import graft.model.Tables
 
 /** Distributed graph analytics beyond [[Dedup.connectedComponents]]'s
@@ -35,24 +36,8 @@ import graft.model.Tables
   */
 object Graph {
 
-  /** Scale-adaptive spread (r15, guide §2.5/§2.6): hash-partition `df` on
-    * `key` to default parallelism ONLY when its current plan would run on
-    * fewer partitions. Every graph query starts from the
-    * orders⋈lineitem purchase-edge build, whose map-side join + partial
-    * distinct cost follows ROW count while scan parallelism follows
-    * BYTES — a tiny sf0.1 scan yields 3 splits and serializes the build
-    * onto 3 of 32 cores. At production scale the scan already fans wider
-    * than the core count and this is a no-op, so no extra exchange is
-    * paid where it wouldn't help. `key` is always the equi-join key, so
-    * the spread's partitioning is the one the join wants anyway.
-    */
-  private def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
-  }
-
-  /** The (l_orderkey, l_suppkey) projection of lineitem, spread to full
-    * parallelism — the shared stream side of every purchase-graph edge
+  /** The (l_orderkey, l_suppkey) projection of lineitem, spread on the
+    * equi-join key — the shared stream side of every purchase-graph edge
     * build below.
     */
   private def lineitemOrderSupp(spark: SparkSession, sfDir: String): DataFrame =
@@ -320,16 +305,8 @@ object Graph {
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
     // per-order quadratic, bounded by order width (≤7 lineitems) — the
     // standard co-occurrence edge build, same shape as qEventCooccur.
-    // The STREAM side is hash-spread on the order key first (r15, guide
-    // §2.5/§2.6): the expansion's cost follows order count, not input
-    // bytes, so leaving it on raw scan splits serializes the quadratic
-    // work onto however few splits the file layout produced (3 tasks at
-    // sf0.1; one giant unsplittable file in production) — the shuffle
-    // moves only the 16-byte (ok, p) projection and the order-key
-    // partitioning is what the equi-join clusters on anyway.
-    // guarded (r16, verdict #4): at production scale the scan already
-    // fans wider than the core count and the spread is a no-op — the
-    // unconditional form would pin the exchange width against AQE
+    // The stream side is spread on the order key: the expansion costs per
+    // order, not per input byte, and the equi-join clusters on that key.
     val und = spread(pairs, col("ok")).as("a")
       .join(pairs.as("b"), col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
       .select(col("a.p").as("u"), col("b.p").as("v"))

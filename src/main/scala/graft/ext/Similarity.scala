@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exec
 import graft.model.Tables
 
 /** Similarity-search operators over the `embeddings` table
@@ -2045,18 +2046,10 @@ object Similarity {
     */
   def qEmbIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val embRaw = Tables.embeddings(spark, sfDir)
-    // Scale-adaptive spread on vec_id (r16, the gramCells pattern, guide
-    // §2.5): the whole IVFPQ pipeline is broadcast-probe NARROW, so every
-    // stage inherits the scan's partitioning — a one-split sf0.1 scan ran
-    // assignment, residual encode AND the ADC scoring fold single-task
-    // (probe: 27 one-task stages, 5.3 s). Cost follows vector count, scan
-    // parallelism follows bytes; a no-op where the scan fans wide.
-    val embP = embRaw
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
-    val par = spark.sparkContext.defaultParallelism
-    val emb =
-      if (embP.rdd.getNumPartitions < par) embP.repartition(par, col("vec_id"))
-      else embP
+    // spread on vec_id: the whole pipeline is broadcast-probe narrow, so
+    // every stage inherits this partitioning
+    val emb = Exec.spread(embRaw
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e")), col("vec_id"))
     // THIS call owns both persists: the quantizer feeds assignment and the
     // residual-centroid derivation; the residual codebook feeds encode and
     // the query distance tables.
@@ -2225,16 +2218,9 @@ object Similarity {
   }
 
   def qEmbTwonnId(spark: SparkSession, sfDir: String): DataFrame = {
-    val embRaw = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    // scale-adaptive spread (r15): the probe cross-join evaluates
-    // |sample| squared distances per vector — row-count-bound work that
-    // ran on the one-split scan as a single 1.5 s task (see gramCells)
-    val par = spark.sparkContext.defaultParallelism
-    val embSpread =
-      if (embRaw.rdd.getNumPartitions < par) embRaw.repartition(par, col("vec_id"))
-      else embRaw
-    val emb = embSpread
+    // spread: the probe cross-join evaluates |sample| distances per vector
+    val emb = Exec.spread(Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
     val sample = emb.filter(col("vec_id") % twonnSampleMod === 0)
       .select(col("vec_id").as("s_id"), col("e").as("se"))
@@ -3129,19 +3115,9 @@ object Similarity {
     * and [[qEmbPowerIter]].
     */
   private def gramCells(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    // Scale-adaptive spread on vec_id (r15, guide §2.5): the O(d²)
-    // upper-triangle expansion is ~2080 cell rows per vector — cost
-    // follows VECTOR count while scan parallelism follows bytes, so the
-    // one-split sf0.1 scan ran the whole expansion single-task (probe:
-    // one 2 s 1-task stage). At production scale the scan already fans
-    // wider than the core count and this is a no-op.
-    val par = spark.sparkContext.defaultParallelism
-    val embRaw = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val embSpread =
-      if (embRaw.rdd.getNumPartitions < par) embRaw.repartition(par, col("vec_id"))
-      else embRaw
-    val emb = embSpread
+    // spread on vec_id: the O(d²) expansion is ~2080 cell rows per vector
+    val emb = Exec.spread(Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(col("vec_id"),
         expr(s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $gramScale) AS BIGINT))")
           .as("q"))
@@ -3563,20 +3539,11 @@ object Similarity {
     * ranking window runs over exactly d rows. Output d rows.
     */
   def qEmbEnergySpectrum(spark: SparkSession, sfDir: String): DataFrame = {
-    // DIAGONAL-ONLY sufficient statistic (r15, guide §1.2 "don't compute
-    // things you throw away"): this query consumes ONLY the d diagonal
-    // cells, but gramCells expands the full O(d²) upper triangle per
-    // vector (~2080 rows/vec) before the filter could drop 2016 of them.
-    // One posexplode pass computes (n, Σq_i², Σq_i) per dimension — the
-    // same exact integers the diagonal of cells ⋈ dims carried — at
-    // O(n·d) instead of O(n·d²). Spread on vec_id as in gramCells.
-    val par = spark.sparkContext.defaultParallelism
-    val embRaw = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val embSpread =
-      if (embRaw.rdd.getNumPartitions < par) embRaw.repartition(par, col("vec_id"))
-      else embRaw
-    val diag = embSpread
+    // Diagonal-only sufficient statistic: one posexplode pass computes
+    // (n, Σq_i², Σq_i) per dimension at O(n·d), not gramCells' O(n·d²).
+    // Spread on vec_id as in gramCells.
+    val diag = Exec.spread(Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding")), col("vec_id"))
       .select(expr(s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $gramScale) AS BIGINT))")
         .as("q"))
       .select(posexplode(col("q")).as(Seq("d", "qv")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exec
 import graft.model.Tables
 
 /** Text-analysis operators for LLM training-data pipelines (north-star set,
@@ -2447,12 +2448,10 @@ object TextOps {
     val n = noveltyN
     val gramsExpr = "transform(sequence(1, size(toks) - " + (n - 1) +
       s"), i -> concat_ws(' ', slice(toks, i, $n)))"
-    // spread + persist (r15): the gram explode ran on the one-split scan
-    // (two ~0.8 s single-task stages), and gd feeds BOTH the first-doc
-    // aggregate and the novelty join — unpersisted, the explode+distinct
-    // evaluated twice.
-    val gd = Dedup.spreadByDoc(Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("source"), col("text")))
+    // spread the per-row gram explode; persist because gd feeds both the
+    // first-doc aggregate and the novelty join
+    val gd = Exec.spread(Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("source"), col("text")), col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), col("source"), explode(expr(gramsExpr)).as("g"))

@@ -73,7 +73,7 @@ object GraftOps {
 
 /** Registers graft's custom functions and planner strategies for the SQL/
   * session surface — use via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or the
+  * the session builder's `withExtensions(new GraftExtensions)` or the
   * `spark.sql.extensions` conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exec
 import graft.model.Tables
 
 /** Warehouse-maintenance operators the reference's star-schema context
@@ -2718,17 +2719,11 @@ object Warehouse {
     import spark.implicits._
     val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
       (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
-    val liRaw = Tables.lineitem(spark, sfDir)
+    // spread on the weekly aggregate's key
+    val li = Exec.spread(Tables.lineitem(spark, sfDir)
       .select($"l_partkey",
         datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"),
-        $"l_quantity".cast(DecimalType(18, 4)).as("qd"), rev.as("rev"))
-    // scale-adaptive spread on the weekly aggregate's key (r15, guide
-    // §2.5): the decimal projection + (partkey, week) partial aggregate
-    // ran on 3 scan splits at sf0.1; no-op where the scan fans wider
-    val li =
-      if (liRaw.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
-        liRaw.repartition(spark.sparkContext.defaultParallelism, $"l_partkey")
-      else liRaw
+        $"l_quantity".cast(DecimalType(18, 4)).as("qd"), rev.as("rev")), $"l_partkey")
     val span = li.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select($"d0", (expr(s"(d1 - d0) div $xyzWeekDays") + 1).as("n_weeks"))
     val weekly = li.crossJoin(broadcast(span))

@@ -1,0 +1,66 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.functions.{col, countDistinct, spark_partition_id}
+
+/** The local-execution module: the session factory's config, the
+  * scale-adaptive spread rule, and the registry runner's cache contract.
+  */
+class ExecSpec extends SparkSuite {
+
+  test("session factory: local[4], UTC, nanosAsLong, no UI, warehouse under target/, WARN") {
+    val s = Exec.session(4)
+    assert(s eq spark) // the suites share the factory's session
+    assert(s.sparkContext.master === "local[4]")
+    Seq("spark.sql.shuffle.partitions" -> "4", "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true", "spark.ui.enabled" -> "false")
+      .foreach { case (k, v) => assert(s.sparkContext.getConf.get(k) === v, k) }
+    assert(s.conf.get("spark.sql.warehouse.dir").endsWith("target/spark-warehouse"))
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel ===
+      org.apache.logging.log4j.Level.WARN)
+  }
+
+  test("spread: a one-partition frame is hash-partitioned on the key to default parallelism") {
+    val par = spark.sparkContext.defaultParallelism
+    val narrow = spark.range(0L, 1000L, 1L, 1).select((col("id") % 37).as("k"))
+    val spread = Exec.spread(narrow, col("k"))
+    assert(spread.rdd.getNumPartitions === par)
+    spread.queryExecution.analyzed match {
+      case r: RepartitionByExpression =>
+        assert(r.optNumPartitions === Some(par))
+        assert(r.partitionExpressions.map(_.sql) === Seq("k"))
+      case p => fail(s"expected a hash repartition on k, got:\n$p")
+    }
+    // every key lands in exactly one partition
+    val spans = spread.withColumn("pid", spark_partition_id())
+      .groupBy(col("k")).agg(countDistinct(col("pid")).as("n")).collect()
+    assert(spans.length === 37 && spans.forall(_.getLong(1) === 1L))
+  }
+
+  test("spread: a frame already as wide as default parallelism comes back unchanged") {
+    val par = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0L, 1000L, 1L, par).toDF()
+    assert(Exec.spread(wide, col("id")) eq wide)
+  }
+
+  test("runEach: a throwing entry fails alone, and the cache is empty after every entry") {
+    spark.catalog.clearCache()
+    val names = SparkEntry.queries.keys.take(3).toSeq
+    val cacheEmptyOnEntry = mutable.Buffer.empty[Boolean]
+    val results = SparkEntry.runEach(spark, names.toSet) { (name, fn) =>
+      cacheEmptyOnEntry += spark.sharedState.cacheManager.isEmpty
+      // every entry persists a frame; the middle one then throws
+      val cached = spark.range(0L, 100L).persist()
+      assert(cached.count() === 100L)
+      if (name == names(1)) throw new IllegalStateException(s"boom in $name")
+      fn(spark, sf).limit(1).count()
+    }
+    assert(results.map(_._1) === names) // registry order, all three ran
+    assert(results(0)._2.isRight && results(2)._2.isRight)
+    assert(results(1)._2.left.toOption.map(_.getMessage) === Some(s"boom in ${names(1)}"))
+    assert(cacheEmptyOnEntry.toSeq === Seq(true, true, true))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+}

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev diagnostic (not a spec): dump physical-plan shape counters for
   * registry queries — cartesians, nested-loop joins, single-partition
   * exchanges, sort-merge vs broadcast joins, hash exchanges. Run with:
@@ -16,24 +14,16 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanScan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Exec.session(4)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val only = args.headOption.map(_.split(',').toSet)
-    for ((n, fn) <- SparkEntry.queries if only.forall(_.contains(n))) {
-      try {
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        def c(p: String) = p.r.findAllIn(plan).length
-        println(f"$n%-28s cart=${c("CartesianProduct")} bnl=${c("BroadcastNestedLoopJoin")} " +
-          f"single=${c("Exchange SinglePartition")} smj=${c("SortMergeJoin")} " +
-          f"bhj=${c("BroadcastHashJoin")} hashex=${c("Exchange hashpartitioning")}")
-      } catch { case e: Throwable => println(s"$n FAILED: ${e.getClass.getName}") }
-      spark.catalog.clearCache()
-    }
+    SparkEntry.runEach(spark, n => only.forall(_.contains(n))) { (n, fn) =>
+      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+      def c(p: String) = p.r.findAllIn(plan).length
+      println(f"$n%-28s cart=${c("CartesianProduct")} bnl=${c("BroadcastNestedLoopJoin")} " +
+        f"single=${c("Exchange SinglePartition")} smj=${c("SortMergeJoin")} " +
+        f"bhj=${c("BroadcastHashJoin")} hashex=${c("Exchange hashpartitioning")}")
+    }.foreach { case (n, r) => r.left.foreach(e => println(s"$n FAILED: ${e.getClass.getName}")) }
     spark.stop()
   }
 }

@@ -12,13 +12,5 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate either events.ts footer era; Tables.events branches on loaded type
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse") // keep saveAsTable out of the repo root
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Exec.session(4)
 }

@@ -59,4 +59,11 @@ class DimsSpec extends SparkSuite {
     assert(z.columns.toSeq === Seq("LocationID", "Borough", "Zone", "service_zone"))
     assert(z.schema.fields.forall(_.dataType === StringType))
   }
+
+  test("zone lookup CSV: a missing path names the path and the override") {
+    val missing = "target/no-such-dir/taxi_zone_lookup.csv"
+    val e = intercept[java.io.FileNotFoundException](Dims.dimTaxiZoneLookup(spark, missing))
+    assert(e.getMessage.contains(missing))
+    assert(e.getMessage.contains("GRAFT_ZONE_CSV") && e.getMessage.contains("-Dgraft.zone.csv"))
+  }
 }

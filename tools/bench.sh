@@ -1,32 +1,7 @@
 #!/usr/bin/env bash
-# Full-registry benchmark off the compiled classes (no sbt lock), with the
-# JDK-17 module opens Spark needs. NOTE (r14 verdict #4): a bare
-# `java -cp /opt/spark/jars/*:target/scala-2.13/classes graft.Bench` WITHOUT
-# the --add-opens set below fails the three custom-Aggregator queries
-# (q_value_log_histogram, q_doc_heavy_hitters, q_value_qdigest) with
-# EXPRESSION_ENCODING_FAILED on this JDK — that is a harness artifact, not a
-# regression; spark-submit/sbt add these flags for you, bare java does not.
-# Build first: `sbt compile`. Env passthrough: SPARK_GRAFT_SF_DIR (default
-# sf0.1), SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_ONLY, SPARK_GRAFT_PASSES.
-set -uo pipefail
-cd "$(dirname "$0")/.."
-
-# the FULL org.apache.spark.launcher.JavaModuleOptions set — the partial
-# list sweep.sh historically used is enough for Verify but NOT for the
-# three custom-Aggregator bench queries (jdk.internal.ref + native access
-# are the load-bearing additions for their serializer encoders)
-ADD_OPENS="--enable-native-access=ALL-UNNAMED"
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         jdk.internal.ref jdk.internal.misc \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-ADD_OPENS="$ADD_OPENS --add-opens java.security.jgss/sun.security.krb5=ALL-UNNAMED"
-
-SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-java $ADD_OPENS -Xmx32g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
-  graft.Bench
+# Full-registry benchmark off the compiled classes (no sbt lock), through
+# tools/launch.sh, which carries the JDK-17 module opens Spark needs. Build
+# first: `sbt compile`. Env passthrough: SPARK_GRAFT_SF_DIR (default sf0.1),
+# SPARK_GRAFT_CPUS (default: host cores), SPARK_DRIVER_MEM, SPARK_GRAFT_ONLY,
+# SPARK_GRAFT_PASSES, SPARK_GRAFT_WARMUP.
+exec "$(dirname "$0")/launch.sh" graft.Bench

@@ -3,8 +3,8 @@
 # sf0.1 via graft.Bench (same warmup + min-of-passes discipline as the
 # per-round artifact) and leaves one JSON file per SF in /tmp/scaling/.
 # tools/scaling_report.py turns those into SCALING.md with per-query
-# time-vs-SF exponents. Runs the compiled classes directly (no sbt) so it
-# can run alongside an sbt session; build first: `sbt compile`.
+# time-vs-SF exponents. Runs the compiled classes through tools/launch.sh
+# (no sbt) so it can run alongside an sbt session; build first: `sbt compile`.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -36,15 +36,6 @@ PY
 )
 fi
 
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 mkdir -p /tmp/scaling
 # Incremental mode: SCALING_MERGE=q_a,q_b times ONLY those queries and
 # merges them into the existing /tmp/scaling/sf*.json before the report —
@@ -64,12 +55,8 @@ for sf in 0.001 0.01 0.1; do
   echo "=== sf$sf ==="
   SPARK_GRAFT_SF_DIR="/root/testdata/sf$sf" \
   SPARK_GRAFT_ONLY="$HEAVIES" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_PASSES="${SPARK_GRAFT_PASSES:-2}" \
-  java $ADD_OPENS -Xmx32g \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
-    graft.Bench | tail -1 > "$OUTDIR/sf$sf.json"
+  tools/launch.sh graft.Bench | tail -1 > "$OUTDIR/sf$sf.json"
   # Bench writes bench_latest.json in cwd only on FULL-registry runs (a
   # subset artifact once shadowed the round artifact); the restore stays
   # as a belt-and-braces guard.

@@ -5,22 +5,13 @@
 # swaps, >2^53 DECIMAL→double drift) that ONLY manifest at other SFs — run
 # this at least once per round before the end-of-round snapshot.
 #
-# Runs the compiled classes directly (no sbt lock) so it can run alongside an
-# sbt session; build first: `sbt compile`. Subset dev loop: pass a comma-
-# separated query list as $1 (default: full registry).
+# Runs the compiled classes through tools/launch.sh (no sbt lock) so it can
+# run alongside an sbt session; build first: `sbt compile`. Subset dev loop:
+# pass a comma-separated query list as $1 (default: full registry).
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
 ONLY="${1:-}"
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 
 rc=0
 # prove the SCALING-gap guard actually fires on a deliberately-missing op
@@ -31,10 +22,7 @@ for sf in 0.001 0.01 0.1; do
   out="/tmp/sweep_sf$sf"
   log="/tmp/sweep_sf$sf.verify.log"
   rm -rf "$out"
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
-  java $ADD_OPENS -Xmx32g \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
+  tools/launch.sh \
     graft.Verify "/root/testdata/sf$sf" "$out" $ONLY 2>"$log" | grep '\[verify\]'
   vrc=${PIPESTATUS[0]}
   if [ "$vrc" -ne 0 ]; then
