@@ -42,4 +42,16 @@ object Exec {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
   }
+
+  /** Run independent eager arms (chains of Spark jobs) concurrently and
+    * return their results in submission order. Spark schedules concurrent
+    * jobs FIFO with back-fill, so one arm's barrier tail overlaps the next
+    * arm's tasks. An arm's exception is rethrown to the caller.
+    */
+  def concurrently[A](arms: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    arms.map(arm => Future(arm())).map(Await.result(_, Duration.Inf))
+  }
 }

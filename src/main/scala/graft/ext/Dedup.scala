@@ -458,18 +458,11 @@ object Dedup {
     * CC-loop lesson).
     */
   def qDocMinhashEval(spark: SparkSession, sfDir: String): DataFrame = {
-    // OVERLAPPED ARMS (r15, guide §2.6): the LSH and truth arms are
-    // independent materialization chains off the shared persisted
-    // shingle table — submit them concurrently so one arm's job-barrier
-    // tails back-fill with the other arm's tasks (see qDocDedupEnsemble).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // the LSH and truth arms are independent materialization chains off
+    // the shared persisted shingle table: run them concurrently
     val shingled = nearDupShingled(spark, sfDir)
-    val mhF = Future(evalSampledMh(shingled))
-    val truthF = Future(evalTruthPairs(shingled))
-    val mh = Await.result(mhF, Duration.Inf)
-    val truth = Await.result(truthF, Duration.Inf)
+    val Seq(mh, truth) = Exec.concurrently(
+      () => evalSampledMh(shingled), () => evalTruthPairs(shingled))
     val truthC = truth.agg(count(lit(1)).as("n_true_pairs"))
     val mhC = mh.agg(count(lit(1)).as("n_lsh_pairs"))
     val foundC = truth.join(mh, Seq("doc_a", "doc_b"))
@@ -1199,20 +1192,9 @@ object Dedup {
     * broadcast cross-joins.
     */
   def qDocDedupEnsemble(spark: SparkSession, sfDir: String): DataFrame = {
-    // OVERLAPPED ARMS (r15, guide §2.6): the truth, LSH, winnow and
-    // simhash arms are mutually independent chains of eager
-    // materializations (persist+count / localCheckpoint barriers); run
-    // sequentially each barrier's tail left the cluster idle — four
-    // arms ≈ ten sequential job latencies. Spark's scheduler runs
-    // concurrent jobs FIFO with back-fill, so submitting the arms from
-    // futures overlaps each arm's stragglers with the next arm's work.
-    // Pure transformations + count barriers: results are unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // the truth, LSH, winnow and simhash arms are mutually independent
+    // chains of eager materializations: run them concurrently
     val shingled = nearDupShingled(spark, sfDir)
-    val truthF = Future(evalTruthPairs(shingled))
-    val mhF = Future(evalSampledMh(shingled))
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     // spread on doc_id: both arms are CPU-dense per-doc work, and doc_id is
     // the simhash groupBy key, so its exchange is established here once
@@ -1222,7 +1204,7 @@ object Dedup {
     val fpExpr =
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
         s" j -> array_min(slice(gs, j, $winnowW))))"
-    val wPairsF = Future {
+    def winnowArm(): DataFrame = {
       val fps = sampled
         .withColumn("toks", split(col("text"), " "))
         .withColumn("gs", expr(s"transform($shinglesExpr, s -> $hLambda)"))
@@ -1252,7 +1234,7 @@ object Dedup {
     val sigExpr = (0 until ensSimhashBits)
       .map(j => when(col(s"s$j") >= 0, 1L << j).otherwise(0L))
       .reduce((a, b) => a + b)
-    val sPairsF = Future {
+    def simhashArm(): DataFrame = {
       val sigs = sampled
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
         .select(col("doc_id"), TextOps.portableHash(col("t")).as("h"))
@@ -1282,10 +1264,9 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"))
         .localCheckpoint(true)
     }
-    val truth = Await.result(truthF, Duration.Inf)
-    val mh = Await.result(mhF, Duration.Inf)
-    val wPairs = Await.result(wPairsF, Duration.Inf)
-    val sPairs = Await.result(sPairsF, Duration.Inf)
+    val Seq(truth, mh, wPairs, sPairs) = Exec.concurrently(
+      () => evalTruthPairs(shingled), () => evalSampledMh(shingled),
+      () => winnowArm(), () => simhashArm())
     // ONE-PASS method stats (r15): the per-arm statsOf helper ran three
     // n_pred aggregates, three n_true aggregates over the same truth
     // table and three truth-join count jobs, stitched with six broadcast

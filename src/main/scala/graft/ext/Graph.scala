@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,6 +93,63 @@ object Graph {
     */
   val supplierIdOffset: Long = 1000000L
 
+  /** The purchase graph's node set: customers ∪ offset suppliers. */
+  private def purchaseNodes(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
+      .unionAll(Tables.supplier(spark, sfDir)
+        .select((col("s_suppkey") + supplierIdOffset).as("id")))
+
+  /** The purchase graph's edge set: DISTINCT (o_custkey, l_suppkey) pairs
+    * of orders ⋈ lineitem, named (`src`, `dst`); supplier ids move into
+    * the shared node-id space unless `offsetSuppliers` is false.
+    */
+  private def purchaseEdges(spark: SparkSession, sfDir: String,
+      src: String = "src", dst: String = "dst",
+      offsetSuppliers: Boolean = true): DataFrame = {
+    val supp = if (offsetSuppliers) col("l_suppkey") + supplierIdOffset else col("l_suppkey")
+    Tables.orders(spark, sfDir)
+      .join(lineitemOrderSupp(spark, sfDir), col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as(src), supp.as(dst))
+      .distinct()
+  }
+
+  /** Both directions of every `(src, dst)` edge from ONE pass over `fwd`
+    * (a union of the two directions evaluates `fwd` once per branch).
+    */
+  private def bothWays(fwd: DataFrame): DataFrame =
+    fwd.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** The `kind` label of a node id: `supplier` past the offset, else `customer`. */
+  private def kind(id: Column): Column =
+    when(id >= supplierIdOffset, lit("supplier")).otherwise(lit("customer")).as("kind")
+
+  // The oracle-SQL twins of the four definitions above.
+  private def nodesCteSql: String =
+    s"""nodes AS (
+       |  SELECT c_custkey AS id FROM customer
+       |  UNION ALL SELECT s_suppkey + $supplierIdOffset AS id FROM supplier
+       |)""".stripMargin
+
+  private def edgesCteSql(name: String, src: String = "src", dst: String = "dst",
+      offsetSuppliers: Boolean = true): String = {
+    val supp = if (offsetSuppliers) s"l_suppkey + $supplierIdOffset" else "l_suppkey"
+    s"""$name AS (
+       |  SELECT DISTINCT o_custkey AS $src, $supp AS $dst
+       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+       |)""".stripMargin
+  }
+
+  private def bothWaysCteSql(name: String, fwd: String): String =
+    s"""$name AS (
+       |  SELECT src, dst FROM $fwd UNION ALL SELECT dst AS src, src AS dst FROM $fwd
+       |)""".stripMargin
+
+  private def kindSql(id: String): String =
+    s"CASE WHEN $id >= $supplierIdOffset THEN 'supplier' ELSE 'customer' END AS kind"
+
   /** PageRank over the customer→supplier purchase graph (who supplies
     * the well-connected buyers): nodes = customers ∪ offset suppliers,
     * edges = DISTINCT (o_custkey → l_suppkey) pairs from orders ⋈
@@ -100,23 +157,10 @@ object Graph {
     * they settle at pure teleport rank; suppliers accumulate rank
     * proportional to their buyer reach — surfaced per node with its kind.
     */
-  def qGraphPagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
-      .unionAll(Tables.supplier(spark, sfDir)
-        .select((col("s_suppkey") + supplierIdOffset).as("id")))
-    val edges = Tables.orders(spark, sfDir)
-      .join(lineitemOrderSupp(spark, sfDir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + supplierIdOffset).as("dst"))
-      .distinct()
-    pageRank(nodes, edges, iters = 3)
-      .select(col("id").as("node_id"),
-        when(col("id") >= supplierIdOffset, lit("supplier"))
-          .otherwise(lit("customer")).as("kind"),
-        col("rank_scaled"))
+  def qGraphPagerank(spark: SparkSession, sfDir: String): DataFrame =
+    pageRank(purchaseNodes(spark, sfDir), purchaseEdges(spark, sfDir), iters = 3)
+      .select(col("id").as("node_id"), kind(col("id")), col("rank_scaled"))
       .orderBy(col("node_id"))
-  }
 
   /** Oracle: the same three iterations unrolled as chained CTEs — every
     * step exact integer arithmetic, so the compare is hash-exact. DuckDB
@@ -133,22 +177,14 @@ object Graph {
          |    JOIN $prev p ON p.id = e.src
          |    JOIN outdeg o ON o.src = e.src
          |    GROUP BY e.dst) m ON m.id = n.id)""".stripMargin
-    s"""WITH nodes AS (
-       |  SELECT c_custkey AS id FROM customer
-       |  UNION ALL SELECT s_suppkey + 1000000 AS id FROM supplier
-       |),
-       |edges AS (
-       |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |),
+    s"""WITH $nodesCteSql,
+       |${edgesCteSql("edges")},
        |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
        |r0 AS (SELECT id, CAST(1000000000000 AS BIGINT) AS r FROM nodes),
        |${step("r0", "r1")},
        |${step("r1", "r2")},
        |${step("r2", "r3")}
-       |SELECT id AS node_id,
-       |  CASE WHEN id >= 1000000 THEN 'supplier' ELSE 'customer' END AS kind,
-       |  r AS rank_scaled
+       |SELECT id AS node_id, ${kindSql("id")}, r AS rank_scaled
        |FROM r3 ORDER BY node_id""".stripMargin
   }
 
@@ -207,30 +243,13 @@ object Graph {
     * (their sentinel is an implementation detail, not a distance).
     */
   def qGraphReach(spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
-      .unionAll(Tables.supplier(spark, sfDir)
-        .select((col("s_suppkey") + supplierIdOffset).as("id")))
-    val fwd = Tables.orders(spark, sfDir)
-      .join(lineitemOrderSupp(spark, sfDir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + supplierIdOffset).as("dst"))
-      .distinct()
-    // both directions from ONE pass (r16): the unionAll form evaluated
-    // the whole orders⋈lineitem distinct pipeline once per branch
-    val edges = fwd.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     val sources = Tables.supplier(spark, sfDir)
       .filter(col("s_suppkey") <= 2)
       .select((col("s_suppkey") + supplierIdOffset).as("id"))
-    shortestPaths(nodes, edges, sources, maxHops = 4)
+    shortestPaths(purchaseNodes(spark, sfDir), bothWays(purchaseEdges(spark, sfDir)),
+        sources, maxHops = 4)
       .filter(col("hops") < unreached)
-      .select(col("id").as("node_id"),
-        when(col("id") >= supplierIdOffset, lit("supplier"))
-          .otherwise(lit("customer")).as("kind"),
-        col("hops"))
+      .select(col("id").as("node_id"), kind(col("id")), col("hops"))
       .orderBy(col("node_id"))
   }
 
@@ -243,17 +262,9 @@ object Graph {
          |    SELECT e.dst AS id, MIN(p.d + 1) AS nd
          |    FROM edges e JOIN $prev p ON p.id = e.src
          |    GROUP BY e.dst) m ON m.id = d.id)""".stripMargin
-    s"""WITH nodes AS (
-       |  SELECT c_custkey AS id FROM customer
-       |  UNION ALL SELECT s_suppkey + 1000000 AS id FROM supplier
-       |),
-       |fwd AS (
-       |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |),
-       |edges AS (
-       |  SELECT src, dst FROM fwd UNION ALL SELECT dst AS src, src AS dst FROM fwd
-       |),
+    s"""WITH $nodesCteSql,
+       |${edgesCteSql("fwd")},
+       |${bothWaysCteSql("edges", "fwd")},
        |d0 AS (
        |  SELECT id, CASE WHEN id IN (SELECT s_suppkey + 1000000 FROM supplier
        |                              WHERE s_suppkey <= 2)
@@ -264,9 +275,7 @@ object Graph {
        |${round("d1", "d2")},
        |${round("d2", "d3")},
        |${round("d3", "d4")}
-       |SELECT id AS node_id,
-       |  CASE WHEN id >= 1000000 THEN 'supplier' ELSE 'customer' END AS kind,
-       |  d AS hops
+       |SELECT id AS node_id, ${kindSql("id")}, d AS hops
        |FROM d4 WHERE d < $unreached ORDER BY node_id""".stripMargin
   }
 
@@ -473,25 +482,10 @@ object Graph {
     * kept only while ≥3 of their suppliers survive, and vice versa.
     * Surviving nodes report their within-core degree.
     */
-  def qGraphKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val fwd = Tables.orders(spark, sfDir)
-      .join(lineitemOrderSupp(spark, sfDir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + supplierIdOffset).as("dst"))
-      .distinct()
-    // both directions from ONE pass (r16, see qGraphReach)
-    val edges = fwd.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    kCorePeel(edges, k = 3, rounds = 4)
-      .select(col("id").as("node_id"),
-        when(col("id") >= supplierIdOffset, lit("supplier"))
-          .otherwise(lit("customer")).as("kind"),
-        col("deg"))
+  def qGraphKcore(spark: SparkSession, sfDir: String): DataFrame =
+    kCorePeel(bothWays(purchaseEdges(spark, sfDir)), k = 3, rounds = 4)
+      .select(col("id").as("node_id"), kind(col("id")), col("deg"))
       .orderBy(col("node_id"))
-  }
 
   /** Oracle: the identical 4 unrolled peel rounds. */
   val qGraphKcoreSql: String = {
@@ -500,20 +494,13 @@ object Graph {
          |e$i AS (
          |  SELECT e.src, e.dst FROM $prev e
          |  WHERE e.src IN (SELECT n FROM k$i) AND e.dst IN (SELECT n FROM k$i))""".stripMargin
-    s"""WITH fwd AS (
-       |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |),
-       |e0 AS (
-       |  SELECT src, dst FROM fwd UNION ALL SELECT dst AS src, src AS dst FROM fwd
-       |),
+    s"""WITH ${edgesCteSql("fwd")},
+       |${bothWaysCteSql("e0", "fwd")},
        |${round("e0", 1)},
        |${round("e1", 2)},
        |${round("e2", 3)},
        |${round("e3", 4)}
-       |SELECT src AS node_id,
-       |  CASE WHEN src >= 1000000 THEN 'supplier' ELSE 'customer' END AS kind,
-       |  CAST(count(*) AS BIGINT) AS deg
+       |SELECT src AS node_id, ${kindSql("src")}, CAST(count(*) AS BIGINT) AS deg
        |FROM e4 GROUP BY src ORDER BY node_id""".stripMargin
   }
 
@@ -548,11 +535,7 @@ object Graph {
     * scores and the (score DESC, s_a, s_b) cut are engine-identical.
     */
   def qGraphLinkpred(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = Tables.orders(spark, sfDir)
-      .join(lineitemOrderSupp(spark, sfDir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .distinct()
+    val edges = purchaseEdges(spark, sfDir, "c", "s", offsetSuppliers = false)
       .persist()
     // LAZY persist (r16, the qGraphTriangles a47934e pattern): the two
     // consumers are SEQUENTIAL driver actions — the deg localCheckpoint
@@ -587,10 +570,7 @@ object Graph {
   }
 
   val qGraphLinkpredSql: String =
-    s"""WITH edges AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |),
+    s"""WITH ${edgesCteSql("edges", "c", "s", offsetSuppliers = false)},
        |deg AS (SELECT s, count(*) AS d FROM edges GROUP BY s),
        |pairs AS (
        |  SELECT a.s AS s_a, b.s AS s_b, count(*) AS common
@@ -634,10 +614,7 @@ object Graph {
     * 1-row aggregate, map-side combined.
     */
   def qGraphAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = Tables.orders(spark, sfDir)
-      .join(lineitemOrderSupp(spark, sfDir), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-      .distinct()
+    val edges = purchaseEdges(spark, sfDir, offsetSuppliers = false)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("x"))
     val indeg = edges.groupBy(col("dst")).agg(count(lit(1)).as("y"))
     edges.join(outdeg, "src").join(indeg, "dst")
@@ -654,10 +631,7 @@ object Graph {
   }
 
   val qGraphAssortativitySql: String =
-    """WITH edges AS (
-      |  SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
-      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-      |),
+    s"""WITH ${edgesCteSql("edges", offsetSuppliers = false)},
       |outdeg AS (SELECT src, count(*) AS x FROM edges GROUP BY src),
       |indeg AS (SELECT dst, count(*) AS y FROM edges GROUP BY dst),
       |sums AS (
@@ -724,9 +698,7 @@ object Graph {
     * phases of every round probe it.
     */
   private def lpCore(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val nodes = Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
-      .unionAll(Tables.supplier(spark, sfDir)
-        .select((col("s_suppkey") + supplierIdOffset).as("id")))
+    val nodes = purchaseNodes(spark, sfDir)
     val fwd = Tables.orders(spark, sfDir)
       .join(lineitemOrderSupp(spark, sfDir),
         col("o_orderkey") === col("l_orderkey"))
@@ -778,9 +750,7 @@ object Graph {
     val (labels, _) = lpCore(spark, sfDir)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comm_size"))
     labels.join(sizes, "lbl")
-      .select(col("id").as("node_id"),
-        when(col("id") >= supplierIdOffset, lit("supplier"))
-          .otherwise(lit("customer")).as("kind"),
+      .select(col("id").as("node_id"), kind(col("id")),
         col("lbl").as("community"), col("comm_size"))
       .orderBy(col("node_id"))
   }
@@ -808,10 +778,7 @@ object Graph {
     def round(prev: String, i: Int): String =
       s"""${phase(prev, s"a$i", "src", "dst")},
          |${phase(s"a$i", s"l$i", "dst", "src")}""".stripMargin
-    s"""nodes AS (
-       |  SELECT c_custkey AS id FROM customer
-       |  UNION ALL SELECT s_suppkey + $supplierIdOffset AS id FROM supplier
-       |),
+    s"""$nodesCteSql,
        |fwd AS MATERIALIZED (
        |  SELECT DISTINCT o_custkey AS src, l_suppkey + $supplierIdOffset AS dst
        |  FROM orders
@@ -832,8 +799,7 @@ object Graph {
   val qGraphLabelpropSql: String =
     s"""WITH $lpCoreCtesSql,
        |sizes AS (SELECT lbl, CAST(count(*) AS BIGINT) AS comm_size FROM l3 GROUP BY lbl)
-       |SELECT l3.id AS node_id,
-       |  CASE WHEN l3.id >= $supplierIdOffset THEN 'supplier' ELSE 'customer' END AS kind,
+       |SELECT l3.id AS node_id, ${kindSql("l3.id")},
        |  l3.lbl AS community, comm_size
        |FROM l3 JOIN sizes ON sizes.lbl = l3.lbl
        |ORDER BY node_id""".stripMargin

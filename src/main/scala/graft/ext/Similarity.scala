@@ -1614,38 +1614,23 @@ object Similarity {
     * stats are 1-row broadcast aggregates unioned into the 3-row result.
     */
   def qEmbAnnNprobeSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    // OVERLAPPED ARMS + ONE-PASS STATS (r15, guide §2.6 / §1.2): the
-    // exact arm, the quantizer build and the three sweep-point probes
-    // are mutually independent materialization chains — submitted from
-    // futures their barrier tails back-fill. Per-point stats then tag
-    // each candidate set with its nprobe and aggregate the union ONCE
-    // (one n_ann pass + one overlap-join pass + one n_exact aggregate)
-    // instead of nine 1-row jobs and six broadcast cross-joins; a left
-    // join from the literal nprobe list keeps empty-arm counts at 0.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val exactF = Future {
-      val e = qEmbCosineTopk(spark, sfDir)
-        .select(col("q_id"), col("vec_id")).persist()
-      e.count()
-      e
+    // the exact arm and the sweep-point probes are independent
+    // materialization chains, run concurrently. Per-point stats then tag
+    // each candidate set with its nprobe and aggregate the union ONCE; a
+    // left join from the literal nprobe list keeps empty-arm counts at 0.
+    def persisted(df: DataFrame): DataFrame = {
+      val p = df.select(col("q_id"), col("vec_id")).persist()
+      p.count()
+      p
     }
     // ONE quantizer for every sweep point, persisted here (the owner) —
-    // per-point qEmbAnnIvfNprobe calls would each re-persist the same
-    // plan (the r7 bench tail's "already cached" warnings)
+    // per-point qEmbAnnIvfNprobe calls would each re-persist the same plan
     val centArr = centroidArrayDf(spark, sfDir, None).persist()
     centArr.count()
-    val annFs = sweepNprobes.map { n =>
-      n -> Future {
-        val a = annIvfNprobeWith(spark, sfDir, n, centArr)
-          .select(col("q_id"), col("vec_id")).persist()
-        a.count()
-        a
-      }
-    }
-    val exact = Await.result(exactF, Duration.Inf)
-    val anns = annFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
+    val exact +: annArms = Exec.concurrently(
+      (() => persisted(qEmbCosineTopk(spark, sfDir))) +:
+        sweepNprobes.map(n => () => persisted(annIvfNprobeWith(spark, sfDir, n, centArr))): _*)
+    val anns = sweepNprobes.zip(annArms)
     val tagged = anns.map { case (n, a) =>
       a.select(lit(n).as("nprobe"), col("q_id"), col("vec_id"))
     }.reduce(_ unionAll _)

@@ -2980,23 +2980,13 @@ object Warehouse {
     // bit-identical to the direct weekly sum (floor applied after, as
     // before), while the checkpointed frames are |segments|·|days| rows
     // at any corpus scale.
-    // EAGER concurrent checkpoints — measured, do NOT swap for a lazy
-    // persist (r16 controlled A/B: lazy 2.62-2.82 s vs eager futures
-    // 1.66-1.85 s at sf0.1). The lazy form makes the span BROADCAST
-    // build the first consumer of both frames, which SERIALIZES the two
-    // expensive join pipelines back-to-back inside one build thread;
-    // the futures overlap them so one side's barrier tail back-fills
-    // with the other's tasks (guide §2.6). An earlier load-polluted
-    // probe claimed the opposite — the min-of-2 interleaved bench A/B
-    // on a quiet host is the controlling measurement.
+    // EAGER concurrent checkpoints, not a lazy persist: the lazy form
+    // makes the span broadcast build serialize both join pipelines.
     def dayGrain(src: DataFrame): DataFrame = src
       .groupBy($"seg", $"dn").agg(sum($"v").as("v"))
       .localCheckpoint(true)
-    val fs = Seq(placed, shipped).map(s =>
-      scala.concurrent.Future(dayGrain(s))(
-        scala.concurrent.ExecutionContext.Implicits.global))
-    val Seq(placedD, shippedD) = fs.map(
-      scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    val Seq(placedD, shippedD) =
+      Exec.concurrently(() => dayGrain(placed), () => dayGrain(shipped))
     val span = placedD.select($"dn")
       .unionAll(shippedD.select($"dn"))
       .agg(min($"dn").as("d0"), max($"dn").as("d1"))

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.etl.StarSchema
+import graft.ext.{CorpusOps, Dedup, Similarity, TextOps}
 
 /** Spark-native analog of the reference's event-driven incrementality
   * (SURVEY §2.9): there, each monthly file landing in S3 fires a Lambda
@@ -22,12 +25,83 @@ import graft.etl.StarSchema
   * the source's checkpointed file log plus the pipeline's own dedup
   * (ny:271) on re-drops — the same operational story as the reference.
   *
+  * Every driver below runs through [[drain]], and every per-batch
+  * appender commits through [[exactlyOnce]].
+  *
   * Scale notes: the file source lists incrementally (maxFilesPerTrigger
   * caps batch size when backfilling years of months); each micro-batch is
   * the ordinary batch plan, so everything said about the batch pipeline's
   * shuffles/pruning applies unchanged.
   */
 object IncrementalPipeline {
+
+  /** The one stream driver: drain every file currently in `inputDir`
+    * (parquet drops with `schema`) under `Trigger.AvailableNow`, handing
+    * each micro-batch and its id to `perBatch`; blocks until done. The
+    * checkpointed file log makes a whole re-run with no new files a
+    * no-op. */
+  private def drain(spark: SparkSession, inputDir: String, schema: StructType,
+      checkpointDir: String)(perBatch: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema).parquet(inputDir).writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(perBatch)
+      .start()
+      .awaitTermination()
+
+  /** The one exactly-once commit for the per-batch appenders writing
+    * beside `dir`, keyed on the [[StreamState]] marker at `${dir}_state`:
+    *
+    *   - a batch id at or below the committed high-water mark is a NO-OP
+    *     (`body` is never called) — the foreachBatch retry guard. The
+    *     check keys on the marker, NOT on data rows: a clean batch writes
+    *     nothing yet must read as done, and a crash inside a multi-file
+    *     data write must not;
+    *   - otherwise `body` runs with the state read (its `endOffset` is the
+    *     appender's running offset), writing the batch's data FIRST into
+    *     `batch_id=<id>/` dirs that a retry overwrites ([[writeBatch]]);
+    *   - the marker `State(<offset body returns>, batchId)` commits LAST,
+    *     so a crash anywhere replays the whole batch, never half-skips it.
+    *
+    * The audit read is the one-row state table — O(1) per arrival, never
+    * a history scan. Package-visible so the spec can drive the protocol
+    * directly. */
+  private[streaming] def exactlyOnce(spark: SparkSession, dir: String, batchId: Long)(
+      body: StreamState.State => Long): Unit = {
+    val stateDir = s"${dir}_state"
+    val st = StreamState.read(spark, stateDir)
+    if (batchId > st.maxBatch)
+      StreamState.commit(spark, stateDir, StreamState.State(body(st), batchId))
+  }
+
+  /** Overwrite one batch's partition dir `dir/batch_id=<batchId>`. */
+  private[streaming] def writeBatch(df: DataFrame, dir: String, batchId: Long,
+      partCols: String*): Unit =
+    df.write.partitionBy(partCols: _*).mode(SaveMode.Overwrite)
+      .parquet(s"$dir/batch_id=$batchId")
+
+  /** Append `prep`'s rows to the near-dup signature index as batch
+    * `batchId`: sets partitioned on (hb, db) — content-hash bucket for the
+    * exact arm, doc-id bucket for the verify arm — and bands on the
+    * band-key bucket, so every per-batch probe prunes to the batch's
+    * buckets instead of scanning the index whole. */
+  private def writeNearDupIndex(prep: DataFrame, indexDir: String, batchId: Long,
+      setBuckets: Int, bandBuckets: Int): Unit = {
+    writeBatch(Dedup.nearDupSetsBucketed(prep, setBuckets), s"$indexDir/sets",
+      batchId, "hb", "db")
+    writeBatch(Dedup.nearDupBandsBucketed(prep, bandBuckets), s"$indexDir/bands",
+      batchId, "bb")
+  }
+
+  /** A crash between the index writes and the marker can leave batch
+    * `batchId`'s own rows as orphan index partitions — drop them before
+    * screening, or the retried batch would match itself in the index and
+    * misreport its docs as dup_of_corpus. */
+  private def dropOrphanIndex(spark: SparkSession, indexDir: String, batchId: Long): Unit =
+    Seq("sets", "bands").foreach { t =>
+      val p = new Path(s"$indexDir/$t/batch_id=$batchId")
+      StreamState.fs(spark, p.toString).delete(p, true)
+    }
 
   /** Drain `inputDir` (parquet drops with `schema`), running the Job-1
     * transform per micro-batch and handing each fact batch to `sink`.
@@ -39,17 +113,10 @@ object IncrementalPipeline {
       schema: StructType,
       processedYear: String,
       processedMonth: String,
-      checkpointDir: String)(sink: DataFrame => Unit): Unit = {
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(StarSchema.transform(batch, processedYear, processedMonth))
-      }
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String)(sink: DataFrame => Unit): Unit =
+    drain(spark, inputDir, schema, checkpointDir) { (batch, _) =>
+      sink(StarSchema.transform(batch, processedYear, processedMonth))
+    }
 
   /** STREAMING INCREMENTAL PACKER — the arriving-shard twin of the batch
     * concat-and-chunk layout ([[graft.ext.TextOps.qDocPackChunks]], the
@@ -60,24 +127,10 @@ object IncrementalPipeline {
     * tokenized-shard index as new crawl dumps land, without ever
     * re-packing history.
     *
-    * Mechanics per micro-batch (see [[appendPackedBatch]]):
-    *   1. read the running end offset and the highest committed batch id
-    *      from the compacted one-row [[StreamState]] table beside the
-    *      layout dir — O(1) per arrival (the r12 form recomputed the
-    *      offset from a full layout scan; at scale that was a
-    *      corpus-sized metadata read per shard);
-    *   2. if this batchId is ≤ the committed high-water mark, the append
-    *      is a NO-OP (the foreachBatch retry guard — same exactly-once
-    *      discipline as the E58 JDBC publish, where the checkpointed
-    *      file log makes a whole re-RUN a no-op and the batch-id guard
-    *      makes a retried micro-batch a no-op);
-    *   3. otherwise lay the batch out with the SAME two-level
-    *      decomposition kernel as the batch op
-    *      ([[graft.ext.TextOps.packLayout]], shifted by the end offset)
-    *      into its own `batch_id=<id>/` partition directory, then commit
-    *      the new state LAST — the marker, not any data row, is what
-    *      makes the batch "seen", so a crash inside the multi-file data
-    *      write is replayed (partition Overwrite), never half-skipped.
+    * Per micro-batch ([[appendPackedBatch]]) the batch is laid out with
+    * the SAME two-level decomposition kernel as the batch op
+    * ([[graft.ext.TextOps.packLayout]]) shifted by the running end offset
+    * the [[StreamState]] marker carries.
     *
     * Scale (100 TB): the per-batch layout work is the batch kernel's —
     * partition-parallel two-level prefix sum over the BATCH, never over
@@ -92,17 +145,10 @@ object IncrementalPipeline {
       inputDir: String,
       schema: StructType,
       layoutDir: String,
-      checkpointDir: String): Unit = {
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendPackedBatch(spark, batch, batchId, layoutDir)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendPackedBatch(spark, batch, batchId, layoutDir)
+    }
 
   /** STREAMING DECONTAMINATION SCREEN — the ingest-time twin of the
     * batch fuzzy gate ([[graft.ext.Dedup.qDocDecontamFuzzy]]): every
@@ -113,10 +159,8 @@ object IncrementalPipeline {
     * ([[graft.ext.Dedup.fuzzyContamPairs]] — normalize both sides,
     * recall-critical banding, exact-Jaccard verify, `caught_exact`) and
     * the contaminated pairs land in the flag table's per-batch partition
-    * directory, committed by the [[StreamState]] marker (retry guard,
-    * the E58/packer discipline — keyed on the marker, so even a CLEAN
-    * batch, which flags nothing, is recorded as done and its retry is a
-    * true no-op).
+    * directory under [[exactlyOnce]] (even a CLEAN batch, which flags
+    * nothing, is recorded as done and its retry is a true no-op).
     *
     * The screen is EXACTLY shard-decomposable: no train-side doc
     * interacts with another, so the union of per-batch flag sets equals
@@ -131,17 +175,10 @@ object IncrementalPipeline {
       schema: StructType,
       evalDocs: DataFrame,
       flagDir: String,
-      checkpointDir: String): Unit = {
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendContamFlags(spark, batch, evalDocs, batchId, flagDir)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendContamFlags(spark, batch, evalDocs, batchId, flagDir)
+    }
 
   /** STREAMING SEMANTIC DECONTAMINATION SCREEN — the ingest-time twin of
     * the IVF-routed semantic gate
@@ -166,9 +203,9 @@ object IncrementalPipeline {
     * Per micro-batch (see [[appendSemanticFlags]]): assign the batch at
     * nprobe=1 via the narrow probeCells fold, equi-join the ONCE-computed
     * broadcast eval-side assignment (benchmark probes its 2 nearest
-    * cells), exact-cosine verify at τ, flags append under the
-    * [[StreamState]] marker-commit retry guard. O(batch) per arrival:
-    * the only non-broadcast input is the shard itself.
+    * cells), exact-cosine verify at τ, flags append under
+    * [[exactlyOnce]]. O(batch) per arrival: the only non-broadcast input
+    * is the shard itself.
     */
   def semanticAvailableNow(
       spark: SparkSession,
@@ -183,22 +220,16 @@ object IncrementalPipeline {
     // a restart is metadata-only and never forces the by-name frames
     val (qArr, evalA) = bootSemanticArtifacts(spark,
       s"${flagDir}_artifacts", Some(() => baseEmb), Some(() => evalE)).get
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendSemanticFlags(spark, batch, evalA, qArr, batchId, flagDir)
-      }
-      .start()
-    query.awaitTermination()
+    drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendSemanticFlags(spark, batch, evalA, qArr, batchId, flagDir)
+    }
   }
 
   /** STORED SEMANTIC ARTIFACTS — the frozen quantizer (one
     * centroid-array row) and the benchmark's pre-assigned probe cells
     * (benchmark-sized), persisted at first training under a marker
-    * commit and loaded on every later start (the r13 #6 residual:
-    * [[semanticAvailableNow]] re-derived both per stream start). Returns
+    * commit and loaded on every later start, so a restart never
+    * re-derives them. Returns
     * None when nothing is stored AND no training sources are supplied —
     * the embedding-blind door. Both loaded frames are checkpointed
     * LogicalRDD leaves (broadcast-sized per-batch probes). */
@@ -207,7 +238,6 @@ object IncrementalPipeline {
       dir: String,
       semBase: Option[() => DataFrame],
       semEval: Option[() => DataFrame]): Option[(DataFrame, DataFrame)] = {
-    import org.apache.spark.sql.SaveMode
     // a half-specified gate must fail loudly, not silently disarm
     require(semBase.isDefined == semEval.isDefined,
       "semantic artifacts need both a base and an eval source (or neither)")
@@ -215,10 +245,10 @@ object IncrementalPipeline {
     if (StreamState.read(spark, stateDir).endOffset == 0L) {
       (semBase, semEval) match {
         case (Some(b), Some(ev)) =>
-          val qArr = graft.ext.Similarity.centroidArrayOfE(b(), None).persist()
+          val qArr = Similarity.centroidArrayOfE(b(), None).persist()
           qArr.count()
           qArr.write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-          graft.ext.Similarity.semanticEvalAssign(ev(), qArr)
+          Similarity.semanticEvalAssign(ev(), qArr)
             .write.mode(SaveMode.Overwrite).parquet(s"$dir/eval_assign")
           qArr.unpersist()
           StreamState.commit(spark, stateDir, StreamState.State(1L, -1L))
@@ -230,28 +260,21 @@ object IncrementalPipeline {
       spark.read.parquet(s"$dir/eval_assign").localCheckpoint(true)))
   }
 
-  /** One idempotent micro-batch screen of [[semanticAvailableNow]] —
-    * package-visible so the spec can drive a batch-retry directly. Same
-    * marker-commit shape as [[appendContamFlags]] (clean batches commit
-    * an empty partition; the marker, not data rows, records "seen"). */
+  /** One micro-batch screen of [[semanticAvailableNow]] — package-visible
+    * so the spec can drive a batch-retry directly. */
   private[streaming] def appendSemanticFlags(
       spark: SparkSession,
       batch: DataFrame,
       evalA: DataFrame,
       qArr: DataFrame,
       batchId: Long,
-      flagDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val stateDir = s"${flagDir}_state"
-    if (batchId > StreamState.read(spark, stateDir).maxBatch) {
+      flagDir: String): Unit =
+    exactlyOnce(spark, flagDir, batchId) { _ =>
       val side = batch.select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("e"))
-      graft.ext.Similarity.semanticScreenWith(side, evalA, qArr)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId")
-      StreamState.commit(spark, stateDir, StreamState.State(0L, batchId))
+      writeBatch(Similarity.semanticScreenWith(side, evalA, qArr), flagDir, batchId)
+      0L
     }
-  }
 
   /** STREAMING QUALITY GATE AT INGEST — the arriving-shard twin of the
     * frozen-model quality funnel
@@ -260,8 +283,8 @@ object IncrementalPipeline {
     * reference model (unigram LM, totals, bigram table — trained ONCE at
     * stream start, broadcast-sized), and the per-document verdicts
     * (signal values, per-arm booleans, funnel `drop_reason`) append to a
-    * persistent verdict table under the [[StreamState]] marker-commit
-    * retry guard. Freezing is what makes the gate O(batch): a
+    * persistent verdict table under [[exactlyOnce]]. Freezing is what
+    * makes the gate O(batch): a
     * self-trained gate would re-score the corpus per arrival, and its
     * thresholds would drift with each batch's own statistics (E315's
     * `retrain_flag` is the audit that says when the frozen model itself
@@ -285,39 +308,27 @@ object IncrementalPipeline {
       baseDocs: DataFrame,
       verdictDir: String,
       checkpointDir: String): Unit = {
-    val model = graft.ext.CorpusOps.frozenQualityModel(baseDocs).persistAll()
-    try {
-      val raw = spark.readStream.schema(schema).parquet(inputDir)
-      val query = raw.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          appendQualityVerdicts(spark, batch, model, batchId, verdictDir)
-        }
-        .start()
-      query.awaitTermination()
+    val model = CorpusOps.frozenQualityModel(baseDocs).persistAll()
+    try drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendQualityVerdicts(spark, batch, model, batchId, verdictDir)
     } finally model.unpersistAll()
   }
 
-  /** One idempotent micro-batch score of [[qualityAvailableNow]] —
-    * package-visible so the spec can drive a batch-retry directly. */
+  /** One micro-batch score of [[qualityAvailableNow]] — package-visible so
+    * the spec can drive a batch-retry directly. */
   private[streaming] def appendQualityVerdicts(
       spark: SparkSession,
       batch: DataFrame,
-      model: graft.ext.CorpusOps.FrozenQualityModel,
+      model: CorpusOps.FrozenQualityModel,
       batchId: Long,
-      verdictDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val stateDir = s"${verdictDir}_state"
-    if (batchId > StreamState.read(spark, stateDir).maxBatch) {
-      val (verdicts, cached) = graft.ext.CorpusOps.qualityGateFrozenWith(
+      verdictDir: String): Unit =
+    exactlyOnce(spark, verdictDir, batchId) { _ =>
+      val (verdicts, cached) = CorpusOps.qualityGateFrozenWith(
         spark, batch.select(col("doc_id"), col("text")), model)
-      verdicts.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$verdictDir/batch_id=$batchId")
+      writeBatch(verdicts, verdictDir, batchId)
       cached.unpersist()
-      StreamState.commit(spark, stateDir, StreamState.State(0L, batchId))
+      0L
     }
-  }
 
   /** [[qualityAvailableNow]] with the verdict table kept in the DSv2
     * STORE ([[graft.sources.StoreSource]]) instead of path-convention
@@ -325,10 +336,9 @@ object IncrementalPipeline {
     * own committer with an epoch key of (stream id, batch id), so the
     * exactly-once guarantee — a crash-retried batch publishes no
     * duplicate — comes from the store's manifest-gated epoch protocol
-    * rather than from a [[StreamState]] marker. This unifies the
-    * engine's two exactly-once mechanisms (the r14 judge's #2): the
-    * appender carries NO marker state of its own; idempotence,
-    * atomic visibility, and abort semantics are all the committer's.
+    * rather than from a [[StreamState]] marker: the appender carries NO
+    * marker state of its own; idempotence, atomic visibility, and abort
+    * semantics are all the committer's.
     */
   def qualityAvailableNowStore(
       spark: SparkSession,
@@ -337,17 +347,9 @@ object IncrementalPipeline {
       baseDocs: DataFrame,
       verdictStoreDir: String,
       checkpointDir: String): Unit = {
-    val model = graft.ext.CorpusOps.frozenQualityModel(baseDocs).persistAll()
-    try {
-      val raw = spark.readStream.schema(schema).parquet(inputDir)
-      val query = raw.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          appendQualityVerdictsStore(spark, batch, model, batchId, verdictStoreDir)
-        }
-        .start()
-      query.awaitTermination()
+    val model = CorpusOps.frozenQualityModel(baseDocs).persistAll()
+    try drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendQualityVerdictsStore(spark, batch, model, batchId, verdictStoreDir)
     } finally model.unpersistAll()
   }
 
@@ -358,48 +360,33 @@ object IncrementalPipeline {
   private[streaming] def appendQualityVerdictsStore(
       spark: SparkSession,
       batch: DataFrame,
-      model: graft.ext.CorpusOps.FrozenQualityModel,
+      model: CorpusOps.FrozenQualityModel,
       batchId: Long,
       verdictStoreDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val (verdicts, cached) = graft.ext.CorpusOps.qualityGateFrozenWith(
+    val (verdicts, cached) = CorpusOps.qualityGateFrozenWith(
       spark, batch.select(col("doc_id"), col("text")), model)
     graft.sources.StoreSource.writeEpoch(
       verdicts, verdictStoreDir, "quality_verdicts", batchId)
     cached.unpersist()
   }
 
-  /** One idempotent micro-batch screen of [[decontamAvailableNow]] —
-    * package-visible so the spec can drive a batch-retry directly.
-    *
-    * Exactly-once shape (shared with [[appendPackedBatch]]): the
-    * seen-check keys on the [[StreamState]] commit marker, NOT on data
-    * rows (clean batches flag nothing, so a data-row probe could never
-    * record them as done; and a crash inside the multi-file flag write
-    * must not read as "committed"); flags land in a per-batch partition
-    * directory overwritten on retry, and the state commit LAST is what
-    * marks the batch done. The per-batch audit read is the one-row
-    * state table — O(1), never a flag-history scan.
-    */
+  /** One micro-batch screen of [[decontamAvailableNow]] — package-visible
+    * so the spec can drive a batch-retry directly. */
   private[streaming] def appendContamFlags(
       spark: SparkSession,
       batch: DataFrame,
       evalDocs: DataFrame,
       batchId: Long,
-      flagDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val stateDir = s"${flagDir}_state"
-    if (batchId > StreamState.read(spark, stateDir).maxBatch) {
-      val (pairs, cached) = graft.ext.Dedup.fuzzyContamPairsWith(spark,
+      flagDir: String): Unit =
+    exactlyOnce(spark, flagDir, batchId) { _ =>
+      val (pairs, cached) = Dedup.fuzzyContamPairsWith(spark,
         batch.select(col("doc_id"), col("text")), evalDocs)
-      pairs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId")
+      writeBatch(pairs, flagDir, batchId)
       // release the batch's shard-scale prep cache: one invocation per
       // micro-batch for the life of the stream, no clearCache between
       cached.unpersist()
-      StreamState.commit(spark, stateDir, StreamState.State(0L, batchId))
+      0L
     }
-  }
 
   /** STREAMING NEAR-DUP INGEST SCREEN — the minhash twin of the exact
     * incremental dedup (E89, [[graft.ext.Dedup.qDocIncrDedup]]), run at
@@ -409,9 +396,8 @@ object IncrementalPipeline {
     * existing corpus once and then grown per batch), so continuous
     * crawling pays O(batch) per ingestion instead of a corpus-wide
     * re-dedup. Verdicts and the batch's own index rows land in
-    * per-batch partition directories under ONE [[StreamState]]
-    * marker-commit (data first, marker last — a retry after any crash
-    * overwrites all three partitions).
+    * per-batch partition directories under ONE [[exactlyOnce]] commit
+    * (a retry after any crash overwrites all three partitions).
     *
     * Composition law (spec-proven, not assumed): with arrival order
     * consistent with doc_id order, the union of per-batch verdicts
@@ -439,15 +425,9 @@ object IncrementalPipeline {
       verdictDir: String,
       checkpointDir: String): Unit = {
     seedNearDupIndex(spark, corpusDocs, indexDir)
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendNearDupBatch(spark, batch, batchId, indexDir, verdictDir)
-      }
-      .start()
-    query.awaitTermination()
+    drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendNearDupBatch(spark, batch, batchId, indexDir, verdictDir)
+    }
   }
 
   /** Idempotent one-time index seed from the pre-existing corpus (the
@@ -458,33 +438,21 @@ object IncrementalPipeline {
     * (`aux` of `sets_cstate`/`bands_cstate`, before the seeded marker)
     * — probes read it back instead of trusting the compiled default, so
     * an index seeded under one fan-out stays losslessly prunable from a
-    * session compiled with another (the r14 weak). */
+    * session compiled with another. */
   private[streaming] def seedNearDupIndex(
       spark: SparkSession,
       corpusDocs: => DataFrame,
       indexDir: String,
-      buckets: Int = graft.ext.Dedup.nearDupIndexBuckets): Unit = {
-    import org.apache.spark.sql.functions.col
+      buckets: Int = Dedup.nearDupIndexBuckets): Unit = {
     val stateDir = s"${indexDir}_state"
     val st = StreamState.read(spark, stateDir)
     if (st.endOffset == 0L) {
       val par = spark.sparkContext.defaultParallelism
-      val prep = graft.ext.Dedup.nearDupPrep(
+      val prep = Dedup.nearDupPrep(
         corpusDocs.select(col("doc_id"), col("text"))
           .repartition(par, col("doc_id"))).persist()
       prep.count()
-      // bucketed layout: sets partitioned on (hb, db) — content-hash
-      // bucket for the exact arm, doc-id bucket for the verify arm —
-      // bands on the band-key bucket, so every per-batch probe prunes
-      // to the batch's buckets instead of scanning the index whole
-      graft.ext.Dedup.nearDupSetsBucketed(prep, buckets)
-        .write.partitionBy("hb", "db")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/sets/batch_id=-1")
-      graft.ext.Dedup.nearDupBandsBucketed(prep, buckets)
-        .write.partitionBy("bb")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/bands/batch_id=-1")
+      writeNearDupIndex(prep, indexDir, -1L, buckets, buckets)
       prep.unpersist()
       // record the fan-out each table's dirs were written under, THEN
       // the seeded marker (a crash between the two re-seeds — the
@@ -507,7 +475,6 @@ object IncrementalPipeline {
     * pruned scan's file count directly. */
   private[streaming] def readNearDupIndex(
       spark: SparkSession, indexDir: String): (DataFrame, DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.col
     // StreamTable.read resolves the compacted generation ∪ hot batch
     // dirs; pre-compaction it is exactly the plain directory read
     val sets = StreamTable.read(spark, s"$indexDir/sets")
@@ -515,7 +482,7 @@ object IncrementalPipeline {
     val bands = StreamTable.read(spark, s"$indexDir/bands")
       .select(col("doc_id"), col("band_id"), col("band_key"), col("bb"))
     def fanout(root: String): Int = StreamTable.aux(spark, root) match {
-      case 0L => graft.ext.Dedup.nearDupIndexBuckets
+      case 0L => Dedup.nearDupIndexBuckets
       case n  => n.toInt
     }
     (sets, bands, fanout(s"$indexDir/sets"), fanout(s"$indexDir/bands"))
@@ -537,8 +504,6 @@ object IncrementalPipeline {
       stateDir: String,
       newBuckets: Int,
       targetRows: Long = 1000000L): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.ext.Dedup
     val m = StreamState.read(spark, stateDir).maxBatch
     StreamTable.compact(spark, s"$indexDir/sets", m, Seq("hb", "db"), targetRows,
       transform = df => df
@@ -593,9 +558,8 @@ object IncrementalPipeline {
     * tables) through its own committed high-water — same fencing as
     * [[compactDoorTables]]: the marker the appender's retry guard keys
     * on is never touched, and dirs above the high-water (in-flight or
-    * crash-orphaned batches) are never absorbed. Closes the r14 gap:
-    * these tables accumulated one directory per micro-batch forever
-    * while only the door's four tables compacted. */
+    * crash-orphaned batches) are never absorbed, so these tables stop
+    * accumulating one directory per micro-batch. */
   def compactScreenTable(
       spark: SparkSession,
       dir: String,
@@ -619,56 +583,35 @@ object IncrementalPipeline {
     StreamTable.compact(spark, s"$statsDir/bi", m, Seq.empty, targetRows)
   }
 
-  /** One idempotent micro-batch of [[nearDupAvailableNow]] — verdicts +
-    * index growth under one marker commit; package-visible for the spec
-    * retry drive. */
+  /** One micro-batch of [[nearDupAvailableNow]] — verdicts + index growth
+    * under one commit; package-visible for the spec retry drive. The
+    * index state commits `endOffset = 1`, the seeded flag. */
   private[streaming] def appendNearDupBatch(
       spark: SparkSession,
       batch: DataFrame,
       batchId: Long,
       indexDir: String,
-      verdictDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val stateDir = s"${indexDir}_state"
-    val st = StreamState.read(spark, stateDir)
-    if (batchId > st.maxBatch) {
-      // a crash between the index writes and the state commit can leave
-      // THIS batch's own rows as orphan index partitions — drop them
-      // before screening, or the retried batch would match itself in the
-      // index and misreport its docs as dup_of_corpus
-      val conf = spark.sessionState.newHadoopConf()
-      Seq(s"$indexDir/sets/batch_id=$batchId", s"$indexDir/bands/batch_id=$batchId")
-        .foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(conf).delete(path, true)
-        }
+      verdictDir: String): Unit =
+    exactlyOnce(spark, indexDir, batchId) { _ =>
+      dropOrphanIndex(spark, indexDir, batchId)
       // probe AND grow the index under its own stored fan-outs — the
       // compiled default plays no part once a layout exists
       val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
-      val (verdicts, prep) = graft.ext.Dedup.nearDupScreenWith(
+      val (verdicts, prep) = Dedup.nearDupScreenWith(
         spark, batch.select(col("doc_id"), col("text")), sets, bands, sbk, bbk)
-      verdicts.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$verdictDir/batch_id=$batchId")
-      graft.ext.Dedup.nearDupSetsBucketed(prep, sbk)
-        .write.partitionBy("hb", "db")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/sets/batch_id=$batchId")
-      graft.ext.Dedup.nearDupBandsBucketed(prep, bbk)
-        .write.partitionBy("bb")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/bands/batch_id=$batchId")
+      writeBatch(verdicts, verdictDir, batchId)
+      writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
       prep.unpersist()
-      StreamState.commit(spark, stateDir, StreamState.State(1L, batchId))
+      1L
     }
-  }
 
   /** STREAMING CORPUS-STATS MAINTENANCE (E336) — the operational form of
     * the E329 merge law: every arriving shard's unigram/bigram count
     * partials (the [[graft.ext.CorpusOps.frozenQualityModel]]
     * aggregations, factored through `statsPartials` so stored stats and
     * from-docs model cannot drift) append to a persistent stats table in
-    * `batch_id=<n>/` partition dirs under the [[StreamState]]
-    * marker-commit retry guard. The additive roll-up of the stored
+    * `batch_id=<n>/` partition dirs under [[exactlyOnce]]. The additive
+    * roll-up of the stored
     * partials ([[graft.ext.CorpusOps.storedQualityModel]]) IS the frozen
     * quality model — so when E315's `retrain_flag` fires, the refresh is
     * a vocab-bounded groupBy-sum over metadata-scale partials, and the
@@ -686,38 +629,24 @@ object IncrementalPipeline {
       inputDir: String,
       schema: StructType,
       statsDir: String,
-      checkpointDir: String): Unit = {
-    val raw = spark.readStream.schema(schema).parquet(inputDir)
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendStatsBatch(spark, batch, batchId, statsDir)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+      appendStatsBatch(spark, batch, batchId, statsDir)
+    }
 
-  /** One idempotent micro-batch append of [[statsAvailableNow]] — both
-    * partials land data-first, the marker commit makes them visible;
-    * package-visible for the spec's retry drive. */
+  /** One micro-batch append of [[statsAvailableNow]] — package-visible for
+    * the spec's retry drive. */
   private[streaming] def appendStatsBatch(
       spark: SparkSession,
       batch: DataFrame,
       batchId: Long,
-      statsDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val stateDir = s"${statsDir}_state"
-    if (batchId > StreamState.read(spark, stateDir).maxBatch) {
-      val (uni, bi) = graft.ext.CorpusOps.statsPartials(
-        batch.select(col("doc_id"), col("text")))
-      uni.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$statsDir/uni/batch_id=$batchId")
-      bi.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$statsDir/bi/batch_id=$batchId")
-      StreamState.commit(spark, stateDir, StreamState.State(0L, batchId))
+      statsDir: String): Unit =
+    exactlyOnce(spark, statsDir, batchId) { _ =>
+      val (uni, bi) = CorpusOps.statsPartials(batch.select(col("doc_id"), col("text")))
+      writeBatch(uni, s"$statsDir/uni", batchId)
+      writeBatch(bi, s"$statsDir/bi", batchId)
+      0L
     }
-  }
 
   /** THE INGEST FRONT DOOR (E326) — the composition every screen above
     * exists for, run as ONE `foreachBatch` pipeline per arriving shard:
@@ -741,13 +670,8 @@ object IncrementalPipeline {
     * may dedup against them).
     *
     * Exactly-once: all four batch partitions (verdicts, admitted layout,
-    * index sets, index bands) are written data-first into
-    * `batch_id=<id>/` dirs and the ONE [[StreamState]] marker commit
-    * (new end offset + batch high-water mark) lands LAST — a crash
-    * anywhere replays the whole batch (orphan index partitions from a
-    * mid-crash are deleted first, or the retry would match itself), a
-    * committed batch retries as a no-op, and a whole re-run is a no-op
-    * via the checkpointed file log.
+    * index sets, index bands) commit under ONE [[exactlyOnce]] marker
+    * carrying the new end offset.
     *
     * Scale (100 TB): O(batch) per arrival end-to-end — the frozen models
     * (quality stats, tokenizer costs/ids) and the benchmark are
@@ -788,23 +712,15 @@ object IncrementalPipeline {
       semBase, semEval)
     try {
       seedNearDupIndex(spark, baseDocs, s"$outDir/index")
-      val raw = spark.readStream.schema(schema).parquet(inputDir)
-      val query = raw.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ingestBatch(spark, batch, batchId, qModel, tokCosts, tokIds,
-            evalDocs, outDir, sem)
-        }
-        .start()
-      query.awaitTermination()
+      drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
+        ingestBatch(spark, batch, batchId, qModel, tokCosts, tokIds,
+          evalDocs, outDir, sem)
+      }
     } finally qModel.unpersistAll()
   }
 
-  /** STORED-ARTIFACT BOOT for the ingest door (the r13 restart residual:
-    * the door retrained its frozen models from `baseDocs` at every
-    * stream start — a corpus-scale scan per restart, contradicting the
-    * "history never re-read" claim). Boot order:
+  /** STORED-ARTIFACT BOOT for the ingest door, so a stream start never
+    * retrains its frozen models from `baseDocs`. Boot order:
     *
     *   - artifacts present (the `_state` marker committed): load the
     *     quality model via [[graft.ext.CorpusOps.storedQualityModel]]'s
@@ -825,22 +741,20 @@ object IncrementalPipeline {
   private[streaming] def bootIngestArtifacts(
       spark: SparkSession,
       baseDocs: => DataFrame,
-      outDir: String): (graft.ext.CorpusOps.FrozenQualityModel, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.SaveMode
+      outDir: String): (CorpusOps.FrozenQualityModel, DataFrame, DataFrame) = {
     val aDir = s"$outDir/artifacts"
     val stateDir = s"${aDir}_state"
     if (StreamState.read(spark, stateDir).endOffset == 0L) {
       val base = baseDocs // force the by-name frame once, train-path only
-      val m = graft.ext.CorpusOps.frozenQualityModel(base)
+      val m = CorpusOps.frozenQualityModel(base)
       m.uni.write.mode(SaveMode.Overwrite).parquet(s"$aDir/quality/uni")
       m.bi.write.mode(SaveMode.Overwrite).parquet(s"$aDir/quality/bi")
-      val (costs, ids) = graft.ext.TextOps.uniFrozenModel(base)
+      val (costs, ids) = TextOps.uniFrozenModel(base)
       costs.write.mode(SaveMode.Overwrite).parquet(s"$aDir/tok/costs")
       ids.write.mode(SaveMode.Overwrite).parquet(s"$aDir/tok/ids")
       StreamState.commit(spark, stateDir, StreamState.State(1L, -1L))
     }
-    val qm = graft.ext.CorpusOps
-      .storedQualityModel(spark, s"$aDir/quality").persistAll()
+    val qm = CorpusOps.storedQualityModel(spark, s"$aDir/quality").persistAll()
     // checkpoint both tokenizer tables so every micro-batch probes two
     // LogicalRDD leaves (the plan-string lesson)
     val costs = spark.read.parquet(s"$aDir/tok/costs").localCheckpoint(true)
@@ -848,172 +762,135 @@ object IncrementalPipeline {
     (qm, costs, ids)
   }
 
-  /** One idempotent micro-batch of [[ingestAvailableNow]] —
-    * package-visible so the spec can drive a batch-retry directly. */
+  /** One micro-batch of [[ingestAvailableNow]] — package-visible so the
+    * spec can drive a batch-retry directly. */
   private[streaming] def ingestBatch(
       spark: SparkSession,
       batch: DataFrame,
       batchId: Long,
-      qModel: graft.ext.CorpusOps.FrozenQualityModel,
+      qModel: CorpusOps.FrozenQualityModel,
       tokCosts: DataFrame,
       tokIds: DataFrame,
       evalDocs: DataFrame,
       outDir: String,
-      sem: Option[(DataFrame, DataFrame)] = None): Unit = {
-    import org.apache.spark.sql.functions._
-    val stateDir = s"${outDir}_state"
-    val st = StreamState.read(spark, stateDir)
-    if (batchId <= st.maxBatch) return
-    val indexDir = s"$outDir/index"
-    // a crash between the index writes and the marker can leave THIS
-    // batch's own index partitions behind — drop them before screening
-    val conf = spark.sessionState.newHadoopConf()
-    Seq(s"$indexDir/sets/batch_id=$batchId", s"$indexDir/bands/batch_id=$batchId")
-      .foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(conf).delete(path, true)
+      sem: Option[(DataFrame, DataFrame)] = None): Unit =
+    exactlyOnce(spark, outDir, batchId) { st =>
+      val indexDir = s"$outDir/index"
+      dropOrphanIndex(spark, indexDir, batchId)
+      // every reused stage output below is localCheckpoint(true), NOT
+      // persist: each reuse of a cached frame re-expands its whole
+      // subtree in the plan STRING SQLExecution renders per action, and
+      // the composed five-stage DAG multiplies those re-expansions into a
+      // plan description that takes longer to PRINT than to run.
+      // Checkpointing cuts each stage to a LogicalRDD leaf; the blocks
+      // release via the ContextCleaner once the batch's references go
+      // out of scope.
+      val docs = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
+      // stage 1: frozen quality funnel over the whole batch
+      val (qv, qCache) = CorpusOps.qualityGateFrozenWith(spark, docs, qModel)
+      val qvP = qv.localCheckpoint(true)
+      val surv1 = docs
+        .join(qvP.filter(col("drop_reason") === "kept").select(col("doc_id")), "doc_id")
+        .localCheckpoint(true)
+      // stage 2: fuzzy decontamination on quality survivors
+      val (pairs, dCache) = Dedup.fuzzyContamPairsWith(spark, surv1, evalDocs)
+      val contam = pairs.select(col("doc_id")).distinct().localCheckpoint(true)
+      val surv2 = surv1.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true)
+      // stage 3: SEMANTIC decontamination (E328, the trilogy's third gate)
+      // on vec-carrying fuzzy survivors — a doc with no embedding passes
+      // through (NULL verdict, not false); the quantizer and benchmark
+      // assignment are the stored frozen artifacts
+      val hasVecCol = batch.columns.contains("vec")
+      val semFlag: Option[DataFrame] = sem.filter(_ => hasVecCol).map {
+        case (qArr, evalA) =>
+          val side = batch
+            .filter(col("vec").isNotNull)
+            .select(col("doc_id").as("vec_id"),
+              transform(col("vec"), _.cast("double")).as("e"))
+            .join(surv2.select(col("doc_id").as("vec_id")), "vec_id")
+          Similarity.semanticScreenWith(side, evalA, qArr)
+            .select(col("vec_id").as("doc_id")).distinct().localCheckpoint(true)
       }
+      val surv3 = semFlag.map(f =>
+        surv2.join(f, Seq("doc_id"), "left_anti").localCheckpoint(true))
+        .getOrElse(surv2)
+      // stage 4: near-dup screen of the remaining docs vs the stored index
+      // (bucketed reads — the screen prunes each probe to the batch's
+      // partition buckets)
+      val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
+      val (nd, prep) = Dedup.nearDupScreenWith(spark, surv3, sets, bands, sbk, bbk)
+      val ndP = nd.localCheckpoint(true)
+      // stage 5: tokenize the admitted docs under the frozen stored model,
+      // pack them after the tokens already admitted
+      val admitted = surv3
+        .join(ndP.filter(col("status") === "new").select(col("doc_id")), "doc_id")
+      val enc = TextOps.uniEncodeFrozen(admitted, tokCosts, tokIds)
+        .localCheckpoint(true)
+      val admRows = TextOps
+        .packLayoutCounts(enc.select(col("doc_id"), col("n_tokens")), st.endOffset)
+        .join(enc.select(col("doc_id"), col("token_ids"), col("n_words_skipped")),
+          "doc_id")
+        .localCheckpoint(true)
+      val newEnd = admRows
+        .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
+        .collect()(0).getLong(0)
+      // per-doc verdict: per-stage attribution, NULL past the failing
+      // stage; `sem_contaminated` is additionally NULL for a doc that
+      // carries no embedding (unscreenable, not clean)
+      val hasVec =
+        if (hasVecCol && sem.isDefined)
+          batch.select(col("doc_id"), col("vec").isNotNull.as("has_vec"))
+        else batch.select(col("doc_id"), lit(false).as("has_vec"))
+      val semJoined = semFlag.getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("doc_id", LongType)))))
+        .withColumn("sflag", lit(true))
+      val verdict = qvP
+        .select(col("doc_id"), (col("drop_reason") =!= "kept").as("fail_quality"),
+          col("drop_reason").as("quality_reason"))
+        .join(contam.withColumn("cflag", lit(true)), Seq("doc_id"), "left")
+        .join(semJoined, Seq("doc_id"), "left")
+        .join(hasVec, Seq("doc_id"), "left")
+        .join(ndP.select(col("doc_id"), col("status"), col("dup_of")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("fail_quality"),
+          when(col("fail_quality"), lit(null).cast("boolean"))
+            .otherwise(coalesce(col("cflag"), lit(false))).as("contaminated"),
+          when(col("fail_quality") || coalesce(col("cflag"), lit(false)) ||
+              !coalesce(col("has_vec"), lit(false)), lit(null).cast("boolean"))
+            .otherwise(coalesce(col("sflag"), lit(false))).as("sem_contaminated"),
+          col("status"), col("dup_of"),
+          when(col("fail_quality"), concat(lit("quality:"), col("quality_reason")))
+            .when(coalesce(col("cflag"), lit(false)), lit("contaminated"))
+            .when(coalesce(col("sflag"), lit(false)), lit("contaminated_semantic"))
+            .when(col("status") =!= "new", lit("duplicate"))
+            .otherwise(lit("admitted")).as("drop_reason"))
 
-    // every reused stage output below is localCheckpoint(true), NOT
-    // persist: each reuse of a cached frame re-expands its whole subtree
-    // in the plan STRING SQLExecution renders per action, and the
-    // composed five-stage DAG multiplies those re-expansions into a
-    // plan description that takes longer to PRINT than to run (observed:
-    // 20+ min of generateTreeString on a 500-doc batch). Checkpointing
-    // cuts each stage to a LogicalRDD leaf; the blocks release via the
-    // ContextCleaner once the batch's references go out of scope.
-    val docs = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
-    // stage 1: frozen quality funnel over the whole batch
-    val (qv, qCache) = graft.ext.CorpusOps.qualityGateFrozenWith(spark, docs, qModel)
-    val qvP = qv.localCheckpoint(true)
-    val surv1 = docs
-      .join(qvP.filter(col("drop_reason") === "kept").select(col("doc_id")), "doc_id")
-      .localCheckpoint(true)
-    // stage 2: fuzzy decontamination on quality survivors
-    val (pairs, dCache) = graft.ext.Dedup.fuzzyContamPairsWith(spark, surv1, evalDocs)
-    val contam = pairs.select(col("doc_id")).distinct().localCheckpoint(true)
-    val surv2 = surv1.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    // stage 3: SEMANTIC decontamination (E328, the trilogy's third gate)
-    // on vec-carrying fuzzy survivors — a doc with no embedding passes
-    // through (NULL verdict, not false); the quantizer and benchmark
-    // assignment are the stored frozen artifacts
-    val hasVecCol = batch.columns.contains("vec")
-    val semFlag: Option[DataFrame] = sem.filter(_ => hasVecCol).map {
-      case (qArr, evalA) =>
-        val side = batch
-          .filter(col("vec").isNotNull)
-          .select(col("doc_id").as("vec_id"),
-            transform(col("vec"), _.cast("double")).as("e"))
-          .join(surv2.select(col("doc_id").as("vec_id")), "vec_id")
-        graft.ext.Similarity.semanticScreenWith(side, evalA, qArr)
-          .select(col("vec_id").as("doc_id")).distinct().localCheckpoint(true)
+      writeBatch(verdict, s"$outDir/verdicts", batchId)
+      writeBatch(admRows, s"$outDir/admitted", batchId)
+      writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
+      // the kernels' internal caches are persist()-ed — release them here;
+      // the checkpointed stage frames free via the ContextCleaner
+      Seq(prep, qCache, dCache).foreach(_.unpersist())
+      newEnd
     }
-    val surv3 = semFlag.map(f =>
-      surv2.join(f, Seq("doc_id"), "left_anti").localCheckpoint(true))
-      .getOrElse(surv2)
-    // stage 4: near-dup screen of the remaining docs vs the stored index
-    // (bucketed reads — the screen prunes each probe to the batch's
-    // partition buckets)
-    val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
-    val (nd, prep) = graft.ext.Dedup.nearDupScreenWith(
-      spark, surv3, sets, bands, sbk, bbk)
-    val ndP = nd.localCheckpoint(true)
-    // stage 5: tokenize the admitted docs under the frozen stored model,
-    // pack them after the tokens already admitted
-    val admitted = surv3
-      .join(ndP.filter(col("status") === "new").select(col("doc_id")), "doc_id")
-    val enc = graft.ext.TextOps.uniEncodeFrozen(admitted, tokCosts, tokIds)
-      .localCheckpoint(true)
-    val admRows = graft.ext.TextOps
-      .packLayoutCounts(enc.select(col("doc_id"), col("n_tokens")), st.endOffset)
-      .join(enc.select(col("doc_id"), col("token_ids"), col("n_words_skipped")),
-        "doc_id")
-      .localCheckpoint(true)
-    val newEnd = admRows
-      .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
-      .collect()(0).getLong(0)
-    // per-doc verdict: per-stage attribution, NULL past the failing
-    // stage; `sem_contaminated` is additionally NULL for a doc that
-    // carries no embedding (unscreenable, not clean)
-    val hasVec =
-      if (hasVecCol && sem.isDefined)
-        batch.select(col("doc_id"), col("vec").isNotNull.as("has_vec"))
-      else batch.select(col("doc_id"), lit(false).as("has_vec"))
-    val semJoined = semFlag.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType)))))
-      .withColumn("sflag", lit(true))
-    val verdict = qvP
-      .select(col("doc_id"), (col("drop_reason") =!= "kept").as("fail_quality"),
-        col("drop_reason").as("quality_reason"))
-      .join(contam.withColumn("cflag", lit(true)), Seq("doc_id"), "left")
-      .join(semJoined, Seq("doc_id"), "left")
-      .join(hasVec, Seq("doc_id"), "left")
-      .join(ndP.select(col("doc_id"), col("status"), col("dup_of")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("fail_quality"),
-        when(col("fail_quality"), lit(null).cast("boolean"))
-          .otherwise(coalesce(col("cflag"), lit(false))).as("contaminated"),
-        when(col("fail_quality") || coalesce(col("cflag"), lit(false)) ||
-            !coalesce(col("has_vec"), lit(false)), lit(null).cast("boolean"))
-          .otherwise(coalesce(col("sflag"), lit(false))).as("sem_contaminated"),
-        col("status"), col("dup_of"),
-        when(col("fail_quality"), concat(lit("quality:"), col("quality_reason")))
-          .when(coalesce(col("cflag"), lit(false)), lit("contaminated"))
-          .when(coalesce(col("sflag"), lit(false)), lit("contaminated_semantic"))
-          .when(col("status") =!= "new", lit("duplicate"))
-          .otherwise(lit("admitted")).as("drop_reason"))
 
-    verdict.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/verdicts/batch_id=$batchId")
-    admRows.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/admitted/batch_id=$batchId")
-    graft.ext.Dedup.nearDupSetsBucketed(prep, sbk)
-      .write.partitionBy("hb", "db")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/sets/batch_id=$batchId")
-    graft.ext.Dedup.nearDupBandsBucketed(prep, bbk)
-      .write.partitionBy("bb")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/bands/batch_id=$batchId")
-    // the kernels' internal caches are persist()-ed — release them here;
-    // the checkpointed stage frames free via the ContextCleaner
-    Seq(prep, qCache, dCache).foreach(_.unpersist())
-    StreamState.commit(spark, stateDir, StreamState.State(newEnd, batchId))
-  }
-
-  /** One idempotent micro-batch append of [[packAvailableNow]] —
-    * package-visible so the spec can drive a batch-retry directly.
-    *
-    * The running end offset and the seen-batch guard both come from the
-    * compacted one-row [[StreamState]] table beside the layout dir —
-    * O(1) per arrival, where the r12 form recomputed
-    * `max(tok_start + n_tokens)` over the ENTIRE layout parquet per
-    * micro-batch (corpus-sized metadata scan at scale). Write order is
-    * data-then-marker: the batch's layout rows go to a per-batch
-    * partition directory (`batch_id=<id>/`, Overwrite — a retry after a
-    * crash mid-write replaces the partial, never duplicates it), and
-    * only the state commit that follows marks the batch seen.
-    */
+  /** One micro-batch append of [[packAvailableNow]] — package-visible so
+    * the spec can drive a batch-retry directly. The running end offset
+    * comes from the [[StreamState]] marker, so laying out a batch never
+    * rescans the layout. */
   private[streaming] def appendPackedBatch(
       spark: SparkSession,
       batch: DataFrame,
       batchId: Long,
-      layoutDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val stateDir = s"${layoutDir}_state"
-    val st = StreamState.read(spark, stateDir)
-    if (batchId > st.maxBatch) {
-      val rows = graft.ext.TextOps.packLayout(batch, st.endOffset).persist()
+      layoutDir: String): Unit =
+    exactlyOnce(spark, layoutDir, batchId) { st =>
+      val rows = TextOps.packLayout(batch, st.endOffset).persist()
       val newEnd = rows
         .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
         .collect()(0).getLong(0)
-      rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$layoutDir/batch_id=$batchId")
+      writeBatch(rows, layoutDir, batchId)
       rows.unpersist()
-      StreamState.commit(spark, stateDir, StreamState.State(newEnd, batchId))
+      newEnd
     }
-  }
 }

@@ -1,17 +1,14 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Compacted one-row state table for the streaming appenders
   * ([[IncrementalPipeline]]): the running pack end-offset and the highest
   * committed micro-batch id, kept beside the data directory instead of
-  * being recomputed from a full-history scan per arriving shard (the r12
-  * O(history) residual — at 100× scale the old `max(tok_start+n_tokens)`
-  * audit read was a corpus-sized metadata scan per micro-batch; this is
-  * the commit-metadata form the scaladoc deferred to, implemented).
+  * being recomputed from a full-history scan per arriving shard.
   *
-  * Commit protocol (the exactly-once half of the design):
+  * Commit protocol:
   *   - state lives in versioned subdirs `v=<n>/`; a version COUNTS only
   *     when its `_SUCCESS` marker exists (Spark's committer writes the
   *     marker last, after every data file is moved out of `_temporary`,
@@ -23,22 +20,15 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *     a crash between the two leaves extra history, never a lost or
   *     torn state.
   *
-  * Callers write batch DATA first (to a per-batch partition directory,
-  * overwritten on retry) and commit state LAST: the state row is the
-  * batch's commit marker, so the seen-check keys on the marker rather
-  * than on any data row — a crash inside the non-atomic multi-file data
-  * job can no longer make a partially-visible batch read as "fully
-  * committed" and get skipped forever (the r12 advice catch).
-  *
-  * The seen-check is `batchId <= maxBatch`: Structured Streaming batch
-  * ids are monotonically increasing per checkpoint, so the whole seen
-  * SET compacts to one integer — O(1) state for the life of the stream,
-  * not an ever-growing id list.
+  * How the appenders use the marker (data first, marker last, the
+  * `batchId <= maxBatch` seen-check) is [[IncrementalPipeline]]'s
+  * `exactlyOnce`. Structured Streaming batch ids increase monotonically
+  * per checkpoint, so the whole seen SET compacts to one integer.
   *
   * All paths resolve through the Hadoop FileSystem of the session's
-  * conf — `java.io.File` probes are local-FS-only and silently read
-  * "absent" on HDFS/S3, which would disable the idempotency guard and
-  * zero the end offset (the other r12 advice catch).
+  * conf ([[fs]]) — `java.io.File` probes are local-FS-only and silently
+  * read "absent" on HDFS/S3, which would disable the idempotency guard
+  * and zero the end offset.
   */
 object StreamState {
 
@@ -46,13 +36,15 @@ object StreamState {
     * (the packer's running token offset; screens leave it 0). `aux` is a
     * second appender-defined slot (default 0 = unset): the bucketed
     * stream tables record the PARTITION FAN-OUT their dirs were written
-    * under here (r14 verdict #1 — a compiled constant silently breaks
-    * pruning losslessness the moment it changes; the stored value makes
-    * the layout self-describing, and it commits in the SAME marker write
-    * as the layout generation it describes). */
+    * under here, so the layout describes itself (a compiled constant
+    * silently breaks pruning losslessness the moment it changes); it
+    * commits in the SAME marker write as the layout generation it
+    * describes. */
   case class State(endOffset: Long, maxBatch: Long, aux: Long = 0L)
 
-  private def fs(spark: SparkSession, dir: String) =
+  /** The Hadoop FileSystem `dir` resolves to under the session's conf —
+    * the one lookup every streaming table uses. */
+  private[streaming] def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def versionsOf(spark: SparkSession, stateDir: String): Seq[(Long, Path)] = {

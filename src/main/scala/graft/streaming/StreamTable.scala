@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * directory (the ingest door writes four per batch), so at 10⁴–10⁵
   * batches a plain directory read pays an ever-growing file-listing and
   * per-file open cost even when the data itself is small (the classic
-  * small-files wall; the r13 judge's #2).
+  * small-files wall).
   *
   * Layout. A compacted table root holds two kinds of data:
   *
@@ -64,12 +64,9 @@ object StreamTable {
 
   private def cstateDir(root: String) = s"${root}_cstate"
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Visible hot-append dirs under root: (batch id, path). */
   private def batchDirs(spark: SparkSession, root: String): Seq[(Long, Path)] = {
-    val f = fsOf(spark, root)
+    val f = StreamState.fs(spark, root)
     val r = new Path(root)
     if (!f.exists(r)) Seq.empty
     else f.listStatus(r).toSeq
@@ -94,7 +91,7 @@ object StreamTable {
     if (j <= 0L) None
     else {
       val p = genPath(root, j)
-      if (!fsOf(spark, root).exists(new Path(p, "_SUCCESS"))) None
+      if (!StreamState.fs(spark, root).exists(new Path(p, "_SUCCESS"))) None
       else Some(spark.read.parquet(p).drop("cgrp"))
     }
 
@@ -180,7 +177,7 @@ object StreamTable {
       .filter { case (id, _) => live(id, c) && id <= committedThrough }
     if (toMerge.isEmpty && !force) return 0L
 
-    val f = fsOf(spark, root)
+    val f = StreamState.fs(spark, root)
     // sweep stale generations (crashed attempts, superseded survivors)
     val mergedRoot = new Path(s"$root/.merged")
     if (f.exists(mergedRoot)) f.listStatus(mergedRoot).foreach { s =>

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions.{col, countDistinct, spark_partition_id}
 
 /** The local-execution module: the session factory's config, the
-  * scale-adaptive spread rule, and the registry runner's cache contract.
+  * scale-adaptive spread rule, the concurrent-arms helper, and the
+  * registry runner's cache contract.
   */
 class ExecSpec extends SparkSuite {
 
@@ -43,6 +44,19 @@ class ExecSpec extends SparkSuite {
     val par = spark.sparkContext.defaultParallelism
     val wide = spark.range(0L, 1000L, 1L, par).toDF()
     assert(Exec.spread(wide, col("id")) eq wide)
+  }
+
+  test("concurrently: results come back in submission order; an arm's exception reaches the caller") {
+    // the first arm finishes last, so completion order differs from submission order
+    val out = Exec.concurrently(
+      () => { Thread.sleep(200); spark.range(0L, 10L).count() },
+      () => spark.range(0L, 20L).count(),
+      () => 30L)
+    assert(out === Seq(10L, 20L, 30L))
+    val e = intercept[IllegalStateException] {
+      Exec.concurrently(() => 1, () => throw new IllegalStateException("arm failed"))
+    }
+    assert(e.getMessage === "arm failed")
   }
 
   test("runEach: a throwing entry fails alone, and the cache is empty after every entry") {

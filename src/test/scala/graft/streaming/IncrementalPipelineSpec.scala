@@ -787,6 +787,90 @@ class IncrementalPipelineSpec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  test("exactly-once commit: a crashed body commits nothing; its retry runs and commits once; a seen batch never runs") {
+    val dir = Files.createTempDirectory("graft_commit").toString + "/table"
+    val stateDir = s"${dir}_state"
+    def versions() = new java.io.File(stateDir).listFiles()
+      .map(_.getName).filter(_.startsWith("v=")).toSeq.sorted
+    val rows = spark.range(0L, 3L).toDF("x")
+    IncrementalPipeline.exactlyOnce(spark, dir, 0L) { st =>
+      assert(st === StreamState.State(0L, -1L))
+      5L
+    }
+    val committed = StreamState.read(spark, stateDir)
+    assert(committed === StreamState.State(5L, 0L))
+
+    // the body writes its batch dir, then crashes before the marker
+    var calls = 0
+    intercept[IllegalStateException] {
+      IncrementalPipeline.exactlyOnce(spark, dir, 1L) { _ =>
+        calls += 1
+        IncrementalPipeline.writeBatch(rows, dir, 1L)
+        throw new IllegalStateException("crash before commit")
+      }
+    }
+    assert(new java.io.File(s"$dir/batch_id=1").isDirectory)
+    assert(StreamState.read(spark, stateDir) === committed,
+      "a body that throws must leave the state unchanged")
+    assert(versions() === Seq("v=0"))
+
+    // the retry runs the body again, from the same state, and commits once
+    IncrementalPipeline.exactlyOnce(spark, dir, 1L) { st =>
+      calls += 1
+      assert(st === committed)
+      IncrementalPipeline.writeBatch(rows, dir, 1L)
+      st.endOffset + 3L
+    }
+    assert(calls === 2)
+    assert(StreamState.read(spark, stateDir) === StreamState.State(8L, 1L))
+    assert(versions() === Seq("v=1"), "the retry must commit exactly one version")
+
+    // ids at or below the high-water mark never call the body
+    Seq(0L, 1L).foreach { id =>
+      IncrementalPipeline.exactlyOnce(spark, dir, id)(_ => fail(s"body ran for seen batch $id"))
+    }
+    assert(StreamState.read(spark, stateDir) === StreamState.State(8L, 1L))
+    assert(versions() === Seq("v=1"))
+  }
+
+  test("near-dup retry after a crash between the index writes and the marker: orphan index rows are dropped") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import graft.model.Tables
+    val root = Files.createTempDirectory("graft_orphan").toString
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val corpus = docs.filter(col("doc_id") < 150)
+    val shard = docs.filter(col("doc_id") >= 150 && col("doc_id") < 200)
+    def verdicts(dir: String) = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
+
+    // a clean run of batch 0 against a seeded index
+    IncrementalPipeline.seedNearDupIndex(spark, corpus, s"$root/clean/index")
+    IncrementalPipeline.appendNearDupBatch(
+      spark, shard, 0L, s"$root/clean/index", s"$root/clean/verdicts")
+    val clean = verdicts(s"$root/clean/verdicts")
+    assert(clean.count(_._2 == "new") * 2 > clean.size, s"fixture: most docs fresh: $clean")
+
+    // the crashed attempt: batch 0's index partitions are on disk, its
+    // marker is not
+    val indexDir = s"$root/crashed/index"
+    IncrementalPipeline.seedNearDupIndex(spark, corpus, indexDir)
+    val conf = spark.sessionState.newHadoopConf()
+    Seq("sets", "bands").foreach { t =>
+      val src = new Path(s"$root/clean/index/$t/batch_id=0")
+      FileUtil.copy(src.getFileSystem(conf), src, src.getFileSystem(conf),
+        new Path(s"$indexDir/$t/batch_id=0"), false, conf)
+    }
+    assert(StreamState.read(spark, s"${indexDir}_state").maxBatch === -1L)
+
+    IncrementalPipeline.appendNearDupBatch(
+      spark, shard, 0L, indexDir, s"$root/crashed/verdicts")
+    assert(verdicts(s"$root/crashed/verdicts") === clean,
+      "the retried batch must not match its own orphan index rows")
+    assert(spark.read.parquet(s"$indexDir/sets").count() ===
+      spark.read.parquet(s"$root/clean/index/sets").count())
+    spark.catalog.clearCache()
+  }
+
   test("near-dup index probes partition-prune to the batch's buckets; the full scan is the red control") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import graft.ext.Dedup
