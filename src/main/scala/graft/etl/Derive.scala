@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 /** Derivation stages of the Job-1 pipeline: surrogate keys (P3/P4/X1),
   * trip duration (X6/X7/F4), peak-band classification + join (F6-F8/J1).
@@ -11,11 +12,25 @@ import org.apache.spark.sql.functions._
   *     B5). We substitute a deterministic content hash of the natural key
   *     (sha2-256 over pickup/dropoff strings + int FKs) so runs are
   *     reproducible and oracle-checkable.
-  *   - date/time surrogate FKs ny:281-288: `date_format` 'yyyyMMdd'/'HHmmss'
-  *     over the *string* timestamp columns (implicit string→timestamp cast).
+  *   - date/time surrogate FKs ny:281-288: the reference applies
+  *     `date_format` 'yyyyMMdd'/'HHmmss' (and 'HH' for the band hour,
+  *     ny:303) to the *string* timestamp columns, i.e. it parses each
+  *     string back to a timestamp and formats it again. [[Cleanse]] has
+  *     just written those strings as 'yyyy-MM-dd HH:mm:ss' in the session
+  *     time zone. Each names a local time that exists in that zone, so
+  *     parsing it there and formatting again gives back the same fields:
+  *     the date id is the date part without its '-', the time id the time
+  *     part without its ':', the hour the time part's first two
+  *     characters. Slicing is therefore exact, and the parts are taken by
+  *     splitting at the space so a year wider than 4 digits cannot shift
+  *     them. Null strings stay null.
   *   - duration ny:290-301: `floor((unix_timestamp(dropoff) -
   *     unix_timestamp(pickup)) / 60)` on the re-stringified timestamps, then
-  *     the `< 1440` cutoff.
+  *     the `< 1440` cutoff. A plain `cast(.. as timestamp)` reads the fixed
+  *     format in the same session zone as the pattern parse (a DST overlap
+  *     takes the earlier offset in both), and the strings carry whole
+  *     seconds, so `unix_seconds` of the cast equals `unix_timestamp` of
+  *     the string.
   *   - peak band ny:303-319: distinct pickup hours (≤24 rows) classified by
   *     `between` + `|` over the *string* hour (numeric coercion, F8), joined
   *     back on Hour equality. The build side is ≤24 rows — explicitly
@@ -38,27 +53,32 @@ object Derive {
         col("vendor_id"), col("pickup_location_id"),
         col("drop_off_location_id"), col("payment_type")), 256))
 
+  /** The date and time parts of a 'yyyy-MM-dd HH:mm:ss' string. */
+  private def datePart(ts: String): Column = substring_index(col(ts), " ", 1)
+  private def timePart(ts: String): Column = substring_index(col(ts), " ", -1)
+
   /** P4 — ny:281-288 */
   def dateTimeKeys(df: DataFrame): DataFrame =
     df.withColumns(Map(
-      "tpep_pickup_date_id" -> date_format(col("tpep_pickup_datetime"), "yyyyMMdd"),
-      "tpep_pickup_time_id" -> date_format(col("tpep_pickup_datetime"), "HHmmss"),
-      "tpep_dropoff_date_id" -> date_format(col("tpep_dropoff_datetime"), "yyyyMMdd"),
-      "tpep_dropoff_time_id" -> date_format(col("tpep_dropoff_datetime"), "HHmmss")))
+      "tpep_pickup_date_id" -> translate(datePart("tpep_pickup_datetime"), "-", ""),
+      "tpep_pickup_time_id" -> translate(timePart("tpep_pickup_datetime"), ":", ""),
+      "tpep_dropoff_date_id" -> translate(datePart("tpep_dropoff_datetime"), "-", ""),
+      "tpep_dropoff_time_id" -> translate(timePart("tpep_dropoff_datetime"), ":", "")))
 
   /** P3/X6/X7/F4 — ny:290-301 */
-  def duration(df: DataFrame): DataFrame =
+  def duration(df: DataFrame): DataFrame = {
+    def seconds(ts: String) = unix_seconds(col(ts).cast(TimestampType))
     df.withColumn("trip_duration_minutes",
-        floor((unix_timestamp(col("tpep_dropoff_datetime")) -
-          unix_timestamp(col("tpep_pickup_datetime"))) / 60))
+        floor((seconds("tpep_dropoff_datetime") - seconds("tpep_pickup_datetime")) / 60))
       .filter(col("trip_duration_minutes") < 1440)
+  }
 
   /** F6-F8/J1/A2 — ny:303-319: hour extraction, ≤24-row distinct band lookup,
     * broadcast equi-join, star-select to keep only the band id from the
     * build side.
     */
   def peakBand(df: DataFrame): DataFrame = {
-    val withHour = df.withColumn("Hour", date_format(col("tpep_pickup_datetime"), "HH"))
+    val withHour = df.withColumn("Hour", substring(timePart("tpep_pickup_datetime"), 1, 2))
     // The reference derives the lookup by re-running the whole pipeline for a
     // distinct() over pickup hours (ny:305-307) — at scale that is a second
     // full pass over the fact data just to recover ≤24 statically-knowable

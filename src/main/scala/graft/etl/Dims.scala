@@ -112,16 +112,38 @@ object Dims {
     * LocationID,Borough,Zone,service_zone, 265 zones). Header-inferred →
     * all string columns, like the reference.
     *
-    * Resolved against the JVM working directory (sbt runs from the repo
-    * root, which is what the in-repo mains and tests get); launchers with
-    * a different CWD must set GRAFT_ZONE_CSV / -Dgraft.zone.csv. The
-    * resolved absolute path is interpolated into the oracle SQL too, so
-    * any checkout location works (ADVICE r3).
+    * Resolution order: GRAFT_ZONE_CSV / -Dgraft.zone.csv, then
+    * data/taxi_zone_lookup.csv under the JVM working directory, then the
+    * copy the build ships on the classpath (so any working directory
+    * works). The resolved absolute path is interpolated into the oracle
+    * SQL too, so any checkout location works (ADVICE r3).
     */
-  val zoneCsvPath: String =
-    sys.env.get("GRAFT_ZONE_CSV")
-      .orElse(sys.props.get("graft.zone.csv"))
-      .getOrElse(new java.io.File("data/taxi_zone_lookup.csv").getAbsolutePath)
+  val zoneCsvPath: String = resolveZoneCsv(
+    sys.env.get("GRAFT_ZONE_CSV").orElse(sys.props.get("graft.zone.csv")),
+    new java.io.File(sys.props("user.dir")))
+
+  private[etl] def resolveZoneCsv(overridePath: Option[String], workDir: java.io.File): String =
+    overridePath.getOrElse {
+      val local = new java.io.File(workDir, "data/taxi_zone_lookup.csv")
+      if (local.isFile) local.getAbsolutePath
+      else Option(getClass.getResource("/taxi_zone_lookup.csv")).map(zoneCsvFile)
+        .getOrElse(local.getAbsolutePath)
+    }
+
+  /** A file path for the classpath copy: the file itself when the
+    * classpath is a directory, else (inside a jar) a temp-file extract,
+    * since the DuckDB oracle reads the CSV by path.
+    */
+  private[etl] def zoneCsvFile(resource: java.net.URL): String =
+    if (resource.getProtocol == "file") new java.io.File(resource.toURI).getAbsolutePath
+    else {
+      val tmp = java.nio.file.Files.createTempFile("taxi_zone_lookup", ".csv")
+      tmp.toFile.deleteOnExit()
+      val in = resource.openStream()
+      try java.nio.file.Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      finally in.close()
+      tmp.toAbsolutePath.toString
+    }
 
   def dimTaxiZoneLookup(spark: SparkSession, path: String = zoneCsvPath): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -2,23 +2,26 @@ package graft.etl
 
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lower}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, lower}
 
 /** Job-2 analog (SURVEY §3 E3, pg:22-92): publish the star schema from the
   * session catalog to an external JDBC warehouse.
   *
   *   - Per dim (pg:60-74): probe the target for the table (S7 — the probe
   *     SELECT executes INSIDE the target database via the
-  *     subquery-as-table idiom), create it only if absent (K2). The
-  *     reference does the existence check row-at-a-time in driver code;
-  *     [[missingDims]] also exposes the SET-wise version — a left-anti
-  *     join of the dim list against the target's table listing — which is
-  *     the Spark-native shape of the same logic (SURVEY §2.5).
+  *     subquery-as-table idiom), create it only if absent (K2). Like the
+  *     reference, the probe runs in driver code over one JDBC connection,
+  *     so an existing dim costs no Spark job; [[missingDims]] also
+  *     exposes the SET-wise version — a left-anti join of the dim list
+  *     against the target's table listing — which is the Spark-native
+  *     shape of the same logic (SURVEY §2.5).
   *   - Fact (pg:77-89): read back from the catalog (S6), filter to ONE
   *     (year, month) partition (F5 — a partition-column filter, so the
   *     scan prunes to a single directory: the month-granular access
-  *     pattern that keeps a 100 TB fact publishable), append (K3).
+  *     pattern that keeps a 100 TB fact publishable), append (K3). The
+  *     row count comes from an `Observation` on the appended frame, so
+  *     the publish is one job over one pruned scan.
   *
   * The probe SQL is pluggable because system-catalog names differ per
   * target (`pg_catalog.pg_tables` on Postgres, `SYS.SYSTABLES` on the
@@ -71,11 +74,32 @@ object Publish {
   }
 
   /** S7 existence probe: returns true iff `table` exists target-side.
-    * `probeSql(table)` must be a subquery returning ≥1 row iff present.
+    * `probeSql(table)` must be a subquery returning ≥1 row iff present;
+    * it runs inside the target as `SELECT 1 FROM <probeSql(table)>` over
+    * one driver-side connection (no Spark job).
     */
   def tableExists(spark: SparkSession, url: String, props: Properties,
-      probeSql: String => String): String => Boolean =
-    table => spark.read.jdbc(url, probeSql(table), props).count() > 0
+      probeSql: String => String): String => Boolean = table => {
+    val conn = connect(url, props)
+    try {
+      val rs = conn.createStatement().executeQuery(s"SELECT 1 FROM ${probeSql(table)}")
+      try rs.next() finally rs.close()
+    } finally conn.close()
+  }
+
+  /** One JDBC connection opened as Spark's JDBC source opens its own: the
+    * `driver` class named in `props` (if any) connects with `props` passed
+    * through; without one, `DriverManager` picks the driver for `url`.
+    */
+  private def connect(url: String, props: Properties): java.sql.Connection =
+    Option(props.getProperty("driver")) match {
+      case Some(cls) =>
+        val driver = Class.forName(cls, true, Thread.currentThread.getContextClassLoader)
+          .getDeclaredConstructor().newInstance().asInstanceOf[java.sql.Driver]
+        Option(driver.connect(url, props)).getOrElse(
+          throw new java.sql.SQLException(s"JDBC driver $cls does not accept $url"))
+      case None => java.sql.DriverManager.getConnection(url, props)
+    }
 
   /** Set-wise version of the reference's per-dim loop: which dims are NOT
     * yet in the target listing (left-anti join, SURVEY §2.5). Compared
@@ -102,22 +126,19 @@ object Publish {
   }
 
   /** Publish one (year, month) fact partition (pg:77-89): catalog read →
-    * partition-pruned filter → JDBC append.
+    * partition-pruned filter → JDBC append. Returns the rows the append
+    * consumed, counted in flight by an `Observation` on the same job, so
+    * the number is exactly what was appended even if the catalog
+    * partition gains rows concurrently. An absent month appends 0 rows.
     */
   def publishFactMonth(spark: SparkSession, catalogTable: String,
       year: String, month: String, url: String, targetTable: String,
       props: Properties): Long = {
-    val part = spark.table(catalogTable) // S6
+    val appended = Observation()
+    spark.table(catalogTable) // S6
       .filter(col("processed_year") === year && col("processed_month") === month) // F5
-    // persist so count + write share ONE pruned scan — and so the reported
-    // row count is exactly what was appended even if the catalog partition
-    // gains rows concurrently (imperative method, so unpersist is possible
-    // here unlike in the lazy query registry)
-    part.persist()
-    try {
-      val n = part.count()
-      part.write.mode(SaveMode.Append).jdbc(url, targetTable, props) // K3
-      n
-    } finally part.unpersist()
+      .observe(appended, count(lit(1)).as("n_rows"))
+      .write.mode(SaveMode.Append).jdbc(url, targetTable, props) // K3
+    appended.get("n_rows").asInstanceOf[Long]
   }
 }

@@ -1,5 +1,8 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+import java.util.jar.{JarEntry, JarOutputStream}
+
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
@@ -58,6 +61,26 @@ class DimsSpec extends SparkSuite {
     assert(z.count() === 265)
     assert(z.columns.toSeq === Seq("LocationID", "Borough", "Zone", "service_zone"))
     assert(z.schema.fields.forall(_.dataType === StringType))
+  }
+
+  test("zone lookup CSV: outside the repo root the classpath copy is used; a jar copy is extracted") {
+    val repoCopy = Files.readAllBytes(Paths.get("data/taxi_zone_lookup.csv"))
+    val elsewhere = Files.createTempDirectory("graft_zone_cwd").toFile
+    val resolved = Dims.resolveZoneCsv(None, elsewhere)
+    assert(!resolved.startsWith(elsewhere.getAbsolutePath))
+    assert(Files.readAllBytes(Paths.get(resolved)) === repoCopy)
+    assert(Dims.dimTaxiZoneLookup(spark, resolved).count() === 265)
+    assert(Dims.resolveZoneCsv(Some("/x/zones.csv"), elsewhere) === "/x/zones.csv")
+
+    val jar = elsewhere.toPath.resolve("zones.jar")
+    val out = new JarOutputStream(Files.newOutputStream(jar))
+    try {
+      out.putNextEntry(new JarEntry("taxi_zone_lookup.csv"))
+      out.write(repoCopy)
+    } finally out.close()
+    val extracted = Dims.zoneCsvFile(
+      java.net.URI.create(s"jar:${jar.toUri}!/taxi_zone_lookup.csv").toURL)
+    assert(Files.readAllBytes(Paths.get(extracted)) === repoCopy)
   }
 
   test("zone lookup CSV: a missing path names the path and the override") {

@@ -2,11 +2,17 @@ package graft.etl
 
 import java.util.Properties
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSuite
 
 /** Job-2 publish flow against embedded Derby (SURVEY §3 E3): idempotent
   * dim publish (probe → create-if-absent), set-wise missing-dim anti-join,
-  * and the partition-pruned fact append.
+  * and the partition-pruned fact append — with the Spark jobs each call
+  * starts: none for probing an existing dim, one for a fact month.
   */
 class PublishSpec extends SparkSuite {
 
@@ -23,11 +29,42 @@ class PublishSpec extends SparkSuite {
   private def probeSql(table: String): String =
     s"(SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME = '${table.toUpperCase}') p"
 
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. A marker job posted after `body` bounds the count: the
+    * listener bus delivers events in order, so once the marker's start
+    * arrives every job of `body` has been seen.
+    */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"publish-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    var jobs = 0
+    val done = Promise[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs += 1
+          case Some(`marker`) => done.trySuccess(jobs)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      (result, Await.result(done.future, 60.seconds))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("dim publish is idempotent: first run writes, second skips (pg:60-74)") {
     assert(Publish.publishDimIfAbsent(spark, "dim_ratecode",
       Dims.dimRatecode(spark), url, props, probeSql))
-    assert(!Publish.publishDimIfAbsent(spark, "dim_ratecode",
+    val (wrote, jobs) = withJobCount(Publish.publishDimIfAbsent(spark, "dim_ratecode",
       Dims.dimRatecode(spark), url, props, probeSql))
+    assert(!wrote)
+    assert(jobs === 0, "probing an existing dim runs on the driver")
     assert(spark.read.jdbc(url, "dim_ratecode", props).count() === 7)
   }
 
@@ -44,11 +81,17 @@ class PublishSpec extends SparkSuite {
     val fact = StarSchema.factTrips(spark, sf)
     StarSchema.writeFact(fact, table)
 
-    val n1 = Publish.publishFactMonth(spark, table, "2024", "1", url, "fact_uber_trips", props)
+    val (n1, jobs1) = withJobCount(
+      Publish.publishFactMonth(spark, table, "2024", "1", url, "fact_uber_trips", props))
     assert(n1 === fact.count())
+    assert(n1 > 0)
+    assert(jobs1 === 1, "the append counts itself: one job")
+    assert(spark.read.jdbc(url, "fact_uber_trips", props).count() === n1)
     // a month not in the catalog publishes zero rows
-    val n0 = Publish.publishFactMonth(spark, table, "2024", "12", url, "fact_uber_trips", props)
+    val (n0, jobs0) = withJobCount(
+      Publish.publishFactMonth(spark, table, "2024", "12", url, "fact_uber_trips", props))
     assert(n0 === 0)
+    assert(jobs0 === 1)
     assert(spark.read.jdbc(url, "fact_uber_trips", props).count() === n1)
 
     spark.sql(s"DROP TABLE IF EXISTS $table")
