@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** How the engine runs locally, decided once: the core count, the session
-  * config, and the scale-adaptive spread rule. Every main and the test
-  * session build through here.
+  * config, the scale-adaptive spread rule and the eager-cache rule. Every
+  * main and the test session build through here.
   */
 object Exec {
 
@@ -41,6 +41,34 @@ object Exec {
   def spread(df: DataFrame, key: Column): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+  }
+
+  /** Cache `df` now: `persist()` at the default storage level, then one
+    * `count()` to fill it, and return `df` itself. The materialization
+    * rule, in one place:
+    *
+    *   - `share` a frame that several branches of ONE later job read
+    *     (both sides of a self-join, sibling broadcast builds, concurrent
+    *     arms). Left unfilled, those branches schedule together and each
+    *     re-runs the frame's lineage instead of reading the cache.
+    *   - `persist()` lazily when the consumers are sequential actions:
+    *     the first one fills the cache inside its own job, so an eager
+    *     count would only add a job.
+    *   - `localCheckpoint(true)` when reuse would re-expand a large
+    *     subtree in every later plan string (composed stream stages) or a
+    *     loop must cut its lineage each round; those blocks free through
+    *     the ContextCleaner, not `unpersist`.
+    *
+    * Who releases the cache: a fill that throws releases it here;
+    * registry entries leave the rest to [[SparkEntry.runEach]], which
+    * clears it after every entry; long-lived callers (the streaming
+    * appenders) `unpersist()` in a `finally`.
+    */
+  def share(df: DataFrame): DataFrame = {
+    df.persist()
+    try df.count()
+    catch { case e: Throwable => df.unpersist(); throw e }
+    df
   }
 
   /** Run independent eager arms (chains of Spark jobs) concurrently and

@@ -112,14 +112,14 @@ object Dims {
     * LocationID,Borough,Zone,service_zone, 265 zones). Header-inferred →
     * all string columns, like the reference.
     *
-    * Resolution order: GRAFT_ZONE_CSV / -Dgraft.zone.csv, then
+    * Resolution order: GRAFT_ZONE_CSV, then
     * data/taxi_zone_lookup.csv under the JVM working directory, then the
     * copy the build ships on the classpath (so any working directory
     * works). The resolved absolute path is interpolated into the oracle
     * SQL too, so any checkout location works (ADVICE r3).
     */
   val zoneCsvPath: String = resolveZoneCsv(
-    sys.env.get("GRAFT_ZONE_CSV").orElse(sys.props.get("graft.zone.csv")),
+    sys.env.get("GRAFT_ZONE_CSV"),
     new java.io.File(sys.props("user.dir")))
 
   private[etl] def resolveZoneCsv(overridePath: Option[String], workDir: java.io.File): String =
@@ -149,7 +149,7 @@ object Dims {
     val p = new org.apache.hadoop.fs.Path(path)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       throw new java.io.FileNotFoundException(s"taxi zone lookup CSV not found at $path; " +
-        "point GRAFT_ZONE_CSV or -Dgraft.zone.csv at data/taxi_zone_lookup.csv")
+        "point GRAFT_ZONE_CSV at data/taxi_zone_lookup.csv")
     spark.read.option("header", "true").csv(path)
   }
 

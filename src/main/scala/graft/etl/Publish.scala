@@ -3,7 +3,7 @@ package graft.etl
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, lower}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Job-2 analog (SURVEY §3 E3, pg:22-92): publish the star schema from the
   * session catalog to an external JDBC warehouse.
@@ -12,10 +12,7 @@ import org.apache.spark.sql.functions.{col, count, lit, lower}
   *     SELECT executes INSIDE the target database via the
   *     subquery-as-table idiom), create it only if absent (K2). Like the
   *     reference, the probe runs in driver code over one JDBC connection,
-  *     so an existing dim costs no Spark job; [[missingDims]] also
-  *     exposes the SET-wise version — a left-anti join of the dim list
-  *     against the target's table listing — which is the Spark-native
-  *     shape of the same logic (SURVEY §2.5).
+  *     so an existing dim costs no Spark job.
   *   - Fact (pg:77-89): read back from the catalog (S6), filter to ONE
   *     (year, month) partition (F5 — a partition-column filter, so the
   *     scan prunes to a single directory: the month-granular access
@@ -100,20 +97,6 @@ object Publish {
           throw new java.sql.SQLException(s"JDBC driver $cls does not accept $url"))
       case None => java.sql.DriverManager.getConnection(url, props)
     }
-
-  /** Set-wise version of the reference's per-dim loop: which dims are NOT
-    * yet in the target listing (left-anti join, SURVEY §2.5). Compared
-    * case-insensitively: SQL targets case-fold unquoted identifiers
-    * (Derby upper-cases, Postgres lower-cases), so the catalog listing
-    * never matches our lowercase names literally.
-    */
-  def missingDims(spark: SparkSession, targetTables: DataFrame): DataFrame = {
-    import spark.implicits._
-    val target = targetTables.toDF("t_name")
-      .select(lower(col("t_name")).as("table_name_ci"))
-    dimTables.toDF("table_name")
-      .join(target, lower(col("table_name")) === col("table_name_ci"), "left_anti")
-  }
 
   /** Publish one dim if absent (pg:60-74): probe → create. Returns true if
     * it wrote.

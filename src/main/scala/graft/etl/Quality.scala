@@ -113,9 +113,8 @@ object Quality {
     *
     * Scale: the four column checks are ONE aggregation over one scan
     * (conditional counts — no per-check passes). RI is the one join: a
-    * left-anti against the customer keyset, shuffle-keyed on custkey
-    * — the exact shape [[Publish.missingDims]] uses catalog-side. The
-    * final assembly unions five 1-row frames — driver-trivial.
+    * left-anti against the customer keyset, shuffle-keyed on custkey.
+    * The final assembly unions five 1-row frames — driver-trivial.
     */
   def qCheckOrders(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)

@@ -1487,8 +1487,8 @@ object CorpusOps {
     */
   private[ext] def qualityGateFrom(spark: SparkSession, corpus: DataFrame): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    val docs = corpus.repartition(par, col("doc_id")).persist()
-    docs.count() // eager: four signal branches consume it concurrently
+    // eager: four signal branches consume it concurrently
+    val docs = Exec.share(corpus.repartition(par, col("doc_id")))
 
     // 1. repetition — the qDocRepetition kernel, SHARED (not re-derived)
     val rep = TextOps.repetitionFrom(docs)
@@ -2140,9 +2140,9 @@ object CorpusOps {
       .select(col("e.i").as("i"), col("e.j").as("j"), col("e.w").as("w"))
       .groupBy(col("i"), col("j"))
       .agg(count(lit(1)).as("n"), sum(col("w")).as("w")).persist()
-    val tot = nbr.groupBy(col("i"))
-      .agg(sum(col("n")).as("n_tot"), sum(col("w")).as("w_tot")).persist()
-    tot.count()
+    // one job fills both nbr's lazy cache and tot's before the driver collects
+    val tot = Exec.share(nbr.groupBy(col("i"))
+      .agg(sum(col("n")).as("n_tot"), sum(col("w")).as("w_tot")))
     // DRIVER-SIDE MM LOOP (r15): the (source, source) neighbor table is
     // BOUNDED model state (|sources|² rows at any corpus scale), and the
     // DataFrame-per-round formulation paid ~10 scheduler stages per
@@ -2369,7 +2369,8 @@ object CorpusOps {
     val k = bpAffixLen
     val docs0 = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val docs = docs0.withColumn("text",
+    // eager: four consumers (nSrc, both flagged(), final join)
+    val docs = Exec.share(docs0.withColumn("text",
       when(col("doc_id") % 4 === 0,
         concat(lit("hdr "), col("source"), lit(" notice "), col("text"),
           lit(" end "), col("source"), lit(" ftr")))
@@ -2382,9 +2383,7 @@ object CorpusOps {
           concat_ws(" ", slice(col("toks"), 1, k))))
       .withColumn("suff",
         when(col("n_tokens") >= 2 * k,
-          concat_ws(" ", slice(col("toks"), -k, k))))
-      .persist()
-    docs.count() // eager: four consumers (nSrc, both flagged(), final join)
+          concat_ws(" ", slice(col("toks"), -k, k)))))
     val nSrc = docs.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
     def flagged(c: String): DataFrame = docs
       .filter(col(c).isNotNull)
@@ -2594,10 +2593,7 @@ object CorpusOps {
     * are read from the model store instead of recomputed. */
   private[graft] final case class FrozenQualityModel(
       uni: DataFrame, totals: DataFrame, bi: DataFrame) {
-    def persistAll(): FrozenQualityModel = {
-      Seq(uni, totals, bi).foreach { d => d.persist(); d.count() }
-      this
-    }
+    def persistAll(): FrozenQualityModel = { Seq(uni, totals, bi).foreach(Exec.share); this }
     def unpersistAll(): Unit = Seq(uni, totals, bi).foreach(_.unpersist())
   }
 
@@ -2653,8 +2649,8 @@ object CorpusOps {
   private[graft] def qualityGateFrozenWith(spark: SparkSession, arrivals: DataFrame,
       model: FrozenQualityModel): (DataFrame, DataFrame) = {
     val par = spark.sparkContext.defaultParallelism
-    val docs = arrivals.repartition(par, col("doc_id")).persist()
-    docs.count() // eager: four signal branches consume it concurrently
+    // eager: four signal branches consume it concurrently
+    val docs = Exec.share(arrivals.repartition(par, col("doc_id")))
 
     // 1. repetition — model-free, the qDocRepetition kernel unchanged
     val rep = TextOps.repetitionFrom(docs)

@@ -207,21 +207,11 @@ object Dedup {
     // band-key exchange is still computed once and reused.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band_id"), col("band_key"))
-    // PERSISTED: the self-join's two sides cannot share this subtree in
-    // the physical plan (the planner broadcasts one side, and a broadcast
-    // exchange can't reuse the other side's hash exchange — verified: 0
-    // ReusedExchange), so without the persist the signature aggregation
-    // and capping window run TWICE. nBands ints per doc; the cached
-    // banded-signature table is what a production pipeline materializes.
-    val capped = bands.withColumn("bsz", count(lit(1)).over(w))
+    // shared: a broadcast side cannot reuse the other side's exchange, so
+    // each self-join side would re-run the signature aggregation + capping
+    val capped = Exec.share(bands.withColumn("bsz", count(lit(1)).over(w))
       .filter(col("bsz") <= maxBandBucket)
-      .select(col("doc_id"), col("band_id"), col("band_key"))
-      .persist()
-    // eager, like every other multi-consumer persisted frame (commit
-    // d54349a): the self-join's broadcast and stream sides schedule
-    // concurrently and would race the unfilled cache, re-running the
-    // signature aggregation + capping window once per side
-    capped.count()
+      .select(col("doc_id"), col("band_id"), col("band_key")))
     // Both sides read the persisted hash sets; at harness scale the
     // planner broadcasts one side, at 100 TB (bands is O(N), never
     // broadcastable) AQE picks the band-key shuffle join over the same
@@ -261,14 +251,10 @@ object Dedup {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val corpus = nearCorpus(docs)
     val par = spark.sparkContext.defaultParallelism
-    val shingled = corpus.repartition(par, col("doc_id"))
+    // eager: four branches (band sides + both Jaccard probes) read it in one job
+    Exec.share(corpus.repartition(par, col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), expr(hashSetExpr).as("hs")).persist()
-    // eager: four downstream branches (band sides + both Jaccard probes)
-    // schedule concurrently in one job and would race the unfilled cache,
-    // re-running the md5 shingling per branch (the CC-loop lesson)
-    shingled.count()
-    shingled
+      .select(col("doc_id"), expr(hashSetExpr).as("hs")))
   }
 
   def qDocMinhashPairs(spark: SparkSession, sfDir: String): DataFrame =
@@ -478,13 +464,10 @@ object Dedup {
     * restricted to [[evalKeep]] endpoints. Persisted eagerly (stats
     * fan-out); released by the registry's clearCache contract.
     */
-  private def evalSampledMh(shingled: DataFrame): DataFrame = {
-    val mh = minhashVerifiedPairs(shingled)
+  private def evalSampledMh(shingled: DataFrame): DataFrame =
+    Exec.share(minhashVerifiedPairs(shingled)
       .filter(evalKeep(col("doc_a")) && evalKeep(col("doc_b")))
-      .select(col("doc_a"), col("doc_b")).persist()
-    mh.count()
-    mh
-  }
+      .select(col("doc_a"), col("doc_b")))
 
   /** Exact ground-truth pairs (3-gram Jaccard ≥ 1/2 via lossless prefix
     * filtering) over the [[evalKeep]] sample — the shared reference arm
@@ -492,9 +475,9 @@ object Dedup {
     * (multi-consumer stats fan-out).
     */
   private def evalTruthPairs(shingled: DataFrame): DataFrame = {
-    val toks = shingled.filter(evalKeep(col("doc_id")))
-      .select(col("doc_id"), explode(col("hs")).as("tok")).persist()
-    toks.count() // eager: df table, ranking, candidate join, verify all consume it
+    // eager: df table, ranking, candidate join, verify all consume it
+    val toks = Exec.share(shingled.filter(evalKeep(col("doc_id")))
+      .select(col("doc_id"), explode(col("hs")).as("tok")))
     val dfTab = toks.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("tdf"), col("tok"))
@@ -531,14 +514,12 @@ object Dedup {
     // token table per pair — same exact counts (hs is already distinct),
     // one doc-keyed join instead of a token-granularity shuffle (r8:
     // measured ~2× on the truth arm)
-    val truth = cand
+    Exec.share(cand
       .join(shingled.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(shingled.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
       .filter(lit(3) * size(array_intersect(col("hs_a"), col("hs_b"))) >=
         size(col("hs_a")) + size(col("hs_b")))
-      .select(col("doc_a"), col("doc_b")).persist()
-    truth.count()
-    truth
+      .select(col("doc_a"), col("doc_b")))
   }
 
   /** Shared oracle CTE chain: shingled corpus → minhash bands → capped
@@ -683,22 +664,13 @@ object Dedup {
     *   adversarial general graphs.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = ccMaxIters): DataFrame = {
-    // ONE-PASS edge build (r15): explode emits both directions from a
-    // single evaluation of `pairs` — the union form's two legs each
-    // re-read the caller's frame, which forced every caller to persist
-    // and eagerly count `pairs` first (an extra cache + barrier job per
-    // query). With one consumer the pair-mining pipeline runs exactly
-    // once, inside this cache fill.
-    val edges = pairs
+    // one explode emits both directions from a single pass over `pairs`;
+    // shared: the loop's first job reads it from several concurrent branches
+    val edges = Exec.share(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")).persist()
-    // materialize the cache EAGERLY: the loop's first job would otherwise
-    // fan out into several concurrent branches (labels init + join sides)
-    // that race on the unfilled cache and re-run the upstream pair mining
-    // per branch (measured 2-3× the whole query's cost)
-    edges.count()
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // eager checkpoint: materialized before round 1's concurrent consumers,
     // and the pair-mining lineage never enters the loop plans
     var labels = edges.select(col("src").as("doc_id")).distinct()
@@ -1105,12 +1077,11 @@ object Dedup {
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
         s" j -> array_min(slice(gs, j, $winnowW))))"
     // the md5-dense shingle projection costs per row: spread on doc_id
-    val fps = Exec.spread(nearCorpus(docs), col("doc_id"))
+    // eager: df table + both pair-join sides consume it
+    val fps = Exec.share(Exec.spread(nearCorpus(docs), col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
       .withColumn("gs", expr(s"transform($shinglesExpr, s -> $hLambda)"))
-      .select(col("doc_id"), explode(expr(fpExpr)).as("fp"))
-      .persist()
-    fps.count() // eager: df table + both pair-join sides consume it
+      .select(col("doc_id"), explode(expr(fpExpr)).as("fp")))
     val okFp = fps.groupBy(col("fp"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= winnowMaxDf)
@@ -1205,12 +1176,11 @@ object Dedup {
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
         s" j -> array_min(slice(gs, j, $winnowW))))"
     def winnowArm(): DataFrame = {
-      val fps = sampled
+      // eager: df table + both pair-join sides
+      val fps = Exec.share(sampled
         .withColumn("toks", split(col("text"), " "))
         .withColumn("gs", expr(s"transform($shinglesExpr, s -> $hLambda)"))
-        .select(col("doc_id"), explode(expr(fpExpr)).as("fp"))
-        .persist()
-      fps.count() // eager: df table + both pair-join sides
+        .select(col("doc_id"), explode(expr(fpExpr)).as("fp")))
       val okFp = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= winnowMaxDf).select(col("fp"))
       val filtered = fps.join(okFp, "fp")
@@ -1235,12 +1205,12 @@ object Dedup {
       .map(j => when(col(s"s$j") >= 0, 1L << j).otherwise(0L))
       .reduce((a, b) => a + b)
     def simhashArm(): DataFrame = {
-      val sigs = sampled
+      // eager: band build + both verify probes
+      val sigs = Exec.share(sampled
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
         .select(col("doc_id"), TextOps.portableHash(col("t")).as("h"))
         .groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
-        .select(col("doc_id"), sigExpr.as("sig")).persist()
-      sigs.count() // eager: band build + both verify probes
+        .select(col("doc_id"), sigExpr.as("sig")))
       val bandCols = (0 until simhashBands).map { b =>
         struct(lit(b).as("band_id"),
           shiftright(col("sig"), b * simhashBandBits)
@@ -1434,12 +1404,11 @@ object Dedup {
     val cand = bandedCandidates(shingled)
     val sa = shingled.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
     val sb = shingled.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
-    val scored = cand.join(sa, "doc_a").join(sb, "doc_b")
+    // eager: one consumer per threshold arm
+    val scored = Exec.share(cand.join(sa, "doc_a").join(sb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("inter"),
-        size(array_union(col("hs_a"), col("hs_b"))).cast("long").as("uni"))
-      .persist()
-    scored.count() // eager: one consumer per threshold arm
+        size(array_union(col("hs_a"), col("hs_b"))).cast("long").as("uni")))
     // ONE-PASS SWEEP (r15, guide §1.2): the per-threshold arms each ran a
     // pair count, a touched-doc distinct and a droppable distinct plus
     // two broadcast cross-joins — ~12 jobs and >200 cached-scan plan
@@ -1737,9 +1706,8 @@ object Dedup {
   private[graft] def fuzzyContamPairsWith(spark: SparkSession, train: DataFrame,
       eval: DataFrame): (DataFrame, DataFrame) = {
     val par = spark.sparkContext.defaultParallelism
-    val trainPrep = decontamPrep(train.repartition(par, col("doc_id"))).persist()
-    trainPrep.count() // eager: the band probe and the Jaccard verify
-    // consume it concurrently (the nearDupShingled discipline)
+    // eager: the band probe and the Jaccard verify consume it concurrently
+    val trainPrep = Exec.share(decontamPrep(train.repartition(par, col("doc_id"))))
     // MATERIALIZED (r15): evalPrep feeds the band-probe broadcast AND the
     // verify-side ePrep broadcast — two sibling broadcast builds each
     // re-ran the normText+md5 prep, and the explode in sigBandsOf
@@ -1904,8 +1872,8 @@ object Dedup {
         expr(Similarity.reembedExpr).as("e")))
 
     val par = spark.sparkContext.defaultParallelism
-    val trainPrep = decontamPrep(train.repartition(par, col("doc_id"))).persist()
-    trainPrep.count() // eager: exact arm, band probe, and verify share it
+    // eager: exact arm, band probe, and verify share it
+    val trainPrep = Exec.share(decontamPrep(train.repartition(par, col("doc_id"))))
     // MATERIALIZED (r15): three consumers (exact-gate broadcast, band
     // probe, verify ePrep) each re-ran the eval prep, and the hs8
     // explode pushed an inferred size>0 filter into the eval scan that
@@ -2040,11 +2008,10 @@ object Dedup {
         .select((col("doc_id") + 200000).as("doc_id"),
           concat(col("text"), lit(" near duplicate suffix")).as("text")))
     val par = spark.sparkContext.defaultParallelism
-    val shingled = corpus.repartition(par, col("doc_id"))
+    // eager: 4+ concurrent consumers (see nearDupShingled)
+    val shingled = Exec.share(corpus.repartition(par, col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), col("text"), expr(hashSetExpr).as("hs"))
-      .persist()
-    shingled.count() // eager: 4+ concurrent consumers (see nearDupShingled)
+      .select(col("doc_id"), col("text"), expr(hashSetExpr).as("hs")))
 
     val keepers = shingled
       .groupBy(sha2(col("text"), 256).as("sha"))
@@ -2339,8 +2306,8 @@ object Dedup {
       setsBuckets: Int = nearDupIndexBuckets,
       bandsBuckets: Int = nearDupIndexBuckets): (DataFrame, DataFrame) = {
     val par = spark.sparkContext.defaultParallelism
-    val prep = nearDupPrep(batch.repartition(par, col("doc_id"))).persist()
-    prep.count() // eager: five consumers (both arms, both self sides, out)
+    // eager: five consumers (both arms, both self sides, out)
+    val prep = Exec.share(nearDupPrep(batch.repartition(par, col("doc_id"))))
     val bBands = nearDupBands(prep)
       .select(col("doc_id").as("b_doc"), col("band_id"), col("band_key"))
 
@@ -2454,11 +2421,10 @@ object Dedup {
     // only (doc_id, text) and keys the cache on exactly the column the
     // per-doc window and size aggregate cluster on.
     val par = spark.sparkContext.defaultParallelism
-    val toks = corpus.repartition(par, col("doc_id"))
+    // eager: candidate generation + verification both consume it
+    val toks = Exec.share(corpus.repartition(par, col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(hashSetExpr)).as("tok"))
-      .persist()
-    toks.count() // eager: candidate generation + verification both consume it
+      .select(col("doc_id"), explode(expr(hashSetExpr)).as("tok")))
     val dfTab = toks.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("tdf"), col("tok"))
     val wCnt = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
@@ -2620,11 +2586,10 @@ object Dedup {
     // not fit CPU-dense per-doc work, and doc_id is the downstream
     // window/aggregate key.
     val par = spark.sparkContext.defaultParallelism
-    val toks = corpus.repartition(par, col("doc_id"))
+    // eager: probe, index and verify branches all consume it
+    val toks = Exec.share(corpus.repartition(par, col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(hashSetExpr)).as("tok"))
-      .persist()
-    toks.count() // eager: probe, index and verify branches all consume it
+      .select(col("doc_id"), explode(expr(hashSetExpr)).as("tok")))
     val dfTab = toks.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("tdf"), col("tok"))
@@ -2760,14 +2725,10 @@ object Dedup {
     val gramsExpr =
       s"transform(sequence(1, size(toks) - ${dupSpanK - 1}), i -> struct(i AS pos, " +
         s"CAST(conv(substring(md5(concat_ws(' ', slice(toks, i, $dupSpanK))), 1, 15), 16, 10) AS BIGINT) AS gh))"
-    // PERSISTED (r15): grams feeds the df≥2 aggregate AND the island
-    // join — unpersisted, the md5 positional-gram explode (the query's
-    // dominant cost) evaluated twice (probe: two ~0.7 s gram stages).
-    val grams = corpus.filter(size(col("toks")) >= dupSpanK)
+    // eager: the df≥2 aggregate and the island join read the md5 gram explode concurrently
+    val grams = Exec.share(corpus.filter(size(col("toks")) >= dupSpanK)
       .select(col("doc_id"), explode(expr(gramsExpr)).as("g"))
-      .select(col("doc_id"), col("g.pos").as("pos"), col("g.gh").as("gh"))
-      .persist()
-    grams.count() // eager: both consumers schedule concurrently
+      .select(col("doc_id"), col("g.pos").as("pos"), col("g.gh").as("gh")))
     val dupGrams = grams.groupBy(col("gh"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)

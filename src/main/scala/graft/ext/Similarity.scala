@@ -268,9 +268,8 @@ object Similarity {
     * IS the scan-cost model.
     */
   def qEmbLshMultiprobe(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = qEmbCosineTopk(spark, sfDir)
-      .select(col("q_id"), col("vec_id")).persist()
-    exact.count()
+    val exact = Exec.share(qEmbCosineTopk(spark, sfDir)
+      .select(col("q_id"), col("vec_id")))
     val emb = Tables.embeddings(spark, sfDir)
     val q0 = emb.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"),
@@ -421,21 +420,12 @@ object Similarity {
     val perturbed = emb.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.5)), slice(col("e"), 2, embDim - 1)).as("e"))
-    // One pass computes norm + all 6 table buckets (24 plane dots), then
-    // persists: three consumers (bands + both cosine probes) would
-    // otherwise re-evaluate the union and the whole hyperplane battery
-    // per branch — and re-codegen three copies of the 1 536-literal
-    // plane expressions, which dominated the un-persisted runtime. The
-    // production analog at 100 TB is a bucketed vector index written
-    // once and probed many times.
-    val corpus = emb.unionAll(perturbed)
+    // one pass computes norm + all 6 table buckets (24 plane dots), shared
+    // by the bands and both cosine probes (at scale: a bucketed index)
+    val corpus = Exec.share(emb.unionAll(perturbed)
       .withColumn("norm", sqrt(dot(col("e"), col("e"))))
       .withColumn("buckets",
-        array((0 until lshTables).map(t => tableBucketCol(t, col("e"))): _*))
-      .persist()
-    // eager: three concurrent consumers (bands + both cosine probes) would
-    // race the unfilled cache and re-run the 24-plane battery per branch
-    corpus.count()
+        array((0 until lshTables).map(t => tableBucketCol(t, col("e"))): _*)))
     val bands = corpus.select(col("vec_id"),
       posexplode(col("buckets")).as(Seq("tbl", "bucket")))
     val cand = bands.as("a")
@@ -867,17 +857,9 @@ object Similarity {
     * supersets — NewOpsSpec pins the floors).
     */
   def qEmbAnnIvfNprobe(spark: SparkSession, sfDir: String, nprobe: Int): DataFrame = {
-    // single-row quantizer: tiny, but derived from a full posexplode pass
-    // over every embedding, and it feeds BOTH assignment sides — persist
-    // so that pass runs once. Production stores the quantizer with the
-    // index; this is the in-query equivalent. THIS call owns the persist;
-    // multi-point callers (the nprobe sweep) build the quantizer once
-    // themselves and use [[annIvfNprobeWith]] so no frame is ever
-    // persisted twice (ADVICE r7: one owner per persisted frame).
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    // eager: BOTH assignment sides consume the quantizer concurrently in
-    // the final job; an unfilled cache re-runs the posexplode derivation
-    centArr.count()
+    // both assignment sides read the one-row quantizer (a full posexplode
+    // pass); multi-point callers share their own via [[annIvfNprobeWith]]
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     annIvfNprobeWith(spark, sfDir, nprobe, centArr)
   }
 
@@ -980,12 +962,10 @@ object Similarity {
   def qEmbIvfIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val all = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
-    // frozen quantizer: base rows only; persist — it feeds one fold but
-    // derives from a full posexplode pass (the qEmbAnnIvf precedent)
-    val centArr = centroidArrayOf(
+    // frozen quantizer over base rows: one fold reads it, but it costs a full pass
+    val centArr = Exec.share(centroidArrayOf(
       Tables.embeddings(spark, sfDir).filter(col("vec_id") % ivfIncrMod =!= 0),
-      None).persist()
-    centArr.count()
+      None))
     val isNew = col("vec_id") % ivfIncrMod === 0
     val assigned = probeCells(all, centArr, 1)
       .select(col("vec_id"), col("cell"),
@@ -1153,8 +1133,8 @@ object Similarity {
       batchE0: DataFrame): (DataFrame, Seq[DataFrame]) = {
     val baseE = baseE0; val batchE = batchE0
     val bPersist = baseE.persist(); val nPersist = batchE.persist()
-    val qBase = centroidArrayOfE(bPersist, None).persist()
-    qBase.count() // eager: audit + (possibly) both proof passes consume it
+    // eager: audit + (possibly) both proof passes consume it
+    val qBase = Exec.share(centroidArrayOfE(bPersist, None))
     // persisted |cells|-sized: the trigger collects fill them, and the
     // no-rebuild merged side reuses them instead of re-assigning (the
     // r12 self-review catch — one corpus pass per side, not two)
@@ -1174,8 +1154,7 @@ object Similarity {
     val q =
       if (!rebuilt) qBase
       else {
-        val qU = centroidArrayOfE(bPersist.unionAll(nPersist), None).persist()
-        qU.count()
+        val qU = Exec.share(centroidArrayOfE(bPersist.unionAll(nPersist), None))
         handles :+= qU
         qU
       }
@@ -1348,10 +1327,8 @@ object Similarity {
     * the registry clearCache contract. */
   private[graft] def semanticContamPairs(train: DataFrame,
       evalE: DataFrame): DataFrame = {
-    // the corpus index's quantizer, trained on the train side (persist:
-    // both assignment folds consume it — the qEmbAnnIvf precedent)
-    val qArr = centroidArrayOfE(train, None).persist()
-    qArr.count()
+    // the corpus index's quantizer, trained on the train side; both assignment folds read it
+    val qArr = Exec.share(centroidArrayOfE(train, None))
     semanticScreenWith(train.select(col("vec_id"), col("e")),
       semanticEvalAssign(evalE, qArr), qArr)
   }
@@ -1470,17 +1447,16 @@ object Similarity {
     * |anchors| partials.
     */
   def qEmbTripletMining(spark: SparkSession, sfDir: String): DataFrame = {
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count() // eager: the quantizer feeds the one assignment pass
+    // eager: the quantizer feeds the one assignment pass
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     val embL = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("e"))
     // label rides probeCells' narrow fold — never a corpus-sized vec_id
     // join to re-attach a column the scan already had in hand
-    val assigned = probeCells(embL, centArr, 1)
-      .select(col("vec_id"), col("label"), col("e"), col("cell"), col("norm"))
-      .persist()
-    assigned.count() // eager: both pairing sides consume it
+    // eager: both pairing sides consume it
+    val assigned = Exec.share(probeCells(embL, centArr, 1)
+      .select(col("vec_id"), col("label"), col("e"), col("cell"), col("norm")))
     val anchors = assigned.filter(col("vec_id") % tripletAnchorMod === 0)
       .select(col("cell"), col("vec_id").as("a_id"), col("label").as("a_label"),
         col("e").as("ae"), col("norm").as("a_norm"))
@@ -1560,12 +1536,10 @@ object Similarity {
     * pair frames persist eagerly before the stats fan-out.
     */
   def qEmbAnnRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = qEmbCosineTopk(spark, sfDir)
-      .select(col("q_id"), col("vec_id")).persist()
-    exact.count()
-    val ann = qEmbAnnIvf(spark, sfDir)
-      .select(col("q_id"), col("vec_id")).persist()
-    ann.count()
+    val exact = Exec.share(qEmbCosineTopk(spark, sfDir)
+      .select(col("q_id"), col("vec_id")))
+    val ann = Exec.share(qEmbAnnIvf(spark, sfDir)
+      .select(col("q_id"), col("vec_id")))
     val exC = exact.agg(countDistinct(col("q_id")).as("n_queries"),
       count(lit(1)).as("n_exact"))
     val annC = ann.agg(count(lit(1)).as("n_ann"))
@@ -1618,18 +1592,14 @@ object Similarity {
     // materialization chains, run concurrently. Per-point stats then tag
     // each candidate set with its nprobe and aggregate the union ONCE; a
     // left join from the literal nprobe list keeps empty-arm counts at 0.
-    def persisted(df: DataFrame): DataFrame = {
-      val p = df.select(col("q_id"), col("vec_id")).persist()
-      p.count()
-      p
-    }
-    // ONE quantizer for every sweep point, persisted here (the owner) —
+    // ONE quantizer for every sweep point, shared here (the owner) —
     // per-point qEmbAnnIvfNprobe calls would each re-persist the same plan
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count()
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
+    val pairs = Seq(col("q_id"), col("vec_id"))
     val exact +: annArms = Exec.concurrently(
-      (() => persisted(qEmbCosineTopk(spark, sfDir))) +:
-        sweepNprobes.map(n => () => persisted(annIvfNprobeWith(spark, sfDir, n, centArr))): _*)
+      (() => Exec.share(qEmbCosineTopk(spark, sfDir).select(pairs: _*))) +:
+        sweepNprobes.map(n => () =>
+          Exec.share(annIvfNprobeWith(spark, sfDir, n, centArr).select(pairs: _*))): _*)
     val anns = sweepNprobes.zip(annArms)
     val tagged = anns.map { case (n, a) =>
       a.select(lit(n).as("nprobe"), col("q_id"), col("vec_id"))
@@ -1915,8 +1885,8 @@ object Similarity {
     * clusters where compression must preserve the exact top-k.
     */
   def pqAdcOf(embIn: DataFrame): DataFrame = {
-    val cbArr = pqCodebookOf(embIn).persist()
-    cbArr.count() // eager: encode and distance-table sides race this cache
+    // eager: encode and distance-table sides race this cache
+    val cbArr = Exec.share(pqCodebookOf(embIn))
     val emb = embIn
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
     // candidates: compressed to 4 codes each
@@ -2038,8 +2008,7 @@ object Similarity {
     // THIS call owns both persists: the quantizer feeds assignment and the
     // residual-centroid derivation; the residual codebook feeds encode and
     // the query distance tables.
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count()
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     val cellVec = centArr
       .select(explode(col("cents")).as("c"))
       .select(col("c.c_label").as("cell"), col("c.cv").as("cv64"))
@@ -2048,8 +2017,7 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         expr("zip_with(e, cv64, (a, b) -> a - b)").as("embedding"))
       .join(embRaw.select(col("vec_id"), col("label")), "vec_id")
-    val rcb = pqCodebookOf(resid).persist()
-    rcb.count()
+    val rcb = Exec.share(pqCodebookOf(resid))
     val cand = resid.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"), col("cell"), col("embedding").as("e"))
       .crossJoin(broadcast(rcb))
@@ -2303,14 +2271,13 @@ object Similarity {
     * PlanAssertionsSpec pins the shuffled-hash cell pairing.
     */
   def qEmbTwonnCell(spark: SparkSession, sfDir: String): DataFrame = {
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count() // eager: assignment consumes the quantizer
+    // eager: assignment consumes the quantizer
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
-    val assigned = probeCells(emb, centArr, 1)
-      .select(col("vec_id"), col("e"), col("cell"))
-      .persist()
-    assigned.count() // eager: both pairing sides consume it
+    // eager: both pairing sides consume it
+    val assigned = Exec.share(probeCells(emb, centArr, 1)
+      .select(col("vec_id"), col("e"), col("cell")))
     val probes = assigned.filter(col("vec_id") % twonnSampleMod === 0)
       .select(col("cell"), col("vec_id").as("s_id"), col("e").as("se"))
     // pairing SHUFFLES BY CELL on both sides (shuffle-hash hint): the
@@ -2540,14 +2507,11 @@ object Similarity {
     val perturbed = emb.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.5)), slice(col("e"), 2, embDim - 1)).as("e"))
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count() // eager: both probeCells sides of the union consume it
-    val assigned = probeCells(emb.unionAll(perturbed), centArr, nprobe = 1)
-      .select(col("vec_id"), col("cell"), col("e"), col("norm"))
-      .persist()
+    // eager: both probeCells sides of the union consume it
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     // eager: three consumers (both self-join sides + the output spine)
-    // would race the unfilled cache and re-run assignment per branch
-    assigned.count()
+    val assigned = Exec.share(probeCells(emb.unionAll(perturbed), centArr, nprobe = 1)
+      .select(col("vec_id"), col("cell"), col("e"), col("norm")))
     val a = assigned.select(col("cell"), col("vec_id").as("vec_a"),
       col("e").as("ea"), col("norm").as("na"))
     val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
@@ -3705,9 +3669,8 @@ object Similarity {
     */
   def qEmbMatryoshka(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val exact = qEmbCosineTopk(spark, sfDir)
-      .select(col("q_id"), col("vec_id")).persist()
-    exact.count()
+    val exact = Exec.share(qEmbCosineTopk(spark, sfDir)
+      .select(col("q_id"), col("vec_id")))
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val rows = matryoshkaDims.map { d =>
       val q = emb.filter(col("vec_id") < nQueryVecs)
@@ -4208,8 +4171,8 @@ object Similarity {
     * partial-combined aggregate.
     */
   def qEmbSilhouette(spark: SparkSession, sfDir: String): DataFrame = {
-    val centArr = centroidArrayDf(spark, sfDir, None).persist()
-    centArr.count() // eager: single consumer below, but derivation is a full pass
+    // eager: single consumer below, but derivation is a full pass
+    val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
     val pair = probeCells(emb, centArr, nprobe = 2)

@@ -2448,16 +2448,14 @@ object TextOps {
     val n = noveltyN
     val gramsExpr = "transform(sequence(1, size(toks) - " + (n - 1) +
       s"), i -> concat_ws(' ', slice(toks, i, $n)))"
-    // spread the per-row gram explode; persist because gd feeds both the
-    // first-doc aggregate and the novelty join
-    val gd = Exec.spread(Tables.documents(spark, sfDir)
+    // spread the per-row gram explode; eager: the first-doc aggregate and
+    // the novelty join read gd concurrently
+    val gd = Exec.share(Exec.spread(Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("text")), col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), col("source"), explode(expr(gramsExpr)).as("g"))
-      .select(col("doc_id"), col("source"), col("g")).distinct()
-      .persist()
-    gd.count() // eager: both consumers schedule concurrently
+      .select(col("doc_id"), col("source"), col("g")).distinct())
     val firsts = gd.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
     gd.join(firsts, "g")
       .groupBy(col("source"))

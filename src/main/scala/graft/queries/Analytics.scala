@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
+import graft.Exec
 import graft.model.Tables
 
 /** The analytical query surface of the engine (SURVEY.md §2.6/§7.2 J2):
@@ -863,10 +864,9 @@ object Analytics {
     import spark.implicits._
     // ONE corpus scan: everything downstream (kernel passes, n) runs on
     // the persisted grid-bounded count table
-    val vt = centEvents(spark, sfDir)
-      .groupBy($"event_type", $"vc").agg(count(lit(1)).as("cnt"))
-      .persist()
-    vt.count() // eager: parallel kernel branches must not re-derive the grid
+    // eager: parallel kernel branches must not re-derive the grid
+    val vt = Exec.share(centEvents(spark, sfDir)
+      .groupBy($"event_type", $"vc").agg(count(lit(1)).as("cnt")))
     rankQuantiles(vt, "event_type", "vc",
       Seq(("p50", 50), ("p90", 90), ("p99", 99)),
       weight = Some("cnt"), withN = true)
@@ -1179,11 +1179,10 @@ object Analytics {
     val t = ev.filter($"event_type".isin("view", "click", "signup"))
       .select($"user_id", $"event_id".as("t_id"), $"event_type".as("channel"),
         $"tu".as("t_tu"))
-    val j = p.join(t, Seq("user_id"))
+    // eager: both aggregates below consume it
+    val j = Exec.share(p.join(t, Seq("user_id"))
       .filter($"t_tu" < $"p_tu" && $"t_tu" >= $"p_tu" - attribWindowUs)
-      .select($"p_id", $"channel", $"t_tu", $"t_id")
-      .persist()
-    j.count() // eager: both aggregates below consume it
+      .select($"p_id", $"channel", $"t_tu", $"t_id"))
     val per = j.groupBy($"p_id").agg(
       count(lit(1)).as("k"),
       min_by($"channel", struct($"t_tu", $"t_id")).as("first_ch"),
@@ -1745,10 +1744,9 @@ object Analytics {
     */
   def qEventWinsorized(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val vt = centEvents(spark, sfDir)
-      .groupBy($"event_type", $"vc").agg(count(lit(1)).as("cnt"))
-      .persist()
-    vt.count() // eager: parallel kernel branches must not re-derive the grid
+    // eager: parallel kernel branches must not re-derive the grid
+    val vt = Exec.share(centEvents(spark, sfDir)
+      .groupBy($"event_type", $"vc").agg(count(lit(1)).as("cnt")))
     val bounds = rankQuantiles(vt, "event_type", "vc",
       Seq(("p05", 5), ("p95", 95)), weight = Some("cnt"))
     vt.join(broadcast(bounds), "event_type")
@@ -2426,11 +2424,10 @@ object Analytics {
         datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
       .agg(sum($"value".cast(DecimalType(18, 4))).as("v"))
     val mn = daily.agg(min($"dn").as("mn"))
-    val pts = daily.crossJoin(broadcast(mn))
+    // eager: trend params + seasonal cells both consume it
+    val pts = Exec.share(daily.crossJoin(broadcast(mn))
       .select($"event_type", $"dn", ($"dn" - $"mn").as("x"),
-        floor($"v" * 100).cast("long").as("y"))
-      .persist()
-    pts.count() // eager: trend params + seasonal cells both consume it
+        floor($"v" * 100).cast("long").as("y")))
     val m = pts.groupBy($"event_type").agg(
       count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"x" * $"x").as("sxx"),
@@ -3405,12 +3402,11 @@ object Analytics {
     val cells = Tables.events(spark, sfDir)
       .groupBy(to_date($"ts").as("day"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    val grid = cells.select($"day").distinct()
+    // eager: one join pair per lag
+    val grid = Exec.share(cells.select($"day").distinct()
       .crossJoin(broadcast(cells.select($"event_type").distinct()))
       .join(cells, Seq("day", "event_type"), "left")
-      .select($"day", $"event_type", coalesce($"n", lit(0L)).as("n"))
-      .persist()
-    grid.count() // eager: one join pair per lag
+      .select($"day", $"event_type", coalesce($"n", lit(0L)).as("n")))
     val arms = (0 to xcorrMaxLag).map { lag =>
       grid.as("a")
         .join(grid.as("b"),

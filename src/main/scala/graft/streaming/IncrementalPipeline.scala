@@ -1,11 +1,14 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Exec
 import graft.etl.StarSchema
 import graft.ext.{CorpusOps, Dedup, Similarity, TextOps}
 
@@ -245,12 +248,12 @@ object IncrementalPipeline {
     if (StreamState.read(spark, stateDir).endOffset == 0L) {
       (semBase, semEval) match {
         case (Some(b), Some(ev)) =>
-          val qArr = Similarity.centroidArrayOfE(b(), None).persist()
-          qArr.count()
-          qArr.write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-          Similarity.semanticEvalAssign(ev(), qArr)
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/eval_assign")
-          qArr.unpersist()
+          val qArr = Exec.share(Similarity.centroidArrayOfE(b(), None))
+          try {
+            qArr.write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
+            Similarity.semanticEvalAssign(ev(), qArr)
+              .write.mode(SaveMode.Overwrite).parquet(s"$dir/eval_assign")
+          } finally qArr.unpersist()
           StreamState.commit(spark, stateDir, StreamState.State(1L, -1L))
         case _ => return None
       }
@@ -325,8 +328,7 @@ object IncrementalPipeline {
     exactlyOnce(spark, verdictDir, batchId) { _ =>
       val (verdicts, cached) = CorpusOps.qualityGateFrozenWith(
         spark, batch.select(col("doc_id"), col("text")), model)
-      writeBatch(verdicts, verdictDir, batchId)
-      cached.unpersist()
+      try writeBatch(verdicts, verdictDir, batchId) finally cached.unpersist()
       0L
     }
 
@@ -365,9 +367,9 @@ object IncrementalPipeline {
       verdictStoreDir: String): Unit = {
     val (verdicts, cached) = CorpusOps.qualityGateFrozenWith(
       spark, batch.select(col("doc_id"), col("text")), model)
-    graft.sources.StoreSource.writeEpoch(
+    try graft.sources.StoreSource.writeEpoch(
       verdicts, verdictStoreDir, "quality_verdicts", batchId)
-    cached.unpersist()
+    finally cached.unpersist()
   }
 
   /** One micro-batch screen of [[decontamAvailableNow]] — package-visible
@@ -381,10 +383,9 @@ object IncrementalPipeline {
     exactlyOnce(spark, flagDir, batchId) { _ =>
       val (pairs, cached) = Dedup.fuzzyContamPairsWith(spark,
         batch.select(col("doc_id"), col("text")), evalDocs)
-      writeBatch(pairs, flagDir, batchId)
-      // release the batch's shard-scale prep cache: one invocation per
-      // micro-batch for the life of the stream, no clearCache between
-      cached.unpersist()
+      // one invocation per micro-batch for the life of the stream, no
+      // clearCache between: release the batch's prep cache on every path
+      try writeBatch(pairs, flagDir, batchId) finally cached.unpersist()
       0L
     }
 
@@ -448,12 +449,11 @@ object IncrementalPipeline {
     val st = StreamState.read(spark, stateDir)
     if (st.endOffset == 0L) {
       val par = spark.sparkContext.defaultParallelism
-      val prep = Dedup.nearDupPrep(
+      val prep = Exec.share(Dedup.nearDupPrep(
         corpusDocs.select(col("doc_id"), col("text"))
-          .repartition(par, col("doc_id"))).persist()
-      prep.count()
-      writeNearDupIndex(prep, indexDir, -1L, buckets, buckets)
-      prep.unpersist()
+          .repartition(par, col("doc_id"))))
+      try writeNearDupIndex(prep, indexDir, -1L, buckets, buckets)
+      finally prep.unpersist()
       // record the fan-out each table's dirs were written under, THEN
       // the seeded marker (a crash between the two re-seeds — the
       // fan-out is only ever trusted for a marked index)
@@ -599,9 +599,10 @@ object IncrementalPipeline {
       val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
       val (verdicts, prep) = Dedup.nearDupScreenWith(
         spark, batch.select(col("doc_id"), col("text")), sets, bands, sbk, bbk)
-      writeBatch(verdicts, verdictDir, batchId)
-      writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
-      prep.unpersist()
+      try {
+        writeBatch(verdicts, verdictDir, batchId)
+        writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
+      } finally prep.unpersist()
       1L
     }
 
@@ -708,9 +709,9 @@ object IncrementalPipeline {
     val (qModel, tokCosts, tokIds) = bootIngestArtifacts(spark, baseDocs, outDir)
     // the semantic fourth gate arms itself from stored artifacts (or
     // trains once from the supplied sources); None => embedding-blind
-    val sem = bootSemanticArtifacts(spark, s"$outDir/artifacts/sem",
-      semBase, semEval)
     try {
+      val sem = bootSemanticArtifacts(spark, s"$outDir/artifacts/sem",
+        semBase, semEval)
       seedNearDupIndex(spark, baseDocs, s"$outDir/index")
       drain(spark, inputDir, schema, checkpointDir) { (batch, batchId) =>
         ingestBatch(spark, batch, batchId, qModel, tokCosts, tokIds,
@@ -775,104 +776,108 @@ object IncrementalPipeline {
       outDir: String,
       sem: Option[(DataFrame, DataFrame)] = None): Unit =
     exactlyOnce(spark, outDir, batchId) { st =>
-      val indexDir = s"$outDir/index"
-      dropOrphanIndex(spark, indexDir, batchId)
-      // every reused stage output below is localCheckpoint(true), NOT
-      // persist: each reuse of a cached frame re-expands its whole
-      // subtree in the plan STRING SQLExecution renders per action, and
-      // the composed five-stage DAG multiplies those re-expansions into a
-      // plan description that takes longer to PRINT than to run.
-      // Checkpointing cuts each stage to a LogicalRDD leaf; the blocks
-      // release via the ContextCleaner once the batch's references go
-      // out of scope.
-      val docs = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
-      // stage 1: frozen quality funnel over the whole batch
-      val (qv, qCache) = CorpusOps.qualityGateFrozenWith(spark, docs, qModel)
-      val qvP = qv.localCheckpoint(true)
-      val surv1 = docs
-        .join(qvP.filter(col("drop_reason") === "kept").select(col("doc_id")), "doc_id")
-        .localCheckpoint(true)
-      // stage 2: fuzzy decontamination on quality survivors
-      val (pairs, dCache) = Dedup.fuzzyContamPairsWith(spark, surv1, evalDocs)
-      val contam = pairs.select(col("doc_id")).distinct().localCheckpoint(true)
-      val surv2 = surv1.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true)
-      // stage 3: SEMANTIC decontamination (E328, the trilogy's third gate)
-      // on vec-carrying fuzzy survivors — a doc with no embedding passes
-      // through (NULL verdict, not false); the quantizer and benchmark
-      // assignment are the stored frozen artifacts
-      val hasVecCol = batch.columns.contains("vec")
-      val semFlag: Option[DataFrame] = sem.filter(_ => hasVecCol).map {
-        case (qArr, evalA) =>
-          val side = batch
-            .filter(col("vec").isNotNull)
-            .select(col("doc_id").as("vec_id"),
-              transform(col("vec"), _.cast("double")).as("e"))
-            .join(surv2.select(col("doc_id").as("vec_id")), "vec_id")
-          Similarity.semanticScreenWith(side, evalA, qArr)
-            .select(col("vec_id").as("doc_id")).distinct().localCheckpoint(true)
-      }
-      val surv3 = semFlag.map(f =>
-        surv2.join(f, Seq("doc_id"), "left_anti").localCheckpoint(true))
-        .getOrElse(surv2)
-      // stage 4: near-dup screen of the remaining docs vs the stored index
-      // (bucketed reads — the screen prunes each probe to the batch's
-      // partition buckets)
-      val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
-      val (nd, prep) = Dedup.nearDupScreenWith(spark, surv3, sets, bands, sbk, bbk)
-      val ndP = nd.localCheckpoint(true)
-      // stage 5: tokenize the admitted docs under the frozen stored model,
-      // pack them after the tokens already admitted
-      val admitted = surv3
-        .join(ndP.filter(col("status") === "new").select(col("doc_id")), "doc_id")
-      val enc = TextOps.uniEncodeFrozen(admitted, tokCosts, tokIds)
-        .localCheckpoint(true)
-      val admRows = TextOps
-        .packLayoutCounts(enc.select(col("doc_id"), col("n_tokens")), st.endOffset)
-        .join(enc.select(col("doc_id"), col("token_ids"), col("n_words_skipped")),
-          "doc_id")
-        .localCheckpoint(true)
-      val newEnd = admRows
-        .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
-        .collect()(0).getLong(0)
-      // per-doc verdict: per-stage attribution, NULL past the failing
-      // stage; `sem_contaminated` is additionally NULL for a doc that
-      // carries no embedding (unscreenable, not clean)
-      val hasVec =
-        if (hasVecCol && sem.isDefined)
-          batch.select(col("doc_id"), col("vec").isNotNull.as("has_vec"))
-        else batch.select(col("doc_id"), lit(false).as("has_vec"))
-      val semJoined = semFlag.getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType)))))
-        .withColumn("sflag", lit(true))
-      val verdict = qvP
-        .select(col("doc_id"), (col("drop_reason") =!= "kept").as("fail_quality"),
-          col("drop_reason").as("quality_reason"))
-        .join(contam.withColumn("cflag", lit(true)), Seq("doc_id"), "left")
-        .join(semJoined, Seq("doc_id"), "left")
-        .join(hasVec, Seq("doc_id"), "left")
-        .join(ndP.select(col("doc_id"), col("status"), col("dup_of")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("fail_quality"),
-          when(col("fail_quality"), lit(null).cast("boolean"))
-            .otherwise(coalesce(col("cflag"), lit(false))).as("contaminated"),
-          when(col("fail_quality") || coalesce(col("cflag"), lit(false)) ||
-              !coalesce(col("has_vec"), lit(false)), lit(null).cast("boolean"))
-            .otherwise(coalesce(col("sflag"), lit(false))).as("sem_contaminated"),
-          col("status"), col("dup_of"),
-          when(col("fail_quality"), concat(lit("quality:"), col("quality_reason")))
-            .when(coalesce(col("cflag"), lit(false)), lit("contaminated"))
-            .when(coalesce(col("sflag"), lit(false)), lit("contaminated_semantic"))
-            .when(col("status") =!= "new", lit("duplicate"))
-            .otherwise(lit("admitted")).as("drop_reason"))
+      val caches = mutable.Buffer.empty[DataFrame]
+      try {
+        val indexDir = s"$outDir/index"
+        dropOrphanIndex(spark, indexDir, batchId)
+        // every reused stage output below is localCheckpoint(true), NOT
+        // persist: each reuse of a cached frame re-expands its whole
+        // subtree in the plan STRING SQLExecution renders per action, and
+        // the composed five-stage DAG multiplies those re-expansions into a
+        // plan description that takes longer to PRINT than to run.
+        // Checkpointing cuts each stage to a LogicalRDD leaf; the blocks
+        // release via the ContextCleaner once the batch's references go
+        // out of scope. The kernels' own persisted caches are released in
+        // the finally below, on every path.
+        val docs = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
+        // stage 1: frozen quality funnel over the whole batch
+        val (qv, qCache) = CorpusOps.qualityGateFrozenWith(spark, docs, qModel)
+        caches += qCache
+        val qvP = qv.localCheckpoint(true)
+        val surv1 = docs
+          .join(qvP.filter(col("drop_reason") === "kept").select(col("doc_id")), "doc_id")
+          .localCheckpoint(true)
+        // stage 2: fuzzy decontamination on quality survivors
+        val (pairs, dCache) = Dedup.fuzzyContamPairsWith(spark, surv1, evalDocs)
+        caches += dCache
+        val contam = pairs.select(col("doc_id")).distinct().localCheckpoint(true)
+        val surv2 = surv1.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true)
+        // stage 3: SEMANTIC decontamination (E328, the trilogy's third gate)
+        // on vec-carrying fuzzy survivors — a doc with no embedding passes
+        // through (NULL verdict, not false); the quantizer and benchmark
+        // assignment are the stored frozen artifacts
+        val hasVecCol = batch.columns.contains("vec")
+        val semFlag: Option[DataFrame] = sem.filter(_ => hasVecCol).map {
+          case (qArr, evalA) =>
+            val side = batch
+              .filter(col("vec").isNotNull)
+              .select(col("doc_id").as("vec_id"),
+                transform(col("vec"), _.cast("double")).as("e"))
+              .join(surv2.select(col("doc_id").as("vec_id")), "vec_id")
+            Similarity.semanticScreenWith(side, evalA, qArr)
+              .select(col("vec_id").as("doc_id")).distinct().localCheckpoint(true)
+        }
+        val surv3 = semFlag.map(f =>
+          surv2.join(f, Seq("doc_id"), "left_anti").localCheckpoint(true))
+          .getOrElse(surv2)
+        // stage 4: near-dup screen of the remaining docs vs the stored index
+        // (bucketed reads — the screen prunes each probe to the batch's
+        // partition buckets)
+        val (sets, bands, sbk, bbk) = readNearDupIndex(spark, indexDir)
+        val (nd, prep) = Dedup.nearDupScreenWith(spark, surv3, sets, bands, sbk, bbk)
+        caches += prep
+        val ndP = nd.localCheckpoint(true)
+        // stage 5: tokenize the admitted docs under the frozen stored model,
+        // pack them after the tokens already admitted
+        val admitted = surv3
+          .join(ndP.filter(col("status") === "new").select(col("doc_id")), "doc_id")
+        val enc = TextOps.uniEncodeFrozen(admitted, tokCosts, tokIds)
+          .localCheckpoint(true)
+        val admRows = TextOps
+          .packLayoutCounts(enc.select(col("doc_id"), col("n_tokens")), st.endOffset)
+          .join(enc.select(col("doc_id"), col("token_ids"), col("n_words_skipped")),
+            "doc_id")
+          .localCheckpoint(true)
+        val newEnd = admRows
+          .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
+          .collect()(0).getLong(0)
+        // per-doc verdict: per-stage attribution, NULL past the failing
+        // stage; `sem_contaminated` is additionally NULL for a doc that
+        // carries no embedding (unscreenable, not clean)
+        val hasVec =
+          if (hasVecCol && sem.isDefined)
+            batch.select(col("doc_id"), col("vec").isNotNull.as("has_vec"))
+          else batch.select(col("doc_id"), lit(false).as("has_vec"))
+        val semJoined = semFlag.getOrElse(
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType(Seq(StructField("doc_id", LongType)))))
+          .withColumn("sflag", lit(true))
+        val verdict = qvP
+          .select(col("doc_id"), (col("drop_reason") =!= "kept").as("fail_quality"),
+            col("drop_reason").as("quality_reason"))
+          .join(contam.withColumn("cflag", lit(true)), Seq("doc_id"), "left")
+          .join(semJoined, Seq("doc_id"), "left")
+          .join(hasVec, Seq("doc_id"), "left")
+          .join(ndP.select(col("doc_id"), col("status"), col("dup_of")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), col("fail_quality"),
+            when(col("fail_quality"), lit(null).cast("boolean"))
+              .otherwise(coalesce(col("cflag"), lit(false))).as("contaminated"),
+            when(col("fail_quality") || coalesce(col("cflag"), lit(false)) ||
+                !coalesce(col("has_vec"), lit(false)), lit(null).cast("boolean"))
+              .otherwise(coalesce(col("sflag"), lit(false))).as("sem_contaminated"),
+            col("status"), col("dup_of"),
+            when(col("fail_quality"), concat(lit("quality:"), col("quality_reason")))
+              .when(coalesce(col("cflag"), lit(false)), lit("contaminated"))
+              .when(coalesce(col("sflag"), lit(false)), lit("contaminated_semantic"))
+              .when(col("status") =!= "new", lit("duplicate"))
+              .otherwise(lit("admitted")).as("drop_reason"))
 
-      writeBatch(verdict, s"$outDir/verdicts", batchId)
-      writeBatch(admRows, s"$outDir/admitted", batchId)
-      writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
-      // the kernels' internal caches are persist()-ed — release them here;
-      // the checkpointed stage frames free via the ContextCleaner
-      Seq(prep, qCache, dCache).foreach(_.unpersist())
-      newEnd
+        writeBatch(verdict, s"$outDir/verdicts", batchId)
+        writeBatch(admRows, s"$outDir/admitted", batchId)
+        writeNearDupIndex(prep, indexDir, batchId, sbk, bbk)
+        newEnd
+      } finally caches.foreach(_.unpersist())
     }
 
   /** One micro-batch append of [[packAvailableNow]] — package-visible so
@@ -885,12 +890,14 @@ object IncrementalPipeline {
       batchId: Long,
       layoutDir: String): Unit =
     exactlyOnce(spark, layoutDir, batchId) { st =>
+      // lazy: the end-offset collect fills the cache the write reads
       val rows = TextOps.packLayout(batch, st.endOffset).persist()
-      val newEnd = rows
-        .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
-        .collect()(0).getLong(0)
-      writeBatch(rows, layoutDir, batchId)
-      rows.unpersist()
-      newEnd
+      try {
+        val newEnd = rows
+          .agg(coalesce(max(col("tok_start") + col("n_tokens")), lit(st.endOffset)))
+          .collect()(0).getLong(0)
+        writeBatch(rows, layoutDir, batchId)
+        newEnd
+      } finally rows.unpersist()
     }
 }

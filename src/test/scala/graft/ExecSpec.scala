@@ -3,13 +3,52 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
-import org.apache.spark.sql.functions.{col, countDistinct, spark_partition_id}
+import org.apache.spark.sql.functions.{col, countDistinct, spark_partition_id, udf}
+import org.apache.spark.storage.StorageLevel
 
 /** The local-execution module: the session factory's config, the
-  * scale-adaptive spread rule, the concurrent-arms helper, and the
-  * registry runner's cache contract.
+  * scale-adaptive spread rule, the eager-cache rule, the concurrent-arms
+  * helper, and the registry runner's cache contract.
   */
 class ExecSpec extends SparkSuite {
+
+  test("share: one count fills the cache of the same frame, and a later action reads it") {
+    spark.catalog.clearCache()
+    // every evaluation of the frame's projection ticks the accumulator
+    val evals = spark.sparkContext.longAccumulator("share-evals")
+    val tick = udf((x: Long) => { evals.add(1L); x % 7 })
+    def frame = spark.range(0L, 1000L, 1L, 4).select(tick(col("id")).as("k"))
+    // the hand-written pair share replaces, for reference
+    val pair = frame
+    val (_, pairJobs) = withJobCount { pair.persist(); pair.count() }
+    pair.unpersist(blocking = true)
+    evals.reset()
+
+    val df = frame
+    val (shared, jobs) = withJobs(Exec.share(df))
+    assert(shared eq df)
+    // one action: under AQE the count's query stages (the cache fill, the
+    // partial aggregate, the result) are separate jobs of ONE execution
+    val roots = jobs.map(_.getProperty("spark.sql.execution.root.id")).distinct
+    assert(roots.size === 1 && roots.head != null, s"one SQL execution, got $roots")
+    assert(jobs.size === pairJobs, "exactly the jobs of the hand-written pair")
+    assert(shared.storageLevel !== StorageLevel.NONE)
+    assert(evals.value === 1000L, "the fill evaluated every row once")
+    evals.reset()
+    val byKey = shared.groupBy(col("k")).count().collect()
+    assert(byKey.map(_.getLong(1)).sum === 1000L)
+    assert(evals.value === 0L, "the second action read the cache, not the lineage")
+    shared.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("share: a fill that throws leaves no cache behind") {
+    spark.catalog.clearCache()
+    val boom = udf((x: Long) => { if (x >= 0L) throw new IllegalStateException("boom"); x })
+    val bad = spark.range(0L, 10L).select(boom(col("id")).as("x"))
+    intercept[Exception](Exec.share(bad))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 
   test("session factory: local[4], UTC, nanosAsLong, no UI, warehouse under target/, WARN") {
     val s = Exec.session(4)

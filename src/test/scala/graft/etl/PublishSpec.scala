@@ -2,16 +2,11 @@ package graft.etl
 
 import java.util.Properties
 
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSuite
 
 /** Job-2 publish flow against embedded Derby (SURVEY §3 E3): idempotent
-  * dim publish (probe → create-if-absent), set-wise missing-dim anti-join,
-  * and the partition-pruned fact append — with the Spark jobs each call
+  * dim publish (probe → create-if-absent) and the partition-pruned fact
+  * append — with the Spark jobs each call
   * starts: none for probing an existing dim, one for a fact month.
   */
 class PublishSpec extends SparkSuite {
@@ -29,35 +24,6 @@ class PublishSpec extends SparkSuite {
   private def probeSql(table: String): String =
     s"(SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME = '${table.toUpperCase}') p"
 
-  /** Runs `body` and returns its result with the number of Spark jobs it
-    * started. A marker job posted after `body` bounds the count: the
-    * listener bus delivers events in order, so once the marker's start
-    * arrives every job of `body` has been seen.
-    */
-  private def withJobCount[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"publish-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    var jobs = 0
-    val done = Promise[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs += 1
-          case Some(`marker`) => done.trySuccess(jobs)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      (result, Await.result(done.future, 60.seconds))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("dim publish is idempotent: first run writes, second skips (pg:60-74)") {
     assert(Publish.publishDimIfAbsent(spark, "dim_ratecode",
       Dims.dimRatecode(spark), url, props, probeSql))
@@ -66,13 +32,6 @@ class PublishSpec extends SparkSuite {
     assert(!wrote)
     assert(jobs === 0, "probing an existing dim runs on the driver")
     assert(spark.read.jdbc(url, "dim_ratecode", props).count() === 7)
-  }
-
-  test("missingDims is the left-anti of the dim list vs target listing") {
-    import spark.implicits._
-    val target = Seq("dim_ratecode", "dim_vendors").toDF("table_name")
-    val missing = Publish.missingDims(spark, target).collect().map(_.getString(0)).toSet
-    assert(missing === Publish.dimTables.toSet -- Set("dim_ratecode", "dim_vendors"))
   }
 
   test("fact month publish: catalog read, partition filter, JDBC append (pg:77-89)") {

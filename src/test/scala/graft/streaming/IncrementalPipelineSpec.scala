@@ -216,6 +216,20 @@ class IncrementalPipelineSpec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  test("decontam screen: a batch whose write fails releases its cache and commits nothing") {
+    import graft.model.Tables
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    // a regular file where the flag table's directory belongs, so the
+    // batch's write throws after the screen has cached its prep
+    val flagDir = Files.createTempFile("graft_scr_blocked", ".flags").toString
+    spark.catalog.clearCache()
+    intercept[Exception](IncrementalPipeline.appendContamFlags(
+      spark, docs.filter(col("doc_id") < 100), docs.filter(col("doc_id") % 50 === 0),
+      0L, flagDir))
+    assert(spark.sharedState.cacheManager.isEmpty, "the failed batch left its cache behind")
+    assert(StreamState.read(spark, flagDir + "_state").maxBatch === -1L)
+  }
+
   test("semantic screen: per-shard flags union == frozen batch screen; planted re-embeds caught; retry no-op") {
     import org.apache.spark.sql.functions.{expr, transform => atransform}
     import graft.ext.Similarity
