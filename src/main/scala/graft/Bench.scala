@@ -38,9 +38,9 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
     def runAll(): Seq[(String, Either[Throwable, Double])] = timedCount(n => only.forall(_.contains(n)))
-    // discarded warm-up pass (SPARK_GRAFT_WARMUP=0 disables): one-time
-    // codegen/JIT/classloading costs a long-lived session amortizes away
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") runAll()
+    // discarded warm-up pass: one-time codegen/JIT/classloading costs a
+    // long-lived session amortizes away
+    runAll()
     // fixed-work host calibration under the same warm-up + min-of-passes
     // discipline: same calib + higher total = regression, not host drift
     def calibPass(): Double = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exact.{h31, h31Sql}
 import graft.model.Tables
 
 /** Multi-dimensional data layout: Z-order (Morton) interleaving, the
@@ -497,7 +498,6 @@ object Layout {
     * expression; the counts are identical.
     */
   def qShardRebalance(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ext.TextOps.h31
     // DISTINCT positions: 31-bit collisions would otherwise give the two
     // schemes different key populations (ring groups by pos, mod doesn't)
     val keys = Tables.documents(spark, sfDir)
@@ -543,7 +543,6 @@ object Layout {
   }
 
   val qShardRebalanceSql: String = {
-    import graft.ext.TextOps.h31Sql
     def vnodeRows(n: Int): String =
       (for { s <- 0 until n; v <- 0 until shardVnodes }
         yield s"($s, $v)").mkString(", ")

@@ -3,8 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact.{portableHash, portableHashSql, units, unitsSql}
 import graft.model.Tables
 
 /** Data-quality operators (Deequ-shaped): a generic single-pass column
@@ -288,7 +288,7 @@ object Quality {
   val pseudoSalt = "graft_pseudo_v1"
 
   /** Keyed pseudonymization that PRESERVES referential integrity: the
-    * same salted deterministic hash ([[graft.ext.TextOps.portableHash]])
+    * same salted deterministic hash ([[graft.Exact.portableHash]])
     * replaces the customer key in BOTH `customer` and `orders`, so the
     * released tables still join — the de-identification pattern for
     * sharing user-adjacent relational data without raw ids (row-side
@@ -304,7 +304,6 @@ object Quality {
     * (~10⁻⁹ at 10⁶ keys) and deterministic across engines.
     */
   def qPseudonymizeJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ext.TextOps.portableHash
     def mask(c: Column): Column =
       portableHash(concat_ws("", lit(pseudoSalt), c.cast("string")))
     val cust = Tables.customer(spark, sfDir)
@@ -325,7 +324,6 @@ object Quality {
   }
 
   val qPseudonymizeJoinSql: String = {
-    import graft.ext.TextOps.portableHashSql
     val mc = portableHashSql(s"'$pseudoSalt' || CAST(c_custkey AS VARCHAR)")
     val mo = portableHashSql(s"'$pseudoSalt' || CAST(o_custkey AS VARCHAR)")
     s"""WITH cust AS (SELECT $mc AS pk, c_nationkey FROM customer),
@@ -578,8 +576,8 @@ object Quality {
     val feats: Seq[(String, Column)] = Seq(
       "qty" -> floor(col("l_quantity")).cast("long"),
       "price_h" -> expr("CAST(floor(CAST(l_extendedprice AS DECIMAL(18,4))) AS BIGINT) div 100"),
-      "disc_bp" -> (col("l_discount").cast(DecimalType(18, 4)) * 10000).cast("long"),
-      "tax_bp" -> (col("l_tax").cast(DecimalType(18, 4)) * 10000).cast("long"))
+      "disc_bp" -> units(col("l_discount"), 10000),
+      "tax_bp" -> units(col("l_tax"), 10000))
     val proj = Tables.lineitem(spark, sfDir)
       .select(feats.map { case (nm, c) => c.as(nm) }: _*)
     val names = feats.map(_._1)
@@ -609,8 +607,8 @@ object Quality {
     val q = Map(
       "qty" -> "CAST(floor(l_quantity) AS BIGINT)",
       "price_h" -> "CAST(floor(CAST(l_extendedprice AS DECIMAL(18,4))) AS BIGINT) // 100",
-      "disc_bp" -> "CAST(CAST(l_discount AS DECIMAL(18,4)) * 10000 AS BIGINT)",
-      "tax_bp" -> "CAST(CAST(l_tax AS DECIMAL(18,4)) * 10000 AS BIGINT)")
+      "disc_bp" -> unitsSql("l_discount", 10000),
+      "tax_bp" -> unitsSql("l_tax", 10000))
     val names = Seq("qty", "price_h", "disc_bp", "tax_bp")
     val sums =
       names.map(nm => s"CAST(sum($nm) AS BIGINT) AS s_$nm") ++
@@ -645,7 +643,7 @@ object Quality {
   final val fpSumMod = 1000000007L
 
   /** Order-invariant dataset fingerprint over customer/orders/lineitem:
-    * one row-content hash per row ([[graft.ext.TextOps.portableHash]]
+    * one row-content hash per row ([[graft.Exact.portableHash]]
     * of a canonical '|'-joined rendering), folded per table — and for
     * the dataset as a whole — with two COMMUTATIVE combiners (bit-XOR,
     * and sum of 30-bit reductions mod [[fpSumMod]]): the cheap "did
@@ -667,9 +665,7 @@ object Quality {
     * partition- and order-invariant at any parallelism. Output: 4 rows.
     */
   def qDatasetFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ext.TextOps.portableHash
-    def money(c: Column): Column =
-      (c.cast(org.apache.spark.sql.types.DecimalType(18, 4)) * 10000).cast("long")
+    def money(c: Column): Column = units(c, 10000)
     def rowHash(parts: Seq[Column]): Column =
       portableHash(concat_ws("|", parts.map(_.cast("string")): _*))
     val cust = Tables.customer(spark, sfDir).select(lit("customer").as("tbl"),
@@ -696,9 +692,7 @@ object Quality {
   }
 
   val qDatasetFingerprintSql: String = {
-    import graft.ext.TextOps.portableHashSql
-    def money(e: String): String =
-      s"CAST(CAST($e AS DECIMAL(18,4)) * 10000 AS BIGINT)"
+    def money(e: String): String = unitsSql(e, 10000)
     def rowHash(parts: Seq[String]): String =
       portableHashSql("concat_ws('|', " + parts.mkString(", ") + ")")
     val cust = s"SELECT 'customer' AS tbl, ${rowHash(Seq("c_custkey", "c_name",

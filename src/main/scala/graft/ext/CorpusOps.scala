@@ -8,14 +8,15 @@ import org.apache.spark.sql.functions._
 
 import graft.Exec
 import graft.model.Tables
-import TextOps.{h31, h31Sql, portableHash, portableHashSql, HashP}
+import graft.Exact.{checksum, checksumSql, h31, h31ExprSql, h31Sql, orderedSum, orderedSumSql,
+  portableHash, portableHashSql, quantLog, quantLogSql, HashP}
 
 /** Corpus-management operators for LLM training-data pipelines — the
   * passes that turn a raw document pile into a shippable dataset: passage-
   * level dedup, deterministic train/val/test splitting, text
   * normalization, data-mixture reporting, and a JSONL interchange
   * round-trip. All run over the `documents` testdata table; every content
-  * hash is the cross-engine [[TextOps.portableHash]] (md5-derived) so
+  * hash is the cross-engine [[graft.Exact.portableHash]] (md5-derived) so
   * results are engine-independent.
   *
   * Scale notes (100 TB) are per-operator; the module-wide rule matches
@@ -271,9 +272,6 @@ object CorpusOps {
     * stand-in for a distributed filesystem path — the code path
     * (DataFrameWriter.json → DataFrameReader.schema.json) is identical.
     */
-  /** Mersenne prime 2^61−1: the content-checksum modulus. */
-  val checksumP = 2305843009213693951L
-
   def qDocJsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = Files.createTempDirectory("graft-jsonl").toFile.getAbsolutePath
     Tables.documents(spark, sfDir)
@@ -285,20 +283,14 @@ object CorpusOps {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("sum_chars"),
-        // modular checksum: sum the 60-bit hashes in DECIMAL(38,0) (a
-        // plain int64 sum overflows at a few hundred documents) and
-        // reduce mod 2^61−1 back to an exact BIGINT. Exact at ANY corpus
-        // size — no decimal→double cast at the boundary (whose last-ulp
-        // rounding differs between engines on >2^53 values)
-        (sum(portableHash(col("text")).cast("decimal(38,0)")) % lit(checksumP))
-          .cast("long").as("content_sum"))
+        checksum(portableHash(col("text"))).as("content_sum"))
       .orderBy(col("lang"))
   }
 
   val qDocJsonlRoundtripSql: String =
     s"""SELECT lang, count(*) AS n_docs,
        |  CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-       |  CAST(sum(CAST(${portableHashSql("text")} AS DECIMAL(38,0))) % $checksumP AS BIGINT) AS content_sum
+       |  ${checksumSql(portableHashSql("text"))} AS content_sum
        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
   // ------------------------------------------------------------------
@@ -576,7 +568,7 @@ object CorpusOps {
     * fixture's appended suffix leaves every earlier chunk shared with its
     * source, which is exactly the savings this measures.
     *
-    * All arithmetic is integer ([[TextOps.h31]] token hashes, base-31
+    * All arithmetic is integer ([[graft.Exact.h31]] token hashes, base-31
     * window polynomial kept < 2⁶³, the [[graft.ext.Dedup.rollingBase]]
     * fold per chunk), subscripts via 1-based element_at on BOTH engines.
     * Same-hash chunks are counted identical (a 60-bit-hash collision is
@@ -596,7 +588,7 @@ object CorpusOps {
     // the shared minhash/winnow near-dup fixture — ONE definition
     // (ADVICE r7: a private re-inline here desynchronized silently)
     val corpus = Dedup.nearCorpus(docs)
-    val h = TextOps.h31ExprSql("t")
+    val h = h31ExprSql("t")
     val P = HashP
     val b3 = 31L * 31L * 31L
     val b2 = 31L * 31L
@@ -636,7 +628,7 @@ object CorpusOps {
   // lazy: reads Dedup.nearCorpusSql (a non-folded val in another object) —
   // same init-cycle defense as TextOps.qDocRepetitionSql
   lazy val qDocCdcSavingsSql: String = {
-    val h = TextOps.h31Sql("t")
+    val h = h31Sql("t")
     val P = HashP
     val b3 = 31L * 31L * 31L
     val b2 = 31L * 31L
@@ -698,7 +690,7 @@ object CorpusOps {
     * Language Models via Importance Resampling"): score every document by
     * how target-like its hashed-bigram distribution is, where the target
     * is the `lang = 'en'` slice. Features are bigrams hashed into
-    * [[dsirBuckets]] buckets ([[h31]] mod B — cross-engine); each bucket
+    * [[dsirBuckets]] buckets ([[graft.Exact.h31]] mod B — cross-engine); each bucket
     * gets an add-one-smoothed probability under the target and under the
     * full corpus, and a document scores the count-weighted sum of its
     * buckets' likelihood ratios.
@@ -711,7 +703,7 @@ object CorpusOps {
     * tree here is nothing but int→double conversions, divisions and
     * multiplies, each IEEE-correctly-rounded and therefore bit-identical
     * in both engines. The per-doc sum folds in ascending bucket order
-    * (the [[TextOps.qDocBigramLm]] rule) so accumulation order is fixed.
+    * ([[graft.Exact.orderedSum]]).
     *
     * Scale (100 TB): bigram extraction is the narrow per-row `transform`
     * (no position self-join); per-doc bucket counts are the ONE
@@ -755,8 +747,7 @@ object CorpusOps {
         (col("c").cast("double") * ratio).as("term"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_bigrams"),
-        aggregate(array_sort(collect_list(struct(col("bucket"), col("term")))),
-          lit(0.0), (acc, x) => acc + x.getField("term")).as("dsir_weight"))
+        orderedSum("bucket", "term").as("dsir_weight"))
       .orderBy(col("doc_id"))
   }
 
@@ -784,7 +775,7 @@ object CorpusOps {
     */
   def qDocSplitCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bucket = TextOps.portableHash(concat($"text", lit("|split"))) % 100
+    val bucket = portableHash(concat($"text", lit("|split"))) % 100
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", split($"text", " ").as("tk"),
         when(bucket < trainPct, "train").when(bucket < valPct, "val")
@@ -794,7 +785,7 @@ object CorpusOps {
       .select($"doc_id", $"lang", $"fold",
         explode(expr(
           s"transform(sequence(1, greatest(size(tk) - 2, 0)), " +
-            s"i -> ${TextOps.h31ExprSql("concat_ws(' ', tk[i-1], tk[i], tk[i+1])")})"))
+            s"i -> ${h31ExprSql("concat_ws(' ', tk[i-1], tk[i], tk[i+1])")})"))
           .as("g"))
     val trainGrams = grams.filter($"fold" === "train")
       .select($"g").distinct()
@@ -815,14 +806,14 @@ object CorpusOps {
   val qDocSplitCoverageSql: String =
     s"""WITH docs AS (
        |  SELECT doc_id, lang, string_split(text, ' ') AS tk,
-       |    CASE WHEN ${TextOps.portableHashSql("text || '|split'")} % 100 < $trainPct THEN 'train'
-       |         WHEN ${TextOps.portableHashSql("text || '|split'")} % 100 < $valPct THEN 'val'
+       |    CASE WHEN ${portableHashSql("text || '|split'")} % 100 < $trainPct THEN 'train'
+       |         WHEN ${portableHashSql("text || '|split'")} % 100 < $valPct THEN 'val'
        |         ELSE 'test' END AS fold
        |  FROM documents
        |),
        |grams AS (
        |  SELECT doc_id, lang, fold,
-       |    ${TextOps.h31Sql("tk[pos] || ' ' || tk[pos + 1] || ' ' || tk[pos + 2]")} AS g
+       |    ${h31Sql("tk[pos] || ' ' || tk[pos + 1] || ' ' || tk[pos + 2]")} AS g
        |  FROM (SELECT doc_id, lang, fold, tk,
        |          unnest(generate_series(1, greatest(len(tk) - 2, 0))) AS pos
        |        FROM docs WHERE fold <> 'test')
@@ -879,9 +870,7 @@ object CorpusOps {
        |  CROSS JOIN totals
        |)
        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-       |  list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY bucket)),
-       |    (acc, s) -> acc + s) AS dsir_weight
+       |  ${orderedSumSql("term", "bucket")} AS dsir_weight
        |FROM scored
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
@@ -1411,7 +1400,7 @@ object CorpusOps {
     *   - `avg_bigram_p` — mean corpus-bigram probability, ordered-fold
     *     exact ([[TextOps.qDocBigramLm]]);
     *   - `xent_micronat` — per-doc unigram cross-entropy in integer
-    *     micro-nats/token ([[TextOps.quantLog]], the curriculum
+    *     micro-nats/token ([[graft.Exact.quantLog]], the curriculum
     *     estimator, engine-free by construction);
     *   - `quality_score` — the ONE shared lexical score
     *     ([[TextOps.qualityScoreCol]]) plus the token floor.
@@ -1564,10 +1553,7 @@ object CorpusOps {
        |bi AS (SELECT bg, count(*) AS c2 FROM bgl GROUP BY bg),
        |bg AS (
        |  SELECT doc_id,
-       |    list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE),
-       |        list(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) ORDER BY pos)),
-       |      (acc, p) -> acc + p) / count(*) AS avg_bigram_p
+       |    ${orderedSumSql("CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)", "pos")} / count(*) AS avg_bigram_p
        |  FROM bgl JOIN bi USING (bg) JOIN uni_w USING (w1)
        |  GROUP BY doc_id
        |),
@@ -1579,8 +1565,8 @@ object CorpusOps {
        |totals AS (SELECT CAST(sum(tf) AS BIGINT) AS t, count(*) AS v FROM uni),
        |xent AS (
        |  SELECT doc_id,
-       |    (-CAST(sum(tf_dw * (${TextOps.quantLogSql("tf + 1")} -
-       |      ${TextOps.quantLogSql("t + v")})) AS BIGINT)) //
+       |    (-CAST(sum(tf_dw * (${quantLogSql("tf + 1")} -
+       |      ${quantLogSql("t + v")})) AS BIGINT)) //
        |      CAST(sum(tf_dw) AS BIGINT) AS xent_micronat
        |  FROM by_doc JOIN uni USING (w) CROSS JOIN totals GROUP BY doc_id
        |),
@@ -1775,7 +1761,7 @@ object CorpusOps {
     * on exactly the planted domain while real sources pass.
     *
     * Exactness: OOV and the flag's first arm are pure integer
-    * arithmetic; cross-entropies are the [[TextOps.quantLog]] micro-nat
+    * arithmetic; cross-entropies are the [[graft.Exact.quantLog]] micro-nat
     * integers with ONE closing integer division (the perplexity/
     * curriculum kernel), so both engines emit identical BIGINTs; the
     * two rates are single fixed-shape double divisions.
@@ -1794,7 +1780,7 @@ object CorpusOps {
     // content-keyed holdout (the qDocSampleStratified determinism rule),
     // NOT doc_id-keyed: the synthetic source column is id-derived, so an
     // id-modulus split would alias with source and hold out whole sources
-    val h = TextOps.portableHash(concat(col("text"), lit("|qtransfer"))) % 10
+    val h = portableHash(concat(col("text"), lit("|qtransfer"))) % 10
     val base = docs.filter(h =!= 0)
     val arrivals = docs.filter(h === 0)
       .unionAll(docs.filter(h === 0 && col("doc_id") % 2 === 0)
@@ -1824,7 +1810,7 @@ object CorpusOps {
       .agg(sum(col("tf_sw")).as("n_tokens"),
         sum(when(col("tf0") === 0, col("tf_sw")).otherwise(0L)).as("n_oov"),
         sum(col("tf_sw") *
-          (TextOps.quantLog(col("tf0") + 1) - TextOps.quantLog(col("t") + col("v"))))
+          (quantLog(col("tf0") + 1) - quantLog(col("t") + col("v"))))
           .as("sum_qlp"))
     val bgStats = arrivals.withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 2)
@@ -1842,7 +1828,7 @@ object CorpusOps {
       .groupBy(col("source"))
       .agg(sum(col("tf_sw")).as("bn"),
         sum(col("tf_sw") *
-          (TextOps.quantLog(col("tf") + 1) - TextOps.quantLog(col("t") + col("v"))))
+          (quantLog(col("tf") + 1) - quantLog(col("t") + col("v"))))
           .as("bq"))
       .select(col("source"), expr("(-bq) div bn").as("xent_base_micronat"))
 
@@ -1868,7 +1854,7 @@ object CorpusOps {
       " i -> toks[i] || ' ' || toks[i + 1])"
     s"""WITH docs AS (
        |  SELECT doc_id, source, text,
-       |    ${TextOps.portableHashSql("text || '|qtransfer'")} % 10 AS hsplit
+       |    ${portableHashSql("text || '|qtransfer'")} % 10 AS hsplit
        |  FROM documents
        |),
        |base AS (SELECT doc_id, source, text FROM docs WHERE hsplit != 0),
@@ -1901,8 +1887,8 @@ object CorpusOps {
        |    CAST(sum(tf_sw) AS BIGINT) AS n_tokens,
        |    CAST(sum(CASE WHEN COALESCE(tf, 0) = 0 THEN tf_sw ELSE 0 END) AS BIGINT)
        |      AS n_oov,
-       |    CAST(sum(tf_sw * (${TextOps.quantLogSql("COALESCE(tf, 0) + 1")} -
-       |      ${TextOps.quantLogSql("t + v")})) AS BIGINT) AS sum_qlp
+       |    CAST(sum(tf_sw * (${quantLogSql("COALESCE(tf, 0) + 1")} -
+       |      ${quantLogSql("t + v")})) AS BIGINT) AS sum_qlp
        |  FROM a_tok LEFT JOIN uni USING (w) CROSS JOIN totals
        |  GROUP BY source
        |),
@@ -1919,8 +1905,8 @@ object CorpusOps {
        |),
        |base_xent AS (
        |  SELECT source,
-       |    (-CAST(sum(tf_sw * (${TextOps.quantLogSql("tf + 1")} -
-       |      ${TextOps.quantLogSql("t + v")})) AS BIGINT)) //
+       |    (-CAST(sum(tf_sw * (${quantLogSql("tf + 1")} -
+       |      ${quantLogSql("t + v")})) AS BIGINT)) //
        |      CAST(sum(tf_sw) AS BIGINT) AS xent_base_micronat
        |  FROM (
        |    SELECT source, w, count(*) AS tf_sw
@@ -2274,7 +2260,7 @@ object CorpusOps {
       .agg(count(lit(1)).as("cl"))
       .groupBy(col("source")).agg(
         count(lit(1)).as("n_langs"),
-        sum(col("cl") * TextOps.quantLog(col("cl"))).as("sum_clog"))
+        sum(col("cl") * quantLog(col("cl"))).as("sum_clog"))
     massC.join(vocabC, Seq("source")).join(langC, Seq("source"))
       .select(col("source"), col("n_docs"), col("n_tokens"),
         (col("n_tokens").cast("double") / col("n_docs")).as("mean_tokens"),
@@ -2286,7 +2272,7 @@ object CorpusOps {
         col("n_langs"),
         // integer div (not double-divide-then-cast: sum_clog exceeds 2^53
         // past ~1e9 docs); operands non-negative so trunc == floor == //
-        (TextOps.quantLog(col("n_docs")) - expr("sum_clog div n_docs"))
+        (quantLog(col("n_docs")) - expr("sum_clog div n_docs"))
           .as("lang_ent_micronat"))
       .orderBy(col("source"))
   }
@@ -2306,7 +2292,7 @@ object CorpusOps {
        |),
        |langmix AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n_langs,
-       |    CAST(sum(cl * ${TextOps.quantLogSql("cl")}) AS BIGINT) AS sum_clog
+       |    CAST(sum(cl * ${quantLogSql("cl")}) AS BIGINT) AS sum_clog
        |  FROM (SELECT source, lang, count(*) AS cl FROM documents
        |        GROUP BY source, lang)
        |  GROUP BY source
@@ -2318,7 +2304,7 @@ object CorpusOps {
        |  CAST(vocab AS DOUBLE) / n_tokens AS ttr,
        |  1.0 - CAST(n_distinct AS DOUBLE) / n_docs AS dup_frac,
        |  n_langs,
-       |  ${TextOps.quantLogSql("n_docs")} - sum_clog // n_docs
+       |  ${quantLogSql("n_docs")} - sum_clog // n_docs
        |    AS lang_ent_micronat
        |FROM mass JOIN vocab USING (source) JOIN langmix USING (source)
        |ORDER BY source""".stripMargin
@@ -2677,9 +2663,7 @@ object CorpusOps {
           col("c2").cast("double") / col("c1").cast("double"))
           .otherwise(lit(0.0)).as("p"))
       .groupBy(col("doc_id"))
-      .agg((aggregate(array_sort(collect_list(struct(col("pos"), col("p")))),
-        lit(0.0), (acc, x) => acc + x.getField("p"))
-        / count(lit(1))).as("avg_bigram_p"))
+      .agg((orderedSum("pos", "p") / count(lit(1))).as("avg_bigram_p"))
 
     // 3. unigram cross-entropy under the frozen LM (micro-nats/token):
     // OOV tokens score the +1-smoothed floor 1/(t+v) — the E315 form
@@ -2691,7 +2675,7 @@ object CorpusOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("tf_dw")).as("nt"),
         sum(col("tf_dw") *
-          (TextOps.quantLog(col("tf0") + 1) - TextOps.quantLog(col("t") + col("v"))))
+          (quantLog(col("tf0") + 1) - quantLog(col("t") + col("v"))))
           .as("sum_qlp"))
       .select(col("doc_id"), expr("(-sum_qlp) div nt").as("xent_micronat"))
 
@@ -2756,7 +2740,7 @@ object CorpusOps {
     */
   def qDocQualityGateFrozen(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val h = TextOps.portableHash(concat(col("text"), lit("|qgate"))) % 10
+    val h = portableHash(concat(col("text"), lit("|qgate"))) % 10
     val base = docs.filter(h =!= 0)
     def inj(m: Int, textCol: Column): DataFrame =
       docs.filter(col("doc_id") % 40 === m)
@@ -2777,9 +2761,11 @@ object CorpusOps {
     val failBg = s"(n_tokens >= 2 AND COALESCE(avg_bigram_p, 0.0) < $gateMinBigramP)"
     val failXe = s"xent_micronat > $gateMaxXentMicroNat"
     val failQu = s"(n_tokens < $gateMinTokens OR quality_score < $gateMinQuality)"
+    val bigramP = "CASE WHEN c2 IS NOT NULL AND tf IS NOT NULL " +
+      "THEN CAST(c2 AS DOUBLE) / CAST(tf AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
     s"""WITH docs AS (
        |  SELECT doc_id, text,
-       |    ${TextOps.portableHashSql("text || '|qgate'")} % 10 AS hsplit
+       |    ${portableHashSql("text || '|qgate'")} % 10 AS hsplit
        |  FROM documents
        |),
        |base AS (SELECT doc_id, text FROM docs WHERE hsplit != 0),
@@ -2833,12 +2819,7 @@ object CorpusOps {
        |),
        |bg AS (
        |  SELECT doc_id,
-       |    list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE),
-       |        list(CASE WHEN c2 IS NOT NULL AND tf IS NOT NULL
-       |               THEN CAST(c2 AS DOUBLE) / CAST(tf AS DOUBLE)
-       |               ELSE CAST(0.0 AS DOUBLE) END ORDER BY pos)),
-       |      (acc, p) -> acc + p) / count(*) AS avg_bigram_p
+       |    ${orderedSumSql(bigramP, "pos")} / count(*) AS avg_bigram_p
        |  FROM bgl
        |  LEFT JOIN bmodel USING (bg)
        |  LEFT JOIN (SELECT w AS w1, tf FROM uni) u USING (w1)
@@ -2850,8 +2831,8 @@ object CorpusOps {
        |),
        |xent AS (
        |  SELECT doc_id,
-       |    (-CAST(sum(tf_dw * (${TextOps.quantLogSql("COALESCE(tf, 0) + 1")} -
-       |      ${TextOps.quantLogSql("t + v")})) AS BIGINT)) //
+       |    (-CAST(sum(tf_dw * (${quantLogSql("COALESCE(tf, 0) + 1")} -
+       |      ${quantLogSql("t + v")})) AS BIGINT)) //
        |      CAST(sum(tf_dw) AS BIGINT) AS xent_micronat
        |  FROM by_doc LEFT JOIN uni USING (w) CROSS JOIN totals GROUP BY doc_id
        |),

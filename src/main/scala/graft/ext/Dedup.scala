@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Exec
 import graft.model.Tables
-import TextOps.{h31, h31Sql, portableHash, portableHashSql, HashP}
+import graft.Exact.{h31, h31ExprSql, h31Sql, portableHash, portableHashExprSql, portableHashSql,
+  sampleBucket, sampleBucketSql, HashP}
 
 /** Deduplication operators for LLM training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH banded near-dup (shingle → minhash → band →
@@ -26,7 +27,7 @@ import TextOps.{h31, h31Sql, portableHash, portableHashSql, HashP}
   *     docs) are the known hazard — AQE skew-join handles moderate skew,
   *     and the bucket-size cap [[maxBandBucket]] (count-filter before the
   *     self-join) bounds the worst case at extreme scale.
-  *   - All hashes are md5-derived ([[TextOps.portableHash]]) so results
+  *   - All hashes are md5-derived ([[graft.Exact.portableHash]]) so results
   *     are engine-portable and oracle-checkable.
   *
   * The synthetic corpus has no natural duplicates (500 distinct texts), so
@@ -68,7 +69,7 @@ object Dedup {
 
   /** 16 minhash permutations as (a*h+b) mod P over the 31-bit shingle hash;
     * 4 bands × 4 rows. Coefficients are arbitrary fixed odd-ish constants
-    * < 2^31 (kept small so a*h fits int64 — see [[TextOps.HashP]]).
+    * < 2^31 (kept small so a*h fits int64 — see [[graft.Exact.HashP]]).
     */
   val minhashCoefs: Seq[(Long, Long)] =
     (1 to 16).map(i => (1000003L * i + 7919L, 104729L * i + 12345L))
@@ -95,24 +96,16 @@ object Dedup {
   /** Truth-arm sample for [[qDocMinhashEval]]: an LCG hash of the doc's
     * BASE id (`doc_id % 100000` — injected near-dups share their source's
     * base, so true pairs never straddle the sample boundary) keeps
-    * evalSampleKeep/evalSampleMod ≈ 25% of keys. `final val` + literal
-    * RHS: these interpolate into oracle SQL, so they must be
-    * constant-folded (the object-init-cycle rule, .claude/skills/verify).
-    * Max intermediate 99999 × 1103515245 ≈ 1.1e14 — well inside int64 in
-    * both engines.
+    * evalSampleKeep/evalSampleMod ≈ 25% of keys ([[graft.Exact.sampleBucket]]).
     */
-  final val evalSampleMul = 1103515245L
-  final val evalSampleAdd = 12345L
   final val evalSampleMod = 2048L
-  // 25% (was 50% through r7): the truth arm's prefix join is quadratic in
-  // the sample fraction, and 25% still keeps ≥1 injected pair at sf0.001
-  // and 6 at sf0.01 — enough signal for the recall/ensemble audits at a
-  // quarter of the pair work (r7 advice: keep the audit cheap at any SF).
+  // 25%: the truth arm's prefix join is quadratic in the sample fraction,
+  // and 25% still keeps ≥1 injected pair at sf0.001 and 6 at sf0.01
   final val evalSampleKeep = 512L
   private def evalKeep(c: Column): Column =
-    ((c % 100000L) * evalSampleMul + evalSampleAdd) % evalSampleMod < evalSampleKeep
+    sampleBucket(c, 100000L, evalSampleMod) < evalSampleKeep
   private def evalKeepSqlOn(c: String): String =
-    s"((CAST($c AS BIGINT) % 100000) * $evalSampleMul + $evalSampleAdd) % $evalSampleMod < $evalSampleKeep"
+    s"${sampleBucketSql(c, 100000L, evalSampleMod)} < $evalSampleKeep"
 
   /** Word 3-shingles (min 1 shingle for tiny docs). Shared with
     * [[TextOps.qDocRepetition]]. Reads a pre-split `toks` column, NOT an
@@ -810,7 +803,7 @@ object Dedup {
   }
 
   val qDocSplitLeakfreeSql: String = {
-    val h = TextOps.portableHashSql("CAST(split_key AS VARCHAR) || '|leakfree'")
+    val h = portableHashSql("CAST(split_key AS VARCHAR) || '|leakfree'")
     s"""WITH RECURSIVE $nearCorpusSql,
        |shingled AS (
        |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
@@ -1007,7 +1000,7 @@ object Dedup {
   def qDocFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .withColumn("toks", split(col("text"), " "))
-    val hLambda = TextOps.h31ExprSql("s")
+    val hLambda = h31ExprSql("s")
     docs.select(
       col("doc_id"),
       portableHash(col("text")).as("content_fp"),
@@ -1072,7 +1065,7 @@ object Dedup {
     */
   def qDocWinnow(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val hLambda = TextOps.h31ExprSql("s")
+    val hLambda = h31ExprSql("s")
     val fpExpr =
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
         s" j -> array_min(slice(gs, j, $winnowW))))"
@@ -1126,7 +1119,7 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** SimHash pair mining parameters for [[qDocDedupEnsemble]]: a 60-bit
-    * signature (every bit of [[TextOps.portableHash]] — PRODUCTION width,
+    * signature (every bit of [[graft.Exact.portableHash]] — PRODUCTION width,
     * unlike [[qDocSimhash]]'s deliberately small 16-bit teaching form,
     * whose 4-bit bands would put 1/16th of any corpus in each bucket and
     * go quadratic) split into 4 bands of 15 bits, pairs reported at
@@ -1170,7 +1163,7 @@ object Dedup {
     // spread on doc_id: both arms are CPU-dense per-doc work, and doc_id is
     // the simhash groupBy key, so its exchange is established here once
     val sampled = Exec.spread(nearCorpus(docs).filter(evalKeep(col("doc_id"))), col("doc_id"))
-    val hLambda = TextOps.h31ExprSql("s")
+    val hLambda = h31ExprSql("s")
     // winnow arm (the qDocWinnow pipeline, sample-restricted)
     val fpExpr =
       s"array_distinct(transform(sequence(1, greatest(size(gs) - ${winnowW - 1}, 1))," +
@@ -1208,7 +1201,7 @@ object Dedup {
       // eager: band build + both verify probes
       val sigs = Exec.share(sampled
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-        .select(col("doc_id"), TextOps.portableHash(col("t")).as("h"))
+        .select(col("doc_id"), portableHash(col("t")).as("h"))
         .groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
         .select(col("doc_id"), sigExpr.as("sig")))
       val bandCols = (0 until simhashBands).map { b =>
@@ -1320,7 +1313,7 @@ object Dedup {
        |  HAVING count(*) >= $winnowMinShared
        |),
        |stoks AS (
-       |  SELECT doc_id, ${TextOps.portableHashSql("t")} AS h
+       |  SELECT doc_id, ${portableHashSql("t")} AS h
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM samp)
        |),
        |ssums AS (
@@ -1505,7 +1498,7 @@ object Dedup {
     */
   private def ngramHashSetExpr(n: Int): String =
     s"array_distinct(transform(transform(sequence(1, greatest(size(toks) - ${n - 1}, 1))," +
-      s" i -> concat_ws(' ', slice(toks, i, $n))), s -> ${TextOps.h31ExprSql("s")}))"
+      s" i -> concat_ws(' ', slice(toks, i, $n))), s -> ${h31ExprSql("s")}))"
   private def ngramHashSetSqlExpr(n: Int): String =
     s"list_distinct(list_transform(list_transform(generate_series(1, greatest(len(string_split(text, ' ')) - ${n - 1}, 1))," +
       s" i -> array_to_string((string_split(text, ' '))[i:i+${n - 1}], ' ')), s -> ${h31Sql("s")}))"
@@ -2135,11 +2128,11 @@ object Dedup {
       .unionAll(docs.filter(col("doc_id") % 30 === 3)
         .select((col("doc_id") + (1L << 41)).as("doc_id"), col("text")))
     val corpusHashes = corpus
-      .select(TextOps.portableHash(col("text")).as("h")).distinct()
+      .select(portableHash(col("text")).as("h")).distinct()
       .withColumn("in_corpus", lit(true))
     val wFirst = org.apache.spark.sql.expressions.Window
       .partitionBy(col("h")).orderBy(col("doc_id"))
-    batch.select(col("doc_id"), TextOps.portableHash(col("text")).as("h"))
+    batch.select(col("doc_id"), portableHash(col("text")).as("h"))
       .withColumn("batch_rank", row_number().over(wFirst))
       .join(corpusHashes, Seq("h"), "left")
       .select(col("doc_id"), col("h").as("content_hash"),
@@ -2150,7 +2143,7 @@ object Dedup {
   }
 
   val qDocIncrDedupSql: String = {
-    val h = TextOps.portableHashSql("text")
+    val h = portableHashSql("text")
     s"""WITH corpus AS (
        |  SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 3
        |),
@@ -2189,7 +2182,7 @@ object Dedup {
     * re-reads historical text. */
   private[graft] def nearDupPrep(docs: DataFrame): DataFrame =
     docs.withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), TextOps.portableHash(col("text")).as("h"),
+      .select(col("doc_id"), portableHash(col("text")).as("h"),
         expr(hashSetExpr).as("hs"))
 
   /** The standard 4×4 dedup band table over a [[nearDupPrep]] frame —
@@ -2724,7 +2717,7 @@ object Dedup {
       .withColumn("toks", split(col("text"), " "))
     val gramsExpr =
       s"transform(sequence(1, size(toks) - ${dupSpanK - 1}), i -> struct(i AS pos, " +
-        s"CAST(conv(substring(md5(concat_ws(' ', slice(toks, i, $dupSpanK))), 1, 15), 16, 10) AS BIGINT) AS gh))"
+        s"${portableHashExprSql(s"concat_ws(' ', slice(toks, i, $dupSpanK))")} AS gh))"
     // eager: the df≥2 aggregate and the island join read the md5 gram explode concurrently
     val grams = Exec.share(corpus.filter(size(col("toks")) >= dupSpanK)
       .select(col("doc_id"), explode(expr(gramsExpr)).as("g"))
@@ -2757,7 +2750,7 @@ object Dedup {
        |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
        |grams AS (
        |  SELECT doc_id, i AS pos,
-       |    CAST(('0x' || substr(md5(array_to_string(w[i:i+${dupSpanK - 1}], ' ')), 1, 15)) AS BIGINT) AS gh
+       |    ${portableHashSql(s"array_to_string(w[i:i+${dupSpanK - 1}], ' ')")} AS gh
        |  FROM toks, UNNEST(range(1, len(w) - ${dupSpanK - 2})) AS t(i)
        |  WHERE len(w) >= $dupSpanK
        |),
@@ -2819,7 +2812,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     val corpus = nearCorpus(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-    val bucket = TextOps.portableHash(concat(col("text"), lit("|split"))) % 100
+    val bucket = portableHash(concat(col("text"), lit("|split"))) % 100
     val folds = corpus.select(col("doc_id"),
       when(bucket < CorpusOps.trainPct, "train")
         .when(bucket < CorpusOps.valPct, "val")
@@ -2845,7 +2838,7 @@ object Dedup {
   }
 
   val qDocSplitLeakageSql: String = {
-    val bucket = s"${TextOps.portableHashSql("text || '|split'")} % 100"
+    val bucket = s"${portableHashSql("text || '|split'")} % 100"
     s"""WITH $nearCorpusSql,
        |pairs AS (
        |  SELECT doc_a, doc_b FROM ($qDocMinhashPairsSql)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exact.{orderedSum, quantLog, quantLogSql}
 import graft.Exec
 import graft.model.Tables
 
@@ -722,10 +723,7 @@ object Similarity {
       .select(col("vec_id"), col("label"), posexplode(col("e")).as(Seq("pos0", "xd")))
       .select(col("vec_id"), col("label"), (col("pos0") + 1).as("i"), col("xd"))
       .groupBy(col("label"), col("i"))
-      .agg((aggregate(
-          array_sort(collect_list(struct(col("vec_id"), col("xd")))),
-          lit(0.0), (acc, p) => acc + p.getField("xd"))
-        / count(lit(1))).as("c"))
+      .agg((orderedSum("vec_id", "xd") / count(lit(1))).as("c"))
 
   /** The centroid CTE chain with a caller-supplied embeddings filter and
     * source-CTE name — the oracle-side seam matching [[centroidArrayOf]],
@@ -2165,8 +2163,7 @@ object Similarity {
       .agg(count(lit(1)).as("nc"), min(col("d2")).as("r1"), max(col("d2")).as("r2"))
     val used = perProbe.filter(col("nc") === 2 && col("r1") > 0.0)
       .select((keyCols.map(col) :+
-        ((floor(log(col("r2")) * 1000000L).cast("long") -
-          floor(log(col("r1")) * 1000000L).cast("long")).as("dq"))): _*)
+        (quantLog(col("r2")) - quantLog(col("r1"))).as("dq")): _*)
     (perProbe, used)
   }
 
@@ -2208,8 +2205,8 @@ object Similarity {
        |),
        |used AS (
        |  SELECT $usedKey,
-       |    CAST(floor(ln(r2) * 1000000) AS BIGINT) -
-       |    CAST(floor(ln(r1) * 1000000) AS BIGINT) AS dq
+       |    ${quantLogSql("r2")} -
+       |    ${quantLogSql("r1")} AS dq
        |  FROM per_probe WHERE nc = 2 AND r1 > 0.0
        |)""".stripMargin
 
@@ -2369,10 +2366,7 @@ object Similarity {
       .select(col("vec_id"), col("cell"), (col("pos0") + 1).as("i"), col("x"))
       .groupBy(col("cell"), col("i"))
       .agg(
-        (aggregate(
-          array_sort(collect_list(struct(col("vec_id"), col("x")))),
-          lit(0.0), (acc, p) => acc + p.getField("x"))
-          / count(lit(1))).as("c"),
+        (orderedSum("vec_id", "x") / count(lit(1))).as("c"),
         count(lit(1)).as("n_members"))
       .orderBy(col("cell"), col("i"))
   }

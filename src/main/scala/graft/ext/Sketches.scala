@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact.{h31, h31Sql}
 import graft.model.Tables
 
 /** Probabilistic membership / frequency sketches as DISTRIBUTED QUERY
@@ -21,7 +22,7 @@ import graft.model.Tables
   * the corpus.
   *
   * Everything is integer arithmetic over the registry's portable 31-bit
-  * md5 hash ([[TextOps.h31]]), so both engines compute bit-identical
+  * md5 hash ([[graft.Exact.h31]]), so both engines compute bit-identical
   * sketches — the ORACLE checks the sketch itself, not just its summary.
   */
 object Sketches {
@@ -30,9 +31,9 @@ object Sketches {
     * functions from the one cross-engine hash definition.
     */
   private def saltedH(key: Column, i: Int): Column =
-    TextOps.h31(concat(key, lit(s"#$i")))
+    h31(concat(key, lit(s"#$i")))
   private def saltedHSql(e: String, i: Int): String =
-    TextOps.h31Sql(s"($e || '#$i')")
+    h31Sql(s"($e || '#$i')")
 
   // ------------------------------------------------------------------
   // Bloom-filter pre-join membership audit

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Exact.{h31, h31ExprSql, h31Sql, lcgMul, logScale, orderedSum, orderedSumExprSql,
+  orderedSumSql, portableHash, portableHashSql, quantLog, quantLogSql, sampleBucketExprSql,
+  sampleBucketSql, HashP}
 import graft.Exec
 import graft.model.Tables
 
@@ -13,11 +16,8 @@ import graft.model.Tables
   * redaction, deterministic sampling, and token-budget packing. All run
   * over the `documents` testdata table.
   *
-  * Cross-engine hashing: every content hash in graft.ext is derived from
-  * `md5` — the one hash both Spark and DuckDB compute identically — taking
-  * the first 15 hex chars as a non-negative 60-bit BIGINT
-  * ([[portableHash]]). Spark's own `hash()`/`xxhash64` are
-  * Spark-specific and would make results engine-dependent.
+  * Cross-engine hashing: every content hash in graft.ext is
+  * [[graft.Exact.portableHash]].
   *
   * Scale notes (100 TB): the scoring/redaction/sampling ops are narrow
   * per-row projections — no shuffle, no UDFs (all built-ins/higher-order
@@ -27,34 +27,6 @@ import graft.model.Tables
   * [[qDocPack]] (one bounded-partition window).
   */
 object TextOps {
-
-  /** Modulus for 31-bit hash-derived values: largest signed-int32 prime, so
-    * (a*h+b) stays within int64 for 31-bit coefficients in BOTH engines
-    * (DuckDB raises on BIGINT overflow rather than wrapping — portable
-    * arithmetic must stay in range, not rely on wraparound).
-    */
-  final val HashP = 2147483647L
-
-  /** 60-bit non-negative content hash: first 15 hex chars of md5. */
-  def portableHash(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** Same value in DuckDB SQL, for oracle generation. */
-  def portableHashSql(e: String): String =
-    s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
-
-  /** 31-bit reduction used by minhash/simhash coefficients. */
-  def h31(c: Column): Column = portableHash(c) % HashP
-  def h31Sql(e: String): String = s"(${portableHashSql(e)} % $HashP)"
-
-  /** The same 31-bit hash as a Spark-SQL lambda-body string (for use
-    * inside `expr("transform/aggregate(..., $v -> ...)")` where a Column
-    * can't reach) — the ONE definition every dedup/fingerprint expression
-    * string must use, so the Spark side can never drift from [[h31Sql]]'s
-    * oracle side.
-    */
-  def h31ExprSql(v: String): String =
-    s"CAST(conv(substring(md5($v), 1, 15), 16, 10) AS BIGINT) % $HashP"
 
   // ------------------------------------------------------------------
   // Token / length statistics
@@ -102,7 +74,7 @@ object TextOps {
     * partial aggregation reduces them map-side; output stays one row per
     * document regardless of text length.
     *
-    * Shingles are reduced to their 31-bit hash ([[h31]]) BEFORE the
+    * Shingles are reduced to their 31-bit hash ([[graft.Exact.h31]]) BEFORE the
     * explode, so the first shuffle carries (doc_id, int64) instead of raw
     * multi-word shingle strings — ~5-10× fewer shuffle bytes at identical
     * results (max-frequency is collision-tolerant at 31 bits, and both
@@ -156,7 +128,7 @@ object TextOps {
   /** Deterministic hash-based stratified sample. `rand()`/`sampleBy` are
     * seeded-RNG and engine-specific — re-running or re-partitioning
     * changes the sample; keying the decision on a CONTENT hash (md5 of
-    * the text + a salt, [[portableHash]]) makes the sample a pure
+    * the text + a salt, [[graft.Exact.portableHash]]) makes the sample a pure
     * function of the data: reproducible across runs, engines, partition
     * layouts, and incremental re-ingests — reprocessing a shard (even
     * with reassigned doc_ids) cannot resample a document, the property a
@@ -257,7 +229,7 @@ object TextOps {
     * sequence — exactly the bookkeeping a packed-dataset writer needs.
     *
     * One running-total window per (lang, shard) computes the layout. The
-    * shard key is a CONTENT hash ([[portableHash]], engine-portable, same
+    * shard key is a CONTENT hash ([[graft.Exact.portableHash]], engine-portable, same
     * reasoning as [[qDocSampleStratified]]): at 100 TB a single dominant
     * language would otherwise be ONE window partition — an unbounded
     * serialization point; sharding caps every partition at corpus/
@@ -587,7 +559,7 @@ object TextOps {
     * count, Zipf-concentrated); scoring is one equi-join of exploded doc
     * bigrams against the model keyed on the gram text and one doc-keyed
     * fold. The model join ships (gram, count) pairs — at 100 TB the
-    * standard refinement is hashing grams to int64 first ([[h31]], as
+    * standard refinement is hashing grams to int64 first ([[graft.Exact.h31]], as
     * [[qDocRepetition]] does) and broadcasting the Zipf head.
     */
   def qDocBigramLm(spark: SparkSession, sfDir: String): DataFrame =
@@ -615,13 +587,11 @@ object TextOps {
         (col("c2").cast("double") / col("c1").cast("double")).as("p"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
-        (aggregate(array_sort(collect_list(struct(col("pos"), col("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p"))
-          / count(lit(1))).as("avg_bigram_p"))
+        (orderedSum("pos", "p") / count(lit(1))).as("avg_bigram_p"))
   }
 
   val qDocBigramLmSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
       |),
       |bgl AS (
@@ -638,10 +608,7 @@ object TextOps {
       |  SELECT bg, count(*) AS c2 FROM bgl GROUP BY bg
       |)
       |SELECT doc_id, count(*) AS n_bigrams,
-      |  list_reduce(
-      |    list_prepend(CAST(0.0 AS DOUBLE),
-      |      list(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE) ORDER BY pos)),
-      |    (acc, p) -> acc + p) / count(*) AS avg_bigram_p
+      |  ${orderedSumSql("CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE)", "pos")} / count(*) AS avg_bigram_p
       |FROM bgl JOIN bi USING (bg) JOIN uni USING (w1)
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
@@ -795,9 +762,7 @@ object TextOps {
     *     only, and both engines evaluate the IDENTICAL operand tree, so
     *     scores are bit-equal;
     *   - the per-document sum over query terms folds in TERM ORDER
-    *     (`aggregate(array_sort(collect_list(...)))`, the [[qDocBigramLm]]
-    *     pattern) — a bare `sum(score)` would accumulate doubles in
-    *     partition order and drift between engines.
+    *     ([[graft.Exact.orderedSum]]).
     *
     * Scale (100 TB): tf is the one corpus-sized shuffle ((doc, term)
     * partial agg); document length DERIVES from tf (aggregate of the
@@ -830,8 +795,7 @@ object TextOps {
       .select(col("doc_id"), col("term"), (idf * sat).as("score"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matched"),
-        aggregate(array_sort(collect_list(struct(col("term"), col("score")))),
-          lit(0.0), (acc, x) => acc + x.getField("score")).as("bm25"))
+        orderedSum("term", "score").as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(bm25TopDocs)
   }
@@ -858,9 +822,7 @@ object TextOps {
        |  CROSS JOIN n CROSS JOIN ad
        |)
        |SELECT doc_id, count(*) AS n_matched,
-       |  list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE), list(score ORDER BY term)),
-       |    (acc, s) -> acc + s) AS bm25
+       |  ${orderedSumSql("score", "term")} AS bm25
        |FROM scored
        |GROUP BY doc_id
        |ORDER BY bm25 DESC, doc_id
@@ -869,25 +831,6 @@ object TextOps {
   // ------------------------------------------------------------------
   // Corpus-law fits: Zipf slope and Heaps vocabulary-growth exponent
   // ------------------------------------------------------------------
-
-  /** Fixed-point scale for quantized natural logs: log values become
-    * BIGINT micro-log units (floor(ln(v)·10⁶)), so the least-squares
-    * sums below are EXACT integer arithmetic — order-free under any
-    * partitioning and identical across engines. (The only cross-engine
-    * exposure left is ln itself: JVM Math.log and libm log may disagree
-    * in the last ulp, which flips a floor only when ln(v)·10⁶ sits
-    * within ~1e-10 of an integer — negligible for integer-valued inputs.)
-    */
-  final val logScale = 1000000L
-
-  /** floor(ln(c)·10⁶) as BIGINT — the quantized-log x/y of the fits. */
-  // private[ext]: the composite quality gate (CorpusOps.qDocQualityGate)
-  // scores per-doc cross-entropy on the same micro-nat kernel
-  private[ext] def quantLog(c: Column): Column =
-    floor(log(c.cast("double")) * logScale).cast("long")
-
-  private[ext] def quantLogSql(e: String): String =
-    s"CAST(floor(ln(CAST($e AS DOUBLE)) * $logScale) AS BIGINT)"
 
   /** Ordinary least squares over quantized-log points `(x, y)`:
     * slope = (nΣxy − ΣxΣy)/(nΣx² − (Σx)²), intercept de-scaled back to
@@ -1565,7 +1508,7 @@ object TextOps {
     * corpus-wide token distribution).
     *
     * Determinism: per-token log-probability ln((tf+1)/(T+V)) is split
-    * into floor-quantized micro-nat integers ([[logScale]], the
+    * into floor-quantized micro-nat integers ([[graft.Exact.quantLog]], the
     * [[qDocZipf]] rule) — `floor(ln(tf+1)·S) − floor(ln(T+V)·S)` — so the
     * per-source accumulation is EXACT BIGINT arithmetic in any engine;
     * the only float steps are one correctly-rounded `ln` per DISTINCT
@@ -1653,7 +1596,7 @@ object TextOps {
     * order must be DECORRELATED from the previous epoch's (and epoch 1
     * from the natural ingest order), or neighboring gradient steps see
     * systematically related data every epoch. Every document gets a
-    * deterministic per-epoch sort key — hashed once ([[h31]]) and
+    * deterministic per-epoch sort key — hashed once ([[graft.Exact.h31]]) and
     * rescrambled per epoch by a multiplier modulo the prime 2³¹−1 (a
     * bijection of Z_M, the [[graft.queries.Analytics.qEventBootstrap]]
     * single-hash discipline) — and the audit reports, for each
@@ -1711,7 +1654,7 @@ object TextOps {
         explode(expr(s"sequence(0, $shuffleEpochs)")).as("e"))
       .select(col("doc_id"), col("e"),
         when(col("e") === 0, col("doc_id"))
-          .otherwise((col("u0") * (lit(1103515245L) + col("e"))) % HashP).as("k"))
+          .otherwise((col("u0") * (lit(lcgMul) + col("e"))) % HashP).as("k"))
       .persist()
     // eager fill (mx, the bucket counts, and the rank join all consume
     // this corpus×(epochs+1) frame — without the fill each branch re-scans
@@ -1806,7 +1749,7 @@ object TextOps {
     s"""WITH keyed AS (
        |  SELECT doc_id, e,
        |    CASE WHEN e = 0 THEN doc_id
-       |         ELSE (u0 * (1103515245 + e)) % $HashP END AS k
+       |         ELSE (u0 * ($lcgMul + e)) % $HashP END AS k
        |  FROM (SELECT doc_id, ${h31Sql("CAST(doc_id AS VARCHAR)")} AS u0 FROM documents)
        |  CROSS JOIN (SELECT unnest(range(0, ${shuffleEpochs + 1})) AS e)
        |),
@@ -1899,7 +1842,7 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"),
         expr("(-sum_qlp) div n_tokens").as("xq"),
         expr("least((n_chars * 10) div n_tokens, 1023)").as("awl"),
-        expr("((doc_id % 100000) * 1103515245 + 12345) % 256").as("h"))
+        expr(sampleBucketExprSql("doc_id", 100000, 256)).as("h"))
       .select(col("doc_id"), col("n_tokens"), col("xq"),
         expr("((xq div 10000) * 1024 + awl) * 256 + h").as("curr_key"))
     val b = keyed.groupBy(col("curr_key")).agg(sum(col("n_tokens")).as("tok_b"))
@@ -1942,7 +1885,7 @@ object TextOps {
        |  SELECT p.doc_id, n_tokens, (-sum_qlp) // n_tokens AS xq,
        |    ((((-sum_qlp) // n_tokens) // 10000) * 1024 +
        |      least((length(text) * 10) // n_tokens, 1023)) * 256 +
-       |      ((CAST(p.doc_id AS BIGINT) % 100000) * 1103515245 + 12345) % 256
+       |      ${sampleBucketSql("p.doc_id", 100000, 256)}
        |      AS curr_key
        |  FROM per_doc p JOIN docs d ON p.doc_id = d.doc_id
        |),
@@ -2441,7 +2384,7 @@ object TextOps {
     * agg — the only corpus-sized exchange; scoring joins presence against
     * first_doc AT GRAM GRANULARITY. In production the gram string is
     * replaced by a 64-bit content hash before the shuffle (collision odds
-    * ~n²/2⁶⁴) — kept textual here for oracle parity ([[portableHash]]
+    * ~n²/2⁶⁴) — kept textual here for oracle parity ([[graft.Exact.portableHash]]
     * note).
     */
   def qDocNgramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2509,7 +2452,7 @@ object TextOps {
     * probability to (tf−tf_s+1)/((T−T_s)+(V−U_s)) where U_s is the count
     * of words ONLY s contributes — all computable from the same
     * (source, token) tf table with no retraining loop. All log terms ride
-    * the [[logScale]] micro-nat quantization, so both entropies accumulate
+    * the [[graft.Exact.quantLog]] micro-nat quantization, so both entropies accumulate
     * in exact BIGINT; floats appear only in one `ln` per distinct
     * (count-value) and the final divisions.
     *
@@ -2817,7 +2760,7 @@ object TextOps {
     *
     * Exactness: the top-(k+1) cut is a TakeOrdered with (length,
     * doc_id) total order; log excesses accumulate as quantized
-    * micro-nat BIGINTs (the [[logScale]] floor discipline), so the sum
+    * micro-nat BIGINTs (the [[graft.Exact.quantLog]] floor discipline), so the sum
     * is order-free and α̂ is one double division of exact integers.
     *
     * Scale (100 TB): TakeOrdered(k+1) is per-partition heaps — no
@@ -2889,7 +2832,7 @@ object TextOps {
     * compositionality checks on the training corpus.
     *
     * Exactness: counts are exact BIGINTs; PMI accumulates as quantized
-    * micro-nat logs ([[logScale]] floor discipline — both engines floor
+    * micro-nat logs ([[graft.Exact.quantLog]] floor discipline — both engines floor
     * identical doubles), so ranking and the emitted values are
     * bit-equal; pair marginals use token OCCURRENCE counts (the usual
     * skip-gram convention, constant-shifted from pair marginals).
@@ -2990,7 +2933,7 @@ object TextOps {
     * detector actually thresholds on.
     *
     * Exactness: counts are exact BIGINTs; every log enters as a
-    * [[quantLog]] micro-nat and each cell contributes the exact integer
+    * [[graft.Exact.quantLog]] micro-nat and each cell contributes the exact integer
     * kᵢⱼ·(qlog(kᵢⱼ)+qlog(N)−qlog(Rᵢ)−qlog(Cⱼ)) (zero cells contribute
     * zero via CASE — k·ln k → 0), so ranking and the emitted G² are
     * bit-equal cross-engine. Magnitudes: k·qlog ≲ N·28·10⁶ — int64-safe
@@ -3132,13 +3075,13 @@ object TextOps {
       .select(col("doc_id"), col("pos"), p.as("p"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
-        (aggregate(array_sort(collect_list(struct(col("pos"), col("p")))),
-          lit(0.0), (acc, x) => acc + x.getField("p"))
-          / count(lit(1))).as("avg_kn_p"))
+        (orderedSum("pos", "p") / count(lit(1))).as("avg_kn_p"))
       .orderBy(col("doc_id"))
   }
 
-  val qDocKnLmSql: String =
+  val qDocKnLmSql: String = {
+    val p = s"greatest(CAST(c2 AS DOUBLE) - $knDiscount, 0.0) / CAST(c1 AS DOUBLE) + " +
+      s"(($knDiscount * CAST(n1f AS DOUBLE)) / CAST(c1 AS DOUBLE)) * (CAST(n1b AS DOUBLE) / CAST(bt AS DOUBLE))"
     s"""WITH toks AS (
        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
        |),
@@ -3156,18 +3099,12 @@ object TextOps {
        |cont AS (SELECT w2, count(*) AS n1b FROM bi GROUP BY w2),
        |btypes AS (SELECT count(*) AS bt FROM bi)
        |SELECT doc_id, count(*) AS n_bigrams,
-       |  list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(greatest(CAST(c2 AS DOUBLE) - $knDiscount, 0.0) /
-       |             CAST(c1 AS DOUBLE) +
-       |           (($knDiscount * CAST(n1f AS DOUBLE)) / CAST(c1 AS DOUBLE)) *
-       |             (CAST(n1b AS DOUBLE) / CAST(bt AS DOUBLE))
-       |           ORDER BY pos)),
-       |    (acc, p) -> acc + p) / count(*) AS avg_kn_p
+       |  ${orderedSumSql(p, "pos")} / count(*) AS avg_kn_p
        |FROM bgl JOIN bi USING (w1, w2) JOIN first USING (w1)
        |  JOIN cont USING (w2) CROSS JOIN btypes
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
+  }
 
   // ------------------------------------------------------------------
   // TextRank keywords: PageRank over the token co-occurrence graph
@@ -3333,8 +3270,7 @@ object TextOps {
       .select(col("sa"), col("sb"), a("w").as("w"), col("za"), col("zb"))
       .groupBy(col("sa"), col("sb"))
       .agg(count(lit(1)).as("n_words"),
-        (expr("aggregate(array_sort(collect_list(struct(w, za, zb)))," +
-          " cast(0 as double), (acc, e) -> acc + abs(e.za - e.zb))") /
+        (expr(orderedSumExprSql("w, za, zb", "abs(e.za - e.zb)")) /
           count(lit(1)).cast("double")).as("delta"))
       .orderBy(col("sa"), col("sb"))
   }
@@ -3383,10 +3319,7 @@ object TextOps {
        |  WHERE sd > 0.0
        |)
        |SELECT a.source AS sa, b.source AS sb, count(*) AS n_words,
-       |  list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(abs(a.z - b.z) ORDER BY a.w)),
-       |    (acc, x) -> acc + x) / CAST(count(*) AS DOUBLE) AS delta
+       |  ${orderedSumSql("abs(a.z - b.z)", "a.w")} / CAST(count(*) AS DOUBLE) AS delta
        |FROM z a JOIN z b ON a.w = b.w AND a.source < b.source
        |GROUP BY a.source, b.source
        |ORDER BY sa, sb""".stripMargin
@@ -3978,7 +3911,7 @@ object TextOps {
 
   /** Add-one piece costs in integer micro-nats over a (piece, freq)
     * vocabulary: qcost = ⌊ln(T+V)·10⁶⌋ − ⌊ln(freq+1)·10⁶⌋ — the repo's
-    * (tf+1)/(t+v) smoothing under the [[quantLog]] kernel, so Viterbi
+    * (tf+1)/(t+v) smoothing under the [[graft.Exact.quantLog]] kernel, so Viterbi
     * path costs accumulate as EXACT BIGINTs (order-free, engine-identical).
     * Bound: one piece costs ≤ ln(T+V)·10⁶ ≈ 28·10⁶ even at T = 10¹²;
     * a path has ≤ [[uniMaxWordLen]] pieces, so path cost < 4·10⁸ —
@@ -4063,7 +3996,7 @@ object TextOps {
     * and re-prune to the [[uniVocabBudget]] fixed budget (single chars
     * always retained at count-0 floor — coverage). Returns the final
     * segmentation (word, wcount, np, seg) and final piece usage counts.
-    * All log-prob accumulation is [[quantLog]] integer micro-nats.
+    * All log-prob accumulation is [[graft.Exact.quantLog]] integer micro-nats.
     *
     * Caching: every intermediate is localCheckpoint(true) — lineage
     * truncation (see [[uniTrainFull]]'s note), vocab-bounded blocks,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
+import graft.Exact.{charge, dec, h31, h31Sql, logScale, orderedSumExprSql, orderedSumSql,
+  portableHash, portableHashSql, quantLog, quantLogSql, revenue, revenueSql}
 import graft.Exec
 import graft.model.Tables
 
@@ -13,11 +15,8 @@ import graft.model.Tables
   * testdata star schema (lineitem × orders × customer × nation × region).
   *
   * Cross-engine determinism rules (every query here is DuckDB-oracle checked):
-  *   - Money/measure aggregation happens in fixed-point DECIMAL, never binary
-  *     double: a double `sum` depends on partition/merge order, so the same
-  *     query would return different low bits run-to-run on a real cluster.
-  *     Fixed-point is what production engines do for money, and it makes the
-  *     result bit-reproducible at any parallelism. [[dec]] centralizes this.
+  *   - Money/measure aggregation happens in fixed-point DECIMAL
+  *     ([[graft.Exact.dec]]), never binary double.
   *   - The FINAL output column of every decimal aggregate is cast to DOUBLE
   *     on both sides (Spark and oracle SQL). Spark and DuckDB widen decimal
   *     sums to different precision/scale (DECIMAL(28,4) vs DECIMAL(38,4)),
@@ -36,35 +35,6 @@ import graft.model.Tables
   */
 object Analytics {
 
-  /** Fixed-point view of a double measure column: exact, order-independent sums. */
-  def dec(c: Column): Column = c.cast(DecimalType(18, 4))
-  private val oneDec: Column = lit(1).cast(DecimalType(18, 4))
-
-  /** Narrow fixed-point (7 integer digits — measures here are < 1e6). Used where
-    * a 3-factor product must stay EXACT: (11,4)×(12,4)×(12,4) = DECIMAL(37,12)
-    * in Spark / (35,12) in DuckDB — under both engines' precision-38 cap, so no
-    * engine-specific rounding ever applies (Spark would round a capped product
-    * HALF_UP at reduced scale, DuckDB would keep scale 12 — a real divergence).
-    */
-  private def decN(c: Column): Column = c.cast(DecimalType(11, 4))
-  private val oneDecN: Column = lit(1).cast(DecimalType(11, 4))
-
-  /** revenue term: extendedprice * (1 - discount), exact decimal arithmetic */
-  private def revenue(price: Column, discount: Column): Column =
-    dec(price) * (oneDec - dec(discount))
-
-  /** charge term: extendedprice * (1 - discount) * (1 + tax), exact to scale 12.
-    *
-    * Oracle-side note: DuckDB's wide-DECIMAL→DOUBLE cast can be 1 ulp off the
-    * correctly-rounded result (int128 → double → ÷10^s double-rounds), while
-    * Spark/Java's BigDecimal.doubleValue is always correctly rounded. The
-    * paired oracle SQL therefore reduces the sum to DECIMAL(21,6) — lossless,
-    * since inputs are 2dp so charge terms are exactly 6dp — before its DOUBLE
-    * cast, which keeps the unscaled value < 2^53 and the conversion exact.
-    */
-  private def charge(price: Column, discount: Column, tax: Column): Column =
-    decN(price) * (oneDecN - decN(discount)) * (oneDecN + decN(tax))
-
   // --- Q1: pricing summary (groupBy/agg over the fact table; map-side combine) ---
   def q1PricingSummary(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -81,10 +51,10 @@ object Analytics {
   }
 
   val q1PricingSummarySql: String =
-    """SELECT l_returnflag, l_linestatus,
+    s"""SELECT l_returnflag, l_linestatus,
       |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
       |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE) AS sum_disc_price,
+      |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS sum_disc_price,
       |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(11,4)) * (CAST(1 AS DECIMAL(11,4)) - CAST(l_discount AS DECIMAL(11,4))) * (CAST(1 AS DECIMAL(11,4)) + CAST(l_tax AS DECIMAL(11,4)))) AS DECIMAL(21,6)) AS DOUBLE) AS sum_charge,
       |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty,
       |  count(*) AS count_order
@@ -107,8 +77,8 @@ object Analytics {
   }
 
   val q3TopUnshippedSql: String =
-    """SELECT l_orderkey, o_orderdate, o_orderpriority,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE) AS rev
+    s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
+      |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS rev
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
       |WHERE c_mktsegment = 'BUILDING'
@@ -136,8 +106,8 @@ object Analytics {
   }
 
   val q5NationRevenueSql: String =
-    """SELECT r_name, n_name,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE) AS rev,
+    s"""SELECT r_name, n_name,
+      |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS rev,
       |  count(*) AS n_lineitems
       |FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
@@ -580,8 +550,8 @@ object Analytics {
   }
 
   val q9ProductProfitSql: String =
-    """SELECT n_name AS nation, p_brand,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE) AS profit,
+    s"""SELECT n_name AS nation, p_brand,
+      |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS profit,
       |  count(*) AS n_lineitems
       |FROM lineitem
       |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%a%'
@@ -607,7 +577,7 @@ object Analytics {
       .agg(
         (lit(100.0) *
           sum(when($"p_type".like("PROMO%"),
-            revenue($"l_extendedprice", $"l_discount")).otherwise(lit(0).cast(DecimalType(18, 4))))
+            revenue($"l_extendedprice", $"l_discount")).otherwise(dec(lit(0))))
             .cast(DecimalType(21, 4)).cast("double") /
           sum(revenue($"l_extendedprice", $"l_discount"))
             .cast(DecimalType(21, 4)).cast("double")).as("promo_share_pct"),
@@ -615,12 +585,12 @@ object Analytics {
   }
 
   val q14PromoShareSql: String =
-    """SELECT
+    s"""SELECT
       |  CAST(100.0 AS DOUBLE) *
       |    CAST(CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
-      |      THEN CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
+      |      THEN ${revenueSql("l_extendedprice", "l_discount")}
       |      ELSE CAST(0 AS DECIMAL(18,4)) END) AS DECIMAL(21,4)) AS DOUBLE) /
-      |    CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE)
+      |    CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE)
       |    AS promo_share_pct,
       |  count(*) AS n_lineitems
       |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -650,8 +620,8 @@ object Analytics {
   }
 
   val q19DiscountRevenueSql: String =
-    """SELECT p_brand,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS DOUBLE) AS rev,
+    s"""SELECT p_brand,
+      |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS rev,
       |  count(*) AS n
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 20 AND l_quantity BETWEEN 1 AND 20)
@@ -688,7 +658,7 @@ object Analytics {
         count(lit(1)).as("n_customers"),
         min($"spend").cast("double").as("min_spend"),
         max($"spend").cast("double").as("max_spend"),
-        sum($"spend").cast(DecimalType(18, 4)).cast("double").as("total_spend"))
+        dec(sum($"spend")).cast("double").as("total_spend"))
       .orderBy($"quartile")
   }
 
@@ -1668,9 +1638,9 @@ object Analytics {
   }
 
   val q15TopSupplierSql: String =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT l_suppkey,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DECIMAL(21,4)) AS total_rev_d
+      |    CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS total_rev_d
       |  FROM lineitem
       |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
       |  GROUP BY l_suppkey
@@ -2354,7 +2324,7 @@ object Analytics {
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
         datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(sum($"value".cast(DecimalType(18, 4))).as("v"))
+      .agg(sum(dec($"value")).as("v"))
     val mn = daily.agg(min($"dn").as("mn"))
     val pts = daily.crossJoin(broadcast(mn))
       .select($"event_type", ($"dn" - $"mn").as("x"),
@@ -2422,7 +2392,7 @@ object Analytics {
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
         datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(sum($"value".cast(DecimalType(18, 4))).as("v"))
+      .agg(sum(dec($"value")).as("v"))
     val mn = daily.agg(min($"dn").as("mn"))
     // eager: trend params + seasonal cells both consume it
     val pts = Exec.share(daily.crossJoin(broadcast(mn))
@@ -2643,19 +2613,6 @@ object Analytics {
 
   // --- Mutual information: event_type × ISO weekday, exact micro-nats ---
 
-  /** Micro-nat quantization scale for [[qEventMi]] (the
-    * [[graft.ext.TextOps]] `logScale` rule: one correctly-rounded `ln`
-    * per distinct count, floor-quantized to integers so every
-    * accumulation is exact BIGINT arithmetic in any engine).
-    */
-  final val miScale = 1000000L
-
-  private def qln(c: Column): Column =
-    floor(log(c.cast("double")) * miScale).cast("long")
-
-  private def qlnSql(e: String): String =
-    s"CAST(floor(ln(CAST($e AS DOUBLE)) * $miScale) AS BIGINT)"
-
   /** MUTUAL INFORMATION between event_type and ISO weekday — the
     * effect-SIZE companion to [[qEventTypeDowChisq]]'s significance test
     * (χ² says whether dependence exists; MI says how many nats of
@@ -2663,8 +2620,8 @@ object Analytics {
     * selection and drift dashboards actually rank by), plus both marginal
     * entropies and the normalized MI = MI / min(H_type, H_dow).
     *
-    * Determinism: every log rides the [[miScale]] micro-nat quantization
-    * — per-cell/per-margin integer terms `n·(qln(n)+qln(N)−qln(r)−qln(c))`
+    * Determinism: every log rides the [[graft.Exact.quantLog]] micro-nat quantization
+    * — per-cell/per-margin integer terms `n·(quantLog(n)+quantLog(N)−quantLog(r)−quantLog(c))`
     * accumulate in exact BIGINT; the only float steps are one `ln` per
     * distinct count and the final one-shot divisions (exposed alongside
     * the integer numerators so the checked columns include the exact
@@ -2686,17 +2643,17 @@ object Analytics {
     val tot = cells.agg(sum($"o").as("n"), count(lit(1)).as("n_cells"))
     val mi = cells.join(rowm, "event_type").join(colm, "isodow")
       .crossJoin(broadcast(tot.select($"n")))
-      .agg(sum($"o" * (qln($"o") + qln($"n") - qln($"r") - qln($"c")))
+      .agg(sum($"o" * (quantLog($"o") + quantLog($"n") - quantLog($"r") - quantLog($"c")))
         .as("mi_num"))
     val hx = rowm.crossJoin(broadcast(tot.select($"n".as("nx"))))
-      .agg(sum($"r" * (qln($"nx") - qln($"r"))).as("hx_num"))
+      .agg(sum($"r" * (quantLog($"nx") - quantLog($"r"))).as("hx_num"))
     val hy = colm.crossJoin(broadcast(tot.select($"n".as("ny"))))
-      .agg(sum($"c" * (qln($"ny") - qln($"c"))).as("hy_num"))
+      .agg(sum($"c" * (quantLog($"ny") - quantLog($"c"))).as("hy_num"))
     tot.crossJoin(mi).crossJoin(hx).crossJoin(hy)
       .select($"n_cells", $"n".as("n_total"),
-        ($"hx_num".cast("double") / $"n".cast("double") / miScale).as("h_type"),
-        ($"hy_num".cast("double") / $"n".cast("double") / miScale).as("h_dow"),
-        ($"mi_num".cast("double") / $"n".cast("double") / miScale).as("mi_nats"),
+        ($"hx_num".cast("double") / $"n".cast("double") / logScale).as("h_type"),
+        ($"hy_num".cast("double") / $"n".cast("double") / logScale).as("h_dow"),
+        ($"mi_num".cast("double") / $"n".cast("double") / logScale).as("mi_nats"),
         ($"mi_num".cast("double") / least($"hx_num", $"hy_num").cast("double"))
           .as("nmi"))
   }
@@ -2710,21 +2667,21 @@ object Analytics {
        |colm AS (SELECT isodow, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY isodow),
        |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n, count(*) AS n_cells FROM cells),
        |mi AS (
-       |  SELECT CAST(sum(o * (${qlnSql("o")} + ${qlnSql("n")} - ${qlnSql("r")} - ${qlnSql("c")})) AS BIGINT) AS mi_num
+       |  SELECT CAST(sum(o * (${quantLogSql("o")} + ${quantLogSql("n")} - ${quantLogSql("r")} - ${quantLogSql("c")})) AS BIGINT) AS mi_num
        |  FROM cells JOIN rowm USING (event_type) JOIN colm USING (isodow) CROSS JOIN tot
        |),
        |hx AS (
-       |  SELECT CAST(sum(r * (${qlnSql("n")} - ${qlnSql("r")})) AS BIGINT) AS hx_num
+       |  SELECT CAST(sum(r * (${quantLogSql("n")} - ${quantLogSql("r")})) AS BIGINT) AS hx_num
        |  FROM rowm CROSS JOIN tot
        |),
        |hy AS (
-       |  SELECT CAST(sum(c * (${qlnSql("n")} - ${qlnSql("c")})) AS BIGINT) AS hy_num
+       |  SELECT CAST(sum(c * (${quantLogSql("n")} - ${quantLogSql("c")})) AS BIGINT) AS hy_num
        |  FROM colm CROSS JOIN tot
        |)
        |SELECT n_cells, n AS n_total,
-       |  CAST(hx_num AS DOUBLE) / CAST(n AS DOUBLE) / $miScale AS h_type,
-       |  CAST(hy_num AS DOUBLE) / CAST(n AS DOUBLE) / $miScale AS h_dow,
-       |  CAST(mi_num AS DOUBLE) / CAST(n AS DOUBLE) / $miScale AS mi_nats,
+       |  CAST(hx_num AS DOUBLE) / CAST(n AS DOUBLE) / $logScale AS h_type,
+       |  CAST(hy_num AS DOUBLE) / CAST(n AS DOUBLE) / $logScale AS h_dow,
+       |  CAST(mi_num AS DOUBLE) / CAST(n AS DOUBLE) / $logScale AS mi_nats,
        |  CAST(mi_num AS DOUBLE) / CAST(least(hx_num, hy_num) AS DOUBLE) AS nmi
        |FROM tot CROSS JOIN mi CROSS JOIN hx CROSS JOIN hy""".stripMargin
 
@@ -3089,7 +3046,7 @@ object Analytics {
     val ev = Tables.events(spark, sfDir)
       .select($"event_id", unix_micros($"ts").as("et_us"))
       .withColumn("delay_s",
-        pmod(graft.ext.TextOps.portableHash($"event_id".cast("string")),
+        pmod(portableHash($"event_id".cast("string")),
           lit(latenessMaxDelay)))
       .withColumn("asec", expr("(et_us + delay_s * 1000000L) div 1000000L"))
     val buckets = ev.groupBy($"asec").agg(max($"et_us").as("mx"))
@@ -3118,7 +3075,7 @@ object Analytics {
   val qEventLatenessSql: String =
     s"""WITH ev AS (
        |  SELECT event_id, epoch_us(ts) AS et_us,
-       |    (${graft.ext.TextOps.portableHashSql("CAST(event_id AS VARCHAR)")}) % $latenessMaxDelay AS delay_s
+       |    (${portableHashSql("CAST(event_id AS VARCHAR)")}) % $latenessMaxDelay AS delay_s
        |  FROM events
        |),
        |ev2 AS (
@@ -3238,7 +3195,7 @@ object Analytics {
       .agg(sum(when($"ts" < cut, $"cents").otherwise(0L)).as("pre"),
         sum(when($"ts" >= cut, $"cents").otherwise(0L)).as("post"))
       .withColumn("arm",
-        pmod(graft.ext.TextOps.portableHash($"user_id".cast("string")), lit(2L))
+        pmod(portableHash($"user_id".cast("string")), lit(2L))
           .cast("int"))
     val arms = perUser.groupBy($"arm")
       .agg(count(lit(1)).as("n_users"),
@@ -3281,7 +3238,7 @@ object Analytics {
        |    CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-15'
        |      THEN CAST(floor(value * 100 + 0.5) AS BIGINT) ELSE 0 END) AS BIGINT)
        |      AS post,
-       |    CAST((${graft.ext.TextOps.portableHashSql("CAST(user_id AS VARCHAR)")}) % 2
+       |    CAST((${portableHashSql("CAST(user_id AS VARCHAR)")}) % 2
        |      AS INTEGER) AS arm
        |  FROM events GROUP BY user_id
        |),
@@ -3469,7 +3426,7 @@ object Analytics {
     * separates "model is weak" from "signal isn't there" (the skyline
     * [[qEventMi]] gives for the type↔time pair, here for type↔type).
     *
-    * H_p = Σ_t n_pt·(qln(n_p) − qln(n_pt)) / n_p — BIGINT accumulation,
+    * H_p = Σ_t n_pt·(quantLog(n_p) − quantLog(n_pt)) / n_p — BIGINT accumulation,
     * one division.
     *
     * Scale: one user-keyed window for transitions (the sessionization
@@ -3487,11 +3444,11 @@ object Analytics {
     val tot = byPrev.agg(sum($"n_p").as("n_all"))
     trans.join(broadcast(byPrev), "prev_type")
       .groupBy($"prev_type", $"n_p")
-      .agg(sum($"n_pt" * (qln($"n_p") - qln($"n_pt"))).as("h_num"),
+      .agg(sum($"n_pt" * (quantLog($"n_p") - quantLog($"n_pt"))).as("h_num"),
         count(lit(1)).as("n_branches"))
       .crossJoin(broadcast(tot))
       .select($"prev_type", $"n_p".as("n_transitions"), $"n_branches",
-        ($"h_num".cast("double") / $"n_p".cast("double") / miScale)
+        ($"h_num".cast("double") / $"n_p".cast("double") / logScale)
           .as("h_next_nats"),
         ($"n_p".cast("double") / $"n_all".cast("double")).as("state_share"))
       .orderBy($"prev_type")
@@ -3515,8 +3472,8 @@ object Analytics {
        |),
        |tot AS (SELECT CAST(sum(n_p) AS BIGINT) AS n_all FROM by_prev)
        |SELECT prev_type, n_p AS n_transitions, count(*) AS n_branches,
-       |  CAST(sum(n_pt * (${qlnSql("n_p")} - ${qlnSql("n_pt")})) AS DOUBLE)
-       |    / CAST(n_p AS DOUBLE) / $miScale AS h_next_nats,
+       |  CAST(sum(n_pt * (${quantLogSql("n_p")} - ${quantLogSql("n_pt")})) AS DOUBLE)
+       |    / CAST(n_p AS DOUBLE) / $logScale AS h_next_nats,
        |  CAST(n_p AS DOUBLE) / CAST(n_all AS DOUBLE) AS state_share
        |FROM trans JOIN by_prev USING (prev_type) CROSS JOIN tot
        |GROUP BY prev_type, n_p, n_all
@@ -3802,10 +3759,9 @@ object Analytics {
   }
 
   val q7NationVolumeSql: String =
-    """SELECT rs.r_name AS supp_region, rc.r_name AS cust_region,
+    s"""SELECT rs.r_name AS supp_region, rc.r_name AS cust_region,
       |  CAST(date_part('year', l_shipdate) AS INTEGER) AS l_year,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
+      |  CAST(sum(${revenueSql("l_extendedprice", "l_discount")})
       |    AS DOUBLE) AS volume
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey
@@ -3849,7 +3805,7 @@ object Analytics {
       .agg(
         sum(when($"s_nationkey" === 3,
           revenue($"l_extendedprice", $"l_discount"))
-          .otherwise(lit(0).cast(DecimalType(18, 4)))).as("nation_rev"),
+          .otherwise(dec(lit(0)))).as("nation_rev"),
         sum(revenue($"l_extendedprice", $"l_discount")).as("total_rev"))
       .select($"o_year",
         ($"nation_rev".cast("double") / $"total_rev".cast("double")).as("mkt_share"),
@@ -3858,11 +3814,10 @@ object Analytics {
   }
 
   val q8MarketShareSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT CAST(date_part('year', o_orderdate) AS INTEGER) AS o_year,
       |    s_nationkey,
-      |    CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS rev
+      |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem
       |  JOIN part     ON l_partkey = p_partkey AND p_type = 'PROMO'
       |  JOIN orders   ON l_orderkey = o_orderkey
@@ -3906,9 +3861,8 @@ object Analytics {
   }
 
   val q10ReturnedCustomersSql: String =
-    """SELECT c_custkey, c_name, c_acctbal, n_name,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
+    s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+      |  CAST(sum(${revenueSql("l_extendedprice", "l_discount")})
       |    AS DOUBLE) AS revenue
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey
@@ -4139,7 +4093,7 @@ object Analytics {
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
         datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(sum($"value".cast(DecimalType(18, 4))).as("v"))
+      .agg(sum(dec($"value")).as("v"))
       .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
     val wOrd = Window.partitionBy($"event_type").orderBy($"dn")
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4448,7 +4402,7 @@ object Analytics {
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
         datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(sum($"value".cast(DecimalType(18, 4))).as("v"))
+      .agg(sum(dec($"value")).as("v"))
       .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
     val pairs = daily.as("a")
       .join(daily.as("b"),
@@ -5733,7 +5687,7 @@ object Analytics {
         .when(u < 999916L, 6L).when(u < 999989L, 7L).otherwise(8L)
     }
     val reps = base
-      .withColumn("u0", graft.ext.TextOps.h31($"event_id".cast("string")))
+      .withColumn("u0", h31($"event_id".cast("string")))
       // nonzero seed: u₀ = 0 would pin every replicate at u = 0 (event
       // absent from all resamples); % (M−1) + 1 lands in [1, M−1]
       .withColumn("u0p", ($"u0" % 2147483646L) + 1L)
@@ -5762,8 +5716,7 @@ object Analytics {
   }
 
   val qEventBootstrapSql: String = {
-    val h0 = "(CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15)) " +
-      "AS BIGINT) % 2147483647)"
+    val h0 = h31Sql("CAST(event_id AS VARCHAR)")
     s"""WITH base AS (
        |  SELECT event_type, event_id, CAST(value AS DECIMAL(18,4)) AS v
        |  FROM events
@@ -6702,7 +6655,7 @@ object Analytics {
     * through 0) is an exact BIGINT; R/S = R_scaled/√(n·Q_b − S_b²) and
     * the per-(type, n) mean is a block-ordered sequential fold;
     * constant blocks are dropped (ANSI guard). The closing slope uses
-    * [[graft.ext.TextOps.logScale]]-style micro-nat quantized logs of
+    * [[graft.Exact.quantLog]] micro-nat quantized logs of
     * the two mean R/S doubles over the exact [[ln2Micro]] divisor.
     *
     * Scale (100 TB): the corpus collapses once to |types|×|days|; each
@@ -6743,8 +6696,7 @@ object Analytics {
             sqrt((lit(n.toLong) * $"qb" - $"sb" * $"sb").cast("double"))).as("rs"))
       blocks.groupBy($"event_type")
         .agg(count(lit(1)).as("n_blocks"),
-          (expr("aggregate(array_sort(collect_list(struct(blk, rs)))," +
-            " cast(0 as double), (acc, e) -> acc + e.rs)") / count(lit(1)))
+          (expr(orderedSumExprSql("blk, rs", "e.rs")) / count(lit(1)))
             .as("mean_rs"))
         .select($"event_type", lit(n).as("n"), $"n_blocks", $"mean_rs")
     }.reduce(_ unionAll _)
@@ -6756,8 +6708,7 @@ object Analytics {
       .filter($"n_sizes" === hurstNs.length)
     wide
       .select($"event_type", $"rs_4", $"rs_8", $"rs_16",
-        ((floor(log($"rs_16") * 1000000L).cast("long") -
-          floor(log($"rs_4") * 1000000L).cast("long")).cast("double") /
+        ((quantLog($"rs_16") - quantLog($"rs_4")).cast("double") /
           lit(2L * ln2Micro).cast("double")).as("hurst"))
       .orderBy($"event_type")
   }
@@ -6765,8 +6716,7 @@ object Analytics {
   val qEventHurstSql: String = {
     val arms = hurstNs.map { n =>
       s"""SELECT event_type, $n AS n, count(*) AS n_blocks,
-         |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(rs ORDER BY blk)),
-         |    (a, b) -> a + b) / count(*) AS mean_rs
+         |  ${orderedSumSql("rs", "blk")} / count(*) AS mean_rs
          |FROM (
          |  SELECT event_type, blk,
          |    CAST(greatest(0, max($n * p - t * sb)) -
@@ -6807,8 +6757,8 @@ object Analytics {
        |  HAVING count(*) = ${hurstNs.length}
        |)
        |SELECT event_type, rs_4, rs_8, rs_16,
-       |  CAST(CAST(floor(ln(rs_16) * 1000000) AS BIGINT) -
-       |       CAST(floor(ln(rs_4) * 1000000) AS BIGINT) AS DOUBLE) /
+       |  CAST(${quantLogSql("rs_16")} -
+       |       ${quantLogSql("rs_4")} AS DOUBLE) /
        |    CAST(${2L * ln2Micro} AS DOUBLE) AS hurst
        |FROM wide
        |ORDER BY event_type""".stripMargin
@@ -6942,9 +6892,7 @@ object Analytics {
       .join(b.withColumnRenamed("hb", "h"), Seq("tb", "h", "n2"), "left")
       .select($"ta", $"tb", $"n1", $"n2",
         coalesce($"c1", lit(0L)).as("c1"), coalesce($"c2", lit(0L)).as("c2"))
-    def qlogDiff(num: Column, den: Column): Column =
-      floor(log(num.cast("double")) * 1000000L).cast("long") -
-        floor(log(den.cast("double")) * 1000000L).cast("long")
+    def qlogDiff(num: Column, den: Column): Column = quantLog(num) - quantLog(den)
     val terms = grid
       .select($"ta", $"tb", $"n1", $"n2",
         when($"c1" > 0,
@@ -6966,8 +6914,7 @@ object Analytics {
 
   val qEventProfileJsdSql: String = {
     def qlogDiff(num: String, den: String): String =
-      s"(CAST(floor(ln(CAST($num AS DOUBLE)) * 1000000) AS BIGINT) - " +
-        s"CAST(floor(ln(CAST($den AS DOUBLE)) * 1000000) AS BIGINT))"
+      s"(${quantLogSql(num)} - ${quantLogSql(den)})"
     s"""WITH prof AS (
        |  SELECT event_type, CAST(hour(ts) AS BIGINT) AS h, count(*) AS c
        |  FROM events GROUP BY event_type, h

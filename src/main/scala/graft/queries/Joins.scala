@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact.dec
 import graft.model.Tables
 
 /** Join kernels beyond plain equi-join — the two shapes a 100 TB pipeline
@@ -82,7 +83,7 @@ object Joins {
       .groupBy(col("window_id"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
-        sum(Analytics.dec(col("value"))).cast("double").as("total_value"))
+        sum(dec(col("value"))).cast("double").as("total_value"))
       .orderBy(col("window_id"))
 
   val qEventRangeJoinSql: String =
@@ -155,7 +156,7 @@ object Joins {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
-        sum(Analytics.dec(col("value"))).cast("double").as("total_value"))
+        sum(dec(col("value"))).cast("double").as("total_value"))
       .orderBy(col("c_mktsegment"))
 
   val qEventSaltedEnrichSql: String =

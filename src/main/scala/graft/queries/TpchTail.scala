@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact.{dec, units}
 import graft.model.Tables
 
 /** The remaining classic TPC-H join shapes (Q2, Q6, Q11, Q12, Q13, Q20,
@@ -21,14 +21,6 @@ import graft.model.Tables
   * so every threshold and tie decides identically in Spark and DuckDB.
   */
 object TpchTail {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
-  private val oneDec: Column = lit(1).cast(DecimalType(18, 4))
-
-  /** Integer-cent view of a money column — exact compares/sums in both
-    * engines ([[Warehouse.qLineSkyline]]'s convention).
-    */
-  private def cents(c: Column): Column = (dec(c) * 100).cast("long")
 
   // --- Q2: minimum-cost supplier per part (correlated-min join-back) ---
 
@@ -63,7 +55,7 @@ object TpchTail {
       .join(broadcast(euroSupp), $"l_suppkey" === $"s_suppkey")
       .groupBy($"p_partkey", $"p_brand", $"s_suppkey", $"s_name",
         $"s_acctbal", $"n_name")
-      .agg(min(cents($"l_extendedprice")).as("cost_c"))
+      .agg(min(units($"l_extendedprice", 100)).as("cost_c"))
     val w = Window.partitionBy($"p_partkey")
       .orderBy($"cost_c", $"s_suppkey")
     offers.withColumn("rn", row_number().over(w))
@@ -150,7 +142,7 @@ object TpchTail {
     val perPart = Tables.lineitem(spark, sfDir)
       .join(broadcast(natSupp), $"l_suppkey" === $"s_suppkey")
       .groupBy($"l_partkey")
-      .agg(sum(cents($"l_extendedprice")).as("value_c"))
+      .agg(sum(units($"l_extendedprice", 100)).as("value_c"))
     val total = perPart.agg(sum($"value_c").as("total_c"))
     perPart.crossJoin(broadcast(total))
       .filter(lit(1000L) * $"value_c" > $"total_c")

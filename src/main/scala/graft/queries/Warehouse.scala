@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact.{dec, logScale, orderedSumExprSql, orderedSumSql, quantLog, quantLogSql,
+  revenue, revenueSql, sampleBucket, sampleBucketSql, units}
 import graft.Exec
 import graft.model.Tables
 
@@ -536,7 +538,7 @@ object Warehouse {
     def aggOf(df: DataFrame): DataFrame = df
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).as("s"),
+        sum(dec(col("value"))).as("s"),
         min(col("value")).as("mn"), max(col("value")).as("mx"))
     val ev = Tables.events(spark, sfDir)
     val base = aggOf(ev.filter(col("ts") < cut))
@@ -546,8 +548,8 @@ object Warehouse {
     val merged = base.join(delta, Seq("day", "event_type"), "full_outer")
       .select(col("day"), col("event_type"),
         (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"),
-        (coalesce(col("s1"), lit(0).cast(DecimalType(18, 4))) +
-          coalesce(col("s2"), lit(0).cast(DecimalType(18, 4)))).as("s"),
+        (coalesce(col("s1"), dec(lit(0))) +
+          coalesce(col("s2"), dec(lit(0)))).as("s"),
         // explicit null-coalescing: DuckDB's least/greatest NULL handling
         // changed across versions — spell out the merge identically
         least(coalesce(col("mn1"), col("mn2")),
@@ -623,7 +625,7 @@ object Warehouse {
     val cut = lit("1996-01-01").cast("timestamp")
     val orders = Tables.orders(spark, sfDir)
       .select(col("o_custkey"), col("o_orderdate"),
-        col("o_totalprice").cast(DecimalType(18, 4)).as("price"))
+        dec(col("o_totalprice")).as("price"))
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_nationkey"))
     val aOld = orders.filter(col("o_orderdate") < cut)
@@ -721,7 +723,7 @@ object Warehouse {
       .groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_day"),
         count(lit(1)).as("freq"),
-        sum(col("o_totalprice").cast(DecimalType(18, 4))).as("monetary"))
+        sum(dec(col("o_totalprice"))).as("monetary"))
       .crossJoin(broadcast(horizon))
       .select(col("o_custkey"), datediff(col("h"), col("last_day")).as("recency"),
         col("freq"), col("monetary"))
@@ -781,11 +783,9 @@ object Warehouse {
     * [[qCustRfm]] trade); the 3-row class rollup is unchanged.
     */
   def qPartAbc(spark: SparkSession, sfDir: String): DataFrame = {
-    val dec18 = (c: Column) => c.cast(DecimalType(18, 4))
     val rev = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey"))
-      .agg(sum(dec18(col("l_extendedprice")) *
-        (lit(1).cast(DecimalType(18, 4)) - dec18(col("l_discount"))))
+      .agg(sum(revenue(col("l_extendedprice"), col("l_discount")))
         .cast(DecimalType(21, 4)).as("rev"))
     val tot = rev.agg(sum(col("rev")).cast(DecimalType(25, 4)).as("tot"))
     val wCum = Window.orderBy(col("rev").desc, col("l_partkey"))
@@ -1183,7 +1183,7 @@ object Warehouse {
       .join(broadcast(Tables.nation(spark, sfDir)),
         $"s_nationkey" === $"n_nationkey")
       .select($"n_name".as("nation"),
-        ($"l_extendedprice".cast(DecimalType(18, 4)) * 100).cast("long")
+        units($"l_extendedprice", 100)
           .as("price_c"),
         floor($"l_quantity").cast("long").as("qty"))
     // Only the max-qty offer per (nation, price) can reach the frontier:
@@ -1256,7 +1256,7 @@ object Warehouse {
       .join(broadcast(Tables.nation(spark, sfDir)),
         $"s_nationkey" === $"n_nationkey")
       .select($"n_name".as("nation"),
-        ($"l_extendedprice".cast(DecimalType(18, 4)) * 100).cast("long")
+        units($"l_extendedprice", 100)
           .as("price_c"),
         floor($"l_quantity").cast("long").as("w"))
       .groupBy($"nation", $"price_c").agg(sum($"w").as("w"))
@@ -1329,8 +1329,8 @@ object Warehouse {
   def qBenfordAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val obs = Tables.lineitem(spark, sfDir)
-      .select(substring(($"l_extendedprice".cast(DecimalType(18, 4)) * 100)
-        .cast("long").cast("string"), 1, 1).cast("int").as("digit"))
+      .select(substring(units($"l_extendedprice", 100)
+        .cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy($"digit").agg(count(lit(1)).as("o"))
     val pf = benfordP.map { case (d, s) => (d, s.toDouble) }.toDF("digit", "p")
     pf.join(obs, Seq("digit"), "left")
@@ -1397,8 +1397,7 @@ object Warehouse {
   def qRevBridge(spark: SparkSession, sfDir: String): DataFrame = {
     val boundary = lit(lifecycleBoundary).cast("timestamp")
     val isEarly = col("o_orderdate").cast("timestamp") < boundary
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     val grid = Tables.lineitem(spark, sfDir)
       .join(Tables.orders(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, sfDir)
@@ -1441,12 +1440,10 @@ object Warehouse {
     s"""WITH grid AS (
        |  SELECT n_name AS nation,
        |    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '$lifecycleBoundary'
-       |      THEN CAST(l_extendedprice AS DECIMAL(18,4)) *
-       |           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
+       |      THEN ${revenueSql("l_extendedprice", "l_discount")}
        |      ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) // 100 AS r1,
        |    CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '$lifecycleBoundary'
-       |      THEN CAST(l_extendedprice AS DECIMAL(18,4)) *
-       |           (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
+       |      THEN ${revenueSql("l_extendedprice", "l_discount")}
        |      ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) // 100 AS r2,
        |    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '$lifecycleBoundary'
        |      THEN CAST(floor(l_quantity) AS BIGINT) ELSE 0 END) AS BIGINT) AS v1,
@@ -1495,7 +1492,7 @@ object Warehouse {
     val orders = Tables.orders(spark, sfDir)
       .select(col("o_custkey"),
         year(col("o_orderdate").cast("timestamp")).as("yr"),
-        (col("o_totalprice").cast(DecimalType(18, 4)) * 100).cast("long").as("cents"))
+        units(col("o_totalprice"), 100).as("cents"))
     val cohorts = orders.groupBy(col("o_custkey"))
       .agg(min(col("yr")).cast("long").as("cohort_year"))
     val sizes = cohorts.groupBy(col("cohort_year"))
@@ -1577,7 +1574,7 @@ object Warehouse {
     * extra passes.
     */
   def qCustBitemporal(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (col("c_acctbal").cast(DecimalType(18, 4)) * 100).cast("long")
+    val cents = units(col("c_acctbal"), 100)
     val baseV = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_nationkey"), cents.as("bal_c"),
         lit(btTxBase).as("tx"))
@@ -1665,7 +1662,7 @@ object Warehouse {
       .agg(
         sum(when(col("o_orderdate").cast("timestamp") < boundary, 1L).otherwise(0L)).as("n_early"),
         sum(when(col("o_orderdate").cast("timestamp") >= boundary, 1L).otherwise(0L)).as("n_late"),
-        sum(col("o_totalprice").cast(DecimalType(18, 4))).as("rev"))
+        sum(dec(col("o_totalprice"))).as("rev"))
     val states = Tables.customer(spark, sfDir).select(col("c_custkey"))
       .join(perCust, col("c_custkey") === col("o_custkey"), "left")
       .select(
@@ -1675,7 +1672,7 @@ object Warehouse {
           .otherwise("acquired").as("state"),
         coalesce(col("n_early"), lit(0L)).as("n_early"),
         coalesce(col("n_late"), lit(0L)).as("n_late"),
-        coalesce(col("rev"), lit(0).cast(DecimalType(18, 4))).as("rev"))
+        coalesce(col("rev"), dec(lit(0))).as("rev"))
     states.groupBy(col("state"))
       .agg(count(lit(1)).as("n_customers"),
         sum(col("n_early")).as("early_orders"),
@@ -1749,9 +1746,7 @@ object Warehouse {
   def qSuppHhi(spark: SparkSession, sfDir: String): DataFrame = {
     val bySupp = Tables.lineitem(spark, sfDir)
       .select(col("l_suppkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 4)) *
-          (lit(1).cast(DecimalType(18, 4)) -
-            col("l_discount").cast(DecimalType(18, 4)))).as("rev"))
+        revenue(col("l_extendedprice"), col("l_discount")).as("rev"))
       .groupBy(col("l_suppkey"))
       .agg(((sum(col("rev")) * 10000).cast("long")).as("units"))
       .select(col("l_suppkey"), expr(s"units div $hhiKusdUnit").as("r"))
@@ -1783,8 +1778,7 @@ object Warehouse {
   val qSuppHhiSql: String =
     s"""WITH by_supp AS (
        |  SELECT l_suppkey,
-       |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) *
-       |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) * 10000
+       |    CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) * 10000
        |      AS BIGINT) // $hhiKusdUnit AS r
        |  FROM lineitem GROUP BY l_suppkey
        |),
@@ -1992,8 +1986,7 @@ object Warehouse {
     */
   def qNationTradeBalance(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     val flows = Tables.lineitem(spark, sfDir)
       .join(Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
       .join(broadcast(Tables.customer(spark, sfDir)
@@ -2007,15 +2000,15 @@ object Warehouse {
       .select(explode(array(
         struct($"s_nationkey".as("nk"),
           when($"c_nationkey" === $"s_nationkey", $"rev")
-            .otherwise(lit(0).cast(DecimalType(18, 4))).as("dom"),
+            .otherwise(dec(lit(0))).as("dom"),
           when($"c_nationkey" =!= $"s_nationkey", $"rev")
-            .otherwise(lit(0).cast(DecimalType(18, 4))).as("exp"),
-          lit(0).cast(DecimalType(18, 4)).as("imp")),
+            .otherwise(dec(lit(0))).as("exp"),
+          dec(lit(0)).as("imp")),
         struct($"c_nationkey".as("nk"),
-          lit(0).cast(DecimalType(18, 4)).as("dom"),
-          lit(0).cast(DecimalType(18, 4)).as("exp"),
+          dec(lit(0)).as("dom"),
+          dec(lit(0)).as("exp"),
           when($"c_nationkey" =!= $"s_nationkey", $"rev")
-            .otherwise(lit(0).cast(DecimalType(18, 4))).as("imp")))).as("f"))
+            .otherwise(dec(lit(0))).as("imp")))).as("f"))
       .select($"f.nk".as("nk"), $"f.dom".as("dom"), $"f.exp".as("exp"),
         $"f.imp".as("imp"))
       .groupBy($"nk")
@@ -2035,10 +2028,9 @@ object Warehouse {
   }
 
   val qNationTradeBalanceSql: String =
-    """WITH flows AS (
+    s"""WITH flows AS (
       |  SELECT c_nationkey, s_nationkey,
-      |    CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS rev
+      |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem
       |  JOIN orders ON l_orderkey = o_orderkey
       |  JOIN customer ON o_custkey = c_custkey
@@ -2253,7 +2245,7 @@ object Warehouse {
     * Exactness: per-(year, part) revenue is exact cents and quantity
     * exact units (BIGINT); each Jevons term ln(R_t·Q_0 / (R_0·Q_t)) is
     * a DIFFERENCE OF TWO individually-floored quantized lns of exact
-    * BIGINT products ([[woeScale]] discipline) — the per-year sum is an
+    * BIGINT products ([[graft.Exact.quantLog]] discipline) — the per-year sum is an
     * order-free BIGINT. The UVI is computed as a ratio-of-ratios
     * ((R_t/R_0)·(Q_0/Q_t), two divisions and one product, same shape
     * both engines) precisely so no BIGINT product of two year-totals
@@ -2280,7 +2272,7 @@ object Warehouse {
       .select($"l_partkey".as("pk0"), $"r".as("r0"), $"q".as("q0"))
     val matched = yp.join(base, $"l_partkey" === $"pk0")
       .select($"yr",
-        (wln($"r" * $"q0") - wln($"r0" * $"q")).as("jterm"))
+        (quantLog($"r" * $"q0") - quantLog($"r0" * $"q")).as("jterm"))
       .groupBy($"yr")
       .agg(count(lit(1)).as("n_matched"), sum($"jterm").as("jevons_log_q"))
     val totals = yp.groupBy($"yr")
@@ -2291,7 +2283,7 @@ object Warehouse {
     totals.join(matched, "yr").crossJoin(broadcast(baseTot))
       .select($"yr", $"n_matched", $"r_tot_c", $"q_tot", $"jevons_log_q",
         ($"jevons_log_q".cast("double") /
-          ($"n_matched" * woeScale).cast("double")).as("jevons_log"),
+          ($"n_matched" * logScale).cast("double")).as("jevons_log"),
         (($"r_tot_c".cast("double") / $"r0_tot") *
           ($"q0_tot".cast("double") / $"q_tot")).as("uvi"))
       .orderBy($"yr")
@@ -2311,7 +2303,7 @@ object Warehouse {
        |),
        |matched AS (
        |  SELECT yr, CAST(count(*) AS BIGINT) AS n_matched,
-       |    CAST(sum(${wlnSql("(r * q0)")} - ${wlnSql("(r0 * q)")}) AS BIGINT)
+       |    CAST(sum(${quantLogSql("(r * q0)")} - ${quantLogSql("(r0 * q)")}) AS BIGINT)
        |      AS jevons_log_q
        |  FROM yp JOIN base ON l_partkey = pk0
        |  GROUP BY yr
@@ -2325,7 +2317,7 @@ object Warehouse {
        |  FROM totals CROSS JOIN base_yr WHERE yr = base_yr
        |)
        |SELECT yr, n_matched, r_tot_c, q_tot, jevons_log_q,
-       |  CAST(jevons_log_q AS DOUBLE) / CAST(n_matched * $woeScale AS DOUBLE)
+       |  CAST(jevons_log_q AS DOUBLE) / CAST(n_matched * $logScale AS DOUBLE)
        |    AS jevons_log,
        |  (CAST(r_tot_c AS DOUBLE) / r0_tot) * (CAST(q0_tot AS DOUBLE) / q_tot) AS uvi
        |FROM totals JOIN matched USING (yr) CROSS JOIN base_tot
@@ -2353,7 +2345,7 @@ object Warehouse {
     *
     * Exactness: all counts BIGINT; smoothing keeps every ln argument a
     * positive integer (2c+1 / 2n+2), so the weight is a sum of four
-    * individually-floored quantized lns ([[woeScale]] discipline) and
+    * individually-floored quantized lns ([[graft.Exact.quantLog]] discipline) and
     * the m/u probabilities are single BIGINT divisions.
     *
     * Scale (100 TB): inherits the entity-match shape — candidate
@@ -2415,36 +2407,30 @@ object Warehouse {
       s"stack(${feats.length}, " +
         feats.map(f => s"'$f', am_$f, au_$f").mkString(", ") +
         ") as (feature, agree_m, agree_u)")
-    val wq = wln($"agree_m" * 2 + 1) + wln($"n_u" * 2 + 2) -
-      wln($"agree_u" * 2 + 1) - wln($"n_m" * 2 + 2)
+    val wq = quantLog($"agree_m" * 2 + 1) + quantLog($"n_u" * 2 + 2) -
+      quantLog($"agree_u" * 2 + 1) - quantLog($"n_m" * 2 + 2)
     stacked.select($"feature", $"n_m", $"n_u", $"agree_m", $"agree_u",
         (($"agree_m" * 2 + 1).cast("double") / ($"n_m" * 2 + 2)).as("m_prob"),
         (($"agree_u" * 2 + 1).cast("double") / ($"n_u" * 2 + 2)).as("u_prob"),
         wq.as("weight_q"),
-        (wq.cast("double") / woeScale).as("weight"))
+        (wq.cast("double") / logScale).as("weight"))
       .orderBy($"feature")
   }
 
   /** Deterministic record-level sample for [[qCustFsWeights]]: the
-    * Dedup evalKeep LCG on the BASE id (`id % 500000` = the twin
-    * offset, so a twin is kept iff its source is), keeping 512/2048 =
-    * 25% of base ids — but only above [[fsSampleFloor]] records
-    * (occupancy floor: below it the sample is disabled, keep = mod).
-    * Literal RHS (object-init-cycle rule): these interpolate into
-    * oracle SQL. Max intermediate 499999 × 1103515245 ≈ 5.5e14 —
-    * inside int64 in both engines; the explicit BIGINT cast keeps the
-    * oracle correct even if the parquet id column were INT32 (DuckDB
-    * would otherwise multiply in INT32 and overflow).
+    * [[graft.Exact.sampleBucket]] of the BASE id (`id % 500000` = the
+    * twin offset, so a twin is kept iff its source is), keeping
+    * 512/2048 = 25% of base ids — but only above [[fsSampleFloor]]
+    * records (occupancy floor: below it the sample is disabled,
+    * keep = mod).
     */
-  final val fsSampleMul = 1103515245L
-  final val fsSampleAdd = 12345L
   final val fsSampleMod = 2048L
   final val fsSampleKeep = 512L
   final val fsSampleFloor = 5000L
   private def fsKeep(c: Column, keep: Long): Column =
-    ((c.cast("long") % 500000L) * fsSampleMul + fsSampleAdd) % fsSampleMod < keep
+    sampleBucket(c.cast("long"), 500000L, fsSampleMod) < keep
   private def fsKeepSqlOn(c: String, keepExpr: String): String =
-    s"((CAST($c AS BIGINT) % 500000) * $fsSampleMul + $fsSampleAdd) % $fsSampleMod < $keepExpr"
+    s"${sampleBucketSql(c, 500000L, fsSampleMod)} < $keepExpr"
 
   val qCustFsWeightsSql: String = {
     val feats = Seq("char3", "edits", "len", "prefix2")
@@ -2492,11 +2478,11 @@ object Warehouse {
        |SELECT feature, n_m, n_u, agree_m, agree_u,
        |  CAST(agree_m * 2 + 1 AS DOUBLE) / (n_m * 2 + 2) AS m_prob,
        |  CAST(agree_u * 2 + 1 AS DOUBLE) / (n_u * 2 + 2) AS u_prob,
-       |  ${wlnSql("(agree_m * 2 + 1)")} + ${wlnSql("(n_u * 2 + 2)")} -
-       |    ${wlnSql("(agree_u * 2 + 1)")} - ${wlnSql("(n_m * 2 + 2)")} AS weight_q,
-       |  CAST(${wlnSql("(agree_m * 2 + 1)")} + ${wlnSql("(n_u * 2 + 2)")} -
-       |    ${wlnSql("(agree_u * 2 + 1)")} - ${wlnSql("(n_m * 2 + 2)")} AS DOUBLE)
-       |    / $woeScale AS weight
+       |  ${quantLogSql("(agree_m * 2 + 1)")} + ${quantLogSql("(n_u * 2 + 2)")} -
+       |    ${quantLogSql("(agree_u * 2 + 1)")} - ${quantLogSql("(n_m * 2 + 2)")} AS weight_q,
+       |  CAST(${quantLogSql("(agree_m * 2 + 1)")} + ${quantLogSql("(n_u * 2 + 2)")} -
+       |    ${quantLogSql("(agree_u * 2 + 1)")} - ${quantLogSql("(n_m * 2 + 2)")} AS DOUBLE)
+       |    / $logScale AS weight
        |FROM stacked
        |ORDER BY feature""".stripMargin
   }
@@ -2504,18 +2490,6 @@ object Warehouse {
   // ------------------------------------------------------------------
   // Weight-of-evidence / information value feature audit
   // ------------------------------------------------------------------
-
-  /** Quantized-ln scale for WOE: 10⁻⁶ resolution, the registry's
-    * cross-engine log discipline (each ln is floored to an integer at
-    * this scale BEFORE any arithmetic, so both engines agree bit-for-
-    * bit). `final` literal per the init-cycle rule.
-    */
-  final val woeScale = 1000000L
-
-  private def wln(c: Column): Column =
-    floor(log(c.cast("double")) * woeScale).cast("long")
-  private def wlnSql(e: String): String =
-    s"CAST(floor(ln(CAST($e AS DOUBLE)) * $woeScale) AS BIGINT)"
 
   /** WEIGHT-OF-EVIDENCE / INFORMATION-VALUE audit — the credit-scoring
     * screen for "does this feature separate the classes, and where":
@@ -2552,15 +2526,15 @@ object Warehouse {
       .where($"n_ret" > 0 && $"n_kept" > 0)
     val tot = perBin.agg(sum($"n_ret").as("tot_ret"),
       sum($"n_kept").as("tot_kept"))
-    val woeQ = wln($"n_ret") + wln($"tot_kept") -
-      wln($"n_kept") - wln($"tot_ret")
+    val woeQ = quantLog($"n_ret") + quantLog($"tot_kept") -
+      quantLog($"n_kept") - quantLog($"tot_ret")
     val withWoe = perBin.crossJoin(tot)
       .select($"bin", $"n_ret", $"n_kept",
         woeQ.as("woe_q"),
-        (woeQ.cast("double") / woeScale).as("woe"),
+        (woeQ.cast("double") / logScale).as("woe"),
         (($"n_ret".cast("double") / $"tot_ret" -
           $"n_kept".cast("double") / $"tot_kept") *
-          (woeQ.cast("double") / woeScale)).as("iv_term"))
+          (woeQ.cast("double") / logScale)).as("iv_term"))
     val w = Window.orderBy($"bin").rowsBetween(Window.unboundedPreceding, 0)
     withWoe
       .select($"bin", $"n_ret", $"n_kept", $"woe_q", $"woe", $"iv_term",
@@ -2587,15 +2561,15 @@ object Warehouse {
        |),
        |woe AS (
        |  SELECT bin, n_ret, n_kept,
-       |    ${wlnSql("n_ret")} + ${wlnSql("tot_kept")} -
-       |      ${wlnSql("n_kept")} - ${wlnSql("tot_ret")} AS woe_q,
+       |    ${quantLogSql("n_ret")} + ${quantLogSql("tot_kept")} -
+       |      ${quantLogSql("n_kept")} - ${quantLogSql("tot_ret")} AS woe_q,
        |    (CAST(n_ret AS DOUBLE) / tot_ret - CAST(n_kept AS DOUBLE) / tot_kept) AS share_gap
        |  FROM per_bin CROSS JOIN tot
        |)
        |SELECT bin, n_ret, n_kept, woe_q,
-       |  CAST(woe_q AS DOUBLE) / $woeScale AS woe,
-       |  share_gap * (CAST(woe_q AS DOUBLE) / $woeScale) AS iv_term,
-       |  sum(share_gap * (CAST(woe_q AS DOUBLE) / $woeScale))
+       |  CAST(woe_q AS DOUBLE) / $logScale AS woe,
+       |  share_gap * (CAST(woe_q AS DOUBLE) / $logScale) AS iv_term,
+       |  sum(share_gap * (CAST(woe_q AS DOUBLE) / $logScale))
        |    OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS iv_running
        |FROM woe
        |ORDER BY bin""".stripMargin
@@ -2629,8 +2603,7 @@ object Warehouse {
     */
   def qPartSingleSource(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     val perPart = Tables.lineitem(spark, sfDir)
       .groupBy($"l_partkey")
       .agg(countDistinct($"l_suppkey").as("n_supp"),
@@ -2653,10 +2626,9 @@ object Warehouse {
   }
 
   val qPartSingleSourceSql: String =
-    """WITH per_part AS (
+    s"""WITH per_part AS (
       |  SELECT l_partkey, count(DISTINCT l_suppkey) AS n_supp,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
+      |    CAST(sum(${revenueSql("l_extendedprice", "l_discount")})
       |      * 10000 AS BIGINT) AS rev_bp
       |  FROM lineitem GROUP BY l_partkey
       |),
@@ -2717,13 +2689,12 @@ object Warehouse {
     */
   def qPartAbcXyz(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     // spread on the weekly aggregate's key
     val li = Exec.spread(Tables.lineitem(spark, sfDir)
       .select($"l_partkey",
         datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"),
-        $"l_quantity".cast(DecimalType(18, 4)).as("qd"), rev.as("rev")), $"l_partkey")
+        dec($"l_quantity").as("qd"), rev.as("rev")), $"l_partkey")
     val span = li.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select($"d0", (expr(s"(d1 - d0) div $xyzWeekDays") + 1).as("n_weeks"))
     val weekly = li.crossJoin(broadcast(span))
@@ -2767,8 +2738,7 @@ object Warehouse {
       |  SELECT l_partkey,
       |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
       |    CAST(l_quantity AS DECIMAL(18,4)) AS qd,
-      |    CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS rev
+      |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem
       |),
       |span AS (
@@ -2846,8 +2816,7 @@ object Warehouse {
     */
   def qBrandRankTau(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     val li = Tables.lineitem(spark, sfDir)
       .join(broadcast(Tables.part(spark, sfDir)
         .select($"p_partkey", $"p_brand")), $"l_partkey" === $"p_partkey")
@@ -2859,9 +2828,9 @@ object Warehouse {
     val byBrand = li.crossJoin(broadcast(span))
       .groupBy($"p_brand")
       .agg((sum(when($"dn" < $"d_mid", $"rev")
-          .otherwise(lit(0).cast(DecimalType(18, 4)))) * 10000).cast("long").as("r1"),
+          .otherwise(dec(lit(0)))) * 10000).cast("long").as("r1"),
         (sum(when($"dn" >= $"d_mid", $"rev")
-          .otherwise(lit(0).cast(DecimalType(18, 4)))) * 10000).cast("long").as("r2"))
+          .otherwise(dec(lit(0)))) * 10000).cast("long").as("r2"))
     val a = byBrand.select($"p_brand".as("ba"), $"r1".as("r1a"), $"r2".as("r2a"))
     val b = byBrand.select($"p_brand".as("bb"), $"r1".as("r1b"), $"r2".as("r2b"))
     // concordance via SIGN algebra on {-1,0,1} — a raw bp-difference
@@ -2883,11 +2852,10 @@ object Warehouse {
   }
 
   val qBrandRankTauSql: String =
-    """WITH li AS (
+    s"""WITH li AS (
       |  SELECT p_brand,
       |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS rev
+      |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem JOIN part ON l_partkey = p_partkey
       |),
       |span AS (SELECT min(dn) + (max(dn) - min(dn) + 1) // 2 AS d_mid FROM li),
@@ -2954,9 +2922,8 @@ object Warehouse {
       .select($"c_mktsegment".as("seg"),
         datediff(to_date($"o_orderdate".cast("timestamp")), lit("1970-01-01"))
           .cast("long").as("dn"),
-        $"o_totalprice".cast(DecimalType(18, 4)).as("v"))
-    val rev = (col("l_extendedprice").cast(DecimalType(18, 4)) *
-      (lit(1).cast(DecimalType(18, 4)) - col("l_discount").cast(DecimalType(18, 4))))
+        dec($"o_totalprice").as("v"))
+    val rev = revenue(col("l_extendedprice"), col("l_discount"))
     // NO spread on the lineitem side (r16 measured): the guarded
     // repartition only ever fires at bench scale (production scans fan
     // wider than the core count by themselves), and there the min-of-2
@@ -3030,8 +2997,7 @@ object Warehouse {
        |shipped AS (
        |  SELECT c_mktsegment AS seg,
        |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(l_extendedprice AS DECIMAL(18,4)) *
-       |      (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS v
+       |    ${revenueSql("l_extendedprice", "l_discount")} AS v
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  JOIN customer ON o_custkey = c_custkey
        |),
@@ -3111,9 +3077,8 @@ object Warehouse {
       .agg(count(lit(1)).as("ng"), sum($"x").as("sg"), sum($"x" * $"x").as("qg"))
     val agg = per.agg(count(lit(1)).as("k"), sum($"ng").as("n"),
       sum($"sg").as("s"), sum($"qg").as("q"),
-      expr("aggregate(array_sort(collect_list(struct(grp, ng, sg)))," +
-        " cast(0 as double), (acc, e) -> acc +" +
-        " (cast(e.sg as double) * cast(e.sg as double)) / cast(e.ng as double))")
+      expr(orderedSumExprSql("grp, ng, sg",
+        "(cast(e.sg as double) * cast(e.sg as double)) / cast(e.ng as double)"))
         .as("sum_sg2_ng"))
       .filter($"k" >= 2 && $"n" > $"k")
     val ssb = $"sum_sg2_ng" -
@@ -3148,11 +3113,7 @@ object Warehouse {
        |agg AS (
        |  SELECT count(*) AS k, CAST(sum(ng) AS BIGINT) AS n,
        |    CAST(sum(sg) AS BIGINT) AS s, CAST(sum(qg) AS BIGINT) AS q,
-       |    list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE),
-       |        list((CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)) / CAST(ng AS DOUBLE)
-       |          ORDER BY grp)),
-       |      (a, b) -> a + b) AS sum_sg2_ng
+       |    ${orderedSumSql("(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)) / CAST(ng AS DOUBLE)", "grp")} AS sum_sg2_ng
        |  FROM per
        |)
        |SELECT k AS n_groups, n AS n_lines,

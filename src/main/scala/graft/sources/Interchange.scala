@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact.{checksum, checksumSql, dec}
 import graft.model.Tables
 
 /** Columnar interchange beyond parquet: ORC, the other columnar format
@@ -25,9 +26,6 @@ import graft.model.Tables
   */
 object Interchange {
 
-  /** Modular-checksum prime (2⁶¹−1), shared with the JSONL round-trip. */
-  private val checksumP = graft.ext.CorpusOps.checksumP
-
   /** Events → ORC → read back → per-type counts, exact decimal value
     * mass, id checksum mod 2⁶¹−1, and the covered time span in epoch
     * micros. Any encode/decode infidelity (type narrowing, timestamp
@@ -43,9 +41,8 @@ object Interchange {
     spark.read.orc(dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
-        (sum(col("event_id").cast("decimal(38,0)")) % lit(checksumP))
-          .cast("long").as("id_checksum"),
+        sum(dec(col("value"))).cast("double").as("sum_value"),
+        checksum(col("event_id")).as("id_checksum"),
         min(unix_micros(col("ts"))).as("ts_lo"),
         max(unix_micros(col("ts"))).as("ts_hi"))
       .orderBy(col("event_type"))
@@ -54,7 +51,7 @@ object Interchange {
   val qEventOrcRoundtripSql: String =
     s"""SELECT event_type, count(*) AS n,
        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-       |  CAST(sum(CAST(event_id AS DECIMAL(38,0))) % $checksumP AS BIGINT) AS id_checksum,
+       |  ${checksumSql("event_id")} AS id_checksum,
        |  min(epoch_us(ts)) AS ts_lo, max(epoch_us(ts)) AS ts_hi
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 

@@ -5,8 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{DataFrame, Dataset}
+
+import graft.Exact.dec
 
 /** Event-time streaming operators over the `events` stream shape
   * (`ts timestamp, user_id long, event_type string, value double`) —
@@ -53,7 +54,7 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total_value"))
+        sum(dec(col("value"))).cast("double").as("total_value"))
       .select(col("window.start").as("hour"), col("event_type"), col("n"), col("total_value"))
 
   /** Streaming HOP (sliding) windows: the overlapping-window form of
@@ -70,7 +71,7 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total_value"))
+        sum(dec(col("value"))).cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
 

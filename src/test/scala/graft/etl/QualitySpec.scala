@@ -95,7 +95,7 @@ class QualitySpec extends SparkSuite {
       .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey")).count()
     assert(out.map(_.getAs[Long]("orders_via_pseudo")).sum === direct)
     // the released key column carries hashes, not raw custkeys
-    import graft.ext.TextOps.portableHash
+    import graft.Exact.portableHash
     val masked = Tables.customer(spark, sf)
       .select(portableHash(concat_ws("",
         lit(Quality.pseudoSalt), col("c_custkey").cast("string"))).as("pk"),

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{Exact, SparkSuite}
 import graft.model.Tables
 
 /** Semantics tests for the corpus-management operators: passage dedup
@@ -509,8 +509,8 @@ class CorpusOpsSpec extends SparkSuite {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("sum_chars"),
-        (sum(TextOps.portableHash(col("text")).cast("decimal(38,0)")) %
-          lit(CorpusOps.checksumP)).cast("long").as("content_sum"))
+        (sum(Exact.portableHash(col("text")).cast("decimal(38,0)")) %
+          lit(Exact.checksumP)).cast("long").as("content_sum"))
       .orderBy(col("lang")).collect()
     assert(rt.map(_.toSeq).toSeq === direct.map(_.toSeq).toSeq)
   }
@@ -689,9 +689,9 @@ class CorpusOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
-    val P = TextOps.HashP
+    val P = Exact.HashP
     val w = CorpusOps.cdcWindow
     def chunksOf(text: String): Seq[(Long, Int)] = {
       val ths = text.split(" ").map(h31).toIndexedSeq
@@ -746,7 +746,7 @@ class CorpusOpsSpec extends SparkSuite {
     def bucket(bg: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(bg.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      (java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP) % b
+      (java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP) % b
     }
     val grams = docs.filter(_._3.length >= 2).map { case (id, lang, ts) =>
       (id, lang, ts.sliding(2).map(w => bucket(w.mkString(" "))).toSeq)

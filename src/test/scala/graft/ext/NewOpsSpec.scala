@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{Exact, SparkSuite}
 import graft.model.Tables
 import graft.queries.Analytics
 
@@ -177,8 +177,8 @@ class NewOpsSpec extends SparkSuite {
     df.createOrReplaceTempView("nos_docs")
     val fp = spark.sql(
       s"""SELECT doc_id, aggregate(transform(split(text, ' '),
-         |  s -> ${TextOps.h31ExprSql("s")}),
-         |  0L, (acc, h) -> (acc * ${Dedup.rollingBase} + h) % ${TextOps.HashP}) AS fp
+         |  s -> ${Exact.h31ExprSql("s")}),
+         |  0L, (acc, h) -> (acc * ${Dedup.rollingBase} + h) % ${Exact.HashP}) AS fp
          |FROM nos_docs""".stripMargin).collect().map(_.getLong(1))
     assert(fp(0) !== fp(1))
   }
@@ -352,7 +352,7 @@ class NewOpsSpec extends SparkSuite {
     val spark0 = spark
     import spark0.implicits._
     val raw = Tables.documents(spark, sf).filter(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id"), TextOps.portableHash(col("text")).as("fp"))
+      .select(col("doc_id"), Exact.portableHash(col("text")).as("fp"))
       .as[(Long, Long)].collect().toMap
     rows.filter(_.getAs[Long]("doc_id") % 10 != 0).foreach { r =>
       assert(r.getAs[Long]("redacted_fp") === raw(r.getAs[Long]("doc_id")))
@@ -604,7 +604,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     val w = Dedup.winnowW
     val fps = corpus.map { case (id, text) =>
@@ -724,7 +724,7 @@ class NewOpsSpec extends SparkSuite {
     // is keyed on the base id, so a planted pair is in or out atomically)
     val planted = graft.model.Tables.documents(spark, sf)
       .filter(col("doc_id") % 25 === 0).collect().map(_.getAs[Long]("doc_id"))
-      .count(id => ((id % 100000L) * Dedup.evalSampleMul + Dedup.evalSampleAdd)
+      .count(id => ((id % 100000L) * Exact.lcgMul + Exact.lcgAdd)
         % Dedup.evalSampleMod < Dedup.evalSampleKeep)
     assert(planted > 0, "sample must retain at least one planted pair")
     assert(nTrue >= planted)
@@ -942,7 +942,7 @@ class NewOpsSpec extends SparkSuite {
       .groupBy("t").count().collect()
       .map(r => (r.getAs[String]("t"), r.getAs[Long]("count")))
       .sortBy { case (t, c) => (-c, t) }.take(TextOps.zipfRanks)
-    def ql(v: Long): Long = math.floor(math.log(v.toDouble) * TextOps.logScale).toLong
+    def ql(v: Long): Long = math.floor(math.log(v.toDouble) * Exact.logScale).toLong
     val pts = tf.zipWithIndex.map { case ((_, c), i) => (ql(i + 1L), ql(c)) }
     val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
     val sxy = pts.map(p => p._1 * p._2).sum
@@ -3069,7 +3069,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     val freqs = Tables.orders(spark, sf)
       .select(col("o_custkey")).collect().map(_.getLong(0))
@@ -3248,7 +3248,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     def rawHash(sv: String): Long = {
       val md = MessageDigest.getInstance("MD5")
@@ -3616,7 +3616,7 @@ class NewOpsSpec extends SparkSuite {
     }
     val baseYr = yp.keys.map(_._1).min
     val base = yp.collect { case ((y, pk), rq) if y == baseYr => pk -> rq }.toMap
-    val ws = graft.queries.Warehouse.woeScale
+    val ws = graft.Exact.logScale
     def wq(x: Long): Long = math.floor(math.log(x.toDouble) * ws).toLong
     val rows = graft.queries.Warehouse.qPriceIndex(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("yr")).toSeq === yp.keys.map(_._1).toSeq.distinct.sorted)
@@ -3777,7 +3777,7 @@ class NewOpsSpec extends SparkSuite {
     val totR = perBin.values.map(_._1).sum
     val totK = perBin.values.map(_._2).sum
     def wq(x: Long): Long =
-      math.floor(math.log(x.toDouble) * graft.queries.Warehouse.woeScale).toLong
+      math.floor(math.log(x.toDouble) * graft.Exact.logScale).toLong
     val rows = graft.queries.Warehouse.qLineWoe(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("bin")).toSeq === perBin.keys.toSeq.sorted)
     var run = 0.0
@@ -3787,7 +3787,7 @@ class NewOpsSpec extends SparkSuite {
       assert(r.getAs[Long]("n_kept") === nk)
       val q = wq(nr) + wq(totK) - wq(nk) - wq(totR)
       assert(r.getAs[Long]("woe_q") === q)
-      val woe = q.toDouble / graft.queries.Warehouse.woeScale
+      val woe = q.toDouble / graft.Exact.logScale
       assert(r.getAs[Double]("woe") === woe)
       val iv = (nr.toDouble / totR - nk.toDouble / totK) * woe
       assert(r.getAs[Double]("iv_term") === iv)
@@ -3800,7 +3800,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     val keys = Tables.documents(spark, sf).select(col("doc_id")).collect()
       .map(r => h31(r.getLong(0).toString)).distinct
@@ -3871,7 +3871,7 @@ class NewOpsSpec extends SparkSuite {
     val rows = graft.queries.Warehouse.qCustFsWeights(spark, sf).collect()
     assert(rows.map(_.getAs[String]("feature")).toSeq ===
       Seq("char3", "edits", "len", "prefix2"))
-    val ws = graft.queries.Warehouse.woeScale
+    val ws = graft.Exact.logScale
     rows.foreach { r =>
       val (nm, nu) = (r.getAs[Long]("n_m"), r.getAs[Long]("n_u"))
       val (am, au) = (r.getAs[Long]("agree_m"), r.getAs[Long]("agree_u"))
@@ -4051,7 +4051,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(sv: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(sv.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     val thresholds =
       Array(367879L, 735758L, 919698L, 981011L, 996340L, 999405L, 999916L, 999989L)
@@ -5353,13 +5353,13 @@ class NewOpsSpec extends SparkSuite {
     def h31(s: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     val ids = Tables.documents(spark, sf).select(col("doc_id")).collect()
       .map(_.getLong(0))
     def keyOf(id: Long, e: Int): Long =
       if (e == 0) id
-      else (h31(id.toString) * (1103515245L + e)) % TextOps.HashP
+      else (h31(id.toString) * (1103515245L + e)) % Exact.HashP
     // global per-epoch rank by (key, doc_id) — the two-level decomposition
     // must equal this naive global sort
     val posOf = (0 to TextOps.shuffleEpochs).map { e =>
@@ -5394,7 +5394,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(s: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     def optD(r: org.apache.spark.sql.Row, c: String): Option[Double] =
       if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getDouble(r.fieldIndex(c)))
@@ -5414,7 +5414,7 @@ class NewOpsSpec extends SparkSuite {
       exactDf.schema.map(f => (f.name, f.dataType)),
       "coarse path must keep the exact path's output contract")
     def keyOf(id: Long, e: Int): Long =
-      if (e == 0) id else (h31(id.toString) * (1103515245L + e)) % TextOps.HashP
+      if (e == 0) id else (h31(id.toString) * (1103515245L + e)) % Exact.HashP
     val ids = (0L until n).toArray
     // coarse rank: g = ((pos−1)·G) div n, pos = 1-based (key, id) rank
     val gposOf = (0 to TextOps.shuffleEpochs).map { e =>
@@ -5559,7 +5559,7 @@ class NewOpsSpec extends SparkSuite {
     def h31(s: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(md.take(15), 16) % TextOps.HashP
+      java.lang.Long.parseLong(md.take(15), 16) % Exact.HashP
     }
     def norm(s: String): String =
       s.toLowerCase.replaceAll("[^a-z0-9 ]", " ").replaceAll(" +", " ").trim
@@ -5577,7 +5577,7 @@ class NewOpsSpec extends SparkSuite {
       }.mkString(" ")
     def bandKeys(hs: Set[Long]): Set[(Int, String)] = {
       val mins = Dedup.decontamCoefs.map { case (a, b) =>
-        hs.map(h => (h * a + b) % TextOps.HashP).min
+        hs.map(h => (h * a + b) % Exact.HashP).min
       }
       (0 until Dedup.decontamBands).map { b =>
         b -> (0 until Dedup.decontamRowsPerBand)

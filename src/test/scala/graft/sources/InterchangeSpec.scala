@@ -32,7 +32,7 @@ class InterchangeSpec extends SparkSuite {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
-        (sum(col("event_id").cast("decimal(38,0)")) % lit(graft.ext.CorpusOps.checksumP))
+        (sum(col("event_id").cast("decimal(38,0)")) % lit(graft.Exact.checksumP))
           .cast("long").as("id_checksum"),
         min(unix_micros(col("ts"))).as("ts_lo"),
         max(unix_micros(col("ts"))).as("ts_hi"))
