@@ -43,9 +43,11 @@ object Exec {
     if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
   }
 
-  /** Cache `df` now: `persist()` at the default storage level, then one
-    * `count()` to fill it, and return `df` itself. The materialization
-    * rule, in one place:
+  /** Cache `df` now: `persist()` at the default storage level, then fill
+    * it with one write to the `noop` sink, and return `df` itself. The
+    * write is one Spark job over the cached scan; a `count()` would add
+    * its partial-aggregate and result stages as two more jobs under AQE.
+    * The materialization rule, in one place:
     *
     *   - `share` a frame that several branches of ONE later job read
     *     (both sides of a self-join, sibling broadcast builds, concurrent
@@ -53,7 +55,7 @@ object Exec {
     *     re-runs the frame's lineage instead of reading the cache.
     *   - `persist()` lazily when the consumers are sequential actions:
     *     the first one fills the cache inside its own job, so an eager
-    *     count would only add a job.
+    *     fill would only add a job.
     *   - `localCheckpoint(true)` when reuse would re-expand a large
     *     subtree in every later plan string (composed stream stages) or a
     *     loop must cut its lineage each round; those blocks free through
@@ -66,7 +68,7 @@ object Exec {
     */
   def share(df: DataFrame): DataFrame = {
     df.persist()
-    try df.count()
+    try df.write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => df.unpersist(); throw e }
     df
   }

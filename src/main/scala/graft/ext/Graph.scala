@@ -1,9 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
+import graft.Exec
 import graft.Exec.spread
 import graft.model.Tables
 
@@ -26,13 +31,12 @@ import graft.model.Tables
   * < deg⁺ · 1/SCALE per node per round. Neither affects ordering at any
   * realistic scale and both are deterministic.
   *
-  * Scale (100 TB graph): one iteration = one join of edges against the
-  * |V|-row rank table (shuffle keyed on src — co-partition edges by src
-  * at write time and the probe is exchange-free on the edge side) + one
-  * dst-keyed partial aggregate. State per round is |V| rows, lineage is
-  * truncated per round ([[Dedup.connectedComponents]]'s eager
-  * localCheckpoint pattern) so plans stay O(1) deep regardless of
-  * iteration count.
+  * Scale: [[pageRank]] and [[shortestPaths]] fold their fixed rounds on
+  * the driver over one collect of the node ids and one of the edge pairs,
+  * so they hold O(|V| + |E|) in driver memory and pay no job per round.
+  * Their callers build the graph distributed and reduce it first: the
+  * purchase graph's edges are distinct (customer, supplier) pairs, at
+  * most |customer|·|supplier|; textrank's are distinct vocabulary pairs.
   */
 object Graph {
 
@@ -47,44 +51,104 @@ object Graph {
   /** Scaled-integer rank unit: 1.0 == 10¹². */
   val rankScale: Long = 1000000000000L
 
+  /** A graph collected to the driver for [[pageRank]] and
+    * [[shortestPaths]]: one collect each of `nodes.id`, `edges(src, dst)`
+    * and `sources.id`, run concurrently. Each distinct non-null node id is
+    * a slot; `rowSlot` maps every node row to its slot (-1 for a null id),
+    * `copies` counts the node rows per slot and `sourceCopies` the source
+    * rows per slot. `from`/`to` hold the edges whose ends are both nodes;
+    * `deg` counts, per slot, every edge row whose `src` is it.
+    *
+    * Ids match as Spark's equi-join matches them: integral ids widen to
+    * `Long` (the join coerces mixed integral keys), strings stay strings,
+    * null matches nothing. The id columns must all be integral or all be
+    * strings: Spark's join normalizes float keys (NaN, -0.0) and a JVM
+    * hash map does not.
+    */
+  private final class DriverGraph(nodes: DataFrame, edges: DataFrame,
+      sources: Option[DataFrame] = None) {
+    private val idField = nodes.schema("id")
+    private val types = Seq(idField.dataType, edges.schema("src").dataType,
+      edges.schema("dst").dataType) ++ sources.map(_.schema("id").dataType)
+    private val integral = types.forall {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    require(integral || types.forall(_ == StringType),
+      s"graph ids must all be integral or all be strings, got ${types.mkString(", ")}")
+    private val key: Any => Any =
+      if (integral) { case n: Number => n.longValue; case _ => null } else identity
+
+    private val Seq(nodeRows, edgeRows, sourceRows) = Exec.concurrently(
+      () => nodes.select(col("id")).collect(),
+      () => edges.select(col("src"), col("dst")).collect(),
+      () => sources.fold(Array.empty[Row])(_.select(col("id")).collect()))
+    private val ids = nodeRows.map(_.get(0))
+    private val slotOf = mutable.HashMap.empty[Any, Int]
+    private val rowSlot = ids.map(id =>
+      Option(key(id)).fold(-1)(k => slotOf.getOrElseUpdate(k, slotOf.size)))
+    val size: Int = slotOf.size
+    val copies = new Array[Long](size)
+    rowSlot.foreach(s => if (s >= 0) copies(s) += 1)
+    val sourceCopies = new Array[Long](size)
+    sourceRows.foreach(r => slot(r.get(0)).foreach(sourceCopies(_) += 1))
+
+    val deg = new Array[Long](size)
+    val (from, to) = {
+      val fromB, toB = mutable.ArrayBuilder.make[Int]
+      edgeRows.foreach { r =>
+        slot(r.get(0)).foreach { s =>
+          deg(s) += 1
+          slot(r.get(1)).foreach { d => fromB += s; toB += d }
+        }
+      }
+      (fromB.result(), toB.result())
+    }
+
+    def slot(id: Any): Option[Int] = slotOf.get(key(id))
+
+    /** `(id, name)` rows: for each node row, in order, one row per value
+      * `values` gives its slot (-1 for a null id).
+      */
+    def emit(name: String)(values: Int => Seq[Long]): DataFrame = {
+      val rows = ids.indices.flatMap(i => values(rowSlot(i)).map(x => Row(ids(i), x)))
+      nodes.sparkSession.createDataFrame(rows.asJava,
+        StructType(Seq(idField, StructField(name, LongType, nullable = false))))
+    }
+  }
+
   /** Iterative PageRank over `edges(src, dst)` for the node set
     * `nodes(id)` (nodes carry rank even with no edges — they keep the
-    * teleport mass). Returns `(id, rank_scaled)`; damping fixed at the
-    * canonical 0.85 as an exact rational 85/100.
+    * teleport mass). Returns `(id, rank_scaled)`, `id` typed as `nodes.id`;
+    * damping fixed at the canonical 0.85 as an exact rational 85/100.
+    *
+    * The rounds fold on the driver ([[DriverGraph]]) in `Long`, with the
+    * floor divisions of the relational form; `Math.addExact` and
+    * `multiplyExact` throw on overflow as the ANSI `sum` does. Its join
+    * semantics hold: a null id sits at teleport rank; an edge whose `src`
+    * is not a node counts in `deg⁺` but carries no rank; an edge whose
+    * `dst` is not a node is dropped; an id listed k times sends its
+    * contribution k times and is emitted k times.
+    *
+    * Scale: driver memory O(|V| + |E|), O(|E|) work per round.
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
-    val spark = nodes.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // contributions depend only on (src rank, outdeg): pre-join once, and
-    // MATERIALIZE — every iteration probes this frame, and without the
-    // checkpoint the caller's whole edge-construction pipeline (often a
-    // join+distinct) re-executes per round (measured 3× cost at iters=3)
-    val srcSide = e.join(outdeg, "src").localCheckpoint(true)
-    var ranks = nodes.select(col("id"), lit(rankScale).as("r"))
-    var it = 0
-    while (it < iters) {
-      val inbox = srcSide
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("r div deg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      ranks = nodes.select(col("id"))
-        .join(inbox, Seq("id"), "left")
-        .select(col("id"),
-          (lit(rankScale * 15 / 100) +
-            expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
-      // truncate lineage every SECOND round (and on the last): each rank
-      // frame is consumed exactly once (the next round's inbox join), so
-      // deferring the cut duplicates NO work — it only deepens the plan
-      // by one bounded round — while halving the eager driver barriers
-      // (r16, verdict #3: at bench SF each barrier is a fixed
-      // scheduler round-trip; at 100 TB plan depth stays O(1) in iters)
-      if (it % 2 == 1 || it == iters - 1)
-        ranks = ranks.localCheckpoint(true)
-      it += 1
+    val g = new DriverGraph(nodes, edges)
+    val teleport = rankScale * 15 / 100
+    var rank = Array.fill(g.size)(rankScale)
+    for (_ <- 1 to iters) {
+      val inbox = new Array[Long](g.size)
+      var e = 0
+      while (e < g.from.length) {
+        val s = g.from(e)
+        val d = g.to(e)
+        inbox(d) = Math.addExact(inbox(d), Math.multiplyExact(g.copies(s), rank(s) / g.deg(s)))
+        e += 1
+      }
+      rank = inbox.map(x => Math.addExact(teleport, Math.multiplyExact(85L, x) / 100))
     }
-    ranks.select(col("id"), col("r").as("rank_scaled"))
+    g.emit("rank_scaled")(s => Seq(if (s < 0) teleport else rank(s)))
   }
 
   /** Supplier-id offset into the shared node-id space: customer keys and
@@ -198,41 +262,35 @@ object Graph {
     * `maxHops` rounds — after round h every node within h hops of a
     * source carries its exact hop distance. The relational form of
     * Pregel's shortest-path program; [[unreached]] keeps the fold in
-    * sentinel integers.
+    * sentinel integers. Returns `(id, hops)`, `id` typed as `nodes.id`.
     *
-    * Scale: identical shape to [[pageRank]] — per round one src-keyed
-    * join of edges against the |V|-row frontier and one dst-keyed
-    * partial-agg min (map-side combined), with per-round lineage
-    * truncation. Rounds = graph diameter bound, a plan constant.
+    * The rounds fold on the driver ([[DriverGraph]]) with the join
+    * semantics of the relational form: a null id stays [[unreached]]; an
+    * edge with an end that is not a node is dropped; a node row is
+    * emitted once per source row with its id (once if none), as the left
+    * join of nodes with sources emits it.
+    *
+    * Scale: driver memory O(|V| + |E|); each round is O(|E|). Rounds =
+    * graph diameter bound, a plan constant.
     */
   def shortestPaths(nodes: DataFrame, edges: DataFrame, sources: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1, "shortestPaths needs at least one round")
-    // materialized once: each relaxation round re-probes the edge frame
-    // (see pageRank's srcSide note)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var dist = nodes.select(col("id"))
-      .join(sources.select(col("id"), lit(0L).as("s0")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("s0"), lit(unreached)).as("d"))
-    var it = 0
-    while (it < maxHops) {
-      val relaxed = e
-        .join(dist.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("d") + 1).as("nd"))
-        .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-      dist = dist.join(relaxed, Seq("id"), "left")
-        .select(col("id"), least(col("d"), coalesce(col("nd"), lit(unreached))).as("d"))
-        // eager cut EVERY round — measured, do not batch (r16, verdict
-        // #3 experiment): each dist frame is referenced TWICE by the
-        // next round (relax probe + keep join), and with the cut
-        // deferred the duplicate |V|-row merge re-executes above the
-        // reused exchanges — interleaved A/B min 3.08 → 3.33 s at
-        // sf0.1. Contrast pageRank, whose single-reference chain keeps
-        // the 2-round batch for free.
-        .localCheckpoint(true)
-      it += 1
+    val g = new DriverGraph(nodes, edges, Some(sources))
+    var dist = g.sourceCopies.map(n => if (n > 0) 0L else unreached)
+    for (_ <- 1 to maxHops) {
+      val next = dist.clone()
+      var e = 0
+      while (e < g.from.length) {
+        val s = g.from(e)
+        val d = g.to(e)
+        next(d) = math.min(next(d), dist(s) + 1)
+        e += 1
+      }
+      dist = next
     }
-    dist.select(col("id"), col("d").as("hops"))
+    g.emit("hops")(s =>
+      if (s < 0) Seq(unreached) else Seq.fill(math.max(1L, g.sourceCopies(s)).toInt)(dist(s)))
   }
 
   /** Hop distance from the first two suppliers through the UNDIRECTED
@@ -468,8 +526,7 @@ object Graph {
         // #3 experiment): the edge frame feeds the next round's degree
         // agg AND both semi-join probes (3 references), so a deferred
         // cut re-executes the semi-join merges per reference —
-        // interleaved A/B min 2.73 → 2.97 s at sf0.1. See shortestPaths
-        // for the same counter-case and pageRank for the case that won.
+        // interleaved A/B min 2.73 → 2.97 s at sf0.1.
         .localCheckpoint(true)
       it += 1
     }
@@ -678,11 +735,10 @@ object Graph {
     * Scale (100 TB): each phase is one fwd⋈labels equi-join +
     * per-(node,label) count (map-side combined) + one arg-max per node —
     * all key-partitioned, no global state; labels materialize per round
-    * (localCheckpoint) so plans stay O(1) deep, the module's pageRank
-    * discipline. The scalar vote key bounds cnt·scale in BIGINT up to
-    * ~10¹¹ votes per (node,label); past that move the key to a
-    * (cnt, −label) struct Spark-side (the oracle's arg_max key is the
-    * only scalar-bound piece).
+    * (localCheckpoint) so plans stay O(1) deep. The scalar vote key
+    * bounds cnt·scale in BIGINT up to ~10¹¹ votes per (node,label); past
+    * that move the key to a (cnt, −label) struct Spark-side (the
+    * oracle's arg_max key is the only scalar-bound piece).
     */
   /** The labelprop core shared with [[qGraphModularity]]: the DOMESTIC
     * purchase graph (customer↔supplier edges restricted to same-nation

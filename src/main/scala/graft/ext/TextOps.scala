@@ -3127,10 +3127,10 @@ object TextOps {
     * scaled-integer rank, bit-identical at any parallelism.
     *
     * Scale (100 TB): the graph is VOCABULARY-sized (Zipf-bounded
-    * nodes, distinct adjacent pairs as edges) — corpus rows are gone
-    * after the two distinct-gram aggregates; each PageRank round is a
-    * vocab-keyed join + partial agg with per-round lineage truncation
-    * ([[Graph.pageRank]]'s contract).
+    * nodes, distinct adjacent vocabulary pairs as edges) — corpus rows
+    * are gone after the two distinct-gram aggregates, and
+    * [[Graph.pageRank]] folds the rounds on the driver over that graph:
+    * O(|vocab| + |vocab pairs|) driver memory.
     */
   def qDocTextrank(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)

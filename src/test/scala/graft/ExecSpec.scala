@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   */
 class ExecSpec extends SparkSuite {
 
-  test("share: one count fills the cache of the same frame, and a later action reads it") {
+  test("share: one job fills the cache of the same frame, and a later action reads it") {
     spark.catalog.clearCache()
     // every evaluation of the frame's projection ticks the accumulator
     val evals = spark.sparkContext.longAccumulator("share-evals")
@@ -27,11 +27,12 @@ class ExecSpec extends SparkSuite {
     val df = frame
     val (shared, jobs) = withJobs(Exec.share(df))
     assert(shared eq df)
-    // one action: under AQE the count's query stages (the cache fill, the
-    // partial aggregate, the result) are separate jobs of ONE execution
     val roots = jobs.map(_.getProperty("spark.sql.execution.root.id")).distinct
     assert(roots.size === 1 && roots.head != null, s"one SQL execution, got $roots")
-    assert(jobs.size === pairJobs, "exactly the jobs of the hand-written pair")
+    // the fill is one job; under AQE the pair's count also runs its
+    // partial-aggregate and result stages as jobs
+    assert(jobs.size === 1, s"one job fills the cache, got ${jobs.size}")
+    assert(pairJobs > jobs.size, s"the hand-written pair ran $pairJobs jobs")
     assert(shared.storageLevel !== StorageLevel.NONE)
     assert(evals.value === 1000L, "the fill evaluated every row once")
     evals.reset()

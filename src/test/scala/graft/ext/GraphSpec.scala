@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -10,18 +11,57 @@ import graft.SparkSuite
   */
 class GraphSpec extends SparkSuite {
 
-  private def localPageRank(
-      nodes: Seq[Long], edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+  private def localPageRank[K](
+      nodes: Seq[K], edges: Seq[(K, K)], iters: Int): Map[K, Long] = {
     val scale = Graph.rankScale
     val outdeg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     var r = nodes.map(_ -> scale).toMap
     for (_ <- 1 to iters) {
-      val inbox = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+      val inbox = scala.collection.mutable.Map.empty[K, Long].withDefaultValue(0L)
       for ((s, d) <- edges) inbox(d) += r(s) / outdeg(s)
       r = nodes.map(n => n -> (scale * 15 / 100 + 85 * inbox(n) / 100)).toMap
     }
     r
   }
+
+  /** The relational rounds the driver folds replace, as join semantics
+    * reference: rank rows join edges on src, contributions sum per dst,
+    * node rows left-join the sums.
+    */
+  private def framePageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    val srcSide = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
+    var ranks = nodes.select(col("id"), lit(Graph.rankScale).as("r"))
+    for (_ <- 1 to iters) {
+      val inbox = srcSide.join(ranks.withColumnRenamed("id", "src"), "src")
+        .select(col("dst").as("id"), expr("r div deg").as("c"))
+        .groupBy(col("id")).agg(sum(col("c")).as("s"))
+      ranks = nodes.select(col("id")).join(inbox, Seq("id"), "left")
+        .select(col("id"),
+          (lit(Graph.rankScale * 15 / 100) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+    }
+    ranks.select(col("id"), col("r").as("rank_scaled"))
+  }
+
+  /** The relational min-plus rounds, as [[framePageRank]] is for ranks. */
+  private def frameShortestPaths(nodes: DataFrame, edges: DataFrame, sources: DataFrame,
+      maxHops: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    var dist = nodes.select(col("id"))
+      .join(sources.select(col("id"), lit(0L).as("s0")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("s0"), lit(Graph.unreached)).as("d"))
+    for (_ <- 1 to maxHops) {
+      val relaxed = e.join(dist.withColumnRenamed("id", "src"), "src")
+        .select(col("dst").as("id"), (col("d") + 1).as("nd"))
+        .groupBy(col("id")).agg(min(col("nd")).as("nd"))
+      dist = dist.join(relaxed, Seq("id"), "left")
+        .select(col("id"), least(col("d"), coalesce(col("nd"), lit(Graph.unreached))).as("d"))
+    }
+    dist.select(col("id"), col("d").as("hops"))
+  }
+
+  /** A result's rows as a sorted multiset, so duplicate rows count. */
+  private def bag(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("pageRank matches a local sequential replay of the integer recurrence") {
     import spark.implicits._
@@ -39,6 +79,76 @@ class GraphSpec extends SparkSuite {
     val outside = Seq(1L, 2L, 3L).map(out)
     assert(Seq(4L, 5L).map(out).min > outside.max)
     assert(out(3L) === Graph.rankScale * 15 / 100)
+  }
+
+  test("pageRank over string ids (textrank's shape) matches the local replay") {
+    import spark.implicits._
+    val nodes = Seq("graph", "rank", "token", "word", "lonely")
+    val fwd = Seq("graph" -> "rank", "rank" -> "token", "token" -> "word", "graph" -> "word")
+    val edges = fwd ++ fwd.map(_.swap)
+    val out = Graph.pageRank(nodes.toDF("id"), edges.toDF("src", "dst"), iters = 3)
+    assert(out.schema("id").dataType === org.apache.spark.sql.types.StringType)
+    val got = out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got === localPageRank(nodes, edges, iters = 3))
+  }
+
+  test("pageRank keeps the relational join semantics for null, duplicate and non-node ids") {
+    import spark.implicits._
+    // node 2 is listed twice, one node id is null; edge src 9 and dst 8
+    // are not nodes; one edge has a null dst and one a null src
+    val nodes = Seq(Some(1L), Some(2L), Some(2L), None, Some(3L)).toDF("id")
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(2L), Some(8L)), (Some(9L), Some(3L)),
+      (Some(3L), Some(1L)), (Some(3L), None), (None, Some(1L)), (Some(1L), Some(3L)))
+      .toDF("src", "dst")
+    val out = Graph.pageRank(nodes, edges, iters = 3)
+    assert(bag(out) === bag(framePageRank(nodes, edges, iters = 3)))
+    val rows = out.collect()
+    assert(rows.length === 5)
+    assert(rows.filter(_.isNullAt(0)).map(_.getLong(1)).toSeq === Seq(Graph.rankScale * 15 / 100))
+    // integer node ids join long edge ids, and keep their own type
+    val intNodes = Seq(1, 2, 2, 3).toDF("id")
+    val intOut = Graph.pageRank(intNodes, edges, iters = 2)
+    assert(intOut.schema("id").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(bag(intOut) === bag(framePageRank(intNodes, edges, iters = 2)))
+    // float keys are refused: Spark's join normalizes NaN and -0.0
+    intercept[IllegalArgumentException] {
+      Graph.pageRank(Seq(1.0).toDF("id"), Seq((1.0, 1.0)).toDF("src", "dst"), 1)
+    }
+  }
+
+  test("pageRank throws on a rank overflow, as the ANSI sum does") {
+    import spark.implicits._
+    // node 1 listed 120 000 times sends 120 000 full ranks to node 2;
+    // 85 times that sum exceeds Long.MaxValue
+    val nodes = (Seq.fill(120000)(1L) :+ 2L).toDF("id")
+    intercept[ArithmeticException] {
+      Graph.pageRank(nodes, Seq((1L, 2L)).toDF("src", "dst"), iters = 1)
+    }
+  }
+
+  test("shortestPaths keeps the relational join semantics for null, duplicate and non-node ids") {
+    import spark.implicits._
+    // node 2 is listed twice and is a source twice; 7 is a source but no node
+    val nodes = Seq(Some(1L), Some(2L), Some(2L), None, Some(3L), Some(4L)).toDF("id")
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(3L)), (Some(3L), Some(4L)), (Some(7L), Some(1L)), (Some(3L), Some(9L)),
+      (None, Some(1L)), (Some(4L), None)).toDF("src", "dst")
+    val sources = Seq(Some(2L), Some(2L), Some(7L), None).toDF("id")
+    val out = Graph.shortestPaths(nodes, edges, sources, maxHops = 3)
+    assert(bag(out) === bag(frameShortestPaths(nodes, edges, sources, maxHops = 3)))
+    assert(out.count() === 8)
+  }
+
+  test("the folds run few Spark jobs: pageRank at most 2, shortestPaths at most 3") {
+    import spark.implicits._
+    val nodes = (1L to 40L).toDF("id")
+    val edges = ((1L to 39L).map(i => (i, i + 1)) :+ (40L -> 1L)).toDF("src", "dst")
+    val (_, prJobs) = withJobCount(Graph.pageRank(nodes, edges, 3).collect())
+    assert(prJobs <= 2, s"pageRank ran $prJobs jobs")
+    val (_, spJobs) = withJobCount(
+      Graph.shortestPaths(nodes, edges, Seq(1L).toDF("id"), maxHops = 4).collect())
+    assert(spJobs <= 3, s"shortestPaths ran $spJobs jobs")
   }
 
   test("purchase-graph ranks: suppliers absorb rank, customers stay at teleport") {
