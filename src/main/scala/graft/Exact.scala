@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** How a value is computed identically in Spark and DuckDB, decided once:
-  * fixed-point money, the portable content hash, the quantized natural
-  * log, the key-ordered double sum, the LCG sample bucket and the
-  * checksum modulus. Every registry query is checked against DuckDB
+  * fixed-point money, epoch-day calendar keys, the portable content hash,
+  * the quantized natural log, the key-ordered double sum, the LCG sample
+  * bucket and the checksum modulus. Every registry query is checked against DuckDB
   * running its oracle SQL and must give bit-identical answers, so each
   * rule is held here as its Spark `Column` form, its DuckDB SQL twin for
   * the oracles and, where a query builds the expression inside an
@@ -68,10 +68,36 @@ object Exact {
     */
   def units(c: Column, per: Int): Column = (dec(c) * per).cast("long")
 
-  private def decSql(e: String): String = s"CAST($e AS DECIMAL(18,4))"
+  /** [[dec]] in DuckDB SQL; Spark SQL parses the same text, so `expr`
+    * strings use it too.
+    */
+  def decSql(e: String): String = s"CAST($e AS DECIMAL(18,4))"
   def revenueSql(price: String, discount: String): String =
     s"${decSql(price)} * (${decSql("1")} - ${decSql(discount)})"
   def unitsSql(e: String, per: Int): String = s"CAST(${decSql(e)} * $per AS BIGINT)"
+
+  // ------------------------------------------------------------------
+  // Epoch-day calendar keys
+  // ------------------------------------------------------------------
+
+  /** Days since 1970-01-01 of a DATE column, as BIGINT: the integer day
+    * key that calendar arithmetic (gaps, lags, weekday as `(dn + 4) % 7`)
+    * runs on in both engines. Callers pass the DATE themselves
+    * (`to_date(ts)` here, `CAST(ts AS DATE)` in the twin), which truncates
+    * a UTC timestamp to its day identically in both.
+    */
+  def epochDay(date: Column): Column = datediff(date, lit("1970-01-01")).cast("long")
+
+  /** [[epochDay]] in DuckDB SQL: a DATE difference is an integer day count. */
+  def epochDaySql(date: String): String = s"CAST($date - DATE '1970-01-01' AS BIGINT)"
+
+  /** The DATE of epoch day `day`, the inverse of [[epochDay]], as a
+    * Spark-SQL string for `expr`.
+    */
+  def epochDateExprSql(day: String): String = s"date_add(DATE '1970-01-01', CAST($day AS INT))"
+
+  /** [[epochDateExprSql]] in DuckDB SQL. */
+  def epochDateSql(day: String): String = s"DATE '1970-01-01' + CAST($day AS INTEGER)"
 
   // ------------------------------------------------------------------
   // Portable hash

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Exact.{h31, h31Sql}
+import graft.Exact.{epochDay, epochDaySql, h31, h31Sql}
 import graft.model.Tables
 
 /** Multi-dimensional data layout: Z-order (Morton) interleaving, the
@@ -241,7 +241,7 @@ object Layout {
   def qEventCompaction(spark: SparkSession, sfDir: String): DataFrame = {
     val files = Tables.events(spark, sfDir)
       .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
+        epochDay(to_date(col("ts"))).as("day"))
       .agg((count(lit(1)) * 64L).as("bytes"))
     compactionPlan(files, "event_type", "day", "bytes", targetBytes = 50000L)
       .groupBy(col("event_type"), col("grp"))
@@ -251,9 +251,9 @@ object Layout {
   }
 
   val qEventCompactionSql: String =
-    """WITH files AS (
+    s"""WITH files AS (
       |  SELECT event_type,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
+      |    ${epochDaySql("CAST(ts AS DATE)")} AS day,
       |    count(*) * 64 AS bytes
       |  FROM events GROUP BY event_type, day
       |),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Exact.{portableHash, portableHashSql, units, unitsSql}
+import graft.Exact.{decSql, portableHash, portableHashSql, units, unitsSql}
 import graft.model.Tables
 
 /** Data-quality operators (Deequ-shaped): a generic single-pass column
@@ -575,7 +575,7 @@ object Quality {
   def qLineFeatureCorr(spark: SparkSession, sfDir: String): DataFrame = {
     val feats: Seq[(String, Column)] = Seq(
       "qty" -> floor(col("l_quantity")).cast("long"),
-      "price_h" -> expr("CAST(floor(CAST(l_extendedprice AS DECIMAL(18,4))) AS BIGINT) div 100"),
+      "price_h" -> expr(s"CAST(floor(${decSql("l_extendedprice")}) AS BIGINT) div 100"),
       "disc_bp" -> units(col("l_discount"), 10000),
       "tax_bp" -> units(col("l_tax"), 10000))
     val proj = Tables.lineitem(spark, sfDir)
@@ -606,7 +606,7 @@ object Quality {
   val qLineFeatureCorrSql: String = {
     val q = Map(
       "qty" -> "CAST(floor(l_quantity) AS BIGINT)",
-      "price_h" -> "CAST(floor(CAST(l_extendedprice AS DECIMAL(18,4))) AS BIGINT) // 100",
+      "price_h" -> s"CAST(floor(${decSql("l_extendedprice")}) AS BIGINT) // 100",
       "disc_bp" -> unitsSql("l_discount", 10000),
       "tax_bp" -> unitsSql("l_tax", 10000))
     val names = Seq("qty", "price_h", "disc_bp", "tax_bp")

@@ -750,6 +750,31 @@ object Similarity {
     s"""WITH $centroidsLongSql
        |SELECT label, CAST(i AS INTEGER) AS i, c FROM cl ORDER BY label, i""".stripMargin
 
+  /** [[probeCells]]' centroid table in DuckDB SQL: the CTE
+    * `name AS (c_label, cv)`, each centroid's coordinates listed in
+    * dimension order from the long `(label, i, c)` CTE `cl`, its labels
+    * filtered by `where`.
+    */
+  private def centListSql(name: String, cl: String, where: String = ""): String =
+    s"$name AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM $cl$where GROUP BY label)"
+
+  /** Squared distance v·v − 2v·c + c·c of `v` to centroid `cv`, in
+    * [[probeCells]]' association.
+    */
+  private final val centDistSql =
+    "list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv)"
+
+  /** [[probeCells]]' nearest-centroid rule in DuckDB SQL: every row of the
+    * `(vec_id, …, v)` CTE `src` against every centroid of `cent`, with all
+    * of `src`'s columns, the centroid label as `cell`, the squared distance
+    * `d` and `rn`, the centroid's rank for the vector by (d, c_label):
+    * `rn = 1` is the assignment, `rn <= p` the p-probe list.
+    */
+  private def assignSql(src: String, cent: String): String =
+    s"""SELECT $src.*, c_label AS cell, $centDistSql AS d,
+       |  row_number() OVER (PARTITION BY vec_id ORDER BY $centDistSql, c_label) AS rn
+       |FROM $src, $cent""".stripMargin
+
   /** The constant-k quantizer packed into ONE row: `cents` is the array of
     * `(c_label, cv, cc)` structs sorted by label, with c·c precomputed per
     * centroid (the same sequential [[dot]], so the assignment distance
@@ -886,14 +911,9 @@ object Similarity {
 
   val qEmbAnnIvfSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
+       |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT vec_id, v, c_label AS cell,
-       |    sqrt(list_dot_product(v, v)) AS norm,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
+       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
        |),
        |q AS (
        |  SELECT vec_id AS q_id, v AS qe, cell, norm AS q_norm FROM assigned
@@ -989,16 +1009,9 @@ object Similarity {
 
   val qEmbIvfIncrementalSql: String =
     s"""WITH ${centroidsLongSqlFrom(s" WHERE vec_id % $ivfIncrMod != 0", "eb")},
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
+       |${centListSql("cent", "cl")},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |assigned AS (
-       |  SELECT vec_id, c_label AS cell,
-       |    list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv) AS d,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
-       |),
+       |assigned AS (${assignSql("e", "cent")}),
        |a1 AS (
        |  SELECT vec_id, cell, CAST(floor(d * 1000000.0) AS BIGINT) AS dq
        |  FROM assigned WHERE rn = 1
@@ -1183,14 +1196,7 @@ object Similarity {
   val qEmbIvfRebuildSql: String = {
     // assignment of a (vec_id, v) source under a (c_label, cv) quantizer
     def assign(src: String, cent: String, pfx: String): String =
-      s"""${pfx}a AS (
-         |  SELECT vec_id, c_label AS cell,
-         |    list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv) AS d,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY
-         |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-         |      c_label) AS rn
-         |  FROM $src, $cent
-         |),
+      s"""${pfx}a AS (${assignSql(src, cent)}),
          |${pfx}s AS (
          |  SELECT cell, count(*) AS n,
          |    CAST(sum(CAST(floor(d * 1000000.0) AS BIGINT)) AS BIGINT) AS sd
@@ -1208,7 +1214,7 @@ object Similarity {
        |eu AS (SELECT * FROM eb UNION ALL SELECT * FROM en),
        |pos AS (SELECT unnest(generate_series(1, $embDim)) AS i),
        |${centroidsLongSqlOver("eb", "b")},
-       |bcent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM bcl GROUP BY label),
+       |${centListSql("bcent", "bcl")},
        |${assign("eb", "bcent", "qb")},
        |${assign("en", "bcent", "qn")},
        |trig AS (
@@ -1222,7 +1228,7 @@ object Similarity {
        |           COALESCE((SELECT CAST(sum(n) AS HUGEINT) FROM qns), 0) AS rebuilt
        |),
        |${centroidsLongSqlOver("eu", "u")},
-       |ucent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM ucl GROUP BY label),
+       |${centListSql("ucent", "ucl")},
        |${assign("eb", "ucent", "mb")},
        |${assign("en", "ucent", "mn")},
        |${assign("eu", "ucent", "mf")}
@@ -1366,21 +1372,15 @@ object Similarity {
   private[ext] def semanticContamSqlCtes(trSrc: String, evSrc: String,
       pfx: String): String =
     s"""${centroidsLongSqlOver(trSrc, pfx)},
-       |${pfx}cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM ${pfx}cl GROUP BY label),
+       |${centListSql(s"${pfx}cent", s"${pfx}cl")},
        |${pfx}ta AS (
-       |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm, c_label AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM $trSrc, ${pfx}cent
+       |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm, cell, rn
+       |  FROM (${assignSql(trSrc, s"${pfx}cent")})
        |),
        |${pfx}ea AS (
        |  SELECT vec_id AS eval_vec_id, v AS qe,
-       |    sqrt(list_dot_product(v, v)) AS q_norm, c_label AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM $evSrc, ${pfx}cent
+       |    sqrt(list_dot_product(v, v)) AS q_norm, cell, rn
+       |  FROM (${assignSql(evSrc, s"${pfx}cent")})
        |),
        |${pfx}pairs AS (
        |  SELECT t.vec_id, e.eval_vec_id, t.cell,
@@ -1478,14 +1478,9 @@ object Similarity {
 
   val qEmbTripletMiningSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
+       |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT vec_id, label, v, c_label AS cell,
-       |    sqrt(list_dot_product(v, v)) AS norm,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
+       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
        |),
        |a AS (SELECT vec_id, label, v, cell, norm FROM assigned WHERE rn = 1),
        |anch AS (
@@ -1654,14 +1649,9 @@ object Similarity {
       .mkString("\n  UNION ALL\n  ")
     s"""WITH ex AS (SELECT q_id, vec_id FROM ($qEmbCosineTopkSql)),
        |$centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
+       |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT vec_id, v, c_label AS cell,
-       |    sqrt(list_dot_product(v, v)) AS norm,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
+       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
        |),
        |cand AS (
        |  SELECT vec_id, v, cell, norm FROM assigned
@@ -2040,18 +2030,12 @@ object Similarity {
 
   val qEmbIvfPqSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
-       |assigned AS (
-       |  SELECT vec_id, label, v, c_label AS cell, cv,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
-       |),
+       |${centListSql("cent", "cl")},
+       |assigned AS (${assignSql("e", "cent")}),
        |resid AS (
        |  SELECT vec_id, label, cell,
        |    list_transform(range(1, ${embDim + 1}), i -> v[i] - cv[i]) AS r
-       |  FROM assigned WHERE rn = 1
+       |  FROM assigned JOIN cent ON cent.c_label = assigned.cell WHERE rn = 1
        |),
        |rcl AS (
        |  SELECT label, i,
@@ -2298,14 +2282,8 @@ object Similarity {
 
   val qEmbTwonnCellSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
-       |assigned AS (
-       |  SELECT vec_id, v, c_label AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
-       |),
+       |${centListSql("cent", "cl")},
+       |assigned AS (${assignSql("e", "cent")}),
        |a AS (SELECT vec_id, v, cell FROM assigned WHERE rn = 1),
        |probes AS (
        |  SELECT cell, vec_id AS s_id, v AS sv FROM a
@@ -2440,17 +2418,8 @@ object Similarity {
 
   val qEmbKmeansIterSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (
-       |  SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl
-       |  WHERE label < $kmeansK GROUP BY label
-       |),
-       |assigned AS (
-       |  SELECT vec_id, v, c_label AS cell,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM e, cent
-       |)
+       |${centListSql("cent", "cl", s" WHERE label < $kmeansK")},
+       |assigned AS (${assignSql("e", "cent")})
        |SELECT cell, CAST(i AS INTEGER) AS i,
        |  list_reduce(list(v[i] ORDER BY vec_id), (a, b) -> a + b) / count(*) AS c,
        |  count(*) AS n_members
@@ -2525,7 +2494,7 @@ object Similarity {
 
   val qEmbSemDedupSql: String =
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
+       |${centListSql("cent", "cl")},
        |corpus AS (
        |  SELECT vec_id, v FROM e
        |  UNION ALL
@@ -2533,12 +2502,7 @@ object Similarity {
        |  FROM e WHERE vec_id % 25 = 0
        |),
        |assigned AS (
-       |  SELECT vec_id, v, c_label AS cell,
-       |    sqrt(list_dot_product(v, v)) AS norm,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv),
-       |      c_label) AS rn
-       |  FROM corpus, cent
+       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("corpus", "cent")})
        |),
        |asg AS (SELECT vec_id, v, cell, norm FROM assigned WHERE rn = 1),
        |dups AS (
@@ -4189,15 +4153,9 @@ object Similarity {
   }
 
   val qEmbSilhouetteSql: String = {
-    val dist = "list_dot_product(v, v) - 2 * list_dot_product(v, cv) + " +
-      "list_dot_product(cv, cv)"
     s"""WITH $centroidsLongSql,
-       |cent AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
-       |assigned AS (
-       |  SELECT vec_id, c_label AS cell, $dist AS d,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY $dist, c_label) AS rn
-       |  FROM e, cent
-       |),
+       |${centListSql("cent", "cl")},
+       |assigned AS (${assignSql("e", "cent")}),
        |pair AS (
        |  SELECT vec_id,
        |    max(CASE WHEN rn = 1 THEN cell END) AS cell,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
-import graft.Exact.{charge, dec, h31, h31Sql, logScale, orderedSumExprSql, orderedSumSql,
-  portableHash, portableHashSql, quantLog, quantLogSql, revenue, revenueSql}
+import graft.Exact.{charge, dec, decSql, epochDateExprSql, epochDateSql, epochDay,
+  epochDaySql, h31, h31Sql, logScale, orderedSumExprSql, orderedSumSql, portableHash,
+  portableHashSql, quantLog, quantLogSql, revenue, revenueSql, unitsSql}
 import graft.Exec
 import graft.model.Tables
 
@@ -52,11 +53,11 @@ object Analytics {
 
   val q1PricingSummarySql: String =
     s"""SELECT l_returnflag, l_linestatus,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
+      |  CAST(sum(${decSql("l_quantity")}) AS DOUBLE) AS sum_qty,
+      |  CAST(sum(${decSql("l_extendedprice")}) AS DOUBLE) AS sum_base_price,
       |  CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE) AS sum_disc_price,
       |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(11,4)) * (CAST(1 AS DECIMAL(11,4)) - CAST(l_discount AS DECIMAL(11,4))) * (CAST(1 AS DECIMAL(11,4)) + CAST(l_tax AS DECIMAL(11,4)))) AS DECIMAL(21,6)) AS DOUBLE) AS sum_charge,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty,
+      |  CAST(sum(${decSql("l_quantity")}) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty,
       |  count(*) AS count_order
       |FROM lineitem GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
@@ -194,8 +195,8 @@ object Analytics {
   }
 
   val qRunningTotalSql: String =
-    """SELECT o_custkey, o_orderkey, o_orderdate,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+    s"""SELECT o_custkey, o_orderkey, o_orderdate,
+      |  CAST(sum(${decSql("o_totalprice")}) OVER (
       |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
       |FROM orders
@@ -233,10 +234,10 @@ object Analytics {
   }
 
   val qEventMovingWindowSql: String =
-    """SELECT event_id, user_id,
+    s"""SELECT event_id, user_id,
       |  CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s,
       |  count(*) OVER w AS cnt_1h,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_1h
+      |  CAST(sum(${decSql("value")}) OVER w AS DOUBLE) AS sum_1h
       |FROM events
       |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
       |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
@@ -331,8 +332,8 @@ object Analytics {
   }
 
   val qCustomerOrderCountsSql: String =
-    """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
-      |  coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), CAST(0 AS DOUBLE)) AS total_spend
+    s"""SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
+      |  coalesce(CAST(sum(${decSql("o_totalprice")}) AS DOUBLE), CAST(0 AS DOUBLE)) AS total_spend
       |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
       |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin
 
@@ -400,8 +401,8 @@ object Analytics {
   }
 
   val qEventUnpivotSql: String =
-    """SELECT CAST(ts AS DATE) AS day, event_type,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    s"""SELECT CAST(ts AS DATE) AS day, event_type,
+      |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total_value
       |FROM events
       |GROUP BY CAST(ts AS DATE), event_type
       |ORDER BY day, event_type""".stripMargin
@@ -416,8 +417,8 @@ object Analytics {
   }
 
   val qOrderRollupSql: String =
-    """SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+    s"""SELECT o_orderpriority, o_orderstatus, count(*) AS n,
+      |  CAST(sum(${decSql("o_totalprice")}) AS DOUBLE) AS total
       |FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
       |ORDER BY o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""".stripMargin
 
@@ -433,20 +434,20 @@ object Analytics {
   def qOrderGroupingSets(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.orders(spark, sfDir).createOrReplaceTempView("graft_orders_gs")
     spark.sql(
-      """SELECT o_orderpriority, o_orderstatus,
+      s"""SELECT o_orderpriority, o_orderstatus,
         |  CAST(grouping_id(o_orderpriority, o_orderstatus) AS INT) AS gid,
         |  count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  CAST(sum(${decSql("o_totalprice")}) AS DOUBLE) AS total
         |FROM graft_orders_gs
         |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
         |ORDER BY gid, o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin)
   }
 
   val qOrderGroupingSetsSql: String =
-    """SELECT o_orderpriority, o_orderstatus,
+    s"""SELECT o_orderpriority, o_orderstatus,
       |  CAST(grouping(o_orderpriority, o_orderstatus) AS INTEGER) AS gid,
       |  count(*) AS n,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+      |  CAST(sum(${decSql("o_totalprice")}) AS DOUBLE) AS total
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
       |ORDER BY gid, o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin
@@ -466,12 +467,12 @@ object Analytics {
   }
 
   val qEventTypePivotSql: String =
-    """SELECT CAST(ts AS DATE) AS day,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) FILTER (WHERE event_type = 'click') AS DOUBLE) AS click_value,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) FILTER (WHERE event_type = 'view') AS DOUBLE) AS view_value,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS purchase_value,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) FILTER (WHERE event_type = 'signup') AS DOUBLE) AS signup_value,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) FILTER (WHERE event_type = 'error') AS DOUBLE) AS error_value,
+    s"""SELECT CAST(ts AS DATE) AS day,
+      |  CAST(sum(${decSql("value")}) FILTER (WHERE event_type = 'click') AS DOUBLE) AS click_value,
+      |  CAST(sum(${decSql("value")}) FILTER (WHERE event_type = 'view') AS DOUBLE) AS view_value,
+      |  CAST(sum(${decSql("value")}) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS purchase_value,
+      |  CAST(sum(${decSql("value")}) FILTER (WHERE event_type = 'signup') AS DOUBLE) AS signup_value,
+      |  CAST(sum(${decSql("value")}) FILTER (WHERE event_type = 'error') AS DOUBLE) AS error_value,
       |  count(*) AS n_events
       |FROM events GROUP BY CAST(ts AS DATE) ORDER BY day""".stripMargin
 
@@ -488,8 +489,8 @@ object Analytics {
   }
 
   val qEventDistinctUsersSql: String =
-    """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    s"""SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events,
+      |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // --- lag/lead: inter-event gap per user (exact integer microseconds) ---
@@ -518,8 +519,8 @@ object Analytics {
   }
 
   val qHourlyEventStatsSql: String =
-    """SELECT date_trunc('hour', ts) AS hour, count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    s"""SELECT date_trunc('hour', ts) AS hour, count(*) AS n,
+      |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total_value
       |FROM events GROUP BY date_trunc('hour', ts) ORDER BY hour""".stripMargin
 
   // --- TPC-H Q9-shaped product-profit rollup (part + supplier coverage) ---
@@ -589,7 +590,7 @@ object Analytics {
       |  CAST(100.0 AS DOUBLE) *
       |    CAST(CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
       |      THEN ${revenueSql("l_extendedprice", "l_discount")}
-      |      ELSE CAST(0 AS DECIMAL(18,4)) END) AS DECIMAL(21,4)) AS DOUBLE) /
+      |      ELSE ${decSql("0")} END) AS DECIMAL(21,4)) AS DOUBLE) /
       |    CAST(CAST(sum(${revenueSql("l_extendedprice", "l_discount")}) AS DECIMAL(21,4)) AS DOUBLE)
       |    AS promo_share_pct,
       |  count(*) AS n_lineitems
@@ -663,8 +664,8 @@ object Analytics {
   }
 
   val qCustomerSpendQuartilesSql: String =
-    """WITH spend AS (
-      |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,4))) AS spend
+    s"""WITH spend AS (
+      |  SELECT o_custkey, sum(${decSql("o_totalprice")}) AS spend
       |  FROM orders GROUP BY o_custkey
       |),
       |ranked AS (
@@ -675,7 +676,7 @@ object Analytics {
       |SELECT quartile, count(*) AS n_customers,
       |  CAST(min(spend) AS DOUBLE) AS min_spend,
       |  CAST(max(spend) AS DOUBLE) AS max_spend,
-      |  CAST(CAST(sum(spend) AS DECIMAL(18,4)) AS DOUBLE) AS total_spend
+      |  CAST(${decSql("sum(spend)")} AS DOUBLE) AS total_spend
       |FROM ranked GROUP BY quartile ORDER BY quartile""".stripMargin
 
   // --- percentiles: exact interpolated, engine-free integer kernel ---
@@ -1048,7 +1049,7 @@ object Analytics {
        |SELECT user_id, min(ts) AS session_start,
        |  max(ts) + INTERVAL $sessionGapHours HOUR AS session_end,
        |  count(*) AS n_events,
-       |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+       |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total_value
        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
 
   // --- as-of join: last-click attribution (merge-based, single shuffle) ---
@@ -1319,13 +1320,13 @@ object Analytics {
   }
 
   val q17SmallQtyRevenueSql: String =
-    """WITH pa AS (
+    s"""WITH pa AS (
       |  SELECT l_partkey,
-      |    CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS avg_qty
+      |    CAST(sum(${decSql("l_quantity")}) AS DOUBLE) / count(*) AS avg_qty
       |  FROM lineitem GROUP BY l_partkey
       |)
       |SELECT p_brand,
-      |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(21,4)) AS DOUBLE) AS revenue,
+      |  CAST(CAST(sum(${decSql("l_extendedprice")}) AS DECIMAL(21,4)) AS DOUBLE) AS revenue,
       |  count(*) AS n_small
       |FROM lineitem
       |JOIN pa USING (l_partkey)
@@ -1345,8 +1346,8 @@ object Analytics {
   }
 
   val qEventCubeSql: String =
-    """SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    s"""SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n,
+      |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total_value
       |FROM events GROUP BY CUBE (event_type, CAST(ts AS DATE))
       |ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""".stripMargin
 
@@ -1450,12 +1451,12 @@ object Analytics {
   }
 
   val q22DormantRichSql: String =
-    """WITH ab AS (
-      |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS avg_bal
+    s"""WITH ab AS (
+      |  SELECT CAST(sum(${decSql("c_acctbal")}) AS DOUBLE) / count(*) AS avg_bal
       |  FROM customer WHERE c_acctbal > 0
       |)
       |SELECT c_nationkey, count(*) AS n_custs,
-      |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
+      |  CAST(sum(${decSql("c_acctbal")}) AS DOUBLE) AS total_bal
       |FROM customer, ab
       |WHERE c_acctbal > avg_bal
       |  AND NOT EXISTS (SELECT 1 FROM orders
@@ -1678,9 +1679,9 @@ object Analytics {
 
   val q18LargeOrdersSql: String =
     s"""WITH big AS (
-       |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty_d
+       |  SELECT l_orderkey, sum(${decSql("l_quantity")}) AS sum_qty_d
        |  FROM lineitem GROUP BY l_orderkey
-       |  HAVING sum(CAST(l_quantity AS DECIMAL(18,4))) > $q18MinQty
+       |  HAVING sum(${decSql("l_quantity")}) > $q18MinQty
        |)
        |SELECT c_custkey, c_name, o_orderkey, o_totalprice,
        |  CAST(sum_qty_d AS DOUBLE) AS sum_qty
@@ -2162,12 +2163,12 @@ object Analytics {
     * does.
     */
   val qEventHopWindowSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS es, value FROM events
       |)
       |SELECT (e.es // 900 - k.k) * 900 AS window_start,
       |  count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
+      |  CAST(sum(${decSql("value")}) AS DOUBLE) AS total
       |FROM e CROSS JOIN (SELECT unnest(range(4)) AS k) k
       |GROUP BY window_start
       |ORDER BY window_start""".stripMargin
@@ -2247,8 +2248,8 @@ object Analytics {
     // zero on nonnegative sums, so both engines round identically
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(expr("CAST(round(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT)").as("v"))
+        epochDay(to_date($"ts")).as("dn"))
+      .agg(expr(s"CAST(round(sum(${decSql("value")}) * 100) AS BIGINT)").as("v"))
     val lags = spark.range(1, 8).select($"id".cast("int").as("lag"))
     val a = daily.toDF("event_type", "dn", "x").as("acf_a")
     val b = daily.toDF("event_type", "dn", "y").as("acf_b")
@@ -2273,9 +2274,9 @@ object Analytics {
   }
 
   val qEventAcfSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(round(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS v
+    s"""WITH daily AS (
+      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+      |    CAST(round(sum(${decSql("value")}) * 100) AS BIGINT) AS v
       |  FROM events GROUP BY event_type, dn
       |),
       |lags AS (SELECT unnest(generate_series(1, 7)) AS lag),
@@ -2323,7 +2324,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(sum(dec($"value")).as("v"))
     val mn = daily.agg(min($"dn").as("mn"))
     val pts = daily.crossJoin(broadcast(mn))
@@ -2346,9 +2347,9 @@ object Analytics {
   }
 
   val qEventTrendSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    sum(CAST(value AS DECIMAL(18,4))) AS v
+    s"""WITH daily AS (
+      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+      |    sum(${decSql("value")}) AS v
       |  FROM events GROUP BY event_type, dn
       |),
       |mn AS (SELECT min(dn) AS mn FROM daily),
@@ -2391,7 +2392,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(sum(dec($"value")).as("v"))
     val mn = daily.agg(min($"dn").as("mn"))
     // eager: trend params + seasonal cells both consume it
@@ -2419,9 +2420,9 @@ object Analytics {
   }
 
   val qEventSeasonalitySql: String =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    sum(CAST(value AS DECIMAL(18,4))) AS v
+    s"""WITH daily AS (
+      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+      |    sum(${decSql("value")}) AS v
       |  FROM events GROUP BY event_type, dn
       |),
       |mn AS (SELECT min(dn) AS mn FROM daily),
@@ -2478,7 +2479,7 @@ object Analytics {
     import spark.implicits._
     val ud = Tables.events(spark, sfDir)
       .select($"user_id",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .distinct()
     val mx = ud.agg(max($"dn").as("mx"))
     ud.withColumn("window_end", explode(sequence($"dn", $"dn" + 6)))
@@ -2490,9 +2491,9 @@ object Analytics {
   }
 
   val qEventRollingActiveSql: String =
-    """WITH ud AS (
+    s"""WITH ud AS (
       |  SELECT DISTINCT user_id,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn
+      |    ${epochDaySql("CAST(ts AS DATE)")} AS dn
       |  FROM events
       |),
       |bounds AS (SELECT max(dn) AS mx FROM ud),
@@ -3612,7 +3613,7 @@ object Analytics {
     peakConcurrencyOf(Tables.events(spark, sfDir)
       .select(expr("unix_micros(ts) div 1000000").as("s"))
       .withColumn("e", $"s" + lit(1800L)))
-      .select(expr("date_add(DATE '1970-01-01', CAST(day AS INT))").as("d"),
+      .select(expr(epochDateExprSql("day")).as("d"),
         $"peak_concurrency", $"n_open")
       .orderBy($"d")
   }
@@ -3655,7 +3656,7 @@ object Analytics {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS conc
       |  FROM c
       |)
-      |SELECT DATE '1970-01-01' + CAST(day AS INTEGER) AS d,
+      |SELECT ${epochDateSql("day")} AS d,
       |  CAST(max(conc) AS BIGINT) AS peak_concurrency,
       |  CAST(sum(opens) AS BIGINT) AS n_open
       |FROM r GROUP BY day ORDER BY d""".stripMargin
@@ -3699,7 +3700,7 @@ object Analytics {
     coverageOf(Tables.events(spark, sfDir)
       .select(expr("unix_micros(ts) div 1000000").as("s"))
       .withColumn("e", $"s" + lit(1800L)))
-      .select(expr("date_add(DATE '1970-01-01', CAST(day AS INT))").as("d"),
+      .select(expr(epochDateExprSql("day")).as("d"),
         $"covered_sec",
         ($"covered_sec".cast("double") / 86400.0d).as("busy_ratio"))
       .orderBy($"d")
@@ -3714,7 +3715,7 @@ object Analytics {
       |    lead(t, 1) OVER (PARTITION BY day ORDER BY t) AS nxt
       |  FROM c
       |)
-      |SELECT DATE '1970-01-01' + CAST(day AS INTEGER) AS d,
+      |SELECT ${epochDateSql("day")} AS d,
       |  CAST(sum(CASE WHEN conc > 0
       |    THEN coalesce(nxt, (day + 1) * 86400) - t ELSE 0 END) AS BIGINT)
       |    AS covered_sec,
@@ -3826,7 +3827,7 @@ object Analytics {
       |  JOIN supplier ON l_suppkey = s_suppkey
       |)
       |SELECT o_year,
-      |  CAST(sum(CASE WHEN s_nationkey = 3 THEN rev ELSE CAST(0 AS DECIMAL(18,4)) END)
+      |  CAST(sum(CASE WHEN s_nationkey = 3 THEN rev ELSE ${decSql("0")} END)
       |    AS DOUBLE) / CAST(sum(rev) AS DOUBLE) AS mkt_share,
       |  CAST(sum(rev) AS DOUBLE) AS total_rev
       |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin
@@ -4092,7 +4093,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(sum(dec($"value")).as("v"))
       .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
     val wOrd = Window.partitionBy($"event_type").orderBy($"dn")
@@ -4111,7 +4112,7 @@ object Analytics {
         expr("max_by(dn, struct(absd, -k))").as("cp_dn"),
         max($"absd").as("d_stat"))
       .select($"event_type", $"n_days", $"total_c",
-        expr("date_add(DATE '1970-01-01', CAST(cp_dn AS INT))").as("change_day"),
+        expr(epochDateExprSql("cp_dn")).as("change_day"),
         $"d_stat",
         ($"d_stat".cast("double") /
           ($"n_days".cast("double") * $"total_c".cast("double"))).as("cusum_ratio"))
@@ -4122,9 +4123,9 @@ object Analytics {
     * composite so the earliest-day tie-break matches the struct order.
     */
   val qEventChangepointSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS y
+    s"""WITH daily AS (
+      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+      |    CAST(floor(sum(${decSql("value")}) * 100) AS BIGINT) AS y
       |  FROM events GROUP BY event_type, dn
       |),
       |r AS (
@@ -4141,8 +4142,8 @@ object Analytics {
       |  FROM r
       |)
       |SELECT event_type, max(n) AS n_days, max(tot) AS total_c,
-      |  DATE '1970-01-01' + CAST(arg_max(dn,
-      |    CAST(absd AS HUGEINT) * 1048576 + (1048575 - k)) AS INTEGER) AS change_day,
+      |  ${epochDateSql("arg_max(dn, CAST(absd AS HUGEINT) * 1048576 + (1048575 - k))")}
+      |    AS change_day,
       |  CAST(max(absd) AS BIGINT) AS d_stat,
       |  CAST(max(absd) AS DOUBLE) /
       |    (CAST(max(n) AS DOUBLE) * CAST(max(tot) AS DOUBLE)) AS cusum_ratio
@@ -4171,7 +4172,7 @@ object Analytics {
     import spark.implicits._
     val days = Tables.events(spark, sfDir)
       .select($"user_id",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .distinct()
     val w = Window.partitionBy($"user_id").orderBy($"dn")
     val islands = days
@@ -4189,7 +4190,7 @@ object Analytics {
         expr("max_by(start_dn, struct(len, -start_dn))")
           .as("longest_start_dn"))
       .select($"user_id", $"n_active_days", $"n_streaks", $"longest_streak",
-        expr("date_add(DATE '1970-01-01', CAST(longest_start_dn AS INT))")
+        expr(epochDateExprSql("longest_start_dn"))
           .as("longest_start"))
       .orderBy($"user_id")
   }
@@ -4198,9 +4199,9 @@ object Analytics {
     * same composite key.
     */
   val qUserStreaksSql: String =
-    """WITH days AS (
+    s"""WITH days AS (
       |  SELECT DISTINCT user_id,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn
+      |    ${epochDaySql("CAST(ts AS DATE)")} AS dn
       |  FROM events
       |),
       |lab AS (
@@ -4216,8 +4217,8 @@ object Analytics {
       |SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
       |  CAST(count(*) AS BIGINT) AS n_streaks,
       |  CAST(max(len) AS BIGINT) AS longest_streak,
-      |  DATE '1970-01-01' + CAST(arg_max(start_dn,
-      |    len * 1048576 + (1048575 - start_dn)) AS INTEGER) AS longest_start
+      |  ${epochDateSql("arg_max(start_dn, len * 1048576 + (1048575 - start_dn))")}
+      |    AS longest_start
       |FROM isl GROUP BY user_id ORDER BY user_id""".stripMargin
 
   // ------------------------------------------------------------------
@@ -4401,7 +4402,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(sum(dec($"value")).as("v"))
       .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
     val pairs = daily.as("a")
@@ -4427,9 +4428,9 @@ object Analytics {
     * selection of the lower median.
     */
   val qEventTheilSenSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS y
+    s"""WITH daily AS (
+      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+      |    CAST(floor(sum(${decSql("value")}) * 100) AS BIGINT) AS y
       |  FROM events GROUP BY event_type, dn
       |),
       |pairs AS (
@@ -4474,15 +4475,13 @@ object Analytics {
     */
   def qOrderBacklog(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val placed = Tables.orders(spark, sfDir)
-      .select(datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-        .cast("long").as("day"))
+      .select(epochDay(to_date($"o_orderdate".cast("timestamp"))).as("day"))
       .select($"day", lit(1L).as("placed"), lit(0L).as("completed"))
     val completed = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
       .agg(max(to_date($"l_shipdate".cast("timestamp"))).as("last_ship"))
-      .select(datediff($"last_ship", epoch).cast("long").as("day"))
+      .select(epochDay($"last_ship").as("day"))
       .select($"day", lit(0L).as("placed"), lit(1L).as("completed"))
     val daily = placed.unionAll(completed)
       .groupBy($"day")
@@ -4495,13 +4494,13 @@ object Analytics {
   }
 
   val qOrderBacklogSql: String =
-    """WITH placed AS (
-      |  SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
+    s"""WITH placed AS (
+      |  SELECT ${epochDaySql("CAST(o_orderdate AS DATE)")} AS day,
       |    1 AS placed, 0 AS completed
       |  FROM orders
       |),
       |completed AS (
-      |  SELECT CAST(max(CAST(l_shipdate AS DATE)) - DATE '1970-01-01' AS BIGINT) AS day,
+      |  SELECT ${epochDaySql("max(CAST(l_shipdate AS DATE))")} AS day,
       |    0 AS placed, 1 AS completed
       |  FROM lineitem GROUP BY l_orderkey
       |),
@@ -4540,15 +4539,13 @@ object Analytics {
     */
   def qOrderOpenAging(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val placed = Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority".as("prio"),
-        datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-          .cast("long").as("placed_day"))
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("placed_day"))
     val done = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
       .agg(max(to_date($"l_shipdate".cast("timestamp"))).as("last_ship"))
-      .select($"l_orderkey", datediff($"last_ship", epoch).cast("long").as("done_day"))
+      .select($"l_orderkey", epochDay($"last_ship").as("done_day"))
     val horizon = placed.select($"placed_day".as("day"))
       .unionAll(done.select($"done_day".as("day")))
       .agg(max($"day").as("d_max"))
@@ -4568,14 +4565,14 @@ object Analytics {
   }
 
   val qOrderOpenAgingSql: String =
-    """WITH placed AS (
+    s"""WITH placed AS (
       |  SELECT o_orderkey, o_orderpriority AS prio,
-      |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS placed_day
+      |    ${epochDaySql("CAST(o_orderdate AS DATE)")} AS placed_day
       |  FROM orders
       |),
       |done AS (
       |  SELECT l_orderkey,
-      |    CAST(max(CAST(l_shipdate AS DATE)) - DATE '1970-01-01' AS BIGINT) AS done_day
+      |    ${epochDaySql("max(CAST(l_shipdate AS DATE))")} AS done_day
       |  FROM lineitem GROUP BY l_orderkey
       |),
       |horizon AS (
@@ -4632,16 +4629,14 @@ object Analytics {
     */
   def qOrderSlaCurve(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val leads = Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority".as("prio"),
-        datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-          .cast("long").as("placed_day"))
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("placed_day"))
       .join(Tables.lineitem(spark, sfDir)
         .groupBy($"l_orderkey")
         .agg(max(to_date($"l_shipdate".cast("timestamp"))).as("last_ship"))
         .select($"l_orderkey",
-          datediff($"last_ship", epoch).cast("long").as("done_day")),
+          epochDay($"last_ship").as("done_day")),
         $"o_orderkey" === $"l_orderkey")
       .select($"prio", ($"done_day" - $"placed_day").as("lead_days"))
     val grid = slaDays.map(_.toLong).toDF("sla_days")
@@ -4850,15 +4845,13 @@ object Analytics {
     */
   def qLittlesByClass(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val placed = Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority".as("prio"),
-        datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-          .cast("long").as("placed_day"))
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("placed_day"))
     val done = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
       .agg(max(to_date($"l_shipdate".cast("timestamp"))).as("last_ship"))
-      .select($"l_orderkey", datediff($"last_ship", epoch).cast("long").as("done_day"))
+      .select($"l_orderkey", epochDay($"last_ship").as("done_day"))
     val withDone = placed.join(done, $"o_orderkey" === $"l_orderkey", "left")
     val deltas = withDone
       .select($"prio", $"placed_day".as("day"), lit(1L).as("d"))
@@ -4895,14 +4888,14 @@ object Analytics {
   }
 
   val qLittlesByClassSql: String =
-    """WITH placed AS (
+    s"""WITH placed AS (
       |  SELECT o_orderkey, o_orderpriority AS prio,
-      |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS placed_day
+      |    ${epochDaySql("CAST(o_orderdate AS DATE)")} AS placed_day
       |  FROM orders
       |),
       |done AS (
       |  SELECT l_orderkey,
-      |    CAST(max(CAST(l_shipdate AS DATE)) - DATE '1970-01-01' AS BIGINT) AS done_day
+      |    ${epochDaySql("max(CAST(l_shipdate AS DATE))")} AS done_day
       |  FROM lineitem GROUP BY l_orderkey
       |),
       |with_done AS (
@@ -5228,15 +5221,13 @@ object Analytics {
     */
   def qLittlesLaw(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val placed = Tables.orders(spark, sfDir)
       .select($"o_orderkey",
-        datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-          .cast("long").as("placed_day"))
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("placed_day"))
     val done = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
       .agg(max(to_date($"l_shipdate".cast("timestamp"))).as("last_ship"))
-      .select($"l_orderkey", datediff($"last_ship", epoch).cast("long").as("done_day"))
+      .select($"l_orderkey", epochDay($"last_ship").as("done_day"))
     val deltas = placed.select($"placed_day".as("day"), lit(1L).as("d"))
       .unionAll(done.select($"done_day".as("day"), lit(-1L).as("d")))
       .groupBy($"day").agg(sum($"d").as("net"))
@@ -5262,14 +5253,14 @@ object Analytics {
   }
 
   val qLittlesLawSql: String =
-    """WITH placed AS (
+    s"""WITH placed AS (
       |  SELECT o_orderkey,
-      |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS placed_day
+      |    ${epochDaySql("CAST(o_orderdate AS DATE)")} AS placed_day
       |  FROM orders
       |),
       |done AS (
       |  SELECT l_orderkey,
-      |    CAST(max(CAST(l_shipdate AS DATE)) - DATE '1970-01-01' AS BIGINT) AS done_day
+      |    ${epochDaySql("max(CAST(l_shipdate AS DATE))")} AS done_day
       |  FROM lineitem GROUP BY l_orderkey
       |),
       |deltas AS (
@@ -5508,7 +5499,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(count(lit(1)).as("x"))
     val span = daily.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select(($"d0" + expr(
@@ -5552,7 +5543,7 @@ object Analytics {
   val qEventSpcSql: String =
     s"""WITH daily AS (
        |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
+       |    ${epochDaySql("CAST(ts AS DATE)")} AS dn,
        |    count(*) AS x
        |  FROM events GROUP BY event_type, dn
        |),
@@ -5718,7 +5709,7 @@ object Analytics {
   val qEventBootstrapSql: String = {
     val h0 = h31Sql("CAST(event_id AS VARCHAR)")
     s"""WITH base AS (
-       |  SELECT event_type, event_id, CAST(value AS DECIMAL(18,4)) AS v
+       |  SELECT event_type, event_id, ${decSql("value")} AS v
        |  FROM events
        |),
        |drawn AS (
@@ -5767,6 +5758,24 @@ object Analytics {
   final val saxBreakHi = 0.6745
   final val saxBreakLo = -0.6745
 
+  /** Daily cents per event type, `(event_type, dn, xc)`: `dn` the
+    * [[graft.Exact.epochDay]] of the event and `xc` = ⌊Σ value · 100⌋ as
+    * BIGINT, the sum exact in DECIMAL. The series SAX, records, Haar
+    * energy, Granger, Hurst, drawdown and ARCH effect read; its oracle
+    * CTE body is [[dailyCentsSql]].
+    */
+  private def dailyCents(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, sfDir)
+      .groupBy($"event_type", epochDay(to_date($"ts")).as("dn"))
+      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+  }
+
+  private def dailyCentsSql: String =
+    s"""SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+       |  CAST(floor(sum(${decSql("value")}) * 100) AS BIGINT) AS xc
+       |FROM events GROUP BY event_type, dn""".stripMargin
+
   /** SAX SYMBOLIZATION (Lin et al. 2003) of each event type's daily
     * value series: z-normalize the daily totals against the type's own
     * mean/σ, average into [[saxSegDays]]-day PAA segments, and map each
@@ -5793,10 +5802,7 @@ object Analytics {
     */
   def qEventSax(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val span = daily.agg(min($"dn").as("d0"))
     val mom = daily.groupBy($"event_type")
       .agg(count(lit(1)).as("nb"), sum($"xc").as("s"),
@@ -5829,10 +5835,7 @@ object Analytics {
 
   val qEventSaxSql: String =
     s"""WITH daily AS (
-       |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-       |  FROM events GROUP BY event_type, dn
+       |$dailyCentsSql
        |),
        |span AS (SELECT min(dn) AS d0 FROM daily),
        |mom AS (
@@ -5983,7 +5986,7 @@ object Analytics {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
       .select($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"),
+        epochDay(to_date($"ts")).as("dn"),
         (dec($"value") * 10000).cast("long").as("v4"))
     val span = ev.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select(($"d0" + expr("(d1 - d0 + 1) div 2")).as("d_mid"))
@@ -6019,8 +6022,8 @@ object Analytics {
   val qEventKsDriftSql: String =
     s"""WITH ev AS (
        |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v4
+       |    ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+       |    ${unitsSql("value", 10000)} AS v4
        |  FROM events
        |),
        |span AS (SELECT min(dn) + (max(dn) - min(dn) + 1) // 2 AS d_mid FROM ev),
@@ -6083,10 +6086,7 @@ object Analytics {
     */
   def qEventRecords(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val wPrev = Window.partitionBy($"event_type").orderBy($"dn")
       .rowsBetween(Window.unboundedPreceding, -1)
     daily
@@ -6108,11 +6108,8 @@ object Analytics {
   }
 
   val qEventRecordsSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-      |  FROM events GROUP BY event_type, dn
+    s"""WITH daily AS (
+      |$dailyCentsSql
       |),
       |flagged AS (
       |  SELECT event_type,
@@ -6185,10 +6182,7 @@ object Analytics {
     */
   def qEventHaarEnergy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val span = daily.agg(min($"dn").as("d0"))
     val idx = daily.crossJoin(broadcast(span))
       .select($"event_type", ($"dn" - $"d0").as("di"), $"xc")
@@ -6226,10 +6220,7 @@ object Analytics {
          |GROUP BY event_type""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH daily AS (
-       |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-       |  FROM events GROUP BY event_type, dn
+       |$dailyCentsSql
        |),
        |span AS (SELECT min(dn) AS d0 FROM daily),
        |idx AS (
@@ -6283,10 +6274,7 @@ object Analytics {
     */
   def qEventGranger(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val eff = daily.select($"event_type".as("eff"), $"dn", $"xc".as("y"))
     val effLag = daily.select($"event_type".as("eff"), ($"dn" + 1).as("dn"),
       $"xc".as("z"))
@@ -6345,10 +6333,7 @@ object Analytics {
         |     ((CAST(cxx AS DOUBLE) * CAST(czz AS DOUBLE)) -
         |       (CAST(cxz AS DOUBLE) * CAST(cxz AS DOUBLE))))""".stripMargin
     s"""WITH daily AS (
-       |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-       |  FROM events GROUP BY event_type, dn
+       |$dailyCentsSql
        |),
        |triples AS (
        |  SELECT c.event_type AS cause, e.event_type AS eff,
@@ -6417,7 +6402,7 @@ object Analytics {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
       .select($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"),
+        epochDay(to_date($"ts")).as("dn"),
         (dec($"value") * 10000).cast("long").as("v4"))
     val span = ev.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select(($"d0" + expr("(d1 - d0 + 1) div 2")).as("d_mid"))
@@ -6463,8 +6448,8 @@ object Analytics {
     val z = s"((CAST(u2 AS DOUBLE) - CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) / 2.0) / $sigma"
     s"""WITH ev AS (
        |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v4
+       |    ${epochDaySql("CAST(ts AS DATE)")} AS dn,
+       |    ${unitsSql("value", 10000)} AS v4
        |  FROM events
        |),
        |span AS (SELECT min(dn) + (max(dn) - min(dn) + 1) // 2 AS d_mid FROM ev),
@@ -6543,7 +6528,7 @@ object Analytics {
     import spark.implicits._
     val daily = Tables.events(spark, sfDir)
       .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"ts")).as("dn"))
       .agg(count(lit(1)).as("x"))
     val span = daily.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select(($"d0" + expr(
@@ -6577,7 +6562,7 @@ object Analytics {
   val qEventCusumSql: String =
     s"""WITH daily AS (
        |  SELECT event_type,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
+       |    ${epochDaySql("CAST(ts AS DATE)")} AS dn,
        |    CAST(count(*) AS BIGINT) AS x
        |  FROM events GROUP BY event_type, dn
        |),
@@ -6665,10 +6650,7 @@ object Analytics {
     */
   def qEventHurst(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
       .withColumn("rn",
         row_number().over(Window.partitionBy($"event_type").orderBy($"dn")) - 1)
     val arms = hurstNs.map { n =>
@@ -6740,10 +6722,7 @@ object Analytics {
        |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY dn) - 1
        |      AS BIGINT) AS rn
        |  FROM (
-       |    SELECT event_type,
-       |      CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |      CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-       |    FROM events GROUP BY event_type, dn)
+       |$dailyCentsSql)
        |),
        |arms AS (
        |$arms
@@ -6790,10 +6769,7 @@ object Analytics {
     */
   def qEventDrawdown(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val wCum = Window.partitionBy($"event_type").orderBy($"dn")
       .rowsBetween(Window.unboundedPreceding, 0)
     val dd = daily
@@ -6814,11 +6790,8 @@ object Analytics {
   }
 
   val qEventDrawdownSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-      |  FROM events GROUP BY event_type, dn
+    s"""WITH daily AS (
+      |$dailyCentsSql
       |),
       |cum AS (
       |  SELECT event_type, dn,
@@ -7098,10 +7071,7 @@ object Analytics {
     */
   def qEventArchEffect(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        datediff(to_date($"ts"), lit("1970-01-01")).cast("long").as("dn"))
-      .agg(floor(sum(dec($"value")) * 100).cast("long").as("xc"))
+    val daily = dailyCents(spark, sfDir)
     val prev = daily.select($"event_type", ($"dn" + 1).as("dn"), $"xc".as("xp"))
     val sq = daily.join(prev, Seq("event_type", "dn"))
       .select($"event_type", $"dn",
@@ -7136,11 +7106,8 @@ object Analytics {
   }
 
   val qEventArchEffectSql: String =
-    """WITH daily AS (
-      |  SELECT event_type,
-      |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(floor(sum(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS xc
-      |  FROM events GROUP BY event_type, dn
+    s"""WITH daily AS (
+      |$dailyCentsSql
       |),
       |sq AS (
       |  SELECT a.event_type, a.dn, (a.xc - b.xc) * (a.xc - b.xc) AS s

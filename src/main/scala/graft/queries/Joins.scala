@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Exact.dec
+import graft.Exact.{dec, decSql}
 import graft.model.Tables
 
 /** Join kernels beyond plain equi-join — the two shapes a 100 TB pipeline
@@ -87,7 +87,7 @@ object Joins {
       .orderBy(col("window_id"))
 
   val qEventRangeJoinSql: String =
-    """WITH win AS (
+    s"""WITH win AS (
       |  SELECT k AS window_id,
       |    TIMESTAMP '2024-01-01 00:15:00' + to_hours(CAST(k AS BIGINT)) AS w_start,
       |    TIMESTAMP '2024-01-01 00:15:00' + to_hours(CAST(k AS BIGINT))
@@ -96,7 +96,7 @@ object Joins {
       |)
       |SELECT window_id, count(*) AS n_events,
       |  count(DISTINCT e.user_id) AS n_users,
-      |  CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+      |  CAST(sum(${decSql("e.value")}) AS DOUBLE) AS total_value
       |FROM win w JOIN events e ON e.ts >= w.w_start AND e.ts < w.w_end
       |GROUP BY window_id ORDER BY window_id""".stripMargin
 
@@ -160,9 +160,9 @@ object Joins {
       .orderBy(col("c_mktsegment"))
 
   val qEventSaltedEnrichSql: String =
-    """SELECT c.c_mktsegment, count(*) AS n_events,
+    s"""SELECT c.c_mktsegment, count(*) AS n_events,
       |  count(DISTINCT e.user_id) AS n_users,
-      |  CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+      |  CAST(sum(${decSql("e.value")}) AS DOUBLE) AS total_value
       |FROM events e JOIN customer c ON c.c_custkey = e.user_id
       |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin
 

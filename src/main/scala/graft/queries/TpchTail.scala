@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Exact.{dec, units}
+import graft.Exact.{dec, decSql, units, unitsSql}
 import graft.model.Tables
 
 /** The remaining classic TPC-H join shapes (Q2, Q6, Q11, Q12, Q13, Q20,
@@ -66,9 +66,9 @@ object TpchTail {
   }
 
   val q2MinCostSupplierSql: String =
-    """WITH offers AS (
+    s"""WITH offers AS (
       |  SELECT p_partkey, p_brand, s_suppkey, s_name, s_acctbal, n_name,
-      |    min(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS cost_c
+      |    min(${unitsSql("l_extendedprice", 100)}) AS cost_c
       |  FROM lineitem
       |  JOIN part     ON l_partkey = p_partkey AND p_size = 15 AND p_type = 'LARGE'
       |  JOIN supplier ON l_suppkey = s_suppkey
@@ -109,8 +109,8 @@ object TpchTail {
   }
 
   val q6ForecastRevenueSql: String =
-    """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |               CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+    s"""SELECT CAST(sum(${decSql("l_extendedprice")} *
+      |               ${decSql("l_discount")}) AS DOUBLE) AS revenue,
       |  count(*) AS n_lines
       |FROM lineitem
       |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -151,9 +151,9 @@ object TpchTail {
   }
 
   val q11ImportantStockSql: String =
-    """WITH per_part AS (
+    s"""WITH per_part AS (
       |  SELECT l_partkey,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT))
+      |    CAST(sum(${unitsSql("l_extendedprice", 100)})
       |      AS BIGINT) AS value_c
       |  FROM lineitem
       |  JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = 7

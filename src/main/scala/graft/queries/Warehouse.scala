@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Exact.{dec, logScale, orderedSumExprSql, orderedSumSql, quantLog, quantLogSql,
-  revenue, revenueSql, sampleBucket, sampleBucketSql, units}
+import graft.Exact.{dec, decSql, epochDay, epochDaySql, logScale, orderedSumExprSql,
+  orderedSumSql, quantLog, quantLogSql, revenue, revenueSql, sampleBucket, sampleBucketSql,
+  units, unitsSql}
 import graft.Exec
 import graft.model.Tables
 
@@ -568,27 +569,27 @@ object Warehouse {
   }
 
   val qIncrAggMaintainSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT date_trunc('day', ts)::DATE AS day, event_type, count(*) AS n1,
-      |    sum(CAST(value AS DECIMAL(18,4))) AS s1, min(value) AS mn1, max(value) AS mx1
+      |    sum(${decSql("value")}) AS s1, min(value) AS mn1, max(value) AS mx1
       |  FROM events WHERE ts < TIMESTAMP '2024-01-26' GROUP BY 1, 2
       |),
       |delta AS (
       |  SELECT date_trunc('day', ts)::DATE AS day, event_type, count(*) AS n2,
-      |    sum(CAST(value AS DECIMAL(18,4))) AS s2, min(value) AS mn2, max(value) AS mx2
+      |    sum(${decSql("value")}) AS s2, min(value) AS mn2, max(value) AS mx2
       |  FROM events WHERE ts >= TIMESTAMP '2024-01-26' GROUP BY 1, 2
       |),
       |merged AS (
       |  SELECT day, event_type,
       |    COALESCE(n1, 0) + COALESCE(n2, 0) AS n,
-      |    COALESCE(s1, CAST(0 AS DECIMAL(18,4))) + COALESCE(s2, CAST(0 AS DECIMAL(18,4))) AS s,
+      |    COALESCE(s1, ${decSql("0")}) + COALESCE(s2, ${decSql("0")}) AS s,
       |    least(COALESCE(mn1, mn2), COALESCE(mn2, mn1)) AS mn,
       |    greatest(COALESCE(mx1, mx2), COALESCE(mx2, mx1)) AS mx
       |  FROM base FULL OUTER JOIN delta USING (day, event_type)
       |),
       |total AS (
       |  SELECT date_trunc('day', ts)::DATE AS day, event_type, count(*) AS fn,
-      |    sum(CAST(value AS DECIMAL(18,4))) AS fs, min(value) AS fmn, max(value) AS fmx
+      |    sum(${decSql("value")}) AS fs, min(value) AS fmn, max(value) AS fmx
       |  FROM events GROUP BY 1, 2
       |)
       |SELECT day, event_type, CAST(n AS BIGINT) AS n, CAST(s AS DOUBLE) AS total,
@@ -653,9 +654,9 @@ object Warehouse {
   }
 
   val qIncrJoinMaintainSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_custkey, o_orderdate,
-      |    CAST(o_totalprice AS DECIMAL(18,4)) AS price
+      |    ${decSql("o_totalprice")} AS price
       |  FROM orders
       |),
       |c AS (SELECT c_custkey, c_nationkey FROM customer),
@@ -740,12 +741,12 @@ object Warehouse {
   }
 
   val qCustRfmSql: String =
-    """WITH rfm AS (
+    s"""WITH rfm AS (
       |  SELECT o_custkey,
       |    date_diff('day', max(CAST(o_orderdate AS DATE)),
       |      (SELECT max(CAST(o_orderdate AS DATE)) FROM orders)) AS recency,
       |    count(*) AS freq,
-      |    sum(CAST(o_totalprice AS DECIMAL(18,4))) AS monetary
+      |    sum(${decSql("o_totalprice")}) AS monetary
       |  FROM orders GROUP BY o_custkey
       |),
       |scored AS (
@@ -807,10 +808,9 @@ object Warehouse {
   }
 
   val qPartAbcSql: String =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT l_partkey,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-      |      * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
+      |    CAST(sum(${revenueSql("l_extendedprice", "l_discount")})
       |      AS DECIMAL(21,4)) AS rev
       |  FROM lineitem GROUP BY l_partkey
       |),
@@ -1208,9 +1208,9 @@ object Warehouse {
 
   /** Oracle: the identical sort-and-running-max formulation. */
   val qLineSkylineSql: String =
-    """WITH pts AS (
+    s"""WITH pts AS (
       |  SELECT DISTINCT n_name AS nation,
-      |    CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS price_c,
+      |    ${unitsSql("l_extendedprice", 100)} AS price_c,
       |    CAST(floor(l_quantity) AS BIGINT) AS qty
       |  FROM lineitem
       |  JOIN supplier ON l_suppkey = s_suppkey
@@ -1274,9 +1274,9 @@ object Warehouse {
 
   /** Oracle: identical cumulative-weight selection. */
   val qWeightedMedianSql: String =
-    """WITH pts AS (
+    s"""WITH pts AS (
       |  SELECT n_name AS nation,
-      |    CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS price_c,
+      |    ${unitsSql("l_extendedprice", 100)} AS price_c,
       |    CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS w
       |  FROM lineitem
       |  JOIN supplier ON l_suppkey = s_suppkey
@@ -1352,8 +1352,8 @@ object Warehouse {
       .map { case (d, s) => s"($d, CAST('$s' AS DOUBLE))" }.mkString(", ")
     s"""WITH pf(digit, p) AS (VALUES $values),
        |obs AS (
-       |  SELECT CAST(substr(CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
-       |      * 100 AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
+       |  SELECT CAST(substr(CAST(${unitsSql("l_extendedprice", 100)}
+       |      AS VARCHAR), 1, 1) AS INTEGER) AS digit,
        |    CAST(count(*) AS BIGINT) AS o
        |  FROM lineitem GROUP BY 1
        |),
@@ -1413,9 +1413,9 @@ object Warehouse {
         // integralize at 10^-4 dollars (rev carries 4 decimals), THEN
         // integer-divide to cents — a bare *100 cast is truncate-vs-round
         // divergent cross-engine on the 2 residual decimals
-        expr("CAST(sum(CASE WHEN is_early THEN rev ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) div 100")
+        expr(s"CAST(sum(CASE WHEN is_early THEN rev ELSE ${decSql("0")} END) * 10000 AS BIGINT) div 100")
           .as("r1"),
-        expr("CAST(sum(CASE WHEN NOT is_early THEN rev ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) div 100")
+        expr(s"CAST(sum(CASE WHEN NOT is_early THEN rev ELSE ${decSql("0")} END) * 10000 AS BIGINT) div 100")
           .as("r2"),
         sum(when(isEarly, floor(col("l_quantity")).cast("long")).otherwise(0L))
           .as("v1"),
@@ -1441,10 +1441,10 @@ object Warehouse {
        |  SELECT n_name AS nation,
        |    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '$lifecycleBoundary'
        |      THEN ${revenueSql("l_extendedprice", "l_discount")}
-       |      ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) // 100 AS r1,
+       |      ELSE ${decSql("0")} END) * 10000 AS BIGINT) // 100 AS r1,
        |    CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '$lifecycleBoundary'
        |      THEN ${revenueSql("l_extendedprice", "l_discount")}
-       |      ELSE CAST(0 AS DECIMAL(18,4)) END) * 10000 AS BIGINT) // 100 AS r2,
+       |      ELSE ${decSql("0")} END) * 10000 AS BIGINT) // 100 AS r2,
        |    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '$lifecycleBoundary'
        |      THEN CAST(floor(l_quantity) AS BIGINT) ELSE 0 END) AS BIGINT) AS v1,
        |    CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '$lifecycleBoundary'
@@ -1511,9 +1511,9 @@ object Warehouse {
   }
 
   val qCohortLtvSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_custkey, EXTRACT(year FROM o_orderdate) AS yr,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents
+      |    ${unitsSql("o_totalprice", 100)} AS cents
       |  FROM orders
       |),
       |cohorts AS (
@@ -1602,12 +1602,12 @@ object Warehouse {
   val qCustBitemporalSql: String =
     s"""WITH ledger AS (
        |  SELECT c_custkey, c_nationkey,
-       |    CAST(CAST(c_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT) AS bal_c,
+       |    ${unitsSql("c_acctbal", 100)} AS bal_c,
        |    $btTxBase AS tx
        |  FROM customer
        |  UNION ALL
        |  SELECT c_custkey, c_nationkey,
-       |    CAST(CAST(c_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT) + 10000 AS bal_c,
+       |    ${unitsSql("c_acctbal", 100)} + 10000 AS bal_c,
        |    $btTxCorrection AS tx
        |  FROM customer WHERE c_custkey % 10 = 0
        |),
@@ -1686,7 +1686,7 @@ object Warehouse {
        |  SELECT o_custkey,
        |    sum(CASE WHEN o_orderdate < TIMESTAMP '$lifecycleBoundary' THEN 1 ELSE 0 END) AS n_early,
        |    sum(CASE WHEN o_orderdate >= TIMESTAMP '$lifecycleBoundary' THEN 1 ELSE 0 END) AS n_late,
-       |    sum(CAST(o_totalprice AS DECIMAL(18,4))) AS rev
+       |    sum(${decSql("o_totalprice")}) AS rev
        |  FROM orders GROUP BY o_custkey
        |),
        |states AS (
@@ -1697,7 +1697,7 @@ object Warehouse {
        |         ELSE 'acquired' END AS state,
        |    COALESCE(n_early, 0) AS n_early,
        |    COALESCE(n_late, 0) AS n_late,
-       |    COALESCE(rev, CAST(0 AS DECIMAL(18,4))) AS rev
+       |    COALESCE(rev, ${decSql("0")}) AS rev
        |  FROM customer LEFT JOIN per_cust ON c_custkey = o_custkey
        |)
        |SELECT state, count(*) AS n_customers,
@@ -2088,12 +2088,10 @@ object Warehouse {
     */
   def qCustCadence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epoch = lit("1970-01-01").cast("date")
     val w = Window.partitionBy($"o_custkey").orderBy($"day", $"o_orderkey")
     val gaps = Tables.orders(spark, sfDir)
       .select($"o_custkey", $"o_orderkey",
-        datediff(to_date($"o_orderdate".cast("timestamp")), epoch)
-          .cast("long").as("day"))
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("day"))
       .select($"o_custkey", ($"day" - lag($"day", 1).over(w)).as("g"))
       .filter($"g".isNotNull)
     val seg = Tables.customer(spark, sfDir)
@@ -2111,9 +2109,9 @@ object Warehouse {
   }
 
   val qCustCadenceSql: String =
-    """WITH days AS (
+    s"""WITH days AS (
       |  SELECT o_custkey, o_orderkey,
-      |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day
+      |    ${epochDaySql("CAST(o_orderdate AS DATE)")} AS day
       |  FROM orders
       |),
       |gaps AS (
@@ -2693,7 +2691,7 @@ object Warehouse {
     // spread on the weekly aggregate's key
     val li = Exec.spread(Tables.lineitem(spark, sfDir)
       .select($"l_partkey",
-        datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"),
+        epochDay(to_date($"l_shipdate")).as("dn"),
         dec($"l_quantity").as("qd"), rev.as("rev")), $"l_partkey")
     val span = li.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select($"d0", (expr(s"(d1 - d0) div $xyzWeekDays") + 1).as("n_weeks"))
@@ -2736,8 +2734,8 @@ object Warehouse {
   val qPartAbcXyzSql: String =
     s"""WITH li AS (
       |  SELECT l_partkey,
-      |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-      |    CAST(l_quantity AS DECIMAL(18,4)) AS qd,
+      |    ${epochDaySql("CAST(l_shipdate AS DATE)")} AS dn,
+      |    ${decSql("l_quantity")} AS qd,
       |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem
       |),
@@ -2821,7 +2819,7 @@ object Warehouse {
       .join(broadcast(Tables.part(spark, sfDir)
         .select($"p_partkey", $"p_brand")), $"l_partkey" === $"p_partkey")
       .select($"p_brand",
-        datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"),
+        epochDay(to_date($"l_shipdate")).as("dn"),
         rev.as("rev"))
     val span = li.agg(min($"dn").as("d0"), max($"dn").as("d1"))
       .select(($"d0" + expr("(d1 - d0 + 1) div 2")).as("d_mid"))
@@ -2854,7 +2852,7 @@ object Warehouse {
   val qBrandRankTauSql: String =
     s"""WITH li AS (
       |  SELECT p_brand,
-      |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
+      |    ${epochDaySql("CAST(l_shipdate AS DATE)")} AS dn,
       |    ${revenueSql("l_extendedprice", "l_discount")} AS rev
       |  FROM lineitem JOIN part ON l_partkey = p_partkey
       |),
@@ -2920,8 +2918,7 @@ object Warehouse {
     val placed = Tables.orders(spark, sfDir)
       .join(seg, $"o_custkey" === $"c_custkey")
       .select($"c_mktsegment".as("seg"),
-        datediff(to_date($"o_orderdate".cast("timestamp")), lit("1970-01-01"))
-          .cast("long").as("dn"),
+        epochDay(to_date($"o_orderdate".cast("timestamp"))).as("dn"),
         dec($"o_totalprice").as("v"))
     val rev = revenue(col("l_extendedprice"), col("l_discount"))
     // NO spread on the lineitem side (r16 measured): the guarded
@@ -2936,7 +2933,7 @@ object Warehouse {
       .join(Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
       .join(seg, $"o_custkey" === $"c_custkey")
       .select($"c_mktsegment".as("seg"),
-        datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"),
+        epochDay(to_date($"l_shipdate")).as("dn"),
         rev.as("v"))
     // DAY-GRAIN REDUCTION, materialized (r15, guide §1.2): placed and
     // shipped each fed the span aggregate AND their weekly-moment arm,
@@ -2990,13 +2987,13 @@ object Warehouse {
          |  ((CAST($s AS DOUBLE) * CAST($s AS DOUBLE)) * (CAST(w AS DOUBLE) - 1.0)))""".stripMargin
     s"""WITH placed AS (
        |  SELECT c_mktsegment AS seg,
-       |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
-       |    CAST(o_totalprice AS DECIMAL(18,4)) AS v
+       |    ${epochDaySql("CAST(o_orderdate AS DATE)")} AS dn,
+       |    ${decSql("o_totalprice")} AS v
        |  FROM orders JOIN customer ON o_custkey = c_custkey
        |),
        |shipped AS (
        |  SELECT c_mktsegment AS seg,
-       |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn,
+       |    ${epochDaySql("CAST(l_shipdate AS DATE)")} AS dn,
        |    ${revenueSql("l_extendedprice", "l_discount")} AS v
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  JOIN customer ON o_custkey = c_custkey
@@ -3263,7 +3260,7 @@ object Warehouse {
     import spark.implicits._
     val li = Tables.lineitem(spark, sfDir)
       .select($"l_partkey",
-        datediff(to_date($"l_shipdate"), lit("1970-01-01")).cast("long").as("dn"))
+        epochDay(to_date($"l_shipdate")).as("dn"))
     val horizon = li.agg(max($"dn").as("d_max"))
     val perPart = li.groupBy($"l_partkey").agg(max($"dn").as("last_dn"))
       .crossJoin(broadcast(horizon))
@@ -3287,7 +3284,7 @@ object Warehouse {
   val qPartDeadStockSql: String =
     s"""WITH li AS (
        |  SELECT l_partkey,
-       |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS dn
+       |    ${epochDaySql("CAST(l_shipdate AS DATE)")} AS dn
        |  FROM lineitem
        |),
        |horizon AS (SELECT max(dn) AS d_max FROM li),

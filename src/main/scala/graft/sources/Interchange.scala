@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Exact.{checksum, checksumSql, dec}
+import graft.Exact.{checksum, checksumSql, dec, decSql}
 import graft.model.Tables
 
 /** Columnar interchange beyond parquet: ORC, the other columnar format
@@ -50,7 +50,7 @@ object Interchange {
 
   val qEventOrcRoundtripSql: String =
     s"""SELECT event_type, count(*) AS n,
-       |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
+       |  CAST(sum(${decSql("value")}) AS DOUBLE) AS sum_value,
        |  ${checksumSql("event_id")} AS id_checksum,
        |  min(epoch_us(ts)) AS ts_lo, max(epoch_us(ts)) AS ts_hi
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin

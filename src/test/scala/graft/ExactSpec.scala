@@ -1,8 +1,9 @@
 package graft
 
 import java.security.MessageDigest
+import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.functions.{col, floor, sum}
+import org.apache.spark.sql.functions.{col, expr, floor, sum, to_date}
 
 /** The exactness rules: each kernel gives the answer its reference
   * computes in plain Scala, whatever the partitioning.
@@ -72,5 +73,45 @@ class ExactSpec extends SparkSuite {
       .selectExpr(s"${Exact.portableHashExprSql("s")}").as[Long].collect().toSeq
     assert(viaExpr === keys.map(md5Prefix))
     assert(Exact.portableHashSql("t") === "CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)")
+  }
+
+  test("epochDay and its SQL twin give LocalDate.toEpochDay from year 1 to 9999, and epochDate inverts them") {
+    import spark.implicits._
+    val stamps = Seq("0001-01-01T00:00:00Z", "1969-12-31T23:59:59.999999Z",
+      "1970-01-01T00:00:00Z", "2024-02-29T12:34:56.5Z", "9999-12-31T23:59:59.999999Z")
+      .map(Instant.parse)
+    val want = stamps.map(_.atOffset(ZoneOffset.UTC).toLocalDate.toEpochDay)
+    val micros = stamps.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000)
+    val days = micros.toDF("us")
+      .select(expr("timestamp_micros(us)").as("ts"))
+      .select(Exact.epochDay(to_date(col("ts"))).as("dn"),
+        expr(Exact.epochDaySql("CAST(ts AS DATE)")).as("dn_sql"))
+    assert(days.as[(Long, Long)].collect().toSeq === want.zip(want))
+    // the inverse pair: DATE of each day, back to the same day and the ISO date
+    val back = days
+      .select(expr(Exact.epochDateExprSql("dn")).as("d"), expr(Exact.epochDateSql("dn")).as("d_sql"))
+      .select(Exact.epochDay(col("d")), Exact.epochDay(col("d_sql")),
+        col("d").cast("string"), col("d_sql").cast("string"))
+      .as[(Long, Long, String, String)].collect().toSeq
+    assert(back === want.map { dn =>
+      val iso = LocalDate.ofEpochDay(dn).toString
+      (dn, dn, iso, iso)
+    })
+  }
+
+  test("decSql and unitsSql, parsed by Spark, equal dec and units on the same rows") {
+    import spark.implicits._
+    val df = Seq(-1.23456, 1.239, -0.004, 0.0, 12345.67, 999999.99).toDF("x")
+    val got = df.select(Exact.dec(col("x")), expr(Exact.decSql("x")),
+        Exact.units(col("x"), 100), expr(Exact.unitsSql("x", 100)),
+        Exact.units(col("x"), 10000), expr(Exact.unitsSql("x", 10000)))
+      .collect()
+    assert(got.length === 6)
+    got.foreach { r =>
+      assert(r.getDecimal(0) === r.getDecimal(1))
+      assert(r.getLong(2) === r.getLong(3))
+      assert(r.getLong(4) === r.getLong(5))
+    }
+    assert(got.map(_.getLong(2)).toSeq === Seq(-123L, 123L, 0L, 0L, 1234567L, 99999999L))
   }
 }

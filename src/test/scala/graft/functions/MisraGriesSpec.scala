@@ -31,12 +31,13 @@ class MisraGriesSpec extends SparkSuite {
     check("mg-guarantees", Prop.forAll(streamGen) { case (k, items, cuts) =>
       val agg = new MisraGries(k)
       // split the stream into chunks, sketch each, merge left-to-right —
-      // exercising reduce AND merge paths
+      // exercising reduce AND merge paths; an empty stream cut only at 0
+      // has no chunks and sketches to zero
       val bounds = (0 +: cuts :+ items.length).distinct.sorted
       val chunks = bounds.zip(bounds.tail).map { case (a, b) => items.slice(a, b) }
       val sketch = chunks
         .map(c => c.foldLeft(agg.zero)(agg.reduce))
-        .reduceLeft(agg.merge)
+        .reduceLeftOption(agg.merge).getOrElse(agg.zero)
       val result = agg.finish(sketch)
       val exact = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
       val n = items.size.toLong
