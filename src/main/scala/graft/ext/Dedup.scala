@@ -77,6 +77,18 @@ object Dedup {
   val rowsPerBand = 4
   val jaccardThreshold = 0.5
 
+  /** Set Jaccard |a ∩ b| / |a ∪ b| of two distinct-element arrays: both
+    * sizes widened to double, then one division. DuckDB twin:
+    * [[jaccardSql]].
+    */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
+
+  /** DuckDB text of [[jaccard]]; the union is `list_distinct(list_concat(a, b))`. */
+  private def jaccardSql(a: String, b: String): String =
+    s"CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
+      s"CAST(len(list_distinct(list_concat($a, $b))) AS DOUBLE)"
+
   /** Band-bucket size cap: buckets with more than this many docs are
     * DROPPED before the candidate self-join. An uncapped bucket of m docs
     * contributes m(m−1)/2 candidate pairs — a boilerplate-heavy real
@@ -226,8 +238,7 @@ object Dedup {
     val sb = shingled.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))).cast("double")).as("jaccard"))
+        jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
   }
 
@@ -304,13 +315,11 @@ object Dedup {
        |),
        |$candSql
        |SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |    CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) AS jaccard
+       |  ${jaccardSql("sa.hs", "sb.hs")} AS jaccard
        |FROM cand
        |JOIN shingled sa ON cand.doc_a = sa.doc_id
        |JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |    CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
@@ -538,8 +547,7 @@ object Dedup {
        |  FROM cand
        |  JOIN shingled sa ON cand.doc_a = sa.doc_id
        |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |    CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |    AND ${evalKeepSqlOn("doc_a")} AND ${evalKeepSqlOn("doc_b")}
        |)""".stripMargin
 
@@ -734,8 +742,7 @@ object Dedup {
        |  FROM cand
        |  JOIN shingled sa ON cand.doc_a = sa.doc_id
        |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |      CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |),
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -822,8 +829,7 @@ object Dedup {
        |  FROM cand
        |  JOIN shingled sa ON cand.doc_a = sa.doc_id
        |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |      CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |),
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -919,8 +925,7 @@ object Dedup {
        |  FROM cand
        |  JOIN shingled sa ON cand.doc_a = sa.doc_id
        |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |      CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |),
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -1731,8 +1736,7 @@ object Dedup {
       col("hs").as("hs_e"), col("hs8").as("hs8_e"))
     cand.join(trainPrep, "doc_id").join(broadcast(ePrep), "eval_doc_id")
       .select(col("doc_id"), col("eval_doc_id"),
-        (size(array_intersect(col("hs"), col("hs_e"))).cast("double") /
-          size(array_union(col("hs"), col("hs_e"))).cast("double")).as("jaccard"),
+        jaccard(col("hs"), col("hs_e")).as("jaccard"),
         (size(array_intersect(col("hs8"), col("hs8_e"))) > 0).as("caught_exact"))
       .filter(col("jaccard") >= jaccardThreshold)
   }
@@ -1764,8 +1768,6 @@ object Dedup {
     * `tprep`/`tband` and `eprep`/`eband` from [[decontamPrepSqlCtes]],
     * emitting `fpairs AS (doc_id, eval_doc_id, jaccard, caught_exact)`. */
   private[ext] def fuzzyPairsSqlCtes: String = {
-    val jac = "CAST(len(list_intersect(t.hs, e.hs)) AS DOUBLE) / " +
-      "CAST(len(list_distinct(list_concat(t.hs, e.hs))) AS DOUBLE)"
     s"""cand AS (
        |  SELECT DISTINCT t.doc_id AS doc_id, e.doc_id AS eval_doc_id
        |  FROM tband t JOIN eband e
@@ -1773,12 +1775,12 @@ object Dedup {
        |),
        |fpairs AS (
        |  SELECT c.doc_id, c.eval_doc_id,
-       |    $jac AS jaccard,
+       |    ${jaccardSql("t.hs", "e.hs")} AS jaccard,
        |    len(list_intersect(t.hs8, e.hs8)) > 0 AS caught_exact
        |  FROM cand c
        |  JOIN tprep t ON t.doc_id = c.doc_id
        |  JOIN eprep e ON e.doc_id = c.eval_doc_id
-       |  WHERE $jac >= $jaccardThreshold
+       |  WHERE ${jaccardSql("t.hs", "e.hs")} >= $jaccardThreshold
        |)""".stripMargin
   }
 
@@ -2061,8 +2063,7 @@ object Dedup {
        |  FROM cand
        |  JOIN shingled sa ON cand.doc_a = sa.doc_id
        |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-       |      CAST(len(list_distinct(list_concat(sa.hs, sb.hs))) AS DOUBLE) >= $jaccardThreshold
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |),
        |keepers AS (
        |  SELECT sha256(text) AS sha, min(doc_id) AS keep_id FROM corpus GROUP BY sha256(text)
@@ -2333,8 +2334,7 @@ object Dedup {
       .select(col("doc_id").as("partner"), col("hs").as("hs_p"))
       .join(broadcast(candIdx), "partner")
       .join(broadcast(prep.select(col("doc_id").as("b_doc"), col("hs"))), "b_doc")
-      .filter(size(array_intersect(col("hs"), col("hs_p"))).cast("double") /
-        size(array_union(col("hs"), col("hs_p"))).cast("double") >= jaccardThreshold)
+      .filter(jaccard(col("hs"), col("hs_p")) >= jaccardThreshold)
       .select(col("b_doc"), col("partner"))
 
     // within-batch arms: exact hash equality or verified banded near
@@ -2348,8 +2348,7 @@ object Dedup {
       .filter(col("a") < col("b")).select(col("a"), col("b")).distinct()
       .join(prep.select(col("doc_id").as("a"), col("hs").as("hs_a")), "a")
       .join(prep.select(col("doc_id").as("b"), col("hs").as("hs_b")), "b")
-      .filter(size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-        size(array_union(col("hs_a"), col("hs_b"))).cast("double") >= jaccardThreshold)
+      .filter(jaccard(col("hs_a"), col("hs_b")) >= jaccardThreshold)
       .select(col("a"), col("b"))
 
     val corpusPartners = exactIdx.unionAll(nearIdx)

@@ -21,6 +21,14 @@ import graft.model.Tables
   * formulation (VectorDotSpec proves it) and DuckDB's
   * `list_dot_product` over `DOUBLE[]`.
   *
+  * The vector geometry built on [[dot]] is written once per engine,
+  * beside it, and every site calls it: [[norm]] `sqrt(v·v)`, [[cosine]]
+  * `a·b / (na * nb)` (the norm product first, then one division) and
+  * [[sqDist]] `(a·a − 2·a·b) + b·b` (left to right), each with a
+  * `...Sql` twin that spells the same association in DuckDB — a site
+  * that regrouped the arithmetic would round differently and break
+  * oracle ties.
+  *
   * Scale design (100 TB):
   *   - Brute force is O(Q×N) with the query set BROADCAST — correct only
   *     while Q is small (it is: ad-hoc probes). The join is a broadcast
@@ -39,9 +47,46 @@ object Similarity {
   final val topK = 5
   final val nQueryVecs = 3
 
+  /** The embeddings widened to double: `(vec_id, e: array<double>)`. */
+  private def embE(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+
   /** Sequential-fold dot product of two vector columns, in double. */
   private def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.vector_dot(a, b)
+
+  /** Euclidean norm `sqrt(v·v)`: one [[dot]] of the vector with itself,
+    * then one square root. DuckDB twin: [[normSql]].
+    */
+  private def norm(v: Column): Column = sqrt(dot(v, v))
+
+  /** DuckDB text of [[norm]]: `sqrt(list_dot_product(v, v))`. */
+  private def normSql(v: String): String = s"sqrt(list_dot_product($v, $v))"
+
+  /** Cosine of `a` and `b` from their norms `an`, `bn`: `a·b / (an * bn)`.
+    * The norm product is formed first, then one division — never
+    * `a·b / an / bn`, which rounds differently and breaks oracle ties.
+    * DuckDB twin: [[cosineSql]].
+    */
+  private def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
+    dot(a, b) / (an * bn)
+
+  /** DuckDB text of [[cosine]]: `list_dot_product(a, b) / (an * bn)`. */
+  private def cosineSql(a: String, an: String, b: String, bn: String): String =
+    s"list_dot_product($a, $b) / ($an * $bn)"
+
+  /** Squared distance `||a − b||²` from the self-dots `aa` = a·a and
+    * `bb` = b·b, associated left to right: `(aa − 2·(a·b)) + bb`. Every
+    * nearest-centroid rank in both engines takes this one association.
+    * DuckDB twin: [[sqDistSql]].
+    */
+  private def sqDist(aa: Column, a: Column, b: Column, bb: Column): Column =
+    aa - lit(2) * dot(a, b) + bb
+
+  /** DuckDB text of [[sqDist]]: `aa - 2 * list_dot_product(a, b) + bb`. */
+  private def sqDistSql(aa: String, a: String, b: String, bb: String): String =
+    s"$aa - 2 * list_dot_product($a, $b) + $bb"
 
   // ------------------------------------------------------------------
   // Brute-force cosine top-k (exact baseline)
@@ -51,13 +96,13 @@ object Similarity {
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     val c = emb.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
     val scored = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
@@ -68,17 +113,17 @@ object Similarity {
   val qEmbCosineTopkSql: String =
     s"""WITH q AS (
        |  SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm
        |  FROM embeddings WHERE vec_id < $nQueryVecs
        |),
        |c AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm
        |  FROM embeddings WHERE vec_id >= $nQueryVecs
        |),
        |scored AS (
        |  SELECT q_id, vec_id,
-       |    list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |    ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |  FROM c, q
        |),
        |ranked AS (
@@ -113,13 +158,13 @@ object Similarity {
     val q = emb.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     val c = emb.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"), col("label").as("c_label"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
     val scored = c.join(broadcast(q), col("q_label") =!= col("c_label"))
       .select(col("q_id"), col("vec_id"), col("c_label"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
     graft.functions.GraftOps.topKPerKey(scored,
         keys = Seq("q_id"), order = Seq(("cosine", true), ("vec_id", false)), k = topK)
       .orderBy(col("q_id"), col("cosine").desc, col("vec_id"))
@@ -128,17 +173,17 @@ object Similarity {
   val qEmbHardNegativesSql: String =
     s"""WITH q AS (
        |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm
        |  FROM embeddings WHERE vec_id < $nQueryVecs
        |),
        |c AS (
        |  SELECT vec_id, label AS c_label, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm
        |  FROM embeddings WHERE vec_id >= $nQueryVecs
        |),
        |scored AS (
        |  SELECT q_id, vec_id, c_label,
-       |    list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |    ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |  FROM c JOIN q ON q_label <> c_label
        |),
        |ranked AS (
@@ -193,17 +238,17 @@ object Similarity {
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
       .withColumn("bucket", bucketCol(col("qe")))
     val c = emb.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
       .withColumn("bucket", bucketCol(col("ce")))
     // the whole point: EQUI-join on bucket — each query probes one bucket
     val scored = c.join(broadcast(q.withColumnRenamed("bucket", "q_bucket")),
         col("q_bucket") === col("bucket"))
       .select(col("q_id"), col("vec_id"), col("bucket"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
@@ -214,19 +259,19 @@ object Similarity {
   val qEmbAnnLshSql: String =
     s"""WITH q AS (
        |  SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm,
        |    ${bucketSql("CAST(embedding AS DOUBLE[])")} AS q_bucket
        |  FROM embeddings WHERE vec_id < $nQueryVecs
        |),
        |c AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm,
        |    ${bucketSql("CAST(embedding AS DOUBLE[])")} AS bucket
        |  FROM embeddings WHERE vec_id >= $nQueryVecs
        |),
        |scored AS (
        |  SELECT q_id, vec_id, bucket,
-       |    list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |    ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |  FROM c JOIN q ON c.bucket = q.q_bucket
        |),
        |ranked AS (
@@ -275,7 +320,7 @@ object Similarity {
     val q0 = emb.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"),
         transform(col("embedding"), _.cast("double")).as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
       .withColumn("bucket", bucketCol(col("qe")))
     val planes = array((0 until lshPlanes).map(p =>
       struct(abs(dot(col("qe"), planeLit(p))).as("am"), lit(p).as("p"))): _*)
@@ -287,7 +332,7 @@ object Similarity {
     val c = emb.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
       .withColumn("bucket", bucketCol(col("ce")))
     val arms = multiprobeArms.map { t =>
       val probes =
@@ -297,7 +342,7 @@ object Similarity {
         explode(probes).as("pb"))
       val scored = c.join(broadcast(qp), col("bucket") === col("pb"))
         .select(col("q_id"), col("vec_id"),
-          (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+          cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
         .persist()
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cosine").desc, col("vec_id"))
@@ -329,7 +374,7 @@ object Similarity {
          |),
          |sc$t AS (
          |  SELECT q_id, c.vec_id,
-         |    list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+         |    ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
          |  FROM c JOIN qp$t ON c.bucket = qp$t.pb
          |),
          |rk$t AS (
@@ -353,7 +398,7 @@ object Similarity {
     s"""WITH ex AS (SELECT q_id, vec_id FROM ($qEmbCosineTopkSql)),
        |qm AS (
        |  SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm,
        |    ${bucketSql("CAST(embedding AS DOUBLE[])")} AS bucket,
        |    list_sort($margins) AS sorted
        |  FROM embeddings WHERE vec_id < $nQueryVecs
@@ -364,7 +409,7 @@ object Similarity {
        |),
        |c AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm,
        |    ${bucketSql("CAST(embedding AS DOUBLE[])")} AS bucket
        |  FROM embeddings WHERE vec_id >= $nQueryVecs
        |),
@@ -416,15 +461,14 @@ object Similarity {
     * table) is deterministic and mirrored exactly by the oracle.
     */
   def qEmbNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val perturbed = emb.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.5)), slice(col("e"), 2, embDim - 1)).as("e"))
     // one pass computes norm + all 6 table buckets (24 plane dots), shared
     // by the bands and both cosine probes (at scale: a bucketed index)
     val corpus = Exec.share(emb.unionAll(perturbed)
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
+      .withColumn("norm", norm(col("e")))
       .withColumn("buckets",
         array((0 until lshTables).map(t => tableBucketCol(t, col("e"))): _*)))
     val bands = corpus.select(col("vec_id"),
@@ -439,7 +483,7 @@ object Similarity {
     val sb = corpus.select(col("vec_id").as("vec_b"), col("e").as("eb"), col("norm").as("nb"))
     cand.join(sa, "vec_a").join(sb, "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
+        cosine(col("ea"), col("na"), col("eb"), col("nb")).as("cosine"))
       .filter(col("cosine") >= nearDupThreshold)
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -466,14 +510,14 @@ object Similarity {
        |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
        |),
        |normed AS (
-       |  SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS norm FROM corpus
+       |  SELECT vec_id, e, ${normSql("e")} AS norm FROM corpus
        |)
        |SELECT vec_a, vec_b,
-       |  list_dot_product(sa.e, sb.e) / (sa.norm * sb.norm) AS cosine
+       |  ${cosineSql("sa.e", "sa.norm", "sb.e", "sb.norm")} AS cosine
        |FROM cand
        |JOIN normed sa ON cand.vec_a = sa.vec_id
        |JOIN normed sb ON cand.vec_b = sb.vec_id
-       |WHERE list_dot_product(sa.e, sb.e) / (sa.norm * sb.norm) >= $nearDupThreshold
+       |WHERE ${cosineSql("sa.e", "sa.norm", "sb.e", "sb.norm")} >= $nearDupThreshold
        |ORDER BY vec_a, vec_b""".stripMargin
   }
 
@@ -507,19 +551,12 @@ object Similarity {
     * task — the whole reliability diagram costs one pass.
     */
   def qEmbScoreCalibration(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") % evalQueryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
-    val c = emb.filter(col("vec_id") % evalQueryMod =!= 0)
-      .select(col("vec_id"), col("label"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+    val (q, c) = evalSides(spark, sfDir)
     val half = calibBins / 2
     c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(
         least(lit((calibBins - 1).toLong), greatest(lit(0L),
-          floor((dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm")) +
+          floor((cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")) +
             lit(1.0)) * half).cast("long"))).as("bin"),
         when(col("label") === col("q_label"), 1L).otherwise(0L).as("m"))
       .groupBy(col("bin"))
@@ -534,20 +571,11 @@ object Similarity {
 
   val qEmbScoreCalibrationSql: String = {
     val half = calibBins / 2
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod = 0
-       |),
-       |c AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod <> 0
-       |),
+    s"""WITH $evalSidesSql,
        |binned AS (
        |  SELECT
        |    least(${calibBins - 1}, greatest(0, CAST(floor(
-       |      (list_dot_product(qe, ce) / (q_norm * c_norm) + CAST(1.0 AS DOUBLE))
+       |      (${cosineSql("qe", "q_norm", "ce", "c_norm")} + CAST(1.0 AS DOUBLE))
        |        * $half) AS BIGINT))) AS bin,
        |    CASE WHEN label = q_label THEN 1 ELSE 0 END AS m
        |  FROM c, q WHERE q_id <> vec_id
@@ -593,14 +621,13 @@ object Similarity {
     * src-keyed agg. No all-pairs term anywhere.
     */
   def qEmbMutualNn(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val base = embE(spark, sfDir)
     val perturbed = base.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.5)),
           slice(col("e"), 2, embDim - 1)).as("e"))
     val corpus = base.unionAll(perturbed)
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
+      .withColumn("norm", norm(col("e")))
       .withColumn("bucket", bucketCol(col("e")))
     val a = corpus.select(col("vec_id").as("src"), col("e").as("ea"),
       col("norm").as("na"), col("bucket"))
@@ -609,7 +636,7 @@ object Similarity {
     val directed = a.join(b, Seq("bucket"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
-        floor(dot(col("ea"), col("eb")) / (col("na") * col("nb")) *
+        floor(cosine(col("ea"), col("na"), col("eb"), col("nb")) *
           mutualCosScale).cast("long").as("qcos"))
     val wBest = Window.partitionBy(col("src"))
       .orderBy(col("qcos").desc, col("dst").asc)
@@ -643,7 +670,7 @@ object Similarity {
        |),
        |corpus AS (
        |  SELECT vec_id, e,
-       |    sqrt(list_dot_product(e, e)) AS norm,
+       |    ${normSql("e")} AS norm,
        |    ${bucketSql("e")} AS bucket
        |  FROM (
        |    SELECT vec_id, e FROM base
@@ -654,7 +681,7 @@ object Similarity {
        |),
        |directed AS (
        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-       |    CAST(floor(list_dot_product(a.e, b.e) / (a.norm * b.norm) *
+       |    CAST(floor(${cosineSql("a.e", "a.norm", "b.e", "b.norm")} *
        |      $mutualCosScale) AS BIGINT) AS qcos
        |  FROM corpus a JOIN corpus b
        |    ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
@@ -758,11 +785,11 @@ object Similarity {
   private def centListSql(name: String, cl: String, where: String = ""): String =
     s"$name AS (SELECT label AS c_label, list(c ORDER BY i) AS cv FROM $cl$where GROUP BY label)"
 
-  /** Squared distance v·v − 2v·c + c·c of `v` to centroid `cv`, in
-    * [[probeCells]]' association.
+  /** Squared distance of `v` to centroid `cv`, in [[probeCells]]'
+    * association ([[sqDistSql]]).
     */
-  private final val centDistSql =
-    "list_dot_product(v, v) - 2 * list_dot_product(v, cv) + list_dot_product(cv, cv)"
+  private def centDistSql: String =
+    sqDistSql("list_dot_product(v, v)", "v", "cv", "list_dot_product(cv, cv)")
 
   /** [[probeCells]]' nearest-centroid rule in DuckDB SQL: every row of the
     * `(vec_id, …, v)` CTE `src` against every centroid of `cent`, with all
@@ -824,14 +851,13 @@ object Similarity {
     * whole computation is NARROW: a broadcast nested-loop join with a
     * 1-row build side (no exchange, no fan-out of the stream side), then a
     * per-row `transform`/`array_sort`/`slice` over the constant-k array.
-    * Nothing about the corpus ever shuffles — the round-4 window-argmin
-    * formulation this replaces exchanged and sorted all N×k crossed rows
-    * on vec_id, 1024× the corpus at k=1024 (VERDICT r4 #1).
+    * Nothing about the corpus ever shuffles: a window argmin would
+    * exchange and sort all N×k crossed rows on vec_id instead.
     *
     * Determinism: distances sort ascending with the cell label as
     * tiebreak — exactly the oracle's `ORDER BY dist, c_label` / rn=1 when
-    * nprobe=1, and the distance expression `(v·v − 2v·c) + c·c` keeps the
-    * original association, so both engines pick identical cells.
+    * nprobe=1, and the distance is [[sqDist]] on both sides, so both
+    * engines pick identical cells.
     */
   private[ext] def probeCells(side: DataFrame, centArr: DataFrame,
       nprobe: Int): DataFrame = {
@@ -846,8 +872,7 @@ object Similarity {
       .select(Seq(col("vec_id"), col("e"), sqrt(col("ee")).as("norm"),
         explode(slice(array_sort(transform(col("cents"), c =>
           struct(
-            (col("ee") - lit(2) * dot(col("e"), c.getField("cv"))
-              + c.getField("cc")).as("d"),
+            sqDist(col("ee"), col("e"), c.getField("cv"), c.getField("cc")).as("d"),
             c.getField("c_label").as("cell")))), 1, nprobe)).as("probe")) ++
         extras: _*)
       .select(Seq(col("vec_id"), col("e"), col("probe.cell").as("cell"),
@@ -892,8 +917,7 @@ object Similarity {
   private[ext] def annIvfNprobeWith(spark: SparkSession, sfDir: String,
       nprobe: Int, centArr: DataFrame): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val q = probeCells(emb.filter(col("vec_id") < nQueryVecs), centArr, nprobe)
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("cell"),
         col("norm").as("q_norm"))
@@ -901,7 +925,7 @@ object Similarity {
     // each query touches nprobe cells; candidates live in exactly one — EQUI-join
     val scored = c.join(broadcast(q), Seq("cell"))
       .select(col("q_id"), col("vec_id"), col("cell"),
-        (dot(col("qe"), col("e")) / (col("q_norm") * col("norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("e"), col("norm")).as("cosine"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
@@ -913,7 +937,7 @@ object Similarity {
     s"""WITH $centroidsLongSql,
        |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
+       |  SELECT *, ${normSql("v")} AS norm FROM (${assignSql("e", "cent")})
        |),
        |q AS (
        |  SELECT vec_id AS q_id, v AS qe, cell, norm AS q_norm FROM assigned
@@ -925,7 +949,7 @@ object Similarity {
        |),
        |scored AS (
        |  SELECT q_id, vec_id, c.cell AS cell,
-       |    list_dot_product(qe, v) / (q_norm * norm) AS cosine
+       |    ${cosineSql("qe", "q_norm", "v", "norm")} AS cosine
        |  FROM c JOIN q ON c.cell = q.cell
        |),
        |ranked AS (
@@ -978,8 +1002,7 @@ object Similarity {
     * to mirror that split.
     */
   def qEmbIvfIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val all = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val all = embE(spark, sfDir)
     // frozen quantizer over base rows: one fold reads it, but it costs a full pass
     val centArr = Exec.share(centroidArrayOf(
       Tables.embeddings(spark, sfDir).filter(col("vec_id") % ivfIncrMod =!= 0),
@@ -1362,7 +1385,7 @@ object Similarity {
       .select(col("vec_id"), col("e"), col("cell"), col("norm"))
       .join(broadcast(evalA), Seq("cell"))
       .select(col("vec_id"), col("eval_vec_id"), col("cell"),
-        (dot(col("qe"), col("e")) / (col("q_norm") * col("norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("e"), col("norm")).as("cosine"))
       .filter(col("cosine") >= semanticTau)
 
   /** Oracle-side mirror of [[semanticContamPairs]]: the CTE chain from a
@@ -1374,20 +1397,20 @@ object Similarity {
     s"""${centroidsLongSqlOver(trSrc, pfx)},
        |${centListSql(s"${pfx}cent", s"${pfx}cl")},
        |${pfx}ta AS (
-       |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm, cell, rn
+       |  SELECT vec_id, v, ${normSql("v")} AS norm, cell, rn
        |  FROM (${assignSql(trSrc, s"${pfx}cent")})
        |),
        |${pfx}ea AS (
        |  SELECT vec_id AS eval_vec_id, v AS qe,
-       |    sqrt(list_dot_product(v, v)) AS q_norm, cell, rn
+       |    ${normSql("v")} AS q_norm, cell, rn
        |  FROM (${assignSql(evSrc, s"${pfx}cent")})
        |),
        |${pfx}pairs AS (
        |  SELECT t.vec_id, e.eval_vec_id, t.cell,
-       |    list_dot_product(e.qe, t.v) / (e.q_norm * t.norm) AS cosine
+       |    ${cosineSql("e.qe", "e.q_norm", "t.v", "t.norm")} AS cosine
        |  FROM (SELECT * FROM ${pfx}ta WHERE rn = 1) t
        |  JOIN (SELECT * FROM ${pfx}ea WHERE rn <= 2) e ON t.cell = e.cell
-       |  WHERE list_dot_product(e.qe, t.v) / (e.q_norm * t.norm) >= $semanticTau
+       |  WHERE ${cosineSql("e.qe", "e.q_norm", "t.v", "t.norm")} >= $semanticTau
        |)""".stripMargin
 
   val qEmbDecontamIvfSql: String =
@@ -1461,7 +1484,7 @@ object Similarity {
     val scored = assigned.join(anchors.hint("shuffle_hash"), Seq("cell"))
       .filter(col("vec_id") =!= col("a_id"))
       .select(col("a_id"), col("a_label"), col("cell"), col("label"),
-        (dot(col("ae"), col("e")) / (col("a_norm") * col("norm"))).as("cos"))
+        cosine(col("ae"), col("a_norm"), col("e"), col("norm")).as("cos"))
     scored.groupBy(col("a_id"), col("a_label"), col("cell"))
       .agg(
         sum(when(col("label") === col("a_label"), 1L).otherwise(0L)).as("n_pos"),
@@ -1480,7 +1503,7 @@ object Similarity {
     s"""WITH $centroidsLongSql,
        |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
+       |  SELECT *, ${normSql("v")} AS norm FROM (${assignSql("e", "cent")})
        |),
        |a AS (SELECT vec_id, label, v, cell, norm FROM assigned WHERE rn = 1),
        |anch AS (
@@ -1489,7 +1512,7 @@ object Similarity {
        |),
        |scored AS (
        |  SELECT a_id, a_label, a.cell AS cell, a.label AS label,
-       |    list_dot_product(av, v) / (a_norm * norm) AS cos
+       |    ${cosineSql("av", "a_norm", "v", "norm")} AS cos
        |  FROM a JOIN anch ON a.cell = anch.cell AND a.vec_id <> anch.a_id
        |)
        |SELECT a_id AS anchor_id, a_label AS label, cell,
@@ -1628,7 +1651,7 @@ object Similarity {
          |),
          |sc$n AS (
          |  SELECT q_id, c.vec_id,
-         |    list_dot_product(qe, v) / (q_norm * norm) AS cosine
+         |    ${cosineSql("qe", "q_norm", "v", "norm")} AS cosine
          |  FROM cand c JOIN qn$n q ON c.cell = q.cell
          |),
          |rk$n AS (
@@ -1651,7 +1674,7 @@ object Similarity {
        |$centroidsLongSql,
        |${centListSql("cent", "cl")},
        |assigned AS (
-       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("e", "cent")})
+       |  SELECT *, ${normSql("v")} AS norm FROM (${assignSql("e", "cent")})
        |),
        |cand AS (
        |  SELECT vec_id, v, cell, norm FROM assigned
@@ -1698,16 +1721,15 @@ object Similarity {
     * bit; argmax breaks ties on vec_id in both.
     */
   def qEmbMmr(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("e").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     val pool = emb.filter(col("vec_id") >= nQueryVecs)
       .crossJoin(broadcast(q))
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
+      .withColumn("norm", norm(col("e")))
       .withColumn("simq",
-        dot(col("qe"), col("e")) / (col("q_norm") * col("norm")))
+        cosine(col("qe"), col("q_norm"), col("e"), col("norm")))
       .select(col("vec_id"), col("e"), col("norm"), col("simq"))
       .orderBy(col("simq").desc, col("vec_id")).limit(mmrPoolK)
       .collect()
@@ -1747,7 +1769,7 @@ object Similarity {
     def round(r: Int): String = {
       val prevSel = s"s${r - 1}"
       s"""m$r AS (
-         |  SELECT p.vec_id, max(list_dot_product(p.v, s.v) / (p.norm * s.norm)) AS msim
+         |  SELECT p.vec_id, max(${cosineSql("p.v", "p.norm", "s.v", "s.norm")}) AS msim
          |  FROM pool p, $prevSel s GROUP BY p.vec_id
          |),
          |sc$r AS (
@@ -1768,10 +1790,10 @@ object Similarity {
       .map(r => s"SELECT $r AS pick_rank, vec_id, simq, msim, mmr FROM p$r")
       .mkString("\n  UNION ALL\n  ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |q AS (SELECT v AS qe, sqrt(list_dot_product(v, v)) AS qn FROM e WHERE vec_id = 0),
+       |q AS (SELECT v AS qe, ${normSql("v")} AS qn FROM e WHERE vec_id = 0),
        |pool AS (
-       |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
-       |    list_dot_product(qe, v) / (qn * sqrt(list_dot_product(v, v))) AS simq
+       |  SELECT vec_id, v, ${normSql("v")} AS norm,
+       |    ${cosineSql("qe", "qn", "v", normSql("v"))} AS simq
        |  FROM e, q WHERE vec_id >= $nQueryVecs
        |  ORDER BY simq DESC, vec_id LIMIT $mmrPoolK
        |),
@@ -1899,7 +1921,8 @@ object Similarity {
       .orderBy(col("q_id"), col("adc_dist"), col("vec_id"))
   }
 
-  val qEmbPqAdcSql: String =
+  val qEmbPqAdcSql: String = {
+    val vs = s"list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub)"
     s"""WITH $centroidsLongSql,
        |cent AS (SELECT label AS code, list(c ORDER BY i) AS cv64 FROM cl GROUP BY label),
        |sub AS (SELECT unnest(generate_series(0, ${pqM - 1})) AS s),
@@ -1914,10 +1937,7 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d, code) AS rn
        |  FROM (
        |    SELECT e.vec_id, cb.s, cb.code,
-       |      list_dot_product(list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub),
-       |                       list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub))
-       |        - 2 * list_dot_product(list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub), cb.cv)
-       |        + cb.cc AS d
+       |      ${sqDistSql(s"list_dot_product($vs, $vs)", vs, "cb.cv", "cb.cc")} AS d
        |    FROM e, cb
        |    WHERE e.vec_id >= $nQueryVecs
        |  )
@@ -1925,10 +1945,7 @@ object Similarity {
        |codes AS (SELECT vec_id, s, code FROM enc WHERE rn = 1),
        |dtab AS (
        |  SELECT e.vec_id AS q_id, cb.s, cb.code,
-       |    list_dot_product(list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub),
-       |                     list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub))
-       |      - 2 * list_dot_product(list_slice(v, cb.s * $pqSub + 1, cb.s * $pqSub + $pqSub), cb.cv)
-       |      + cb.cc AS d
+       |    ${sqDistSql(s"list_dot_product($vs, $vs)", vs, "cb.cv", "cb.cc")} AS d
        |  FROM e, cb
        |  WHERE e.vec_id < $nQueryVecs
        |),
@@ -1945,6 +1962,7 @@ object Similarity {
        |)
        |SELECT q_id, vec_id, adc_dist FROM ranked
        |WHERE rn <= $topK ORDER BY q_id, adc_dist, vec_id""".stripMargin
+  }
 
   // ------------------------------------------------------------------
   // IVF-PQ: coarse cells + product-quantized RESIDUALS (the FAISS index)
@@ -2028,7 +2046,8 @@ object Similarity {
       .orderBy(col("q_id"), col("adc_dist"), col("vec_id"))
   }
 
-  val qEmbIvfPqSql: String =
+  val qEmbIvfPqSql: String = {
+    val rs = s"list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub)"
     s"""WITH $centroidsLongSql,
        |${centListSql("cent", "cl")},
        |assigned AS (${assignSql("e", "cent")}),
@@ -2056,10 +2075,7 @@ object Similarity {
        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d, code) AS rn
        |  FROM (
        |    SELECT resid.vec_id, resid.cell, rcb.s, rcb.code,
-       |      list_dot_product(list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub),
-       |                       list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub))
-       |        - 2 * list_dot_product(list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub), rcb.cv)
-       |        + rcb.cc AS d
+       |      ${sqDistSql(s"list_dot_product($rs, $rs)", rs, "rcb.cv", "rcb.cc")} AS d
        |    FROM resid, rcb
        |    WHERE resid.vec_id >= $nQueryVecs
        |  )
@@ -2067,10 +2083,7 @@ object Similarity {
        |codes AS (SELECT vec_id, cell, s, code FROM enc WHERE rn = 1),
        |dtab AS (
        |  SELECT resid.vec_id AS q_id, resid.cell AS q_cell, rcb.s, rcb.code,
-       |    list_dot_product(list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub),
-       |                     list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub))
-       |      - 2 * list_dot_product(list_slice(r, rcb.s * $pqSub + 1, rcb.s * $pqSub + $pqSub), rcb.cv)
-       |      + rcb.cc AS d
+       |    ${sqDistSql(s"list_dot_product($rs, $rs)", rs, "rcb.cv", "rcb.cc")} AS d
        |  FROM resid, rcb
        |  WHERE resid.vec_id < $nQueryVecs
        |),
@@ -2088,6 +2101,7 @@ object Similarity {
        |)
        |SELECT q_id, vec_id, cell, adc_dist FROM ranked
        |WHERE rn <= $topK ORDER BY q_id, adc_dist, vec_id""".stripMargin
+  }
 
   // ------------------------------------------------------------------
   // TwoNN intrinsic dimension: how many dims does the data really use?
@@ -2254,8 +2268,7 @@ object Similarity {
   def qEmbTwonnCell(spark: SparkSession, sfDir: String): DataFrame = {
     // eager: assignment consumes the quantizer
     val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     // eager: both pairing sides consume it
     val assigned = Exec.share(probeCells(emb, centArr, 1)
       .select(col("vec_id"), col("e"), col("cell")))
@@ -2335,8 +2348,7 @@ object Similarity {
   def qEmbKmeansIter(spark: SparkSession, sfDir: String): DataFrame = {
     val centArr = centroidArrayDf(spark, sfDir, Some(kmeansK))
       .persist() // feeds the single assignment pass; derived via a full posexplode
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val assigned = probeCells(emb, centArr, nprobe = 1)
       .select(col("vec_id"), col("cell"), col("e"))
     assigned
@@ -2371,8 +2383,7 @@ object Similarity {
     */
   def kmeans(spark: SparkSession, sfDir: String, k: Int, iters: Int): (DataFrame, Seq[Double]) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
       .persist() // read `iters` times; production would already be columnar-cached
     val centType = "array<struct<c_label:int,cv:array<double>,cc:double>>"
     def litCentArr(cents: Seq[(Int, Seq[Double], Double)]): DataFrame =
@@ -2465,8 +2476,7 @@ object Similarity {
     * Output: one row per corpus vector — (vec_id, cell, is_sem_dup).
     */
   def qEmbSemDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val perturbed = emb.filter(col("vec_id") % 25 === 0)
       .select((col("vec_id") + 100000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.5)), slice(col("e"), 2, embDim - 1)).as("e"))
@@ -2481,8 +2491,7 @@ object Similarity {
       col("e").as("eb"), col("norm").as("nb"))
     val dups = a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
-      .filter((dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-        >= semDedupThreshold)
+      .filter(cosine(col("ea"), col("na"), col("eb"), col("nb")) >= semDedupThreshold)
       .select(col("vec_b").as("vec_id")).distinct()
       .withColumn("is_sem_dup", lit(true))
     assigned.select(col("vec_id"), col("cell"))
@@ -2502,13 +2511,13 @@ object Similarity {
        |  FROM e WHERE vec_id % 25 = 0
        |),
        |assigned AS (
-       |  SELECT *, sqrt(list_dot_product(v, v)) AS norm FROM (${assignSql("corpus", "cent")})
+       |  SELECT *, ${normSql("v")} AS norm FROM (${assignSql("corpus", "cent")})
        |),
        |asg AS (SELECT vec_id, v, cell, norm FROM assigned WHERE rn = 1),
        |dups AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE list_dot_product(a.v, b.v) / (a.norm * b.norm) >= $semDedupThreshold
+       |  WHERE ${cosineSql("a.v", "a.norm", "b.v", "b.norm")} >= $semDedupThreshold
        |)
        |SELECT asg.vec_id, cell, (dups.vec_id IS NOT NULL) AS is_sem_dup
        |FROM asg LEFT JOIN dups ON asg.vec_id = dups.vec_id
@@ -2539,8 +2548,7 @@ object Similarity {
     * doubles.
     */
   def qEmbQuantize(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
       .withColumn("scale",
         greatest(array_max(transform(col("e"), abs(_))), lit(1e-30)) / lit(127.0))
       // Spark floor → BIGINT, DuckDB floor → DOUBLE: cast back so the code
@@ -2551,18 +2559,16 @@ object Similarity {
     // frame (the qEmbCosineTopk pattern), not re-folded per corpus row
     val q0 = emb.filter(col("vec_id") === 0)
       .select(col("e").as("e0"), col("q").as("q0"),
-        sqrt(dot(col("e"), col("e"))).as("n_e0"),
-        sqrt(dot(col("q"), col("q"))).as("n_q0"))
+        norm(col("e")).as("n_e0"),
+        norm(col("q")).as("n_q0"))
     emb.crossJoin(broadcast(q0))
       .select(
         col("vec_id"), col("scale"),
         sqrt(aggregate(
           zip_with(col("q"), col("e"), (a, b) => (a * col("scale") - b) * (a * col("scale") - b)),
           lit(0.0), (acc, v) => acc + v) / lit(embDim.toDouble)).as("rmse"),
-        (dot(col("e"), col("e0")) /
-          (sqrt(dot(col("e"), col("e"))) * col("n_e0"))).as("cos_exact"),
-        (dot(col("q"), col("q0")) /
-          (sqrt(dot(col("q"), col("q"))) * col("n_q0"))).as("cos_quant"))
+        cosine(col("e"), norm(col("e")), col("e0"), col("n_e0")).as("cos_exact"),
+        cosine(col("q"), norm(col("q")), col("q0"), col("n_q0")).as("cos_quant"))
       .withColumn("cos_err", abs(col("cos_quant") - col("cos_exact")))
       .orderBy(col("vec_id"))
   }
@@ -2580,17 +2586,17 @@ object Similarity {
        |),
        |q0 AS (
        |  SELECT e AS e0, q AS q0,
-       |    sqrt(list_dot_product(e, e)) AS n_e0, sqrt(list_dot_product(q, q)) AS n_q0
+       |    ${normSql("e")} AS n_e0, ${normSql("q")} AS n_q0
        |  FROM quant WHERE vec_id = 0
        |)
        |SELECT vec_id, scale,
        |  sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |    list_transform(generate_series(1, $embDim), i -> (q[i] * scale - e[i]) * (q[i] * scale - e[i]))),
        |    (acc, v) -> acc + v) / $embDim.0) AS rmse,
-       |  list_dot_product(e, e0) / (sqrt(list_dot_product(e, e)) * n_e0) AS cos_exact,
-       |  list_dot_product(q, q0) / (sqrt(list_dot_product(q, q)) * n_q0) AS cos_quant,
-       |  abs(list_dot_product(q, q0) / (sqrt(list_dot_product(q, q)) * n_q0)
-       |    - list_dot_product(e, e0) / (sqrt(list_dot_product(e, e)) * n_e0)) AS cos_err
+       |  ${cosineSql("e", normSql("e"), "e0", "n_e0")} AS cos_exact,
+       |  ${cosineSql("q", normSql("q"), "q0", "n_q0")} AS cos_quant,
+       |  abs(${cosineSql("q", normSql("q"), "q0", "n_q0")}
+       |    - ${cosineSql("e", normSql("e"), "e0", "n_e0")}) AS cos_err
        |FROM quant, q0
        |ORDER BY vec_id""".stripMargin
 
@@ -2675,8 +2681,8 @@ object Similarity {
           c => c.getField("c_label") === col("label")), 1).as("own"),
         col("embedding"))
       .select(col("label"),
-        (dot(col("embedding"), col("embedding"))
-          - lit(2) * dot(col("embedding"), col("own.cv")) + col("own.cc")).as("d2"))
+        sqDist(dot(col("embedding"), col("embedding")), col("embedding"),
+          col("own.cv"), col("own.cc")).as("d2"))
     val intra = own.groupBy(col("label"))
       .agg(count(lit(1)).as("n_members"),
         (sum(col("d2").cast(org.apache.spark.sql.types.DecimalType(28, 10)))
@@ -2687,7 +2693,7 @@ object Similarity {
     val inter = cents.as("x").crossJoin(cents.as("y"))
       .filter(col("x.lbl") =!= col("y.lbl"))
       .select(col("x.lbl").as("label"),
-        (col("x.cc") - lit(2) * dot(col("x.cv"), col("y.cv")) + col("y.cc")).as("d2c"))
+        sqDist(col("x.cc"), col("x.cv"), col("y.cv"), col("y.cc")).as("d2c"))
       .groupBy(col("label")).agg(min(col("d2c")).as("inter_min_d2"))
     intra.join(inter, "label")
       .select(col("label"), col("n_members"), col("intra_msd"), col("inter_min_d2"),
@@ -2701,9 +2707,7 @@ object Similarity {
        |cvl AS (SELECT label, list(c ORDER BY i) AS cv FROM cl GROUP BY label),
        |own AS (
        |  SELECT e.label,
-       |    list_dot_product(e.v, e.v)
-       |      - 2 * list_dot_product(e.v, cvl.cv)
-       |      + list_dot_product(cvl.cv, cvl.cv) AS d2
+       |    ${sqDistSql("list_dot_product(e.v, e.v)", "e.v", "cvl.cv", "list_dot_product(cvl.cv, cvl.cv)")} AS d2
        |  FROM e JOIN cvl USING (label)
        |),
        |intra AS (
@@ -2713,9 +2717,7 @@ object Similarity {
        |),
        |inter AS (
        |  SELECT x.label AS label,
-       |    min(list_dot_product(x.cv, x.cv)
-       |      - 2 * list_dot_product(x.cv, y.cv)
-       |      + list_dot_product(y.cv, y.cv)) AS inter_min_d2
+       |    min(${sqDistSql("list_dot_product(x.cv, x.cv)", "x.cv", "y.cv", "list_dot_product(y.cv, y.cv)")}) AS inter_min_d2
        |  FROM cvl x JOIN cvl y ON x.label <> y.label
        |  GROUP BY x.label
        |)
@@ -2740,6 +2742,36 @@ object Similarity {
   final val evalK = 10
   final val mrrLcm = 2520L
 
+  /** The retrieval-eval split: every [[evalQueryMod]]-th vector is a query
+    * `(q_id, q_label, qe, q_norm)`, the rest the corpus
+    * `(vec_id, label, ce, c_norm)`, both with raw float embeddings and
+    * their [[norm]]s. DuckDB twin: [[evalSidesSql]].
+    */
+  private def evalSides(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, sfDir)
+    val q = emb.filter(col("vec_id") % evalQueryMod === 0)
+      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
+        col("embedding").as("qe"))
+      .withColumn("q_norm", norm(col("qe")))
+    val c = emb.filter(col("vec_id") % evalQueryMod =!= 0)
+      .select(col("vec_id"), col("label"), col("embedding").as("ce"))
+      .withColumn("c_norm", norm(col("ce")))
+    (q, c)
+  }
+
+  /** [[evalSides]] in DuckDB SQL: the CTEs `q` and `c`. */
+  private def evalSidesSql: String =
+    s"""q AS (
+       |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm
+       |  FROM embeddings WHERE vec_id % $evalQueryMod = 0
+       |),
+       |c AS (
+       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ce,
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm
+       |  FROM embeddings WHERE vec_id % $evalQueryMod <> 0
+       |)""".stripMargin
+
   /** Offline retrieval-quality evaluation of the embedding space: treat
     * every [[evalQueryMod]]-th vector as a query, SAME LABEL as the
     * relevance judgment, rank the corpus by exact cosine, and report
@@ -2755,19 +2787,12 @@ object Similarity {
     * unchanged (recall is then measured AGAINST this exact baseline).
     */
   def qEmbRetrievalEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") % evalQueryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
-    val c = emb.filter(col("vec_id") % evalQueryMod =!= 0)
-      .select(col("vec_id"), col("label"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+    val (q, c) = evalSides(spark, sfDir)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     val hits = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= evalK)
       .groupBy(col("q_id"), col("q_label"))
@@ -2784,20 +2809,11 @@ object Similarity {
   }
 
   val qEmbRetrievalEvalSql: String =
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod = 0
-       |),
-       |c AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod <> 0
-       |),
+    s"""WITH $evalSidesSql,
        |ranked AS (
        |  SELECT q_id, q_label, label,
        |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY list_dot_product(qe, ce) / (q_norm * c_norm) DESC, vec_id) AS rank
+       |      ORDER BY ${cosineSql("qe", "q_norm", "ce", "c_norm")} DESC, vec_id) AS rank
        |  FROM c, q WHERE q_id <> vec_id
        |),
        |hits AS (
@@ -2841,19 +2857,12 @@ object Similarity {
     * the IVF probe; the vote arithmetic composes unchanged.
     */
   private def knnPreds(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") % evalQueryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
-    val c = emb.filter(col("vec_id") % evalQueryMod =!= 0)
-      .select(col("vec_id"), col("label"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+    val (q, c) = evalSides(spark, sfDir)
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     val votes = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= knnK)
       .groupBy(col("q_id"), col("q_label"), col("label"))
@@ -2871,20 +2880,11 @@ object Similarity {
     * mirror of [[knnPreds]].
     */
   private val knnPredsSqlCte: String =
-    s"""q AS (
-       |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod = 0
-       |),
-       |c AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod <> 0
-       |),
+    s"""$evalSidesSql,
        |ranked AS (
        |  SELECT q_id, q_label, label,
        |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY list_dot_product(qe, ce) / (q_norm * c_norm) DESC, vec_id) AS rank
+       |      ORDER BY ${cosineSql("qe", "q_norm", "ce", "c_norm")} DESC, vec_id) AS rank
        |  FROM c, q WHERE q_id <> vec_id
        |),
        |votes AS (
@@ -3633,14 +3633,14 @@ object Similarity {
     val rows = matryoshkaDims.map { d =>
       val q = emb.filter(col("vec_id") < nQueryVecs)
         .select(col("vec_id").as("q_id"), slice(col("embedding"), 1, d).as("qe"))
-        .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+        .withColumn("q_norm", norm(col("qe")))
       val c = emb.filter(col("vec_id") >= nQueryVecs)
         .select(col("vec_id"), slice(col("embedding"), 1, d).as("ce"))
-        .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+        .withColumn("c_norm", norm(col("ce")))
       val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
       val trunc = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
         .select(col("q_id"), col("vec_id"),
-          (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+          cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= topK)
         .select(col("q_id"), col("vec_id"))
@@ -3662,8 +3662,7 @@ object Similarity {
          |      row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
          |    FROM (
          |      SELECT q_id, vec_id,
-         |        list_dot_product(qe, ce) /
-         |          (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))) AS cosine
+         |        ${cosineSql("qe", normSql("qe"), "ce", normSql("ce"))} AS cosine
          |      FROM (SELECT vec_id AS q_id, (CAST(embedding AS DOUBLE[]))[1:$d] AS qe
          |            FROM embeddings WHERE vec_id < $nQueryVecs) q,
          |           (SELECT vec_id, (CAST(embedding AS DOUBLE[]))[1:$d] AS ce
@@ -3722,14 +3721,7 @@ object Similarity {
     * |queries| partitions, label-grain arithmetic after the top-k cut.
     */
   def qEmbNdcg(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") % evalQueryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
-    val c = emb.filter(col("vec_id") % evalQueryMod =!= 0)
-      .select(col("vec_id"), col("label"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+    val (q, c) = evalSides(spark, sfDir)
     // R per label: total relevant candidates (label-grain, query-independent)
     val relTab = c.groupBy(col("label").as("q_label")).agg(count(lit(1)).as("n_rel"))
     val wExpr = (1 to evalK).foldRight(lit(0L): Column) { (r, other) =>
@@ -3740,7 +3732,7 @@ object Similarity {
       .orderBy(col("cosine").desc, col("vec_id"))
     val perQuery = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= evalK)
       .groupBy(col("q_id"), col("q_label"))
@@ -3763,21 +3755,12 @@ object Similarity {
     val wCase = (1 to evalK)
       .map(r => s"WHEN rank = $r THEN ${ndcgW(r - 1)}").mkString(" ")
     val idealList = ndcgIdeal.mkString("[", ", ", "]")
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_id, label AS q_label, CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod = 0
-       |),
-       |c AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
-       |  FROM embeddings WHERE vec_id % $evalQueryMod <> 0
-       |),
+    s"""WITH $evalSidesSql,
        |rel AS (SELECT label AS q_label, count(*) AS n_rel FROM c GROUP BY label),
        |ranked AS (
        |  SELECT q_id, q_label, label,
        |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY list_dot_product(qe, ce) / (q_norm * c_norm) DESC, vec_id)
+       |      ORDER BY ${cosineSql("qe", "q_norm", "ce", "c_norm")} DESC, vec_id)
        |      AS INTEGER) AS rank
        |  FROM c, q WHERE q_id <> vec_id
        |),
@@ -3834,11 +3817,10 @@ object Similarity {
     * [[qEmbAnnIvf]] cell index instead — the filter composes unchanged.
     */
   def qEmbDecontam(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val base = embE(spark, sfDir)
     val ev = base.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("eval_id"), col("e").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     // the synthetic corpus has no natural eval paraphrases, so the train
     // side carries the [[qEmbNearDup]] injection (every 25th vector
     // perturbed, +100000 id) — vector 0 is an eval vector, so its planted
@@ -3849,10 +3831,10 @@ object Similarity {
           slice(col("e"), 2, embDim - 1)).as("e"))
     val train = base.filter(col("vec_id") >= nQueryVecs).unionAll(perturbed)
       .select(col("vec_id"), col("e").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
     train.crossJoin(broadcast(ev))
       .select(col("eval_id"), col("vec_id"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
       .filter(col("cosine") >= decontamCos)
       .orderBy(col("eval_id"), col("vec_id"))
   }
@@ -3862,11 +3844,11 @@ object Similarity {
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
        |),
        |ev AS (
-       |  SELECT vec_id AS eval_id, e AS qe, sqrt(list_dot_product(e, e)) AS q_norm
+       |  SELECT vec_id AS eval_id, e AS qe, ${normSql("e")} AS q_norm
        |  FROM base WHERE vec_id < $nQueryVecs
        |),
        |train AS (
-       |  SELECT vec_id, e AS ce, sqrt(list_dot_product(e, e)) AS c_norm
+       |  SELECT vec_id, e AS ce, ${normSql("e")} AS c_norm
        |  FROM (
        |    SELECT vec_id, e FROM base WHERE vec_id >= $nQueryVecs
        |    UNION ALL
@@ -3875,9 +3857,9 @@ object Similarity {
        |  )
        |)
        |SELECT eval_id, vec_id,
-       |  list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |  ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |FROM train, ev
-       |WHERE list_dot_product(qe, ce) / (q_norm * c_norm) >= $decontamCos
+       |WHERE ${cosineSql("qe", "q_norm", "ce", "c_norm")} >= $decontamCos
        |ORDER BY eval_id, vec_id""".stripMargin
 
   // ------------------------------------------------------------------
@@ -3929,14 +3911,14 @@ object Similarity {
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     val c = emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding").as("ce"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
     val wd = Window.orderBy(col("cosine").desc, col("vec_id"))
     val dense = c.crossJoin(broadcast(q))
       .select(col("vec_id"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id")).limit(rrfPoolN)
       .withColumn("dense_rank", row_number().over(wd).cast("long"))
       .select(col("vec_id").as("item_id"), col("dense_rank"))
@@ -3960,16 +3942,16 @@ object Similarity {
        |),
        |q AS (
        |  SELECT CAST(embedding AS DOUBLE[]) AS qe,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS q_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS q_norm
        |  FROM embeddings WHERE vec_id = 0
        |),
        |c AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS c_norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS c_norm
        |  FROM embeddings WHERE vec_id <> 0
        |),
        |densepool AS (
-       |  SELECT vec_id, list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |  SELECT vec_id, ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |  FROM c, q
        |  ORDER BY cosine DESC, vec_id LIMIT $rrfPoolN
        |),
@@ -4028,15 +4010,15 @@ object Similarity {
     val q = sig.filter(col("vec_id") < nQueryVecs)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("w0").as("qw0"), col("w1").as("qw1"))
-      .withColumn("q_norm", sqrt(dot(col("qe"), col("qe"))))
+      .withColumn("q_norm", norm(col("qe")))
     val c = sig.filter(col("vec_id") >= nQueryVecs)
       .select(col("vec_id"), col("embedding").as("ce"), col("w0"), col("w1"))
-      .withColumn("c_norm", sqrt(dot(col("ce"), col("ce"))))
+      .withColumn("c_norm", norm(col("ce")))
     val scored = c.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         (bit_count(col("qw0").bitwiseXOR(col("w0"))) +
           bit_count(col("qw1").bitwiseXOR(col("w1")))).cast("long").as("hamming"),
-        (dot(col("qe"), col("ce")) / (col("q_norm") * col("c_norm"))).as("cosine"))
+        cosine(col("qe"), col("q_norm"), col("ce"), col("c_norm")).as("cosine"))
     val hw = Window.partitionBy(col("q_id"))
       .orderBy(col("hamming"), col("vec_id"))
     val cw = Window.partitionBy(col("q_id"))
@@ -4066,17 +4048,17 @@ object Similarity {
        |),
        |q AS (
        |  SELECT vec_id AS q_id, e AS qe, w0 AS qw0, w1 AS qw1,
-       |    sqrt(list_dot_product(e, e)) AS q_norm
+       |    ${normSql("e")} AS q_norm
        |  FROM sig WHERE vec_id < $nQueryVecs
        |),
        |c AS (
-       |  SELECT vec_id, e AS ce, w0, w1, sqrt(list_dot_product(e, e)) AS c_norm
+       |  SELECT vec_id, e AS ce, w0, w1, ${normSql("e")} AS c_norm
        |  FROM sig WHERE vec_id >= $nQueryVecs
        |),
        |scored AS (
        |  SELECT q_id, vec_id,
        |    CAST(bit_count(xor(qw0, w0)) + bit_count(xor(qw1, w1)) AS BIGINT) AS hamming,
-       |    list_dot_product(qe, ce) / (q_norm * c_norm) AS cosine
+       |    ${cosineSql("qe", "q_norm", "ce", "c_norm")} AS cosine
        |  FROM c, q
        |),
        |ranked AS (
@@ -4131,8 +4113,7 @@ object Similarity {
   def qEmbSilhouette(spark: SparkSession, sfDir: String): DataFrame = {
     // eager: single consumer below, but derivation is a full pass
     val centArr = Exec.share(centroidArrayDf(spark, sfDir, None))
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
+    val emb = embE(spark, sfDir)
     val pair = probeCells(emb, centArr, nprobe = 2)
       .groupBy(col("vec_id"))
       .agg(min(struct(col("dist"), col("cell"))).as("own"),
@@ -4210,10 +4191,8 @@ object Similarity {
     * three numbers.
     */
   def qEmbNormQc(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("e"))
-      .select(col("vec_id"), sqrt(dot(col("e"), col("e"))).as("norm"))
+    val emb = embE(spark, sfDir)
+      .select(col("vec_id"), norm(col("e")).as("norm"))
     emb.agg(
         count(lit(1)).as("n_vecs"),
         min(col("norm")).as("min_norm"),
@@ -4232,8 +4211,7 @@ object Similarity {
   val qEmbNormQcSql: String =
     s"""WITH norms AS (
        |  SELECT vec_id,
-       |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-       |      CAST(embedding AS DOUBLE[]))) AS norm
+       |    ${normSql("CAST(embedding AS DOUBLE[])")} AS norm
        |  FROM embeddings
        |)
        |SELECT CAST(count(*) AS BIGINT) AS n_vecs,

@@ -1095,23 +1095,29 @@ object TextOps {
     * crossJoin subplan, no double-planned argmax) and is returned
     * directly. Rounds persist their seg table (lineage truncation). */
   /** ONE greedy left-to-right merge pass of `pair` over a space-separated
-    * segmentation — the property-tested double-replace kernel
-    * (PropertiesSpec proves replace×2 ≡ the greedy loop). Every Scala
-    * application site (training re-segmentation, frozen-rule replay)
-    * calls THIS; [[bpeApplyPairSqlText]] is its oracle-side twin. */
+    * segmentation. Every separator is doubled first, so a match of
+    * `' a  b '` consumes one space on each side and leaves the next
+    * symbol's leading space in place: one left-to-right `replace` then
+    * merges exactly the pairs the greedy scan merges, self-pair runs
+    * included (PropertiesSpec checks it against the greedy loop).
+    * Collapsing the doubled spaces and trimming gives the merged
+    * segmentation. Every Scala application site (training
+    * re-segmentation, frozen-rule replay) calls THIS;
+    * [[bpeApplyPairSqlText]] is its oracle-side twin. */
   private def bpeApplyPair(seg: Column, pair: String): Column = {
-    val srch = lit(" " + pair + " ")
+    val srch = lit(" " + pair.replace(" ", "  ") + " ")
     val repl = lit(" " + pair.replace(" ", "") + " ")
-    trim(replace(replace(concat(lit(" "), seg, lit(" ")), srch, repl), srch, repl))
+    val doubled = concat(lit(" "), replace(seg, lit(" "), lit("  ")), lit(" "))
+    trim(replace(replace(doubled, srch, repl), lit("  "), lit(" ")))
   }
 
-  /** The same double-replace pass as SQL text over columns (seg, pair) —
-    * spliced verbatim into every oracle application site so the kernel
-    * can never fork between training and frozen-rule replay. */
+  /** The same merge pass as SQL text over columns (seg, pair) — spliced
+    * verbatim into every oracle application site so the kernel can never
+    * fork between training and frozen-rule replay. */
   private val bpeApplyPairSqlText: String =
-    """trim(replace(replace(' ' || seg || ' ',
-      |      ' ' || pair || ' ', ' ' || replace(pair, ' ', '') || ' '),
-      |      ' ' || pair || ' ', ' ' || replace(pair, ' ', '') || ' '))""".stripMargin
+    """trim(replace(replace(' ' || replace(seg, ' ', '  ') || ' ',
+      |      ' ' || replace(pair, ' ', '  ') || ' ', ' ' || replace(pair, ' ', '') || ' '),
+      |      '  ', ' '))""".stripMargin
 
   private def bpeTrainRounds(words: DataFrame)
       : (DataFrame, Seq[(Int, String, Long)]) = {

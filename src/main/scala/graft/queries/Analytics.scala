@@ -4091,19 +4091,15 @@ object Analytics {
     */
   def qEventChangepoint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        epochDay(to_date($"ts")).as("dn"))
-      .agg(sum(dec($"value")).as("v"))
-      .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
+    val daily = dailyCents(spark, sfDir)
     val wOrd = Window.partitionBy($"event_type").orderBy($"dn")
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy($"event_type")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     daily.select($"event_type", $"dn",
-        sum($"y").over(wRun).as("sk"),
+        sum($"xc").over(wRun).as("sk"),
         row_number().over(wOrd).cast("long").as("k"),
-        sum($"y").over(wAll).as("tot"),
+        sum($"xc").over(wAll).as("tot"),
         count(lit(1)).over(wAll).as("n"))
       .select($"event_type", $"dn", $"k", $"tot", $"n",
         abs($"n" * $"sk" - $"k" * $"tot").as("absd"))
@@ -4124,16 +4120,14 @@ object Analytics {
     */
   val qEventChangepointSql: String =
     s"""WITH daily AS (
-      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
-      |    CAST(floor(sum(${decSql("value")}) * 100) AS BIGINT) AS y
-      |  FROM events GROUP BY event_type, dn
+      |$dailyCentsSql
       |),
       |r AS (
       |  SELECT event_type, dn,
-      |    CAST(sum(y) OVER (PARTITION BY event_type ORDER BY dn
+      |    CAST(sum(xc) OVER (PARTITION BY event_type ORDER BY dn
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sk,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY dn) AS BIGINT) AS k,
-      |    CAST(sum(y) OVER (PARTITION BY event_type) AS BIGINT) AS tot,
+      |    CAST(sum(xc) OVER (PARTITION BY event_type) AS BIGINT) AS tot,
       |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
       |  FROM daily
       |),
@@ -4400,16 +4394,12 @@ object Analytics {
     */
   def qEventTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.events(spark, sfDir)
-      .groupBy($"event_type",
-        epochDay(to_date($"ts")).as("dn"))
-      .agg(sum(dec($"value")).as("v"))
-      .select($"event_type", $"dn", floor($"v" * 100).cast("long").as("y"))
+    val daily = dailyCents(spark, sfDir)
     val pairs = daily.as("a")
       .join(daily.as("b"),
         $"a.event_type" === $"b.event_type" && $"a.dn" < $"b.dn")
       .select($"a.event_type".as("event_type"), $"a.dn".as("x1"), $"b.dn".as("x2"),
-        (($"b.y" - $"a.y").cast("double") / ($"b.dn" - $"a.dn").cast("double"))
+        (($"b.xc" - $"a.xc").cast("double") / ($"b.dn" - $"a.dn").cast("double"))
           .as("slope"))
     val wOrd = Window.partitionBy($"event_type")
       .orderBy($"slope", $"x1", $"x2")
@@ -4429,13 +4419,11 @@ object Analytics {
     */
   val qEventTheilSenSql: String =
     s"""WITH daily AS (
-      |  SELECT event_type, ${epochDaySql("CAST(ts AS DATE)")} AS dn,
-      |    CAST(floor(sum(${decSql("value")}) * 100) AS BIGINT) AS y
-      |  FROM events GROUP BY event_type, dn
+      |$dailyCentsSql
       |),
       |pairs AS (
       |  SELECT a.event_type, a.dn AS x1, b.dn AS x2,
-      |    CAST(b.y - a.y AS DOUBLE) / CAST(b.dn - a.dn AS DOUBLE) AS slope
+      |    CAST(b.xc - a.xc AS DOUBLE) / CAST(b.dn - a.dn AS DOUBLE) AS slope
       |  FROM daily a JOIN daily b
       |    ON a.event_type = b.event_type AND a.dn < b.dn
       |),
@@ -5761,8 +5749,8 @@ object Analytics {
   /** Daily cents per event type, `(event_type, dn, xc)`: `dn` the
     * [[graft.Exact.epochDay]] of the event and `xc` = ⌊Σ value · 100⌋ as
     * BIGINT, the sum exact in DECIMAL. The series SAX, records, Haar
-    * energy, Granger, Hurst, drawdown and ARCH effect read; its oracle
-    * CTE body is [[dailyCentsSql]].
+    * energy, Granger, Hurst, drawdown, ARCH effect, changepoint and
+    * Theil-Sen read; its oracle CTE body is [[dailyCentsSql]].
     */
   private def dailyCents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

@@ -145,23 +145,22 @@ class PropertiesSpec extends SparkSuite {
   }
 
   test("double string-replace merge equals greedy left-to-right BPE merge for ALL inputs") {
-    // the structural claim behind TextOps.bpeTrainRounds: one greedy BPE
-    // merge pass over a space-separated symbol string is EXACTLY two
-    // successive replace(' '||seg||' ', ' a b ', ' ab ') calls. Both
-    // engines implement replace as left-to-right non-overlapping scan —
-    // Java String.replace has the same semantics, so proving the claim
-    // against it on adversarial alphabets (self-pairs, symbols that are
-    // concatenations/prefixes of each other, chained occurrences) proves
-    // it for the engines; the NewOpsSpec replay covers the engine wiring.
-    val sym = Gen.oneOf("a", "b", "c", "ab", "ba", "aa", "bb", "aab")
-    val genSeq = Gen.listOf(sym).map(_.take(30))
-    val genPair = Gen.zip(sym, sym)
-    check("replace≡greedy", Prop.forAll(genSeq, genPair) { case (syms, (a, b)) =>
-      val srch = " " + a + " " + b + " "
-      val repl = " " + a + b + " "
-      val viaReplace = (" " + syms.mkString(" ") + " ")
-        .replace(srch, repl).replace(srch, repl)
+    // the structural claim behind TextOps.bpeApplyPair: one greedy BPE
+    // merge pass over a space-separated symbol string is EXACTLY one
+    // replace(' ' || doubled(seg) || ' ', ' a  b ', ' ab ') over the
+    // string with every separator doubled, then the doubled spaces
+    // collapsed. Both engines implement replace as a left-to-right
+    // non-overlapping scan — Java String.replace has the same semantics,
+    // so proving the claim against it on adversarial alphabets
+    // (self-pairs, symbols that are concatenations/prefixes of each
+    // other, chained occurrences) proves it for the engines; the
+    // NewOpsSpec replay covers the engine wiring.
+    def viaReplace(syms: Seq[String], a: String, b: String): Vector[String] =
+      (" " + syms.mkString(" ").replace(" ", "  ") + " ")
+        .replace(" " + a + "  " + b + " ", " " + a + b + " ")
+        .replace("  ", " ")
         .trim.split(" ", -1).filter(_.nonEmpty).toVector
+    def greedy(syms: Seq[String], a: String, b: String): Vector[String] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       val v = syms.toVector
       var i = 0
@@ -170,7 +169,17 @@ class PropertiesSpec extends SparkSuite {
           out += (a + b); i += 2
         } else { out += v(i); i += 1 }
       }
-      viaReplace == out.toVector
+      out.toVector
+    }
+    // a self-pair run of five: two plain ' c c ' replaces skip a pair here
+    val run5 = Seq.fill(5)("c")
+    assert(greedy(run5, "c", "c") === Vector("cc", "cc", "c"))
+    assert(viaReplace(run5, "c", "c") === greedy(run5, "c", "c"))
+    val sym = Gen.oneOf("a", "b", "c", "ab", "ba", "aa", "bb", "aab")
+    val genSeq = Gen.listOf(sym).map(_.take(30))
+    val genPair = Gen.zip(sym, sym)
+    check("replace≡greedy", Prop.forAll(genSeq, genPair) { case (syms, (a, b)) =>
+      viaReplace(syms, a, b) == greedy(syms, a, b)
     }, n = 500)
   }
 
