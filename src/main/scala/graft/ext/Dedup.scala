@@ -1,7 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Exec
 import graft.model.Tables
@@ -100,8 +104,9 @@ object Dedup {
     * which is why production minhash pipelines cap at a few hundred. The
     * cap bounds per-key join fan-out at maxBandBucket², independent of
     * corpus size; at 100 TB it is the difference between a bounded shuffle
-    * and a runaway stage. Mirrored in the oracle SQL ([[candSql]]), so the
-    * semantics are part of the checked contract, not a Spark-side detail.
+    * and a runaway stage. Mirrored in the oracle SQL
+    * ([[bandedCandSqlCtes]]), so the semantics are part of the checked
+    * contract, not a Spark-side detail.
     */
   val maxBandBucket = 100
 
@@ -188,13 +193,6 @@ object Dedup {
       posexplode(array(bandKeys: _*)).as(Seq("band_id", "band_key")))
   }
 
-  /** MinHash-banded candidate mining + exact-Jaccard verification over a
-    * frame carrying (doc_id, hs) — the shared core of [[qDocMinhashPairs]]
-    * and the curation funnel [[qDocCurate]]. `shingled` MUST be persisted
-    * by the caller: it feeds four consumers (both band-join sides via sigs
-    * + both Jaccard probes) and Spark materializes nothing between
-    * branches (measured: 4 full re-evaluations of the md5 pipeline).
-    */
   /** LSH band-bucket candidate mining over a (doc_id, hs) frame, with the
     * [[maxBandBucket]] cap applied before the self-join. Returns distinct
     * (doc_a, doc_b) with doc_a < doc_b. Persists the capped band table
@@ -230,6 +228,13 @@ object Dedup {
       .distinct()
   }
 
+  /** MinHash-banded candidate mining + exact-Jaccard verification over a
+    * frame carrying (doc_id, hs) — the shared core of [[qDocMinhashPairs]]
+    * and the curation funnel [[qDocCurate]]. `shingled` MUST be persisted
+    * by the caller: it feeds four consumers (both band-join sides via sigs
+    * + both Jaccard probes) and Spark materializes nothing between
+    * branches (measured: 4 full re-evaluations of the md5 pipeline).
+    */
   private def minhashVerifiedPairs(shingled: DataFrame): DataFrame = {
     val cand = bandedCandidates(shingled)
     // exact n-gram Jaccard (on the hash sets) for candidates only, both
@@ -265,8 +270,8 @@ object Dedup {
     minhashVerifiedPairs(nearDupShingled(spark, sfDir))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** Oracle fragments for the minhash pipeline — shared by the pairs query
-    * and the curation funnel so the two oracles cannot drift.
+  /** Oracle fragments for the minhash pipeline — shared with the
+    * fuzzy-decontam table, which bands other coefficients.
     */
   private def minColsSqlFor(coefs: Seq[(Long, Long)]): String =
     coefs.zipWithIndex.map { case ((a, b), i) =>
@@ -277,15 +282,28 @@ object Dedup {
       val key = (0 until rows).map(r => s"m${b * rows + r}").mkString(", ")
       s"SELECT doc_id, $b AS band_id, concat_ws('_', $key) AS band_key FROM $src"
     }.mkString("\n  UNION ALL\n  ")
-  private val minColsSql: String = minColsSqlFor(minhashCoefs)
-  private val bandSelectsSql: String = bandSelSqlFor("sig", nBands, rowsPerBand)
 
-  /** Oracle mirror of [[bandedCandidates]]'s capped candidate CTEs
-    * (expects a `bands` CTE in scope) — shared by both minhash oracles so
-    * the cap semantics cannot drift between them.
+  /** Oracle twin of [[nearDupShingled]]: the `corpus` and `shingled` CTEs. */
+  private lazy val nearDupShingledSqlCtes: String =
+    s"""$nearCorpusSql,
+       |shingled AS (
+       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
+       |)""".stripMargin
+
+  /** Oracle twin of [[bandedCandidates]]: signatures (`sig`), band keys
+    * (`bands`) and the [[maxBandBucket]]-capped candidate pairs (`cand`).
+    * Expects a `shingled` CTE in scope.
     */
-  private val candSql: String =
-    s"""bucket_ok AS (
+  private lazy val bandedCandSqlCtes: String =
+    s"""sig AS (
+       |  SELECT doc_id,
+       |    ${minColsSqlFor(minhashCoefs)}
+       |  FROM shingled
+       |),
+       |bands AS (
+       |  ${bandSelSqlFor("sig", nBands, rowsPerBand)}
+       |),
+       |bucket_ok AS (
        |  SELECT band_id, band_key FROM bands
        |  GROUP BY band_id, band_key HAVING count(*) <= $maxBandBucket
        |),
@@ -298,22 +316,22 @@ object Dedup {
        |    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
        |)""".stripMargin
 
-  val qDocMinhashPairsSql: String = {
-    val minCols = minColsSql
-    val bandSelects = bandSelectsSql
-    s"""WITH $nearCorpusSql,
-       |shingled AS (
-       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
-       |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minCols
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelects
-       |),
-       |$candSql
+  /** Oracle twin of [[minhashVerifiedPairs]] as the CTE `name(doc_a, doc_b)`:
+    * the `cand` pairs at exact Jaccard ≥ [[jaccardThreshold]] that also
+    * pass `andWhere`. Expects [[bandedCandSqlCtes]] in scope.
+    */
+  private def verifiedPairsSqlCte(name: String, andWhere: String = ""): String =
+    s"""$name AS (
+       |  SELECT doc_a, doc_b
+       |  FROM cand
+       |  JOIN shingled sa ON cand.doc_a = sa.doc_id
+       |  JOIN shingled sb ON cand.doc_b = sb.doc_id
+       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold$andWhere
+       |)""".stripMargin
+
+  val qDocMinhashPairsSql: String =
+    s"""WITH $nearDupShingledSqlCtes,
+       |$bandedCandSqlCtes
        |SELECT doc_a, doc_b,
        |  ${jaccardSql("sa.hs", "sb.hs")} AS jaccard
        |FROM cand
@@ -321,7 +339,6 @@ object Dedup {
        |JOIN shingled sb ON cand.doc_b = sb.doc_id
        |WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ------------------------------------------------------------------
   // Cross-source duplication matrix (E338)
@@ -524,36 +541,19 @@ object Dedup {
       .select(col("doc_a"), col("doc_b")))
   }
 
-  /** Shared oracle CTE chain: shingled corpus → minhash bands → capped
-    * candidates → exact-verified, [[evalKeep]]-sampled LSH pairs (`mh`).
-    * Factored so [[qDocMinhashEvalSql]] and [[qDocDedupEnsembleSql]]
-    * cannot drift. Expects the `corpus` CTE in scope.
+  /** Oracle twin of [[evalSampledMh]]: the [[evalKeep]]-sampled verified
+    * LSH pairs (`mh`). Factored so [[qDocMinhashEvalSql]] and
+    * [[qDocDedupEnsembleSql]] cannot drift. Expects the `shingled` CTE
+    * ([[nearDupShingledSqlCtes]]) in scope.
     */
-  private lazy val evalMhSqlCtes: String =
-    s"""shingled AS (
-       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
-       |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
-       |mh AS (
-       |  SELECT doc_a, doc_b
-       |  FROM cand
-       |  JOIN shingled sa ON cand.doc_a = sa.doc_id
-       |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
-       |    AND ${evalKeepSqlOn("doc_a")} AND ${evalKeepSqlOn("doc_b")}
-       |)""".stripMargin
+  private lazy val evalMhSqlCtes: String = {
+    val sampled = s" AND ${evalKeepSqlOn("doc_a")} AND ${evalKeepSqlOn("doc_b")}"
+    s"$bandedCandSqlCtes,\n${verifiedPairsSqlCte("mh", sampled)}"
+  }
 
   /** Shared oracle CTE chain for the exact sampled ground truth (`truth`):
     * prefix-filtered 3-gram Jaccard ≥ 1/2 over the [[evalKeep]] sample.
-    * Expects the `shingled` CTE ([[evalMhSqlCtes]]) in scope.
+    * Expects the `shingled` CTE ([[nearDupShingledSqlCtes]]) in scope.
     */
   private lazy val evalTruthSqlCtes: String =
     s"""toks AS (
@@ -585,7 +585,7 @@ object Dedup {
        |)""".stripMargin
 
   val qDocMinhashEvalSql: String =
-    s"""WITH $nearCorpusSql,
+    s"""WITH $nearDupShingledSqlCtes,
        |$evalMhSqlCtes,
        |$evalTruthSqlCtes,
        |counts AS (
@@ -602,148 +602,54 @@ object Dedup {
   // Duplicate-cluster resolution: connected components over verified pairs
   // ------------------------------------------------------------------
 
-  /** Iteration cap for [[qDocDupClusters]]' label propagation — bounds the
-    * rounds at graph diameter; 20 covers any realistic dup-cluster chain
-    * (clusters are near-cliques; diameters beyond single digits mean the
-    * Jaccard threshold is wrong, not the loop).
+  /** Connected components of the undirected pair list `pairs(doc_a,
+    * doc_b)`, both `LongType` and non-null: one `(doc_id, cluster_id)` row
+    * per distinct endpoint, `cluster_id` the minimum doc_id of its
+    * component. One collect and a union-find on the driver (the smaller
+    * root wins every union, so each root is its component's minimum);
+    * driver memory is O(|pairs|). PropertiesSpec checks it against a
+    * reference union-find over random graphs.
     */
-  val ccMaxIters = 20
-
-  /** The decision step the pair list exists for: group verified near-dup
-    * pairs into CLUSTERS (connected components) and name each by its
-    * minimum doc_id — "keep cluster_id, drop the rest" is then one
-    * filter. Spark side is distributed min-label propagation: every node
-    * starts as its own cluster; each round, labels flow across edges and
-    * every node takes the min of itself and its neighbors; converged when
-    * no label changes (checked with one count per round — the same
-    * driver-sync loop as [[Similarity.kmeans]]). Deterministic: min over
-    * a set is order-free.
-    *
-    * Scale: per round = one edge⋈label equi-join + one min groupBy (both
-    * partial-aggregated, both keyed on doc ids) + one pointer-jump join,
-    * rounds = O(log diameter) — see [[connectedComponents]]. Dup graphs
-    * are near-cliques, so propagation converges in 2-3 rounds. The
-    * oracle walks the same graph with a recursive CTE (min over the
-    * transitive closure) — tractable because oracle corpora are small.
-    *
-    * Output: every doc that appears in ≥1 verified pair, its cluster id,
-    * and the cluster size (constant within a cluster).
-    */
-  /** Distributed min-label-propagation connected components over an
-    * undirected pair list (columns `doc_a`, `doc_b`). Returns one row per
-    * node: (doc_id, cluster_id = min doc_id of its component). The general
-    * graph kernel behind [[qDocDupClusters]]; PropertiesSpec checks it
-    * against a local union-find over arbitrary random graphs.
-    *
-    * Each round does the neighbor-min step AND a pointer jump (label ←
-    * label of label, through the previous round's label table), so the
-    * distance a label has left to travel roughly HALVES per round instead
-    * of decrementing: rounds = O(log diameter), the same doubling idea as
-    * large-star/small-star contraction. Dup graphs are near-cliques
-    * (2-3 rounds either way), but path-shaped graphs through the public
-    * kernel API converge in ~log₂ d rounds instead of d.
-    *
-    * Lineage is truncated EVERY round with an eager `localCheckpoint`:
-    * a merely-persisted loop frame keeps its full logical history, so
-    * Catalyst re-analyzes round 1's plan inside round 2's, round 2's
-    * inside round 3's, … — measured 4-6 s/round of pure planner time by
-    * round 2 on an 852-node graph, growing with round count. Checkpointed
-    * frames give every round the same flat plan (cached-scan ⋈ cached-scan)
-    * and took the same round to 0.6 s. `localCheckpoint` stores blocks
-    * executor-local (right for this engine's single-JVM deployments and
-    * exactly what a driver would do on a session cluster); a deployment
-    * that must survive executor loss mid-loop swaps in reliable
-    * `checkpoint()` against the cluster checkpoint dir — same contract.
-    * Superseded per-round blocks are reclaimed by the ContextCleaner as
-    * the loop drops its references (one generation of (id,label) rows
-    * in flight at a time); the RETURNED frame stays materialized.
-    *
-    * @param maxIters hard cap on propagation rounds — fail LOUDLY rather
-    *   than return non-minimal labels (silent truncation would surface as
-    *   a cryptic oracle mismatch downstream). With pointer jumping the
-    *   default [[ccMaxIters]]=20 covers diameters ~2²⁰; raise it only for
-    *   adversarial general graphs.
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = ccMaxIters): DataFrame = {
-    // one explode emits both directions from a single pass over `pairs`;
-    // shared: the loop's first job reads it from several concurrent branches
-    val edges = Exec.share(pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    // eager checkpoint: materialized before round 1's concurrent consumers,
-    // and the pair-mining lineage never enters the loop plans
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val neighborMin = edges.join(labels, col("src") === col("doc_id"))
-        .groupBy(col("dst")).agg(min(col("cluster_id")).as("nmin"))
-      val jump = labels.select(col("doc_id").as("j_id"), col("cluster_id").as("j_lbl"))
-      // carry the previous label through so convergence is a filter on the
-      // materialized frame, not an extra join back against `labels`
-      val next = labels.join(neighborMin, col("doc_id") === col("dst"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
-            .as("mid"),
-          col("cluster_id").as("prev"))
-        // pointer jump: follow the candidate label one more hop through the
-        // PREVIOUS round's (checkpointed) table. Labels only decrease and
-        // every label value is a node id inside the same component, so the
-        // min stays within-component and the fixpoint (label constant
-        // across every edge = component min) is unchanged — only reached
-        // sooner.
-        .join(jump, col("mid") === col("j_id"), "left")
-        .select(col("doc_id"),
-          least(col("mid"), coalesce(col("j_lbl"), col("mid"))).as("cluster_id"),
-          col("prev"))
-        .localCheckpoint(true)
-      changed = next.filter(col("cluster_id") =!= col("prev")).count()
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      iter += 1
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    for (c <- Seq("doc_a", "doc_b"))
+      require(pairs.schema(c).dataType == LongType,
+        s"connectedComponents: $c is ${pairs.schema(c).dataType}, not LongType")
+    val parent = mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.getOrElseUpdate(x, x) != x) {
+        val g = parent(parent(x)) // path halving
+        parent(x) = g
+        x = g
+      }
+      x
     }
-    edges.unpersist() // labels are materialized; the edge cache is dead weight
-    require(changed == 0,
-      s"label propagation did not converge in $maxIters rounds ($changed labels still moving)")
-    labels
+    pairs.select(col("doc_a"), col("doc_b")).collect().foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val rows = parent.keys.toSeq.map(k => Row(k, find(k)))
+    pairs.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("cluster_id", LongType, nullable = false))))
   }
 
-  def qDocDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = minhashVerifiedPairs(nearDupShingled(spark, sfDir))
-      .select(col("doc_a"), col("doc_b"))
-    // no persist (r15): connectedComponents consumes pairs exactly once
-    val labels = connectedComponents(pairs)
-    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .orderBy(col("doc_id"))
-  }
+  /** Near-dup cluster labels of the near-dup corpus: [[connectedComponents]]
+    * over [[minhashVerifiedPairs]]. The cluster resolution behind
+    * [[qDocDupClusters]], [[qDocSplitLeakfree]] and [[qDocClusterReps]];
+    * oracle twin [[dupLabelsSqlCtes]].
+    */
+  private def dupLabels(spark: SparkSession, sfDir: String): DataFrame =
+    connectedComponents(minhashVerifiedPairs(nearDupShingled(spark, sfDir)))
 
-  /** Recursive-CTE oracle: min doc_id over each node's transitive closure. */
-  val qDocDupClustersSql: String =
-    s"""WITH RECURSIVE $nearCorpusSql,
-       |shingled AS (
-       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
-       |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
-       |pairs AS (
-       |  SELECT doc_a, doc_b
-       |  FROM cand
-       |  JOIN shingled sa ON cand.doc_a = sa.doc_id
-       |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
-       |),
+  /** Oracle twin of [[dupLabels]]: the `WITH RECURSIVE` prefix ending in
+    * `labels(doc_id, cluster_id)`, the minimum doc_id over each node's
+    * transitive closure — an independent reference for the union-find.
+    */
+  private lazy val dupLabelsSqlCtes: String =
+    s"""WITH RECURSIVE $nearDupShingledSqlCtes,
+       |$bandedCandSqlCtes,
+       |${verifiedPairsSqlCte("pairs")},
        |edges AS (
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION ALL
@@ -756,7 +662,23 @@ object Dedup {
        |),
        |labels AS (
        |  SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
-       |)
+       |)""".stripMargin
+
+  /** Duplicate clusters: every doc in ≥1 verified near-dup pair, its
+    * cluster id (the component's minimum doc_id — "keep cluster_id, drop
+    * the rest" is one filter) and the cluster size.
+    */
+  def qDocDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
+    val labels = dupLabels(spark, sfDir)
+    val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Recursive-CTE oracle: min doc_id over each node's transitive closure. */
+  val qDocDupClustersSql: String =
+    s"""$dupLabelsSqlCtes
        |SELECT doc_id, cluster_id, count(*) OVER (PARTITION BY cluster_id) AS cluster_size
        |FROM labels ORDER BY doc_id""".stripMargin
 
@@ -781,16 +703,13 @@ object Dedup {
     * id).
     *
     * Scale: the dominant cost is the cluster resolution this composes
-    * ([[qDocDupClusters]]' pipeline); the split itself adds one hash
-    * projection and a left join of the (clustered-docs-only) label table
-    * — label tables are dup-bounded, far smaller than the corpus, and
-    * AQE broadcast-promotes them when small enough.
+    * ([[dupLabels]]); the split itself adds one hash projection and a
+    * left join of the (clustered-docs-only) label table — label tables
+    * are dup-bounded, far smaller than the corpus, and AQE
+    * broadcast-promotes them when small enough.
     */
   def qDocSplitLeakfree(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = minhashVerifiedPairs(nearDupShingled(spark, sfDir))
-      .select(col("doc_a"), col("doc_b"))
-    // no persist (r15): connectedComponents consumes pairs exactly once
-    val labels = connectedComponents(pairs)
+    val labels = dupLabels(spark, sfDir)
     val corpus = nearCorpus(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
     val h = portableHash(
@@ -811,39 +730,7 @@ object Dedup {
 
   val qDocSplitLeakfreeSql: String = {
     val h = portableHashSql("CAST(split_key AS VARCHAR) || '|leakfree'")
-    s"""WITH RECURSIVE $nearCorpusSql,
-       |shingled AS (
-       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
-       |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
-       |pairs AS (
-       |  SELECT doc_a, doc_b
-       |  FROM cand
-       |  JOIN shingled sa ON cand.doc_a = sa.doc_id
-       |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
-       |),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-       |),
-       |reach(node, root) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-       |),
-       |labels AS (
-       |  SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
-       |),
+    s"""$dupLabelsSqlCtes,
        |assign AS (
        |  SELECT c.doc_id, l.cluster_id,
        |    COALESCE(l.cluster_id, c.doc_id) AS split_key
@@ -868,7 +755,7 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Keep-BEST-of-cluster: for every resolved near-dup cluster
-    * ([[qDocDupClusters]]' connected components), elect the
+    * ([[dupLabels]]), elect the
     * highest-quality member (ties → lowest doc_id) as the canonical
     * representative — the curation policy that replaces keep-lowest-id
     * ([[qDocCurate]]) when members differ in quality (a re-crawl can be
@@ -882,14 +769,11 @@ object Dedup {
     * here and agreeing hash-exact is worth checking).
     *
     * Scale: adds one narrow quality projection and one cluster-keyed
-    * aggregate on top of [[qDocDupClusters]]' cost — the label
-    * propagation dominates; the election is output-bounded.
+    * aggregate on top of [[dupLabels]]' cost — the pair mining
+    * dominates; the election is output-bounded.
     */
   def qDocClusterReps(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = minhashVerifiedPairs(nearDupShingled(spark, sfDir))
-      .select(col("doc_a"), col("doc_b"))
-    // no persist (r15): connectedComponents consumes pairs exactly once
-    val labels = connectedComponents(pairs)
+    val labels = dupLabels(spark, sfDir)
     val quality = nearCorpus(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), TextOps.qualityScoreCol.as("q"))
@@ -907,39 +791,7 @@ object Dedup {
     * rank-window formulation.
     */
   val qDocClusterRepsSql: String =
-    s"""WITH RECURSIVE $nearCorpusSql,
-       |shingled AS (
-       |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
-       |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
-       |pairs AS (
-       |  SELECT doc_a, doc_b
-       |  FROM cand
-       |  JOIN shingled sa ON cand.doc_a = sa.doc_id
-       |  JOIN shingled sb ON cand.doc_b = sb.doc_id
-       |  WHERE ${jaccardSql("sa.hs", "sb.hs")} >= $jaccardThreshold
-       |),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-       |),
-       |reach(node, root) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-       |),
-       |labels AS (
-       |  SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
-       |),
+    s"""$dupLabelsSqlCtes,
        |scored AS (
        |  SELECT l.cluster_id, l.doc_id, (${TextOps.qualityScoreSql}) AS q
        |  FROM labels l JOIN corpus USING (doc_id)
@@ -1290,7 +1142,7 @@ object Dedup {
          |    (SELECT count(*) FROM $rel) AS n_pred,
          |    (SELECT count(*) FROM truth) AS n_true,
          |    (SELECT count(*) FROM truth JOIN $rel USING (doc_a, doc_b)) AS n_found""".stripMargin
-    s"""WITH $nearCorpusSql,
+    s"""WITH $nearDupShingledSqlCtes,
        |$evalMhSqlCtes,
        |$evalTruthSqlCtes,
        |samp AS (
@@ -1459,15 +1311,7 @@ object Dedup {
        |shingled AS MATERIALIZED (
        |  SELECT doc_id, $hashSetSqlExpr AS hs FROM corpus
        |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
+       |$bandedCandSqlCtes,
        |scored AS MATERIALIZED (
        |  SELECT doc_a, doc_b,
        |    len(list_intersect(sa.hs, sb.hs)) AS inter,
@@ -2049,15 +1893,7 @@ object Dedup {
        |shingled AS (
        |  SELECT doc_id, text, $hashSetSqlExpr AS hs FROM corpus
        |),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $minColsSql
-       |  FROM shingled
-       |),
-       |bands AS (
-       |  $bandSelectsSql
-       |),
-       |$candSql,
+       |$bandedCandSqlCtes,
        |near AS (
        |  SELECT DISTINCT doc_b AS doc_id
        |  FROM cand

@@ -12,13 +12,13 @@ import graft.Exec
 import graft.Exec.spread
 import graft.model.Tables
 
-/** Distributed graph analytics beyond [[Dedup.connectedComponents]]'s
-  * label propagation: an iterative PageRank kernel in SCALED INTEGER
-  * arithmetic, so ranks are bit-identical at any parallelism and on any
-  * engine — the floating-point formulation sums doubles in
-  * partition-merge order and drifts in the low bits run-to-run, which
-  * would fail both the driver's hash compare and any cross-run
-  * reproducibility audit of a production ranking job.
+/** Distributed graph analytics beyond [[Dedup.connectedComponents]]: an
+  * iterative PageRank kernel in SCALED INTEGER arithmetic, so ranks are
+  * bit-identical at any parallelism and on any engine — the
+  * floating-point formulation sums doubles in partition-merge order and
+  * drifts in the low bits run-to-run, which would fail both the driver's
+  * hash compare and any cross-run reproducibility audit of a production
+  * ranking job.
   *
   * Fixed-point scheme: ranks are BIGINT multiples of 1/SCALE
   * (SCALE = 10¹²). One iteration is

@@ -88,6 +88,17 @@ object Similarity {
   private def sqDistSql(aa: String, a: String, b: String, bb: String): String =
     s"$aa - 2 * list_dot_product($a, $b) + $bb"
 
+  /** Spark-SQL sequential dot product (for use inside `expr` lambdas where
+    * the [[graft.functions.VectorDot]] Column can't reach): bit-identical
+    * to VectorDot (VectorDotSpec) and DuckDB's `list_dot_product`.
+    */
+  private def dotExpr(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> x * y), cast(0 as double), (acc, p) -> acc + p)"
+
+  /** Spark-SQL text of [[sqDist]], for `expr` lambdas: `aa - 2 * a·b + bb`. */
+  private def sqDistExprSql(aa: String, a: String, b: String, bb: String): String =
+    s"$aa - 2 * ${dotExpr(a, b)} + $bb"
+
   // ------------------------------------------------------------------
   // Brute-force cosine top-k (exact baseline)
   // ------------------------------------------------------------------
@@ -1823,13 +1834,6 @@ object Similarity {
   val pqM = 4
   val pqSub = 16
 
-  /** Spark-SQL sequential dot product (for use inside `expr` lambdas where
-    * the [[graft.functions.VectorDot]] Column can't reach): bit-identical
-    * to VectorDot (VectorDotSpec) and DuckDB's `list_dot_product`.
-    */
-  private def dotExpr(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> x * y), cast(0 as double), (acc, p) -> acc + p)"
-
   /** One-row PQ codebook: `cb` = array of (s, code, cv[16], cc) sorted by
     * (s, code), derived from the per-label centroids ([[centroidsLong]] —
     * the same sequential-fold means the oracle mirrors). Broadcast-crossed
@@ -1851,6 +1855,14 @@ object Similarity {
         .as("cb"))
   }
 
+  /** Squared distance from subspace `s`'s slice of `e` to the codebook
+    * entry `c` (centroid `c.cv`, self-dot `c.cc`), as Spark-SQL text.
+    */
+  private def pqSqDistExpr(s: String): String = {
+    val v = s"slice(e, $s * $pqSub + 1, $pqSub)"
+    sqDistExprSql(dotExpr(v, v), v, "c.cv", "c.cc")
+  }
+
   /** Per-subspace encode: `codes[s]` = argmin over the codebook's subspace-
     * `s` entries of ‖v_s − c‖² (= v_s·v_s − 2 v_s·c + c·c, code tiebreak).
     * A per-row fold over the broadcast constant-size codebook — NARROW,
@@ -1859,9 +1871,7 @@ object Similarity {
   private val pqCodesExpr: String =
     s"transform(sequence(0, ${pqM - 1}), s -> element_at(array_sort(" +
       s"transform(filter(cb, c -> c.s = s), c -> named_struct(" +
-      s"'d', ${dotExpr(s"slice(e, s * $pqSub + 1, $pqSub)", s"slice(e, s * $pqSub + 1, $pqSub)")}" +
-      s" - 2 * ${dotExpr(s"slice(e, s * $pqSub + 1, $pqSub)", "c.cv")} + c.cc," +
-      s" 'code', c.code))), 1).code)"
+      s"'d', ${pqSqDistExpr("s")}, 'code', c.code))), 1).code)"
 
   /** Product-quantization ANN with asymmetric distance computation (ADC)
     * — the memory-bound half of a FAISS-style index: candidates are
@@ -1908,8 +1918,7 @@ object Similarity {
       .crossJoin(broadcast(cbArr))
       .select(col("vec_id").as("q_id"), expr(
         s"transform(cb, c -> named_struct('s', c.s, 'code', c.code, 'd'," +
-          s" ${dotExpr(s"slice(e, c.s * $pqSub + 1, $pqSub)", s"slice(e, c.s * $pqSub + 1, $pqSub)")}" +
-          s" - 2 * ${dotExpr(s"slice(e, c.s * $pqSub + 1, $pqSub)", "c.cv")} + c.cc))")
+          s" ${pqSqDistExpr("c.s")}))")
         .as("dtab"))
     val scored = cand.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"), expr(
@@ -2033,8 +2042,7 @@ object Similarity {
       .crossJoin(broadcast(rcb))
       .select(col("vec_id").as("q_id"), col("cell").as("q_cell"), expr(
         s"transform(cb, c -> named_struct('s', c.s, 'code', c.code, 'd'," +
-          s" ${dotExpr(s"slice(e, c.s * $pqSub + 1, $pqSub)", s"slice(e, c.s * $pqSub + 1, $pqSub)")}" +
-          s" - 2 * ${dotExpr(s"slice(e, c.s * $pqSub + 1, $pqSub)", "c.cv")} + c.cc))")
+          s" ${pqSqDistExpr("c.s")}))")
         .as("dtab"))
     val scored = cand.join(broadcast(q), col("q_cell") === col("cell"))
       .select(col("q_id"), col("vec_id"), col("cell"), expr(

@@ -103,14 +103,12 @@ class PropertiesSpec extends SparkSuite {
     }, n = 15)
   }
 
-  test("distributed connected components equals local union-find on random graphs") {
+  test("connected components equals a local union-find on random graphs") {
     val spark0 = spark
     import spark0.implicits._
-    // node universe and case count kept small: every propagation ROUND is
-    // several Spark jobs, so property cost is diameter-bound, not row-bound
-    val genEdges: Gen[List[(Long, Long)]] = Gen.choose(1, 12).flatMap(k =>
+    val genEdges: Gen[List[(Long, Long)]] = Gen.choose(1, 40).flatMap(k =>
       Gen.listOfN(k,
-        Gen.zip(Gen.choose(0L, 9L), Gen.choose(0L, 9L)).suchThat { case (a, b) => a != b }))
+        Gen.zip(Gen.choose(0L, 59L), Gen.choose(0L, 59L)).suchThat { case (a, b) => a != b }))
     check("cc≡union-find", Prop.forAll(genEdges) { edges =>
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
@@ -123,25 +121,20 @@ class PropertiesSpec extends SparkSuite {
       }
       val expected = parent.keys.map(k => k -> find(k)).toMap
       val got = graft.ext.Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      got == expected
-    }, n = 4)
-    spark.catalog.clearCache()
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      // one row per distinct endpoint: toMap alone would hide duplicate rows
+      got.length == expected.size && got.toMap == expected
+    }, n = 50)
   }
 
-  test("connected components converges on a 60-node chain well under the round cap") {
+  test("connected components labels a 60-node chain to its minimum") {
     val spark0 = spark
     import spark0.implicits._
-    // a path graph is the worst case for plain min-label propagation
-    // (rounds = diameter, here 59 — over the default cap of 20); the
-    // pointer-jumping step makes rounds O(log d), so this converges with
-    // the DEFAULT cap. Also exercises the maxIters parameter surface.
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val labels = graft.ext.Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(labels.length === 60)
     assert(labels.forall(_._2 == 0L), "every chain node must label to the min id 0")
-    spark.catalog.clearCache()
   }
 
   test("double string-replace merge equals greedy left-to-right BPE merge for ALL inputs") {

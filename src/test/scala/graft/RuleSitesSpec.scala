@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One place per rule: each exactness and vector-geometry rule is spelled
-  * on one code line of `src/main`, its helper, and every other site calls
-  * the helper. Code lines are the lines `tools/loc.sh` counts: blank
-  * lines and comment and scaladoc lines are skipped.
+/** One place per rule: each exactness, vector-geometry and near-dup
+  * oracle rule is spelled on one code line of `src/main`, its helper, and
+  * every other site calls the helper. Code lines are the lines
+  * `tools/loc.sh` counts: blank lines and comment and scaladoc lines are
+  * skipped.
   */
 class RuleSitesSpec extends AnyFunSuite {
 
@@ -54,6 +55,19 @@ class RuleSitesSpec extends AnyFunSuite {
       .map(p => p -> java.util.regex.Pattern.quote(p)) :+
       ("""size(array_union( … .cast("double")""" -> """size\(array_union\(.*\.cast\("double"\)""")
     for ((name, re) <- rules) {
+      val found = sites((_, line) => re.r.findFirstIn(line).isDefined)
+      assert(found.size === 1, s"`$name` on ${found.size} code lines:\n${found.mkString("\n")}")
+    }
+  }
+
+  test("each near-dup oracle stage is spelled on exactly one code line") {
+    // `sig AS (` counts where it opens a string or a margin line: the
+    // minhash signature CTE, not `ssig`, `${pfx}sig` or Similarity's
+    // binary-code `WITH sig AS (`
+    val stages = Seq("reach(node, root)", "bucket_ok AS (", "- 2 * ${dotExpr(")
+      .map(p => p -> java.util.regex.Pattern.quote(p)) :+
+      ("sig AS (" -> """(^\s*\||"{3})sig AS \(""")
+    for ((name, re) <- stages) {
       val found = sites((_, line) => re.r.findFirstIn(line).isDefined)
       assert(found.size === 1, s"`$name` on ${found.size} code lines:\n${found.mkString("\n")}")
     }
